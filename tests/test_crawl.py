@@ -145,6 +145,20 @@ def test_crawl_metrics_written(spark, crawl_result):
     assert len(stats) == 2 and stats[1]["scheduled"] > 0
 
 
+def test_commit_record_matches_round_stats(spark, crawl_result):
+    """_COMMIT carries the round's own record: the dict run_round
+    returned, with the per-phase walls."""
+    import json
+
+    spark_s, ck, cfg, seeds, stats = crawl_result
+    for m in stats:
+        with open(os.path.join(ck, f"round={m['round_id']}", "_COMMIT")) as fh:
+            rec = json.load(fh)
+        assert rec == m and rec["scheduled"] > 0
+        phases = ("seen_probe_s", "fetch_log_s", "results_s", "state_writes_s")
+        assert all(0 <= rec[k] <= rec["wall_s"] for k in phases)
+
+
 def test_crawl_results_products_configurable(spark, tmp_path):
     """A text-only round writes results without title/markdown, flags
     md_bytes = -1 in metrics, and still discovers links (the crawl

@@ -1,13 +1,12 @@
 """Frontier filter chain: robots disallow (broadcast join), ignore
 patterns (the reference's declared-but-unwired config, wired here),
-depth cap, and seen-sketch probe correctness."""
+depth cap, and the exact seen check."""
 
 from pyspark.sql import functions as F
 
 from web_scraper_spark.crawl.frontier import (
     ROBOTS_SCHEMA,
     apply_url_filters,
-    build_seen_shards,
     probe_seen,
     seeds_to_frontier,
 )
@@ -81,28 +80,17 @@ def test_trap_filter_wired(spark):
 
 
 def test_probe_seen_no_false_negatives(spark):
-    n_shards = 4
     all_urls = [f"https://h{i%3}.x/p{i}" for i in range(200)]
     seen_urls = all_urls[:120]
     seen_df = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-    shards = build_seen_shards(seen_df, n_shards, round_id=0)
     cand = seeds_to_frontier(spark, all_urls)
-    fresh = probe_seen(cand, shards, seen_df, n_shards)
+    caches = []
+    fresh = probe_seen(cand, seen_df, caches)
     got = {r["url"] for r in fresh.select("url").collect()}
     assert got == set(all_urls[120:])  # exactly the unseen remainder
-
-
-def test_probe_seen_broadcast_budget(spark):
-    """A misconfigured shard geometry must fail fast with a sizing
-    hint, not silently broadcast gigabytes to every task."""
-    import pytest
-
-    urls = [f"https://h.x/p{i}" for i in range(50)]
-    seen_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    shards = build_seen_shards(seen_df, 2, round_id=0).localCheckpoint()
-    cand = seeds_to_frontier(spark, urls)
-    with pytest.raises(ValueError, match="broadcast"):
-        probe_seen(cand, shards, seen_df, 2, max_broadcast_bytes=16)
+    assert caches == [fresh]  # handed back for the caller to unpersist
+    fresh.unpersist()
+    assert probe_seen(cand, None) is cand  # nothing seen yet: no-op
 
 
 def test_bloom_vectorized_no_false_negatives_and_scalar_agreement():
@@ -374,19 +362,15 @@ def test_fetch_mode_budget_occupies_host_clock(spark):
 
 
 def test_probe_seen_upstream_executes_once(spark, tmp_path):
-    """Round-1 verdict item 4: the Bloom probe and its upstream chain
+    """Round-1 verdict item 4: the seen check and its upstream chain
     must execute exactly once per round. The upstream generator writes
     one marker row per processed input row: with eager cache fill the
-    total equals the input size; the unpersisted form ran it twice
-    (once each for the fresh and suspects branches)."""
-    import pandas as pd
-
+    total equals the input size, however many actions consume the
+    probe's output."""
     marker = str(tmp_path / "probe_runs.log")
-    n_shards = 4
     all_urls = [f"https://h{i % 3}.x/p{i}" for i in range(100)]
     seen_urls = all_urls[:40]
     seen_df = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-    shards = build_seen_shards(seen_df, n_shards, round_id=0)
 
     def tracked(batches):
         for pdf in batches:
@@ -399,16 +383,17 @@ def test_probe_seen_upstream_executes_once(spark, tmp_path):
         .repartition(4)
         .mapInPandas(tracked, "url string")
     )
-    out = probe_seen(cand, shards, seen_df, n_shards, eager=True)
+    out = probe_seen(cand, seen_df, None, True)
     assert out.count() == 60
     assert out.count() == 60  # second action: must hit the cache too
     rows_processed = sum(int(line) for line in open(marker))
     assert rows_processed == len(all_urls), (
         f"upstream executed {rows_processed / len(all_urls):.1f}x"
     )
-    # the consuming plan reads the cached probe, not a live Python op
+    # the consuming plan reads the cached probe, not the live join
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan
+    out.unpersist()
 
 
 def test_deferred_and_rediscovered_url_not_duplicated(spark, tmp_path):

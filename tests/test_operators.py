@@ -883,9 +883,8 @@ def test_repetition_signals(spark):
 
 def test_embedding_near_dups_unbucketed_row_guard(spark):
     """Un-bucketed embedding_near_dups is an all-pairs self-join; it
-    must fail fast above max_unbucketed_rows (probe_seen's
-    fail-don't-melt contract), and the bucketed path must ignore the
-    bound entirely."""
+    must fail fast above max_unbucketed_rows (fail-don't-melt), and
+    the bucketed path must ignore the bound entirely."""
     import pytest
 
     from web_scraper_spark.operators.dedup import embedding_near_dups
@@ -1204,8 +1203,16 @@ def test_bigram_surprisal_manual(spark):
     assert out[2]["n_bigrams"] == 0 and out[2]["mean_deciban"] == 0.0
     assert out[3]["n_bigrams"] == 1 and out[3]["mean_deciban"] == 2.0
 
-    shuffled = bigram_surprisal(df, "text", "id", max_broadcast_bigrams=1)
-    assert sorted(map(tuple, shuffled.collect())) == sorted(
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # no broadcast: both count joins shuffle
+    try:
+        sdf = bigram_surprisal(df, "text", "id")
+        shuffled = sorted(map(tuple, sdf.collect()))
+        assert "BroadcastHashJoin" not in sdf._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prior)
+    assert shuffled == sorted(
         map(tuple, bigram_surprisal(df, "text", "id").collect())
     )
 

@@ -64,3 +64,78 @@ def test_mid_round_crash_replays_identically(spark, tmp_path):
         assert sorted(map(tuple, a.select(*sorted(a.columns)).collect())) == sorted(
             map(tuple, b.select(*sorted(b.columns)).collect())
         ), sub
+
+
+def _state(spark, ck, rid, sub):
+    df = spark.read.parquet(os.path.join(ck, f"round={rid}", sub))
+    return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+
+def test_failed_state_write_leaves_no_commit_and_no_caches(spark, tmp_path, monkeypatch):
+    """A state write that raises inside the round's write pool fails the
+    round: no _COMMIT, no cached DataFrame left behind, and an
+    unpatched resume commits the same state as an uninterrupted run."""
+    import pytest
+
+    from web_scraper_spark.crawl import rounds
+
+    pages = pages_df(spark, 48)
+    seeds = [url_for(r) for r in range(12)]
+    ck_a = str(tmp_path / "a")
+    cfg_a = CrawlConfig(ckpt_dir=ck_a, quota_per_host=16, max_depth=2, n_shards=4)
+    run_crawl(spark, cfg_a, pages, None, seeds, n_rounds=2)
+
+    ck_b = str(tmp_path / "b")
+    cfg_b = CrawlConfig(ckpt_dir=ck_b, quota_per_host=16, max_depth=2, n_shards=4)
+    run_crawl(spark, cfg_b, pages, None, seeds, n_rounds=1)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keys())  # includes run_crawl's pages cache
+
+    write = rounds._write
+
+    def failing_write(df, path, coalesce=None):
+        if os.path.basename(path) == "frontier":
+            raise RuntimeError("injected frontier write failure")
+        write(df, path, coalesce)
+
+    monkeypatch.setattr(rounds, "_write", failing_write)
+    with pytest.raises(RuntimeError, match="injected frontier write failure"):
+        run_crawl(spark, cfg_b, pages, None, None, n_rounds=1, resume=True)
+    monkeypatch.setattr(rounds, "_write", write)
+    assert not os.path.exists(os.path.join(ck_b, "round=1", "_COMMIT"))
+    assert last_committed_round(cfg_b) == 0
+    assert set(persistent().keys()) == before
+
+    run_crawl(spark, cfg_b, pages, None, None, n_rounds=1, resume=True)
+    assert last_committed_round(cfg_b) == 1
+    for sub in ("fetch_log", "results", "seen"):
+        assert _state(spark, ck_a, 1, sub) == _state(spark, ck_b, 1, sub), sub
+
+
+def test_resume_skips_seen_url_injected_into_frontier(spark, tmp_path):
+    """At-most-once fetching rests on the seen check, not on the
+    frontier never holding a seen URL: a URL fetched in round 0 and
+    put back into round 0's committed frontier (ahead of every other
+    row) is neither fetched again nor re-queued by the resumed round."""
+    pages = pages_df(spark, 48)
+    seeds = [url_for(r) for r in range(12)]
+    ck = str(tmp_path / "ck")
+    cfg = CrawlConfig(ckpt_dir=ck, quota_per_host=16, max_depth=2, n_shards=4)
+    run_crawl(spark, cfg, pages, None, seeds, n_rounds=1)
+    url = seeds[0]
+    r0 = spark.read.parquet(os.path.join(ck, "round=0", "fetch_log"))
+    assert r0.filter(F.col("url") == url).count() == 1
+
+    row = (
+        spark.read.parquet(os.path.join(ck, "round=-1", "frontier"))
+        .filter(F.col("url") == url)
+        .withColumn("priority", F.lit(-1.0))
+        .withColumn("round_id", F.lit(1))
+    )
+    row.write.mode("append").parquet(os.path.join(ck, "round=0", "frontier"))
+
+    stats = run_crawl(spark, cfg, pages, None, None, n_rounds=1, resume=True)
+    assert stats[0]["scheduled"] > 0
+    for sub in ("fetch_log", "frontier"):
+        urls = {r["url"] for r in spark.read.parquet(os.path.join(ck, "round=1", sub)).collect()}
+        assert url not in urls, sub

@@ -13,11 +13,13 @@ matter at 10^10 URLs:
 2. Frontier uniqueness per round: no URL queued twice.
 3. Seen-set = union of scheduled URLs (compaction preserves it).
 4. Crash replay determinism: delete the last committed round wholesale
-   and resume — the replayed round writes byte-identical results
-   (same rows, same fetch_log ordering keys), proving a mid-round
-   crash cannot fork state.
+   and resume — the replayed round writes byte-identical results,
+   fetch_log ordering keys and seen table, proving a mid-round crash
+   cannot fork state.
 
-Prints one JSON line; exits nonzero on any violation.
+Prints one JSON line, including ``seen_bytes_per_url`` (the on-disk
+cost of the exact seen table: the last round's seen read path over
+its distinct urls); exits nonzero on any violation.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ import shutil
 import sys
 import tempfile
 import time
+from urllib.parse import urlparse
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,8 +46,6 @@ def table_hash(df, cols) -> str:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from web_scraper_spark.crawl.rounds import CrawlConfig, run_crawl
     from web_scraper_spark.session import get_spark
     from web_scraper_spark.sources.pages import pages_df, url_for
@@ -77,7 +78,10 @@ def main() -> None:
                 failures.append(f"frontier round {r} has duplicate urls")
 
         from web_scraper_spark.crawl.rounds import read_seen
-        seen = read_seen(spark, cfg, rounds_run - 1).select("url").distinct()
+        seen_files = read_seen(spark, cfg, rounds_run - 1)
+        seen = seen_files.select("url").distinct()
+        seen_bytes = sum(os.path.getsize(urlparse(f).path) for f in seen_files.inputFiles())
+        seen_bytes_per_url = seen_bytes / max(1, seen.count())
         sched = logs.select("url").distinct()
         if seen.join(sched, "url", "left_anti").count() or sched.join(seen, "url", "left_anti").count():
             failures.append("seen set != union of scheduled urls (compaction drift)")
@@ -95,6 +99,7 @@ def main() -> None:
             spark.read.parquet(f"{ck}/round={last}/fetch_log"),
             ["url", "seq", "scheduled_offset_ms", "fetch_status"],
         )
+        before_seen = table_hash(spark.read.parquet(f"{ck}/round={last}/seen"), ["url"])
         shutil.rmtree(f"{ck}/round={last}")
         run_crawl(spark, cfg, pages, None, None, n_rounds=1, resume=True)
         after_results = table_hash(
@@ -105,18 +110,25 @@ def main() -> None:
             spark.read.parquet(f"{ck}/round={last}/fetch_log"),
             ["url", "seq", "scheduled_offset_ms", "fetch_status"],
         )
+        after_seen = table_hash(spark.read.parquet(f"{ck}/round={last}/seen"), ["url"])
         if before_results != after_results:
             failures.append("crash replay produced different results")
         if before_log != after_log:
             failures.append("crash replay produced different fetch_log")
+        if before_seen != after_seen:
+            failures.append("crash replay produced a different seen table")
+        replay_identical = (before_results, before_log, before_seen) == (
+            after_results, after_log, after_seen
+        )
 
         print(json.dumps({
             "pages": N_PAGES, "rounds": rounds_run,
             "fetched_total": n_fetch, "wall_s": round(wall, 2),
             "urls_per_sec": round(n_fetch / wall, 1),
             "compactions": n_compactions,
+            "seen_bytes_per_url": round(seen_bytes_per_url, 2),
             "per_round_scheduled": [s["scheduled"] for s in stats],
-            "replay_identical": before_results == after_results and before_log == after_log,
+            "replay_identical": replay_identical,
             "failures": failures,
         }))
     finally:

@@ -20,7 +20,7 @@ operators  generic relational/data-pipeline operators: as-of join,
            text analysis, multimodal plumbing.
 sources    deterministic synthetic ``pages`` generator (FIXTURES.md §1)
            and testdata readers.
-crawl      the frontier engine: URL-seen sketch, per-host politeness
+crawl      the frontier engine: exact URL-seen table, per-host politeness
            scheduler, salted partitioning, micro-batch round loop with
            checkpoint/resume and per-partition lineage + metrics.
 """

@@ -5,11 +5,13 @@ Realizes the reference's declared-but-unbuilt crawl capability
 contxt/config.py:20, TODO.md:1,7) as a Spark-native micro-batch loop:
 
 - :mod:`bloom`      — deterministic partitioned Bloom shards (the
-                      URL-seen sketch; analog of the reference's
-                      ``processed_hashes`` set, contxt/scraper.py:440).
+                      fixed-size state backend of the streaming
+                      first-seen operator, streaming/stateful.py).
 - :mod:`frontier`   — frontier schema, seed ingestion, candidate
                       filtering (validity, ignore patterns, robots,
-                      seen-sketch + exact anti-join).
+                      exact anti-join against the seen table — the
+                      analog of the reference's ``processed_hashes``
+                      set, contxt/scraper.py:440).
 - :mod:`politeness` — per-host crawl-delay scheduler as a pure JVM
                       cumulative-sum window over host partitions,
                       with skew-guarded two-stage quota trimming.

@@ -1,4 +1,5 @@
-"""Deterministic partitioned Bloom filter shards (URL-seen sketch).
+"""Deterministic partitioned Bloom filter shards (URL-seen sketch of
+the streaming first-seen operator, streaming/stateful.py).
 
 Pure-Python, stdlib-only, byte-serializable. Hash family is
 ``blake2b(url, salt=k)`` → deterministic across processes, engines and
@@ -6,10 +7,9 @@ resume (no PYTHONHASHSEED dependence). No false negatives ever; the
 false-positive rate is configured by bits-per-item.
 
 Sharding: ``shard_id = xxhash-free stable hash(url) % n_shards`` using
-blake2b as well, so the same URL always probes the same shard. Shards
-are built per-partition with ``applyInPandas``, OR-merged on
-checkpoint (idempotent: re-adding a batch yields the same bits —
-SURVEY.md §7 hard-part 3).
+blake2b as well, so the same URL always probes the same shard.
+Re-adding a batch yields the same bits and shards OR-merge, so
+rebuilding state is idempotent (SURVEY.md §7 hard-part 3).
 """
 
 from __future__ import annotations

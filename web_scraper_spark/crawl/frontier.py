@@ -3,35 +3,18 @@
 Frontier schema (FIXTURES.md §2):
     url, host, depth, priority, discovered_ts, round_id, status, seq
 
-The filter chain per round (all JVM-side except the Bloom probe):
+The filter chain per round (all JVM-side):
   P1 validity → P5 ignore-patterns → robots disallow (broadcast join,
-  J5) → URL-seen: Bloom-shard probe (no false negatives — sketch-
-  negative rows skip the exact join entirely) → exact anti-join for
-  sketch-positive candidates only.
+  J5) → URL-seen: exact anti-join against the seen table.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import columns as C
-from .bloom import BloomShard
-from .cuckoo import CuckooShard
-
-
-def sketch_from_bytes(raw: bytes):
-    """Deserialize a seen-sketch shard of either family — persisted
-    payloads are self-describing (Bloom magic ``BS``, cuckoo ``CK``),
-    so probe/merge dispatch on the bytes and a crawl can resume with
-    whichever sketch kind built its checkpoint."""
-    if raw[:2] == b"CK":
-        return CuckooShard.from_bytes(raw)
-    return BloomShard.from_bytes(raw)
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -50,15 +33,6 @@ ROBOTS_SCHEMA = T.StructType(
         T.StructField("host", T.StringType(), False),
         T.StructField("disallow", T.ArrayType(T.StringType()), True),
         T.StructField("crawl_delay", T.DoubleType(), True),
-    ]
-)
-
-SEEN_SHARD_SCHEMA = T.StructType(
-    [
-        T.StructField("shard_id", T.IntegerType(), False),
-        T.StructField("round_id", T.IntegerType(), False),
-        T.StructField("sketch", T.BinaryType(), False),
-        T.StructField("n_items", T.LongType(), False),
     ]
 )
 
@@ -157,267 +131,33 @@ def apply_url_blocklist(
     return out
 
 
-# ---------------------------------------------------------------------
-# URL-seen sketch: build / merge / probe
-# ---------------------------------------------------------------------
-
-def _bloom_hash_cols(url_col) -> tuple:
-    """The sketch's hash family, computed JVM-side: (shard-router, h1,
-    h2) = xxhash64 over the url with distinct literal salts — whole-
-    stage codegen, deterministic across sessions/engines (fixed seed),
-    shipped to Python through Arrow as int64 so the probe/build hot
-    path does ONLY numpy bit arithmetic (BloomShard.*_many_i64)."""
-    return (
-        F.xxhash64(url_col, F.lit("shard")),
-        F.xxhash64(url_col, F.lit("h1")),
-        F.xxhash64(url_col, F.lit("h2")),
-    )
-
-
-def build_seen_shards(
-    urls: DataFrame,
-    n_shards: int,
-    round_id: int,
-    expected_per_shard: int = 1 << 16,
-    fp_rate: float = 1e-4,
-    sketch_kind: str = "bloom",
-) -> DataFrame:
-    """Build seen-sketch shards from a url column: one shuffle on
-    shard_id, one shard row per group (A9). Deterministic for a given
-    row set — idempotent on re-run (Bloom: OR of the same bits;
-    cuckoo: canonical-order insert + membership pre-check). Hashing
-    happens in the JVM (:func:`_bloom_hash_cols`); the Python group op
-    is a single vectorized numpy pass per shard.
-
-    ``sketch_kind``: ``"bloom"`` (default — smallest bits/item) or
-    ``"cuckoo"`` (deletable — required for recrawl's forget path,
-    crawl/cuckoo.py)."""
-    if sketch_kind not in ("bloom", "cuckoo"):
-        raise ValueError(f"unknown sketch_kind {sketch_kind!r}")
-    url_col = urls.columns[0]
-    sh, h1, h2 = _bloom_hash_cols(F.col(url_col))
-    with_shard = urls.select(
-        F.pmod(sh, F.lit(n_shards)).cast("int").alias("shard_id"),
-        h1.alias("h1"),
-        h2.alias("h2"),
-    )
-
-    def build(key, pdf):  # no hints: future-annotations stringifies them and pandas group-ops warns
-        if sketch_kind == "cuckoo":
-            shard = CuckooShard.sized_for(expected_per_shard, fp_rate)
-        else:
-            shard = BloomShard.sized_for(expected_per_shard, fp_rate)
-        shard.add_many_i64(pdf["h1"].to_numpy(), pdf["h2"].to_numpy())
-        return pd.DataFrame(
-            [
-                {
-                    "shard_id": int(key[0]),
-                    "round_id": round_id,
-                    "sketch": shard.to_bytes(),
-                    "n_items": shard.n_items,
-                }
-            ]
-        )
-
-    return with_shard.groupBy("shard_id").applyInPandas(build, SEEN_SHARD_SCHEMA)
-
-
-def merge_shard_tables(shards: DataFrame) -> DataFrame:
-    """Merge shard rows across rounds: groupBy shard_id, fold
-    sketches (Bloom: bitwise OR; cuckoo: fingerprint re-insertion —
-    dispatched per payload by :func:`sketch_from_bytes`). Small data
-    (n_shards rows after merge). The fold order is pinned by sorting
-    the group — Bloom OR is commutative but a cuckoo table's bytes
-    depend on insert order, and checkpointed state must be
-    byte-deterministic for a given row set."""
-
-    def merge(key, pdf):
-        pdf = pdf.sort_values(
-            ["round_id", "n_items", "sketch"], kind="stable", ignore_index=True
-        )
-        acc = None
-        for raw in pdf["sketch"]:
-            s = sketch_from_bytes(bytes(raw))
-            acc = s if acc is None else acc.merge(s)
-        return pd.DataFrame(
-            [
-                {
-                    "shard_id": int(key[0]),
-                    "round_id": int(pdf["round_id"].max()),
-                    "sketch": acc.to_bytes(),
-                    "n_items": acc.n_items,
-                }
-            ]
-        )
-
-    return shards.groupBy("shard_id").applyInPandas(merge, SEEN_SHARD_SCHEMA)
-
-
-def forget_seen_urls(
-    seen_shards: DataFrame,
-    urls: DataFrame,
-    n_shards: int,
-) -> DataFrame:
-    """Delete URLs from a **cuckoo** seen-sketch table — the recrawl
-    primitive: stale captures elected from the CDX index
-    (crawl/recrawl.py) are forgotten here, so the next round's
-    probe_seen treats them as new and the frontier re-fetches them.
-    Bloom shards cannot delete; feeding them here raises (switch the
-    crawl to ``CrawlConfig(sketch_kind="cuckoo")``).
-
-    Scale shape: the url side hashes JVM-side and shuffles ONCE on
-    shard_id; a cogrouped ``applyInPandas`` pairs each shard row with
-    exactly its urls — no broadcast, no driver collect, so a
-    10^8-URL forget set is one co-partitioned pass. Shards without
-    matching urls pass through unchanged (and vice-versa, urls whose
-    shard has no blob are no-ops)."""
-    url_col = urls.columns[0]
-    sh, h1, h2 = _bloom_hash_cols(F.col(url_col))
-    keyed = urls.select(
-        F.pmod(sh, F.lit(n_shards)).cast("int").alias("shard_id"),
-        h1.alias("h1"),
-        h2.alias("h2"),
-    )
-
-    def drop(key, shard_pdf, url_pdf):
-        if shard_pdf.empty:
-            return pd.DataFrame(
-                {f.name: pd.Series(dtype="object") for f in SEEN_SHARD_SCHEMA.fields}
-            )
-        if len(shard_pdf) > 1:
-            raise ValueError(
-                f"forget_seen_urls: shard {int(key[0])} has "
-                f"{len(shard_pdf)} rows — merge_shard_tables first"
-            )
-        row = shard_pdf.iloc[0]
-        sk = sketch_from_bytes(bytes(row["sketch"]))
-        if not hasattr(sk, "delete_many_i64"):
-            raise ValueError(
-                "forget_seen_urls needs a deletable sketch (cuckoo) but "
-                "this shard is a Bloom filter — crawls that recrawl must "
-                'run with CrawlConfig(sketch_kind="cuckoo")'
-            )
-        if not url_pdf.empty:
-            sk.delete_many_i64(
-                url_pdf["h1"].to_numpy(), url_pdf["h2"].to_numpy()
-            )
-        return pd.DataFrame(
-            [
-                {
-                    "shard_id": int(row["shard_id"]),
-                    "round_id": int(row["round_id"]),
-                    "sketch": sk.to_bytes(),
-                    "n_items": sk.n_items,
-                }
-            ]
-        )
-
-    return (
-        seen_shards.groupby("shard_id")
-        .cogroup(keyed.groupby("shard_id"))
-        .applyInPandas(drop, SEEN_SHARD_SCHEMA)
-    )
-
-
 def probe_seen(
     candidates: DataFrame,
-    seen_shards: DataFrame | None,
-    seen_exact: DataFrame | None,
-    n_shards: int,
+    seen: DataFrame | None,
     unpersist_into: list[DataFrame] | None = None,
     eager: bool = False,
-    max_broadcast_bytes: int = 512 << 20,
 ) -> DataFrame:
-    """Filter out already-seen URLs.
+    """Filter out already-seen URLs: one JVM ``left_anti`` join of the
+    candidates against the exact seen table (first column = url).
 
-    1. Bloom probe via a broadcast of the (small) serialized shards —
-       mapInPandas, no shuffle. Sketch-negative rows are definitively
-       new (no false negatives) and bypass the join. Hashes are
-       computed JVM-side (:func:`_bloom_hash_cols`); the Python side
-       is a vectorized numpy membership test per shard group — no
-       per-URL Python loop.
-    2. Exact ``left_anti`` join ONLY for sketch-positive rows — at
-       scale this is the rare path (FP rate + true repeats).
+    Exact by construction — ``fresh = candidates − seen`` — with no
+    Python crossing, no driver collect and no forced broadcast: AQE
+    picks broadcast or shuffle from the seen table's runtime size.
 
-    ``max_broadcast_bytes`` fails fast if the collected shard blobs
-    exceed the broadcast budget — a misconfigured
-    n_shards × expected_per_shard × fp_rate must not silently ship
-    gigabytes to every task.
-
-    The probe output is persisted (both branches consume it); if the
-    caller passes ``unpersist_into``, the cached DataFrame is appended
-    there so the caller can release it once the round's actions ran.
-    ``eager=True`` fills the cache immediately (one count job): the
-    fresh/suspects branches land in the SAME stage of the consuming
-    job, and two concurrent scans of a cold cache can both compute a
-    partition — eager fill makes the Python probe exactly-once.
-
-    (A fully-JVM probe via Spark's BloomFilterAggregate/might_contain
-    was evaluated and is unavailable here: the expressions exist in
-    Catalyst for runtime row-group filtering but are not registered
-    SQL functions in this build, and Bloom blobs from different rounds
-    cannot be OR-merged through any public API. The mapInPandas probe
-    is one Arrow crossing over a broadcast of n_shards small blobs.)
-    """
-    if seen_shards is None:
+    The result is persisted (the round consumes it twice: the
+    politeness schedule and the deferred-row rewrite of the next
+    frontier); if the caller passes ``unpersist_into``, the cached
+    DataFrame is appended there so the caller can release it once the
+    round's actions ran. ``eager=True`` fills the cache immediately
+    (one count job), so the filter chain upstream of the join executes
+    exactly once per round."""
+    if seen is None:
         return candidates
-    spark = candidates.sparkSession
-    shard_rows = seen_shards.collect()
-    if not shard_rows:
-        return candidates
-    blob_bytes = sum(len(r["sketch"]) for r in shard_rows)
-    if blob_bytes > max_broadcast_bytes:
-        raise ValueError(
-            f"probe_seen: seen-sketch broadcast would be "
-            f"{blob_bytes / 2**20:.0f} MiB across {len(shard_rows)} shards, "
-            f"over the {max_broadcast_bytes / 2**20:.0f} MiB budget — lower "
-            "expected_per_shard or raise fp_rate (bits scale with "
-            "-n·ln(fp)/ln(2)²), or raise max_broadcast_bytes explicitly"
-        )
-    blob = {int(r["shard_id"]): bytes(r["sketch"]) for r in shard_rows}
-    bc = spark.sparkContext.broadcast(blob)
-
-    cols = candidates.columns
-    out_schema = T.StructType(candidates.schema.fields + [T.StructField("_maybe_seen", T.BooleanType())])
-    sh, h1, h2 = _bloom_hash_cols(F.col("url"))
-    with_h = candidates.select(
-        "*",
-        F.pmod(sh, F.lit(n_shards)).cast("int").alias("_shard"),
-        h1.alias("_h1"),
-        h2.alias("_h2"),
-    )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        shards = {sid: sketch_from_bytes(raw) for sid, raw in bc.value.items()}
-        for pdf in batches:
-            sid = pdf["_shard"].to_numpy()
-            hh1 = pdf["_h1"].to_numpy()
-            hh2 = pdf["_h2"].to_numpy()
-            flags = np.zeros(len(pdf), dtype=bool)
-            for s in np.unique(sid):
-                shard = shards.get(int(s))
-                if shard is None:
-                    continue  # no blob for this shard: definitively new
-                m = sid == s
-                flags[m] = shard.contains_many_i64(hh1[m], hh2[m])
-            yield pdf.drop(columns=["_shard", "_h1", "_h2"]).assign(_maybe_seen=flags)
-
-    # persist: both the fresh and suspects branches consume `probed` —
-    # without the cache, the Python probe AND its whole upstream filter
-    # chain execute twice per round (round-1 verdict item 4).
-    probed = with_h.mapInPandas(probe, out_schema).persist()
+    fresh = candidates.join(
+        seen.select(F.col(seen.columns[0]).alias("url")), "url", "left_anti"
+    ).persist()
     if unpersist_into is not None:
-        unpersist_into.append(probed)
+        unpersist_into.append(fresh)
     if eager:
-        probed.count()
-    fresh = probed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    suspects = probed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    if seen_exact is not None:
-        suspects = suspects.join(
-            seen_exact.select(F.col(seen_exact.columns[0]).alias("url")),
-            "url",
-            "left_anti",
-        )
-    return fresh.unionByName(suspects)
+        fresh.count()
+    return fresh

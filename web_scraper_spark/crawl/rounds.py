@@ -3,20 +3,21 @@
 One round (the Spark re-expression of the reference's sequential
 per-URL loop, contxt/cli.py:276-307 — SURVEY.md §2.10):
 
-    frontier(pending) ──filters──▶ candidates ──seen-sketch──▶ fresh
+    frontier(pending) ──filters──▶ candidates ──anti-join seen──▶ fresh
       ──politeness schedule──▶ scheduled ──J6 join pages──▶ fetched
       ──extract UDF──▶ results + discovered links ──▶ frontier′
 
 State per round, checkpointed to ``<ckpt>/round=N/``:
     frontier/    next round's pending rows (parquet)
-    seen/        exact seen URLs (parquet, appended each round)
-    shards/      Bloom shard rows (parquet, OR-merged)
+    seen/        exact seen URLs (parquet, appended each round,
+                 compacted every few rounds)
     host_state/  politeness virtual-clock carry-over
     results/     extracted rows for the round
     metrics/     per-partition lineage + counters
-    _COMMIT      empty marker written LAST → the round is atomic:
-                 a crash mid-round leaves no marker and resume replays
-                 the round from the previous committed state.
+    _COMMIT      JSON round record (counts + phase walls) written
+                 LAST → the round is atomic: a crash mid-round leaves
+                 no marker and resume replays the round from the
+                 previous committed state.
 
 Everything is plain parquet-dir checkpointing (the sandbox has no
 Iceberg jars); the commit protocol gives the same atomic-visibility
@@ -27,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 from dataclasses import dataclass, field
 
@@ -40,8 +40,6 @@ from .frontier import (
     apply_url_blocklist,
     FRONTIER_SCHEMA,
     apply_url_filters,
-    build_seen_shards,
-    merge_shard_tables,
     probe_seen,
     seeds_to_frontier,
 )
@@ -51,6 +49,10 @@ from .politeness import schedule_round
 @dataclass
 class CrawlConfig:
     ckpt_dir: str
+    # number of files each round writes the exact seen table in — the
+    # one state table every round scans in full (the seen anti-join
+    # and the discovered-link anti-join), so it gets its own write
+    # width instead of state_write_partitions
     n_shards: int = 16
     quota_per_host: int = 256
     default_delay_ms: int = 1000
@@ -62,14 +64,6 @@ class CrawlConfig:
     # / query-explosion / length rules, same codegen stage as the
     # validity filter)
     trap_filter: bool = False
-    expected_per_shard: int = 1 << 16
-    fp_rate: float = 1e-4
-    # URL-seen sketch family: "bloom" (default, fewest bits/item) or
-    # "cuckoo" (deletable — a crawl that will serve recrawl scheduling
-    # must pick cuckoo so forget_seen_urls can reopen stale URLs).
-    # Persisted shards are self-describing; resume keeps whichever
-    # family built the checkpoint.
-    sketch_kind: str = "bloom"
     # AIMD adaptive per-host crawl delay (politeness.py:
     # update_host_delays): hosts with fetch errors back off
     # multiplicatively, healthy hosts recover additively toward the
@@ -79,9 +73,10 @@ class CrawlConfig:
     adaptive_delay: bool = False
     adaptive_min_delay_ms: int = 250
     adaptive_max_delay_ms: int = 60_000
-    # state tables are small relative to results; coalesce their writes
-    # to avoid 1-row-per-task file storms (None = leave partitioning to
-    # AQE — the right setting on a real cluster with large rounds)
+    # state tables (all but seen, see n_shards) are small relative to
+    # results; coalesce their writes to avoid 1-row-per-task file
+    # storms (None = leave partitioning to AQE — the right setting on
+    # a real cluster with large rounds)
     state_write_partitions: int | None = 8
     # count the next frontier for stats (costs one extra job per
     # round; loop control only needs the scheduled count)
@@ -137,13 +132,7 @@ def last_committed_round(cfg: CrawlConfig) -> int | None:
 def _write(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     if coalesce is not None:
         df = df.coalesce(coalesce)
-    t0 = time.time()
     df.write.mode("overwrite").parquet(path)
-    if os.environ.get("CRAWL_PHASE_DEBUG"):
-        print(
-            f"# crawl-write {os.path.basename(path)}: {time.time()-t0:.2f}s",
-            file=sys.stderr,
-        )
 
 
 def _read(spark: SparkSession, path: str, schema=None) -> DataFrame | None:
@@ -244,20 +233,46 @@ def run_round(
     blocklist: DataFrame | None = None,
 ) -> dict:
     """Execute one crawl round from the state committed at
-    ``round_id - 1`` and commit ``round=round_id``. Returns metrics.
-    ``blocklist`` (a ``domain`` table, RefinedWeb's UT1 stage) drops
-    blocked hosts and their subdomains ahead of the seen probe —
-    apply_url_blocklist's broadcast suffix join."""
-    t0 = time.time()
+    ``round_id - 1`` and commit ``round=round_id``. Returns the
+    round's record, which is also the content of its ``_COMMIT``
+    marker: row counts, ``wall_s`` and the per-phase walls
+    ``seen_probe_s``, ``fetch_log_s``, ``results_s`` and
+    ``state_writes_s``. ``blocklist`` (a ``domain`` table, RefinedWeb's
+    UT1 stage) drops blocked hosts and their subdomains ahead of the
+    seen probe — apply_url_blocklist's broadcast suffix join.
+
+    A round that raises leaves no ``_COMMIT``, no cached DataFrame and
+    no state write still running; resume replays it from the previous
+    committed state."""
+    round_caches: list[DataFrame] = []
+    try:
+        return _run_round(spark, cfg, pages, robots, round_id, blocklist, round_caches)
+    finally:
+        for cached in round_caches:
+            cached.unpersist()
+
+
+def _run_round(
+    spark: SparkSession,
+    cfg: CrawlConfig,
+    pages: DataFrame,
+    robots: DataFrame | None,
+    round_id: int,
+    blocklist: DataFrame | None,
+    round_caches: list[DataFrame],
+) -> dict:
+    """The body of :func:`run_round`. Every DataFrame it persists is
+    appended to ``round_caches``, which the caller unpersists whether
+    the round commits or raises."""
+    t0 = time.perf_counter()
     prev = _round_dir(cfg, round_id - 1)
     frontier = _read(spark, os.path.join(prev, "frontier"))
     if frontier is None:
         raise RuntimeError(f"no committed frontier at {prev}")
     seen = read_seen(spark, cfg, round_id - 1)
-    shards = _read(spark, os.path.join(prev, "shards"))
     host_state = _read(spark, os.path.join(prev, "host_state"))
 
-    # -- filter chain (all JVM-side except the Bloom probe) -------------
+    # -- filter chain (all JVM-side) -----------------------------------
     candidates = apply_url_filters(
         frontier.filter(F.col("status") == "pending").filter(F.col("depth") <= cfg.max_depth),
         robots=robots,
@@ -266,11 +281,13 @@ def run_round(
     )
     if blocklist is not None:
         candidates = apply_url_blocklist(candidates, blocklist)
-    round_caches: list[DataFrame] = []
-    fresh = probe_seen(
-        candidates, shards, seen, cfg.n_shards,
-        unpersist_into=round_caches, eager=True,
-    )
+    walls: dict[str, float] = {}
+    t = time.perf_counter()
+    # all four arguments positional: perfbench/tracing.py wraps
+    # probe_seen with a four-positional-parameter signature
+    fresh = probe_seen(candidates, seen, round_caches, True)
+    walls["seen_probe_s"] = time.perf_counter() - t
+    t = time.perf_counter()
 
     # -- politeness scheduling -----------------------------------------
     delay_col = (
@@ -315,6 +332,7 @@ def run_round(
         max_scheduled_per_round=cfg.max_scheduled_per_round,
     )
     schedule = schedule.persist()
+    round_caches.append(schedule)
 
     # -- fetch = J6 equi-join against the pages corpus ------------------
     fetched = schedule.join(
@@ -322,6 +340,7 @@ def run_round(
     ).withColumn(
         "fetch_status", F.when(F.col("html").isNotNull(), "fetched").otherwise("failed")
     ).persist()
+    round_caches.append(fetched)
 
     # -- extraction (one Arrow round-trip) ------------------------------
     # The fetch join's output partitioning follows the join strategy
@@ -353,6 +372,7 @@ def run_round(
         url_col="url",
         products=(*products, "links"),
     ).persist()
+    round_caches.append(extracted)
 
     rdir = _round_dir(cfg, round_id)
     # Round counters ride the write actions via df.observe() — the
@@ -371,6 +391,7 @@ def run_round(
         "fetch_status", F.lit(round_id).alias("round_id"),
     ).observe(obs_sched, F.count(F.lit(1)).alias("n"))
     _write(fetch_log, os.path.join(rdir, "fetch_log"), cfg.state_write_partitions)
+    walls["fetch_log_s"] = time.perf_counter() - t
 
     if cfg.adaptive_delay:
         # AIMD politeness state: per-host ok/err counts from THIS
@@ -401,7 +422,9 @@ def run_round(
         *products,
         F.lit(round_id).alias("round_id"),
     ).observe(obs_ok, F.count(F.lit(1)).alias("n"))
+    t = time.perf_counter()
     _write(results, os.path.join(rdir, "results"))
+    walls["results_s"] = time.perf_counter() - t
 
     # per-partition lineage + counters (S14/metrics table): which input
     # partition produced how many rows, and the round provenance.
@@ -423,10 +446,10 @@ def run_round(
         .withColumn("src", F.lit("extracted"))
     )
 
-    # The remaining state writes (metrics, seen, shards, host_state,
-    # frontier, host-authority) are INDEPENDENT given the persisted
-    # upstreams the fetch_log/results actions already materialized
-    # (schedule, fetched, extracted, the probe caches), so they are
+    # The remaining state writes (metrics, seen, host_state, frontier,
+    # host-authority) are INDEPENDENT given the persisted upstreams
+    # the fetch_log/results actions already materialized (schedule,
+    # fetched, extracted, the probe cache), so they are
     # collected as deferred tasks and submitted from a small thread
     # pool: each write is a short job whose tail would otherwise
     # leave the executor idle — overlapping them back-fills the idle
@@ -435,7 +458,9 @@ def run_round(
     # round at the bench shape. Marker files are written inside their
     # own task, strictly after that table's parquet commit; the
     # round's _COMMIT marker still lands only after every task has
-    # joined.
+    # joined. The first failed task cancels the queued ones and the
+    # round raises once the running ones have finished — no writer
+    # outlives a failed round.
     write_tasks: list = []
 
     write_tasks.append(
@@ -454,30 +479,17 @@ def run_round(
     def _write_seen():
         if compact and seen is not None:
             full = seen.select("url").unionByName(scheduled_urls).distinct()
-            _write(full, os.path.join(rdir, "seen"), cfg.state_write_partitions)
+            _write(full, os.path.join(rdir, "seen"), cfg.n_shards)
             with open(os.path.join(rdir, "_SEEN_COMPACT"), "w") as fh:
                 fh.write("")
         else:
-            _write(
-                scheduled_urls, os.path.join(rdir, "seen"),
-                cfg.state_write_partitions,
-            )
+            _write(scheduled_urls, os.path.join(rdir, "seen"), cfg.n_shards)
             if compact:  # round 0 of a compaction cycle with no prior seen
                 with open(os.path.join(rdir, "_SEEN_COMPACT"), "w") as fh:
                     fh.write("")
 
     write_tasks.append(_write_seen)
 
-    new_shards = build_seen_shards(
-        scheduled_urls, cfg.n_shards, round_id, cfg.expected_per_shard, cfg.fp_rate,
-        sketch_kind=cfg.sketch_kind,
-    )
-    all_shards = new_shards if shards is None else merge_shard_tables(shards.unionByName(new_shards))
-    write_tasks.append(
-        lambda: _write(
-            all_shards, os.path.join(rdir, "shards"), cfg.state_write_partitions
-        )
-    )
     write_tasks.append(
         lambda: _write(
             new_host_state, os.path.join(rdir, "host_state"),
@@ -587,34 +599,34 @@ def run_round(
 
         write_tasks.append(_write_authority)
 
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor, as_completed
 
+    t = time.perf_counter()
     with ThreadPoolExecutor(max_workers=4) as pool:
-        for fut in [pool.submit(t) for t in write_tasks]:
-            fut.result()
+        futures = [pool.submit(task) for task in write_tasks]
+        try:
+            for fut in as_completed(futures):
+                fut.result()
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
+    walls["state_writes_s"] = time.perf_counter() - t
 
     n_sched = int(obs_sched.get["n"])
     n_ok = int(obs_ok.get["n"])
-    n_failed = n_sched - n_ok  # left join preserves every scheduled row
-    n_next = int(obs_next.get["n"]) if obs_next is not None else -1
-    schedule.unpersist()
-    fetched.unpersist()
-    extracted.unpersist()
-    for cached in round_caches:
-        cached.unpersist()
-
-    # atomic commit marker LAST
-    with open(os.path.join(rdir, "_COMMIT"), "w") as fh:
-        json.dump({"round_id": round_id, "wall_s": time.time() - t0}, fh)
-
-    return {
+    stats = {
         "round_id": round_id,
         "scheduled": n_sched,
         "fetched": n_ok,
-        "failed": n_failed,
-        "next_frontier": n_next,
-        "wall_s": time.time() - t0,
+        "failed": n_sched - n_ok,  # left join preserves every scheduled row
+        "next_frontier": int(obs_next.get["n"]) if obs_next is not None else -1,
+        **walls,
+        "wall_s": time.perf_counter() - t0,
     }
+    # atomic commit marker LAST
+    with open(os.path.join(rdir, "_COMMIT"), "w") as fh:
+        json.dump(stats, fh)
+    return stats
 
 
 def init_crawl(

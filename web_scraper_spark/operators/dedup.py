@@ -1166,9 +1166,8 @@ def embedding_near_dups(
     With ``bucket_col`` (e.g. an IVF/LSH bucket or a label) the
     self-join is restricted per bucket — the scale path. Without, it
     is ALL-PAIRS, so the call fails fast (ValueError) when the input
-    exceeds ``max_unbucketed_rows`` (one count job) — the same
-    fail-don't-melt contract as probe_seen's broadcast budget; a 10^6
-    row corpus reaching the quadratic join would be a 10^12-row
+    exceeds ``max_unbucketed_rows`` (one count job) — fail, don't melt:
+    a 10^6 row corpus reaching the quadratic join would be a 10^12-row
     shuffle, not a slow query. Raise the bound (or pass a bucket
     column) deliberately.
 

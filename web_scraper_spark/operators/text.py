@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
-from ._materialize import materialize
-
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic.
 # Deliberately small + deterministic; this is a heuristic operator, not
 # a model. Scores are whole-word match counts.
@@ -316,9 +314,7 @@ def top_ngram_share(df, text_col: str, id_col: str, n: int = 2):
     )
 
 
-def unigram_surprisal(
-    df, text_col: str, id_col: str, max_broadcast_vocab: int = 2_000_000
-):
+def unigram_surprisal(df, text_col: str, id_col: str):
     """CCNet-style LM quality signal: mean per-token surprisal of each
     document against the CORPUS'S OWN unigram distribution — gibberish
     and rare-token soup score high, boilerplate scores low.
@@ -333,26 +329,14 @@ def unigram_surprisal(
     counts table is built FROM THE CORPUS, so its size is unbounded:
     at web scale the distinct-token tail runs to billions of rows and
     force-broadcasting it would OOM the driver long before the query
-    is slow. The join strategy is therefore chosen by a measured
-    vocabulary size (one approx_count_distinct pass, ±~5%): at or
-    under ``max_broadcast_vocab`` distinct tokens the counts side is
-    broadcast (the common case — vocabulary ≪ corpus); above it the
-    hint is dropped and the tok⨝counts join shuffles on ``tok`` — the
-    right plan at that size, same results.
-
-    Since r7 the budget decision is delegated to ADAPTIVE QUERY
+    is slow. The join strategy is therefore left to ADAPTIVE QUERY
     EXECUTION: the counts side is a post-shuffle aggregate whose REAL
     size AQE knows at runtime, so the tok⨝counts join is planned
     without a hint and AQE converts it to a broadcast join exactly
-    when the actual counts table fits the session's broadcast
-    threshold (above it, the sort-merge fallback on ``tok`` stands —
-    the identical OOM-safe plan the r1–r6 guard picked). This removes
-    the r6 shape's dedicated ``approx_count_distinct`` probe pass — a
-    full extra corpus scan just to measure (guide §1.2) — measured
-    2.8 s → 1.6 s at sf1.0. ``max_broadcast_vocab`` is retained for
-    API compatibility; the effective budget is
-    ``spark.sql.autoBroadcastJoinThreshold`` (bytes, not rows — the
-    more direct memory bound).
+    when the actual counts table fits
+    ``spark.sql.autoBroadcastJoinThreshold`` (bytes — the direct
+    memory bound); above it the sort-merge join on ``tok`` stands,
+    same results, with no extra pass over the corpus to measure it.
     Returns (id, n_tokens, mean_deciban)."""
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -379,9 +363,7 @@ def unigram_surprisal(
     )
 
 
-def bigram_surprisal(
-    df, text_col: str, id_col: str, max_broadcast_bigrams: int = 2_000_000
-):
+def bigram_surprisal(df, text_col: str, id_col: str):
     """Bigram extension of :func:`unigram_surprisal` — the CCNet-style
     LM-perplexity quality filter one order up: mean per-bigram
     surprisal of each document under the corpus's own bigram model
@@ -397,13 +379,12 @@ def bigram_surprisal(
 
     Scale shape: one explode to bigram rows, two groupBys for the
     (l, r) and (l, ·) counts, then joins back. The bigram table grows
-    faster than the vocabulary, so the unigram operator's broadcast
-    guard matters even more here: the (l, r) counts are broadcast only
-    when a measured approx_count_distinct stays at or under
-    ``max_broadcast_bigrams``; above it both count joins shuffle on
-    their token keys — the OOM-safe plan at web scale (the (l, ·)
-    side follows the same decision; it is never larger than the
-    bigram side). Docs with < 2 tokens have no bigrams and report
+    faster than the vocabulary, so a forced broadcast would be even
+    less safe than for the unigram operator: AQE broadcasts the count
+    tables only when their runtime size fits
+    ``spark.sql.autoBroadcastJoinThreshold``; above it both count
+    joins shuffle on their token keys — the OOM-safe plan at web
+    scale. Docs with < 2 tokens have no bigrams and report
     (0, 0.0). Returns (id, n_bigrams, mean_deciban)."""
     toks = F.split(
         F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), " "
@@ -553,8 +534,7 @@ def perplexity_buckets(
     carries an ``assert_true(m <= max_sample_rows)`` guard (zero extra
     jobs — ``m`` is already computed there), so a misconfigured
     ``sample_ppm`` on a huge corpus fails fast instead of silently
-    feeding an unbounded single-partition rank window — the same
-    budget idiom as crawl.frontier.probe_seen's byte guard.
+    feeding an unbounded single-partition rank window.
 
     Returns (id, n_tokens, mean_deciban, bucket) with bucket in
     [1, n_buckets]; bucket 1 is the LOW-surprisal head."""

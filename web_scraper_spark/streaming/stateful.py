@@ -1,18 +1,17 @@
 """Custom stateful streaming operator: first-seen URL dedup via
 ``applyInPandasWithState`` (SURVEY.md §2.10 / task mandate).
 
-The batch engine's URL-seen membership is Bloom shards + an exact
-anti-join (crawl/frontier.py). This is the streaming-native twin: the
-seen set IS engine-managed state, keyed by a hash shard of the URL —
-so state is partitioned (no single executor holds the whole seen
+The batch engine's URL-seen membership is an exact anti-join against
+the seen table (crawl/frontier.py). This is the streaming-native
+twin: the seen set IS engine-managed state, keyed by a hash shard of
+the URL — so state is partitioned (no single executor holds the whole seen
 set), survives restarts through the streaming checkpoint, and new
 micro-batches only touch the shards their URLs land in.
 
 Scale notes:
-- the shard key is ``pmod(xxhash64(url), n_shards)`` — the same
-  hot-host-free partitioning as the batch Bloom shards; n_shards
-  bounds per-group state size and sets the parallelism of the
-  stateful stage.
+- the shard key is ``pmod(xxhash64(url), n_shards)`` — hot-host-free
+  partitioning (a url hash, not its host); n_shards bounds per-group
+  state size and sets the parallelism of the stateful stage.
 - per-shard state is an ``array<long>`` of 64-bit url hashes (8
   bytes/url). At real scale you'd swap the array for a serialized
   Bloom filter in the same state slot (bytes column) — the operator
@@ -61,10 +60,9 @@ def stream_first_seen(
       — state is FIXED-SIZE per shard regardless of url count, the
       10^10-scale backend. No false negatives (a duplicate never
       passes), but the configured ``fp_rate`` of genuinely-new URLs
-      is mistakenly dropped — the standard sketch trade, same as the
-      batch engine's Bloom shards (which recover exactness with an
-      exact anti-join on suspects; a stream has no retroactive join,
-      so the loss rate IS the fp rate).
+      is mistakenly dropped — the standard sketch trade (a stream
+      has no retroactive exact join, so the loss rate IS the fp
+      rate).
 
     Output schema = input schema (append mode)."""
     out_schema = pages.schema
