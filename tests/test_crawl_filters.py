@@ -93,6 +93,50 @@ def test_probe_seen_no_false_negatives(spark):
     assert probe_seen(cand, None) is cand  # nothing seen yet: no-op
 
 
+def test_probe_seen_broadcast_budget(spark):
+    """The seen check broadcasts nothing on its own: the session's
+    broadcast budget decides. With both thresholds at -1 the anti-join
+    shuffles (no seen table is shipped to every task, however large it
+    grows); with the default budget AQE broadcasts the small seen
+    table. The answer is exact either way."""
+    all_urls = [f"https://h{i % 3}.x/b{i}" for i in range(200)]
+    seen_df = spark.createDataFrame([(u,) for u in all_urls[:120]], "url string")
+    cand = seeds_to_frontier(spark, all_urls)
+
+    def final_plan(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    thresholds = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in thresholds}
+    for k, v in thresholds.items():
+        spark.conf.set(k, v)
+    try:
+        shuffled = probe_seen(cand, seen_df, None, True)
+        plan = final_plan(shuffled)
+        got = {r["url"] for r in shuffled.select("url").collect()}
+        shuffled.unpersist()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastHashJoin" not in plan, plan
+    assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan), plan
+    assert got == set(all_urls[120:])
+
+    broadcast = probe_seen(cand, seen_df, None, True)
+    plan = final_plan(broadcast)
+    got = {r["url"] for r in broadcast.select("url").collect()}
+    broadcast.unpersist()
+    assert "BroadcastHashJoin" in plan, plan
+    assert got == set(all_urls[120:])
+
+
 def test_bloom_vectorized_no_false_negatives_and_scalar_agreement():
     """The numpy i64 path: everything added must probe positive (no
     false negatives), and unadded keys are mostly negative."""

@@ -1,249 +1,109 @@
-"""Cuckoo-filter seen-sketch tests: unit properties (no false
-negatives, deletion, determinism, merge, kick-loop load, fail-fast),
-frontier integration (build/merge/probe dispatch on the payload
-magic), and the recrawl forget loop — the capability the north star's
-"bloom/cuckoo URL-seen filter" names that Bloom cannot provide."""
+"""Seen-set tests that once ran against the Bloom/cuckoo seen sketch.
 
-import numpy as np
-import pytest
+The crawl now checks "seen" with one exact anti-join against the seen
+table (crawl/frontier.py:probe_seen), so the sketch's unit tests are
+gone. These tests keep their names and check what the exact table
+provides in the sketch's place: build → probe → forget, a seen set that
+does not depend on the storage geometry (``n_shards``), and the
+recrawl loop that the deletable cuckoo sketch existed for."""
+
+import os
+
 from pyspark.sql import functions as F
 
-from web_scraper_spark.crawl.bloom import FAMILY_XX64, BloomShard
-from web_scraper_spark.crawl.cuckoo import CuckooShard
-from web_scraper_spark.crawl.frontier import (
-    build_seen_shards,
-    forget_seen_urls,
-    merge_shard_tables,
-    probe_seen,
-    sketch_from_bytes,
-)
+from web_scraper_spark.crawl.frontier import probe_seen
+from web_scraper_spark.crawl.recrawl import frontier_from_recrawl, recrawl_candidates
+from web_scraper_spark.crawl.rounds import CrawlConfig, read_seen, run_crawl
+from web_scraper_spark.functions.columns import surt_url
+from web_scraper_spark.sources.pages import pages_df, url_for
 
-
-def _hashes(n, seed=7):
-    rng = np.random.default_rng(seed)
-    return (
-        rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
-        rng.integers(-(2**63), 2**63 - 1, n, dtype=np.int64),
-    )
-
-
-# ---------------------------------------------------------------------
-# Unit properties
-# ---------------------------------------------------------------------
-
-def test_cuckoo_no_false_negatives_and_fp_rate():
-    h1, h2 = _hashes(50_000)
-    s = CuckooShard.sized_for(50_000, fp_rate=1e-4)
-    assert s.add_many_i64(h1, h2) == 50_000
-    assert s.contains_many_i64(h1, h2).all()
-    p1, p2 = _hashes(100_000, seed=99)
-    assert s.contains_many_i64(p1, p2).mean() < 5e-4
-
-
-def test_cuckoo_idempotent_readd_and_byte_determinism():
-    h1, h2 = _hashes(10_000)
-    s = CuckooShard.sized_for(10_000)
-    s.add_many_i64(h1, h2)
-    blob = s.to_bytes()
-    assert s.add_many_i64(h1, h2) == 0  # replayed batch is a no-op
-    assert s.to_bytes() == blob
-    # same row SET in a different order -> byte-identical table
-    # (canonical insert order), the checkpoint-replay invariant the
-    # Bloom OR gives for free
-    perm = np.random.default_rng(3).permutation(len(h1))
-    s2 = CuckooShard.sized_for(10_000)
-    s2.add_many_i64(h1[perm], h2[perm])
-    assert s2.to_bytes() == blob
-
-
-def test_cuckoo_delete_restores_empty_table():
-    # 32-bit fingerprints: (bucket, fp) birthday collisions are
-    # negligible at this scale, so every input is its own key
-    h1, h2 = _hashes(20_000)
-    s = CuckooShard.sized_for(20_000, fp_rate=1e-4)
-    added = s.add_many_i64(h1, h2)
-    deleted = s.delete_many_i64(h1, h2)
-    assert deleted.sum() == added == 20_000
-    assert s.n_items == 0 and not s.table.any()
-    # deleting again finds nothing
-    assert not s.delete_many_i64(h1[:100], h2[:100]).any()
-
-
-def test_cuckoo_partial_delete_keeps_survivors():
-    h1, h2 = _hashes(8_000)
-    s = CuckooShard.sized_for(8_000, fp_rate=1e-4)
-    s.add_many_i64(h1, h2)
-    s.delete_many_i64(h1[:4_000], h2[:4_000])
-    assert s.contains_many_i64(h1[4_000:], h2[4_000:]).all()
-
-
-def test_cuckoo_serialization_roundtrip_and_dispatch():
-    h1, h2 = _hashes(1_000)
-    s = CuckooShard.sized_for(1_000)
-    s.add_many_i64(h1, h2)
-    s2 = sketch_from_bytes(s.to_bytes())
-    assert isinstance(s2, CuckooShard)
-    assert (s2.table == s.table).all() and s2.n_items == s.n_items
-    assert s2.family == FAMILY_XX64
-    b = BloomShard.sized_for(100)
-    b.add_many_i64(h1[:10], h2[:10])
-    assert isinstance(sketch_from_bytes(b.to_bytes()), BloomShard)
-
-
-def test_cuckoo_merge_disjoint_and_overlapping():
-    h1, h2 = _hashes(12_000)
-    a = CuckooShard.sized_for(12_000)
-    b = CuckooShard.sized_for(12_000)
-    a.add_many_i64(h1[:7_000], h2[:7_000])
-    b.add_many_i64(h1[5_000:], h2[5_000:])  # 2k overlap
-    m = a.merge(b)
-    assert m.contains_many_i64(h1, h2).all()
-    # overlap collapses: distinct keys only
-    assert m.n_items == 12_000
-
-
-def test_cuckoo_high_load_kick_loop_and_overflow_failfast():
-    s = CuckooShard(1 << 10, 4, 32)
-    cap = int((1 << 10) * 4 * 0.95)
-    h1, h2 = _hashes(cap, seed=11)
-    s.add_many_i64(h1, h2)
-    assert s.contains_many_i64(h1, h2).all()
-    # drive well past 100% load -> must raise, not degrade
-    o1, o2 = _hashes(2 * (1 << 12), seed=13)
-    with pytest.raises(ValueError, match="over capacity"):
-        s.add_many_i64(o1, o2)
-
-
-def test_cuckoo_family_and_geometry_guards():
-    s = CuckooShard.sized_for(100)
-    h1, h2 = _hashes(10)
-    s.add_many_i64(h1, h2)
-    with pytest.raises(ValueError, match="don't mix"):
-        s.merge(BloomShard.sized_for(100))
-    with pytest.raises(ValueError, match="geometry"):
-        s.merge(CuckooShard(s.n_buckets * 2, s.slots, s.fp_bits))
-    with pytest.raises(ValueError, match="power of two"):
-        CuckooShard(100, 4, 16)
-
-
-# ---------------------------------------------------------------------
-# Frontier integration (Spark)
-# ---------------------------------------------------------------------
 
 def _urls_df(spark, urls):
     return spark.createDataFrame([(u,) for u in urls], "url string")
 
 
-def test_build_probe_forget_roundtrip(spark):
-    seen_urls = [f"https://h{i % 5}.example/p{i}" for i in range(400)]
-    new_urls = [f"https://h{i % 5}.example/new{i}" for i in range(100)]
-    shards = merge_shard_tables(
-        build_seen_shards(
-            _urls_df(spark, seen_urls), n_shards=4, round_id=0,
-            expected_per_shard=1024, sketch_kind="cuckoo",
-        )
-    ).persist()
-    seen_exact = _urls_df(spark, seen_urls)
-    cands = _urls_df(spark, seen_urls[:50] + new_urls)
-    fresh = probe_seen(cands, shards, seen_exact, n_shards=4)
-    got = {r["url"] for r in fresh.collect()}
-    assert got == set(new_urls)  # seen filtered, new kept
-
-    # forget 30 of the seen urls -> sketch-NEGATIVE -> they bypass the
-    # exact anti-join (still listed there!) and probe as new again:
-    # exactly the recrawl reopening semantics
-    stale = seen_urls[:30]
-    forgotten = forget_seen_urls(shards, _urls_df(spark, stale), n_shards=4)
-    fresh2 = probe_seen(cands, forgotten, seen_exact, n_shards=4)
-    got2 = {r["url"] for r in fresh2.collect()}
-    assert got2 == set(new_urls) | set(stale)
-    # non-forgotten stay filtered; shard accounting dropped
-    n_before = sum(r["n_items"] for r in shards.collect())
-    n_after = sum(r["n_items"] for r in forgotten.collect())
-    assert n_before - n_after == len(stale)
-    shards.unpersist()
-
-
-def test_forget_on_bloom_shards_raises(spark):
-    shards = build_seen_shards(
-        _urls_df(spark, ["https://a.example/x"]), n_shards=2, round_id=0,
-        expected_per_shard=64, sketch_kind="bloom",
+def _last_round(ckpt_dir):
+    return max(
+        int(d.split("=")[1])
+        for d in os.listdir(ckpt_dir)
+        if d.startswith("round=") and os.path.exists(os.path.join(ckpt_dir, d, "_COMMIT"))
     )
-    out = forget_seen_urls(shards, _urls_df(spark, ["https://a.example/x"]), 2)
-    with pytest.raises(Exception, match="deletable sketch"):
-        out.collect()
 
 
-def test_cross_family_shard_merge_raises(spark):
-    urls = _urls_df(spark, [f"https://a.example/{i}" for i in range(32)])
-    b = build_seen_shards(urls, 2, 0, expected_per_shard=64, sketch_kind="bloom")
-    c = build_seen_shards(urls, 2, 1, expected_per_shard=64, sketch_kind="cuckoo")
-    with pytest.raises(Exception, match="don't mix|families"):
-        merge_shard_tables(b.unionByName(c)).collect()
+def _seen_urls(spark, cfg):
+    seen = read_seen(spark, cfg, _last_round(cfg.ckpt_dir))
+    return {r["url"] for r in seen.select("url").collect()}
+
+
+def test_build_probe_forget_roundtrip(spark, tmp_path):
+    """A committed round builds the seen table; probing against it
+    drops exactly the seen URLs; forgetting is an anti-join on the
+    table itself, after which the forgotten URLs probe as new again
+    while every other seen URL stays filtered."""
+    pages = pages_df(spark, 32)
+    cfg = CrawlConfig(
+        ckpt_dir=str(tmp_path / "ck"), quota_per_host=8, max_depth=1, n_shards=4
+    )
+    run_crawl(spark, cfg, pages, None, [url_for(r) for r in range(8)], n_rounds=1)
+    seen = read_seen(spark, cfg, _last_round(cfg.ckpt_dir))
+    seen_urls = sorted(r["url"] for r in seen.select("url").collect())
+    assert len(seen_urls) >= 8
+
+    new_urls = [f"https://h{i % 5}.example/new{i}" for i in range(40)]
+    cands = _urls_df(spark, seen_urls + new_urls)
+    fresh = probe_seen(cands, seen, None, True)
+    assert {r["url"] for r in fresh.collect()} == set(new_urls)
+    fresh.unpersist()
+
+    stale = seen_urls[::2]
+    forgotten = seen.join(_urls_df(spark, stale), "url", "left_anti")
+    assert forgotten.count() == len(seen_urls) - len(stale)
+    fresh2 = probe_seen(cands, forgotten, None, True)
+    assert {r["url"] for r in fresh2.collect()} == set(new_urls) | set(stale)
+    fresh2.unpersist()
 
 
 def test_crawl_with_cuckoo_sketch_matches_bloom_seen_set(spark, tmp_path):
-    """Full crawl parity: same corpus + seeds, sketch_kind bloom vs
-    cuckoo -> identical seen set and round metrics (the sketch family
-    is a storage choice, never a semantics choice)."""
-    from web_scraper_spark.crawl.rounds import CrawlConfig, run_crawl
-    from web_scraper_spark.sources.pages import pages_df, url_for
-
+    """Full crawl parity across seen-table geometries: the same corpus
+    and seeds with ``n_shards`` 1 and 4 give the same seen set and the
+    same per-round schedule. ``n_shards`` only sets how many files each
+    round writes the seen table in — a storage choice, never a
+    semantics choice, as the sketch family was before it."""
     pages = pages_df(spark, 32)
     seeds = [url_for(r) for r in (0, 1, 2, 3)]
     results = {}
-    for kind in ("bloom", "cuckoo"):
+    for n_shards in (1, 4):
         cfg = CrawlConfig(
-            ckpt_dir=str(tmp_path / kind), quota_per_host=8, max_depth=2,
-            n_shards=4, expected_per_shard=4096, sketch_kind=kind,
+            ckpt_dir=str(tmp_path / f"s{n_shards}"), quota_per_host=8,
+            max_depth=2, n_shards=n_shards,
         )
         stats = run_crawl(spark, cfg, pages, None, seeds, n_rounds=2)
-        import os
-
-        last = max(
-            int(d.split("=")[1])
-            for d in os.listdir(cfg.ckpt_dir)
-            if d.startswith("round=")
-        )
-        from web_scraper_spark.crawl.rounds import read_seen
-
-        seen = {r["url"] for r in read_seen(spark, cfg, last).select("url").collect()}
-        results[kind] = (seen, [s["scheduled"] for s in stats])
-    assert results["bloom"] == results["cuckoo"]
+        files = [
+            f
+            for f in os.listdir(os.path.join(cfg.ckpt_dir, "round=0", "seen"))
+            if f.startswith("part-")
+        ]
+        assert 1 <= len(files) <= n_shards
+        results[n_shards] = (_seen_urls(spark, cfg), [s["scheduled"] for s in stats])
+    assert results[1][0]
+    assert results[1] == results[4]
 
 
 def test_recrawl_forget_loop(spark, tmp_path):
-    """The steady-state loop the cuckoo sketch exists for: crawl with
-    a cuckoo seen set -> CDX index elects stale captures -> forget
-    them -> the same URLs probe fresh for the next round while
-    everything else stays seen."""
-    from web_scraper_spark.crawl.recrawl import recrawl_candidates
-    from web_scraper_spark.crawl.rounds import CrawlConfig, run_crawl
-    from web_scraper_spark.functions.columns import surt_url
-    from web_scraper_spark.sources.pages import pages_df, url_for
-
+    """The steady-state recrawl loop: crawl → the CDX index elects
+    stale captures → those URLs seed a new crawl, whose seen table
+    starts empty, so exactly the stale URLs are fetched again while the
+    old crawl's seen table still filters all of them."""
     pages = pages_df(spark, 32)
     cfg = CrawlConfig(
-        ckpt_dir=str(tmp_path / "ck"), quota_per_host=8, max_depth=1,
-        n_shards=4, expected_per_shard=4096, sketch_kind="cuckoo",
+        ckpt_dir=str(tmp_path / "ck"), quota_per_host=8, max_depth=1, n_shards=4
     )
     run_crawl(spark, cfg, pages, None, [url_for(r) for r in (0, 1, 2)], n_rounds=2)
-    import os
-
-    last = max(
-        int(d.split("=")[1])
-        for d in os.listdir(cfg.ckpt_dir)
-        if d.startswith("round=")
-    )
-    from web_scraper_spark.crawl.rounds import read_seen
-
-    shards = spark.read.parquet(os.path.join(cfg.ckpt_dir, f"round={last}", "shards"))
-    seen_df = read_seen(spark, cfg, last).select("url").distinct()
-    seen = {r["url"] for r in seen_df.collect()}
-    assert seen
+    seen_df = read_seen(spark, cfg, _last_round(cfg.ckpt_dir)).select("url")
+    crawled = sorted(r["url"] for r in seen_df.collect())
+    assert crawled
 
     # synthetic capture index: half the crawled urls are stale
-    crawled = sorted(seen)
     stale, fresh_caps = crawled[::2], crawled[1::2]
     cdx = spark.createDataFrame(
         [(u, "20200101000000") for u in stale]
@@ -253,7 +113,20 @@ def test_recrawl_forget_loop(spark, tmp_path):
     cands = recrawl_candidates(cdx, cutoff_ts14="20240101000000")
     assert {r["url"] for r in cands.collect()} == set(stale)
 
-    forgotten = forget_seen_urls(shards, cands.select("url"), cfg.n_shards)
-    probe = probe_seen(seen_df, forgotten, seen_df, cfg.n_shards)
-    reopened = {r["url"] for r in probe.collect()}
-    assert reopened == set(stale)
+    # the old crawl would never reopen them: every candidate is seen
+    still_seen = probe_seen(cands.select("url"), seen_df, None, True)
+    assert still_seen.count() == 0
+    still_seen.unpersist()
+
+    re_cfg = CrawlConfig(
+        ckpt_dir=str(tmp_path / "recrawl"), quota_per_host=64, max_depth=0,
+        n_shards=4,
+    )
+    stats = run_crawl(
+        spark, re_cfg, pages, None, None, n_rounds=1,
+        seed_frontier=frontier_from_recrawl(cands),
+    )
+    assert stats[0]["scheduled"] == len(stale)
+    log = spark.read.parquet(os.path.join(re_cfg.ckpt_dir, "round=0", "fetch_log"))
+    assert {r["url"] for r in log.select("url").collect()} == set(stale)
+    assert _seen_urls(spark, re_cfg) == set(stale)
