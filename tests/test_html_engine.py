@@ -5,15 +5,22 @@ the implementation docstrings), including the quirk-ledger behaviors
 (SURVEY.md appendix) that must stay faithful.
 """
 
+import random
+
+import pytest
+
+from web_scraper_spark.functions.udfs import extract_page_record
 from web_scraper_spark.html.clean import (
     clean_html,
     clean_html_str,
     extract_images,
     extract_og_metadata,
     extract_text,
+    span_parents,
 )
 from web_scraper_spark.html.dom import parse_html
 from web_scraper_spark.html.markdown import format_markdown_document, html_to_markdown
+from web_scraper_spark.sources.pages import gen_page_html, url_for
 
 
 def test_drop_tags_removed():
@@ -177,3 +184,92 @@ def test_get_text_strip_join_semantics():
     # get_text(strip=True) joins stripped segments with no separator
     doc = parse_html("<li>a <b>b</b></li>")
     assert doc.find("li").get_text(strip=True) == "ab"
+
+
+# -- one parse per page: markdown of the cleaned tree == re-parse ------------
+
+def _corpus_pages(seeds=(1, 2), n=150):
+    return [(gen_page_html(rid, seed, 1024), url_for(rid)) for seed in seeds for rid in range(n)]
+
+
+# Pieces of malformed HTML: stray closers, bare ``<``/``&``, unclosed
+# tags, comments, tags cleaning drops between text, whitespace-only
+# text, and the markdown branches (headings, lists, tables, pre, …).
+_PIECES = (
+    "x", "y", "word", " a b ", " ", "  ", "\n", "\t\n ",
+    "<", " < ", "&", "&amp;", "&lt;", "a<b", "<1>", "< p>", "</",
+    "</div>", "</p>", "</span>", "</b>", "</a>", "</li>", "</x>", "</br>",
+    "<div>", "<p>", "<span>", "<b>", "<em>", "<a href='/h'>", "<li>", "<ul>",
+    "<ol>", "<table>", "<tr>", "<td>", "<th>", "<pre>", "<code>",
+    "<blockquote>", "<h2>", "<main>", "<body>", "<title>", "<br>", "<hr/>",
+    "<img src='i.png' alt='a'>", "<!-- c -->", "<!---->", "<!--", "-->",
+    "<nav>n</nav>", "<script>s()</script>", "<style>.s{}</style>",
+    "<footer>f</footer>", "<button>b</button>", "<input>", "<aside>",
+    "<span>s</span><span>t</span>", "<li>dup</li>",
+)
+
+
+def _fragments(seed, n):
+    rng = random.Random(seed)
+    return ["".join(rng.choice(_PIECES) for _ in range(rng.randint(1, 30))) for _ in range(n)]
+
+
+@pytest.mark.parametrize(
+    "html,markdown",
+    [
+        ("<div>x<nav>n</nav>y</div>", "xy"),  # a dropped tag joins its neighbours
+        ("<div>one<!-- c -->two</div>", "onetwo"),  # so does a dropped comment
+        ("<p>a < b</p>", "a<b\n\na<b"),  # the parser splits at a bare "<"
+    ],
+)
+def test_markdown_sees_merged_text_nodes(html, markdown):
+    assert extract_page_record(html, "https://h/x")["markdown"] == markdown
+
+
+def test_text_joins_unmerged_segments():
+    rec = extract_page_record("<p>a < b</p><div>x<nav>n</nav>y</div>", "https://h/x")
+    assert rec["text"] == "a < b x y"
+
+
+def test_single_parse_markdown_matches_reparse_of_clean_html():
+    pages = _corpus_pages() + [(h, "https://h.example/p") for h in _fragments(7, 2000)]
+    for html, url in pages:
+        rec = extract_page_record(html, url)
+        assert rec["markdown"] == html_to_markdown(rec["clean_html"]), html
+
+
+# -- DOM queries ---------------------------------------------------------------
+
+_QUERY_DOC = (
+    "<body><div id='a' class='x content'><p>1</p><span>s</span></div>"
+    "<div role='main'><p class='content'>2</p><ul><li>i</li></ul></div>"
+    "<p>3</p><table><tr><td>c</td></tr></table></body>"
+)
+
+
+@pytest.mark.parametrize(
+    "args,kwargs",
+    [
+        (("p",), {}),
+        ((("td", "li"),), {}),
+        ((lambda t: t.find("span") is not None,), {}),
+        (("div",), {"class_": "content"}),
+        (("p",), {"class_": "content"}),
+        (("div",), {"role": "main"}),
+        (("div",), {"id": "missing"}),
+        (("div",), {"recursive": False}),
+        (("body",), {"recursive": False}),
+        (("nope",), {}),
+        ((), {}),
+    ],
+)
+def test_find_is_first_of_find_all(args, kwargs):
+    for root in (parse_html(_QUERY_DOC), parse_html(_QUERY_DOC).find("body")):
+        assert root.find(*args, **kwargs) is (root.find_all(*args, **kwargs) or [None])[0]
+
+
+def test_span_parents_equal_find_all_with_span_descendant():
+    docs = [parse_html(h) for h, _ in _corpus_pages()] + [parse_html(h) for h in _fragments(11, 300)]
+    assert any(span_parents(d) for d in docs)
+    for doc in docs:
+        assert span_parents(doc) == doc.find_all(lambda t: t.find("span") is not None)

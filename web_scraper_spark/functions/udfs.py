@@ -7,8 +7,8 @@ records, title) in a single struct — downstream consumers select
 fields, so Catalyst prunes unreferenced products at the Arrow writer.
 
 Per-row semantics delegate to :mod:`web_scraper_spark.html` (the
-deterministic extraction core); nothing else in the pipeline runs
-Python per row.
+deterministic extraction core), one parse per page; nothing else in
+the pipeline runs Python per row.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..html.clean import anchors_from_doc, clean_dom, extract_og_metadata, images_from_doc
 from ..html.dom import parse_html
-from ..html.markdown import html_to_markdown
+from ..html.markdown import markdown_from_doc
 
 IMAGE_STRUCT = T.StructType(
     [
@@ -60,12 +60,11 @@ EXTRACTED_STRUCT = T.StructType(
 
 def extract_page_record(html: str, url: str) -> dict:
     """Pure per-row extraction (driver-free, clock-free): D1 clean →
-    serialize → D2 markdown on the serialized clean html — the same
-    dataflow the reference's per-URL pipeline runs
-    (contxt/cli.py:44-118 sequence; extraction contract per
-    SURVEY.md caveat 1). One parse of the raw HTML serves OG/image/
-    link extraction and the destructive clean (the reference also
-    reads metadata and images from the pre-clean tree)."""
+    serialize → D2 markdown, the reference's per-URL dataflow
+    (contxt/cli.py:44-118; contract per SURVEY.md caveat 1). One parse
+    serves OG/images/links (read pre-clean, as in the reference), the
+    clean, and the markdown walk over the cleaned tree, whose text
+    nodes are first merged as a parse of ``clean_html`` would split them."""
     doc = parse_html(html)
     og = extract_og_metadata(doc)
     images = images_from_doc(doc, url)
@@ -75,11 +74,14 @@ def extract_page_record(html: str, url: str) -> dict:
     cleaned = doc.to_html()
     title_el = doc.find("title")
     title = title_el.get_text(strip=True) if title_el is not None else ""
+    # ``text`` joins the unmerged segments with " "; merge only after it
+    text = doc.get_text(strip=True, separator=" ")
+    doc.merge_text_nodes()
     return {
         "title": title or og.get("og_title") or url,
         "clean_html": cleaned,
-        "text": doc.get_text(strip=True, separator=" "),
-        "markdown": html_to_markdown(cleaned),
+        "text": text,
+        "markdown": markdown_from_doc(doc),
         "og_title": og.get("og_title"),
         "og_description": og.get("og_description"),
         "og_image": og.get("og_image"),

@@ -79,45 +79,45 @@ def concatenate_spans(doc: Element) -> None:
     """Merge runs of adjacent sibling <span>s; text cascades left→right
     into the last span of each run (contxt/scraper.py:365-405, quirk
     Q7: the child snapshot is stale but text reads are live)."""
-    parents = doc.find_all(lambda tag: tag.find("span") is not None)
-    for parent in parents:
+    for parent in span_parents(doc):
         children = list(parent.children)  # static snapshot
         spans_to_remove = []
-        i = 0
-        while i < len(children) - 1:
-            current = children[i]
-            nxt = children[i + 1]
-            if (
-                isinstance(current, Element)
-                and isinstance(nxt, Element)
-                and current.name == "span"
-                and nxt.name == "span"
-            ):
+        # text nodes have name None, so both of a pair are <span> elements
+        for current, nxt in zip(children, children[1:]):
+            if current.name == "span" and nxt.name == "span":
                 cur_text = current.get_text(strip=True)
                 nxt_text = nxt.get_text(strip=True)
                 if cur_text and nxt_text:
-                    merged = f"{cur_text} {nxt_text}"
                     # reference's ``.string`` setter ≡ clear + append
                     nxt.clear()
-                    nxt.append(TextNode(merged))
+                    nxt.append(TextNode(f"{cur_text} {nxt_text}"))
                     spans_to_remove.append(current)
-            i += 1
         for span in spans_to_remove:
             span.decompose()
+
+
+def span_parents(doc: Element) -> list[Element]:
+    """Elements under ``doc`` with a <span> descendant, in document
+    order, as a static list: each span marks its ancestors up to the
+    first one already marked, so every element is marked at most once."""
+    elements = doc.find_all()
+    marked: set[int] = set()
+    for el in elements:
+        if el.name == "span":
+            p = el.parent
+            while p is not doc and id(p) not in marked:
+                marked.add(id(p))
+                p = p.parent
+    return [el for el in elements if id(el) in marked]
 
 
 def normalize_text_nodes(doc: Element) -> None:
     """Per-text-node cleanup (contxt/scraper.py:305-320): SVG-content
     regex (inert on text nodes — quirk Q4 — but applied for parity)
     then whitespace collapse + strip."""
-    for node in list(doc.text_nodes(include_comments=True)):
-        if node.parent is None or node.is_comment:
-            continue
+    for node in doc.text_nodes(include_comments=False):
         if node.text:
-            cleaned = _SVG_RE.sub("", node.text)
-            cleaned = _WS_RE.sub(" ", cleaned).strip()
-            if cleaned != node.text:
-                node.text = cleaned
+            node.text = _WS_RE.sub(" ", _SVG_RE.sub("", node.text)).strip()
 
 
 def clean_dom(doc: Element) -> Element:
@@ -224,20 +224,6 @@ def anchors_from_doc(doc: Element, base_url: str) -> list[dict]:
 
 
 _TAG_RE = re.compile(r"<[^>]+>")
-
-
-def count_tokens(text: str) -> int:
-    """Token-count estimate.
-
-    The reference uses tiktoken ``cl100k_base`` over tag-stripped text
-    with a documented fallback of ``len(text) // 4`` on any tokenizer
-    error (contxt/scraper.py:407-426). tiktoken is not available in
-    this environment, so the fallback branch *is* the deterministic
-    semantic here — same code path the reference takes without its
-    optional dependency. Note the fallback measures the raw input
-    length (tags included), faithfully to the reference.
-    """
-    return len(text) // 4
 
 
 def strip_tags(text: str) -> str:

@@ -5,7 +5,7 @@ semantics depend on (modeled on how the reference uses BeautifulSoup's
 ``html.parser`` builder — see contxt/scraper.py:263-405 and
 contxt/formatters/markdown_formatter.py:85-283 for the consumed API):
 
-- document-order ``find_all`` / ``descendants``
+- document-order ``find_all``; ``find`` stops at the first match
 - ``get_text(strip=...)``: concatenation of descendant text segments,
   each stripped and empty-dropped when ``strip=True``, joined by ``sep``
 - single-string descent (`bs4` ``.string``): an element with exactly
@@ -107,19 +107,14 @@ class Element:
         v = self.attrs.get("class")
         return v.split() if v else []
 
-    def descendants(self) -> Iterator["Element | TextNode"]:
-        """All descendant nodes in document order (excluding self)."""
-        stack = list(reversed(self.children))
+    def iter_elements(self) -> Iterator["Element"]:
+        """Descendant elements in document order (excluding self)."""
+        stack = self.children[::-1]
         while stack:
             node = stack.pop()
-            yield node
-            if isinstance(node, Element):
-                stack.extend(reversed(node.children))
-
-    def iter_elements(self) -> Iterator["Element"]:
-        for node in self.descendants():
             if isinstance(node, Element):
                 yield node
+                stack.extend(reversed(node.children))
 
     def find_all(
         self,
@@ -135,50 +130,65 @@ class Element:
         (the bs4 convention the reference's content-root cascade
         relies on, contxt/formatters/markdown_formatter.py:103-114).
         """
-        if callable(names) and not isinstance(names, (str, list, tuple, set)):
-            pred = names
+        return list(self._matches(names, recursive, attr_filters))
+
+    def find(self, names=None, recursive: bool = True, **attr_filters):
+        """First element ``find_all`` would return, or None."""
+        return next(self._matches(names, recursive, attr_filters), None)
+
+    def _matches(self, names, recursive: bool, attr_filters: dict) -> Iterator["Element"]:
+        pred = names if callable(names) else None
+        if pred is not None or names is None:
             name_set = None
         else:
-            pred = None
-            if names is None:
-                name_set = None
-            elif isinstance(names, str):
-                name_set = {names}
-            else:
-                name_set = set(names)
-
+            name_set = {names} if isinstance(names, str) else set(names)
         pool = self.iter_elements() if recursive else (c for c in self.children if isinstance(c, Element))
-        out = []
         for el in pool:
             if name_set is not None and el.name not in name_set:
                 continue
             if pred is not None and not pred(el):
                 continue
-            ok = True
-            for k, want in attr_filters.items():
-                if k == "class_":
-                    if want not in el.classes():
-                        ok = False
-                        break
-                else:
-                    if el.attrs.get(k) != want:
-                        ok = False
-                        break
-            if ok:
-                out.append(el)
-        return out
-
-    def find(self, names=None, recursive: bool = True, **attr_filters):
-        for el in self.find_all(names, recursive=recursive, **attr_filters):
-            return el
-        return None
+            if all(
+                want in el.classes() if k == "class_" else el.attrs.get(k) == want
+                for k, want in attr_filters.items()
+            ):
+                yield el
 
     def text_nodes(self, include_comments: bool = True) -> list[TextNode]:
-        return [
-            n
-            for n in self.descendants()
-            if isinstance(n, TextNode) and (include_comments or not n.is_comment)
-        ]
+        out = []
+        stack = self.children[::-1]
+        while stack:
+            node = stack.pop()
+            if isinstance(node, Element):
+                stack.extend(reversed(node.children))
+            elif include_comments or not node.is_comment:
+                out.append(node)
+        return out
+
+    def merge_text_nodes(self) -> None:
+        """Merge each run of adjacent text nodes into its first node and
+        drop empty text nodes, in place, throughout the subtree. For a
+        tree without comments this gives the text-node split
+        ``parse_html(self.to_html())`` would build. Comments end a run."""
+        stack = [self]
+        while stack:
+            el = stack.pop()
+            kept, run = [], None
+            for node in el.children:
+                if isinstance(node, Element):
+                    stack.append(node)
+                    run = None
+                elif node.is_comment:
+                    run = None
+                elif run is None and node.text:
+                    run = node
+                else:  # empty, or the continuation of a run
+                    if run is not None:
+                        run.text += node.text
+                    node.parent = None
+                    continue
+                kept.append(node)
+            el.children = kept
 
     def get_text(self, strip: bool = False, separator: str = "") -> str:
         """Concatenate descendant text segments (comments excluded).
@@ -240,7 +250,6 @@ def _render_node(node, parts: list[str]) -> None:
 class _TreeBuilder(HTMLParser):
     """Builds an Element tree; lenient close-tag handling."""
 
-    # Tags whose raw content html.parser delivers as CDATA-ish data.
     def __init__(self):
         super().__init__(convert_charrefs=True)
         self.root = Element("[document]")
@@ -269,12 +278,6 @@ class _TreeBuilder(HTMLParser):
 
     def handle_comment(self, data):
         self.stack[-1].append(TextNode(data, is_comment=True))
-
-    def handle_entityref(self, name):  # pragma: no cover (convert_charrefs)
-        self.stack[-1].append(TextNode(f"&{name};"))
-
-    def handle_charref(self, name):  # pragma: no cover (convert_charrefs)
-        self.stack[-1].append(TextNode(f"&#{name};"))
 
 
 def parse_html(html: str) -> Element:

@@ -3,7 +3,15 @@
 A from-scratch reimplementation of the reference's iterative
 "breadth-first" converter — which, via ``pop(0)`` plus
 ``insert(0, reversed(children))``, is actually a preorder
-document-order DFS (contxt/formatters/markdown_formatter.py:131-283).
+document-order DFS (contxt/formatters/markdown_formatter.py:131-283);
+here a plain LIFO stack walks the same order.
+
+Text-node contract: ``markdown_from_doc`` emits each text node on its
+own line, so it equals ``html_to_markdown(doc.to_html())`` only when
+``doc`` has the text nodes a parse of that string gives. The parser
+splits text at every raw ``<`` that opens no tag, and serialized text
+has none, so a cleaned tree (no comments) meets this after
+``Element.merge_text_nodes()``.
 
 Faithfully reproduced quirks (SURVEY.md ledger):
 - Q5: children of non-container tags are re-pushed after the tag's own
@@ -26,8 +34,6 @@ import re
 
 from .dom import Element, TextNode, parse_html
 
-CONTAINER_TAGS = frozenset({"pre", "blockquote", "ul", "ol", "table"})
-
 _NL3_RE = re.compile(r"\n{3,}")
 _HEADING_GAP_RE = re.compile(r"([^\n])\n(#{1,6} )")
 
@@ -49,9 +55,12 @@ def _find_main_content(doc: Element) -> Element:
 
 def html_to_markdown(html: str) -> str:
     """Convert an HTML string to Markdown (body conversion only)."""
-    if not html:
-        return ""
-    doc = parse_html(html)
+    return markdown_from_doc(parse_html(html))
+
+
+def markdown_from_doc(doc: Element) -> str:
+    """Markdown body of a document tree, which is only read (text-node
+    contract in the module docstring)."""
     out: list[str] = []
     _walk(_find_main_content(doc), out)
     raw = "\n".join(out)
@@ -61,9 +70,9 @@ def html_to_markdown(html: str) -> str:
 
 
 def _walk(root: Element, out: list[str]) -> None:
-    stack: list[tuple[Element | TextNode, int]] = [(root, 0)]
+    stack: list[Element | TextNode] = [root]
     while stack:
-        element, depth = stack.pop(0)
+        element = stack.pop()
 
         if isinstance(element, TextNode):
             # The reference treats every string node — comments
@@ -174,10 +183,9 @@ def _walk(root: Element, out: list[str]) -> None:
             out.append("\n")
 
         # Non-container tags re-push their children (quirk Q5: inline
-        # content is emitted again as bare text).
-        if name not in CONTAINER_TAGS:
-            for child in reversed(element.children):
-                stack.insert(0, (child, depth + 1))
+        # content is emitted again as bare text); the containers above
+        # ``continue`` past this.
+        stack.extend(reversed(element.children))
 
 
 def format_markdown_document(
