@@ -1291,13 +1291,7 @@ def test_bm25_topk_ranking_and_tiebreak(spark):
     assert full[1]["score_micros"] == full[2]["score_micros"]
 
 
-def test_bm25_topk_dense_matches_sparse(spark):
-    """The dense scoring path (in-row contrib-array probing) is
-    row-identical to the inverted-index path on a corpus exercising
-    df caps, ties, multi-term queries, unmatched queries and the
-    sample-derived prefilter floor."""
-    from web_scraper_spark.operators.similarity import bm25_topk
-
+def _bm25_fixture(spark):
     docs = spark.createDataFrame(
         [
             (1, "needle needle common x"),
@@ -1320,26 +1314,51 @@ def test_bm25_topk_dense_matches_sparse(spark):
         ],
         "query_id long, q_text string",
     )
-    key = lambda r: (r["query_id"], r["rank"])
+    return docs, qs
+
+
+def _bm25_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_bm25_topk_dense_matches_sparse(spark):
+    """The dense scoring path (BLAS over Arrow batches) is
+    row-identical to the inverted-index path on a corpus exercising
+    df caps, ties, multi-term queries, unmatched queries and a cap
+    that drops every query term (the dense path's empty term table)."""
+    from web_scraper_spark.operators.similarity import bm25_topk
+
+    docs, qs = _bm25_fixture(spark)
     for kwargs in (
         {},
         {"k": 2},
         {"max_df_frac": 0.9},
+        {"max_df_frac": 0.0},
     ):
-        sparse = sorted(bm25_topk(docs, qs, **kwargs).collect(), key=key)
-        for extra in (
-            {"prefilter_mod": 0},
-            {"prefilter_mod": 2},
-            {"method": "arrow"},
-            {"method": "arrow", "persist": True},
-        ):
-            dense = sorted(
-                bm25_topk(docs, qs, dense=True, **extra, **kwargs).collect(),
-                key=key,
-            )
-            assert [tuple(r) for r in dense] == [tuple(r) for r in sparse], (
-                kwargs, extra,
-            )
+        sparse = _bm25_rows(bm25_topk(docs, qs, **kwargs))
+        dense = _bm25_rows(bm25_topk(docs, qs, dense=True, **kwargs))
+        assert dense == sparse, kwargs
+        if kwargs.get("max_df_frac") == 0.0:
+            assert sparse == []
+
+
+def test_bm25_topk_dense_query_ceiling(spark, monkeypatch):
+    """A query side above _DENSE_MAX_QUERIES takes the sparse path (no
+    MapInPandas scorer in the plan) with the sparse rows; at the
+    ceiling the dense scorer still runs and still matches."""
+    from web_scraper_spark.operators import _materialize
+    from web_scraper_spark.operators import similarity
+
+    # keep the returned plan un-checkpointed so the scorer shows in it
+    monkeypatch.setattr(_materialize, "PLAN_DUMP_MODE", True)
+    docs, qs = _bm25_fixture(spark)  # 4 queries
+    sparse = _bm25_rows(similarity.bm25_topk(docs, qs))
+    for ceiling, scorer in ((2, False), (4, True)):
+        monkeypatch.setattr(similarity, "_DENSE_MAX_QUERIES", ceiling)
+        out = similarity.bm25_topk(docs, qs, dense=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("MapInPandas" in plan) is scorer, (ceiling, plan)
+        assert _bm25_rows(out) == sparse, ceiling
 
 
 def test_integer_pagerank_manual(spark):
@@ -1366,12 +1385,6 @@ def test_integer_pagerank_manual(spark):
         for r in integer_pagerank(e.repartition(7), iterations=2).collect()
     }
     assert out2 == out
-
-    out3 = {
-        r["node"]: r["rank_micros"]
-        for r in integer_pagerank(e, iterations=2, persist=True).collect()
-    }
-    assert out3 == out
 
 
 def test_integer_pagerank_validates_damping(spark):

@@ -1,10 +1,16 @@
 #!/usr/bin/env python
-"""Dump physical plans for the headline queries → PLANS.md.
+"""Dump physical plans: the headline queries → PLANS.md, or full
+``explain("formatted")`` text for chosen queries.
 
-Judge-facing evidence that the plans are the ones you'd want at
+Usage: python tools/dump_plans.py                       → PLANS.md
+       python tools/dump_plans.py <out_dir> <query>...  → <out_dir>/<query>.txt
+
+PLANS.md is the evidence that the plans are the ones you'd want at
 100 TB: pushed filters, pruned scan schemas, broadcast joins where
 dims are small, single exchanges per logical operation, and Arrow
-UDF inputs pruned to [url, html].
+UDF inputs pruned to [url, html]. The per-query files keep the whole
+formatted plan for before/after diffs. The scale-factor directory
+comes from SPARK_GRAFT_SF_DIR (default: the sf0.01 test data).
 """
 
 from __future__ import annotations
@@ -42,7 +48,7 @@ SHOW = [
     ("q76_pack_sequences", "packing prefix sum: data window on _blk; SinglePartition only over block totals"),
     ("q77_duplicate_span_ranges", "span merge: digest groupBy + per-doc ordering window, no self-join"),
     ("q78_token_distribution", "exact percentiles: one hash agg on lang"),
-    ("q83_bm25_topk", "BM25: broadcast query terms onto the df-capped inverted index; exchanges only on term/doc keys"),
+    ("q83_bm25_topk", "dense BM25: df-capped query-term ids broadcast onto the token explode; one doc_id exchange feeds BLAS scoring in mapInPandas, then the per-query top-k window"),
     ("q84_bigram_surprisal", "bigram LM: explode + two token-key groupBys, counts broadcast under the vocab budget"),
     ("q85_host_authority", "integer PageRank: per-iteration src equi-join + dst groupBy, nothing wider than node keys"),
     ("q87_perplexity_buckets", "quantile bucketing at scale: rank window over the bounded hash sample only, corpus bucketed by broadcast cutoffs"),
@@ -70,11 +76,19 @@ SHOW = [
 ]
 
 
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def main() -> None:
     from web_scraper_spark.plans.queries import QUERIES
     from web_scraper_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    out_dir, names = (sys.argv[1], sys.argv[2:]) if len(sys.argv) > 1 else (None, [])
 
     # persist=True gate entries materialize via eager localCheckpoint,
     # which collapses dumped plans to "Scan ExistingRDD" — flip the
@@ -87,6 +101,17 @@ def main() -> None:
     spark = get_spark("plans", cores=4)
     spark.sparkContext.setLogLevel("ERROR")
 
+    if out_dir is not None:
+        os.makedirs(out_dir, exist_ok=True)
+        for name in names:
+            path = os.path.join(out_dir, f"{name}.txt")
+            with open(path, "w") as fh:
+                fh.write(f"# {name} — explain('formatted') at {sf_dir}\n")
+                fh.write(_formatted(QUERIES[name](spark, sf_dir)))
+            print(f"wrote {path}")
+        spark.stop()
+        return
+
     out = [
         "# PLANS.md — physical-plan evidence (generated by tools/dump_plans.py)\n",
         f"Input: {sf_dir}. Things to check per plan: `PushedFilters`,",
@@ -94,13 +119,8 @@ def main() -> None:
         "exchange count, and `WholeStageCodegen` spans.\n",
     ]
     for name, why in SHOW:
-        df = QUERIES[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
         # keep the operator tree; drop the verbose per-node detail
-        tree = plan.split("\n\n\n")[0]
+        tree = _formatted(QUERIES[name](spark, sf_dir)).split("\n\n\n")[0]
         out.append(f"\n## {name} — {why}\n\n```\n{tree}\n```\n")
     spark.stop()
     with open("PLANS.md", "w") as fh:

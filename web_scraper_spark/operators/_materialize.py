@@ -10,7 +10,7 @@ after the round-5 per-operator monkeypatch missed q71/q77 (ADVICE r5).
 
 Only *returned-frame* materializations route through this switch; the
 mid-loop lineage cuts inside iterative operators (connected
-components' alternating-star rounds, PageRank's ``checkpoint_every``)
+components' alternating-star rounds, PageRank's ``_CHECKPOINT_EVERY``)
 stay unconditional — they bound lineage growth during execution and
 never sit on a dumped query's top-level plan.
 """

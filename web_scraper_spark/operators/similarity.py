@@ -503,6 +503,12 @@ def semdedup(
     )
 
 
+#: query-side ceiling of ``bm25_topk(dense=True)``: per Arrow batch
+#: (4,096 rows) the scorer holds batch × nq float64 score matrices,
+#: 128 MiB each at this ceiling; larger query sets take the sparse path
+_DENSE_MAX_QUERIES = 4096
+
+
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
@@ -514,10 +520,7 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     max_df_frac: float = 0.5,
-    persist: bool = False,
     dense: bool = False,
-    prefilter_mod: int = 0,
-    method: str = "expr",
 ) -> DataFrame:
     """Lexical similarity search: BM25 top-k retrieval over an
     inverted index built from the corpus — the sparse complement to
@@ -552,17 +555,6 @@ def bm25_topk(
     partition each; at huge query batches swap the window for
     groupBy + slice(sort_array(...)).
 
-    ``persist=True`` caches the (doc, term, tf, dl) index between its
-    two consumers (document frequency and scoring) — without it the
-    tokenize+explode subtree runs once per consumer (no
-    ReusedExchange: the subtrees differ past the aggregate). The
-    returned DataFrame is then materialized (localCheckpoint) so the
-    cache can be released here — same contract as
-    ``duplicate_spans(persist=True)``. At 100 TB this is the
-    difference between one and three corpus scans; default off for
-    small inputs where the extra materialization costs more than the
-    recompute.
-
     ``dense=True`` selects the dense-corpus scoring shape (optimization
     guide §2.3/§2.4 "shuffle keys and metadata, aggregate before you
     shuffle" applied to retrieval): when query terms hit a constant
@@ -570,27 +562,22 @@ def bm25_topk(
     logs — the inverted-index join emits Θ(|pairs|·|terms/query|) rows
     that must then be re-aggregated per (query, doc) through an
     exchange with ~|Q|·|N| groups, which dominates the runtime. The
-    dense path instead computes, IN-ROW and with zero extra exchanges:
-    (1) a per-document term-frequency map from the sorted token array,
-    (2) a per-document term→contrib map (same BM25 double arithmetic,
-    restricted to uncapped query terms via a broadcast idf map), and
-    (3) the per-(query, doc) score by probing that map with each
-    query's distinct terms under a broadcast nested-loop over the
-    (assumed small) query side — pairs with no matching uncapped term
-    are dropped, exactly the inverted index's candidate set. Only the
-    final top-k window shuffles, and WindowGroupLimit bounds what it
-    moves. For SELECTIVE workloads (big vocabulary, rare query terms)
-    keep ``dense=False``: there the index join emits few candidates
-    and the all-pairs enumeration would be Θ(|Q|·N).
+    dense path instead groups each document's matched (uncapped query)
+    term ids in ONE doc-keyed exchange and scores every (doc, query)
+    pair of an Arrow batch with a BLAS matmul in a ``mapInPandas``
+    stage, emitting only rows at or above each query's per-batch k-th
+    score; the final window ranks those few. Documents with no
+    uncapped query term drop out, exactly the inverted index's
+    candidate set. For SELECTIVE workloads (big vocabulary, rare query
+    terms) keep ``dense=False``: there the index join emits few
+    candidates and the per-batch all-pairs matmul would be Θ(|Q|·N).
 
-    ``prefilter_mod`` (dense path only, 0 = off) inserts an exact
-    sample-derived score floor before the ranking window: the k-th
-    best score over the 1/mod deterministic document subsample
-    (xxhash64-bucketed) is a LOWER bound on the k-th best over all
-    documents, so filtering the full pair stream to ``score >= floor``
-    before the exchange keeps every true top-k row while cutting the
-    window's input by ~mod× (the WAND-style upper-bound idea, with a
-    sound bound from a subsample instead of term maxima).
+    The dense path is EAGER: at call time it runs two small driver
+    collects — the query side, capped at ``_DENSE_MAX_QUERIES + 1``
+    rows, and the df-capped query-term table — and it returns a
+    materialized (localCheckpoint) result so the tokenized corpus it
+    caches between its consumers is released here. A query side above
+    ``_DENSE_MAX_QUERIES`` rows falls back to the sparse path.
 
     Returns (query_id, doc_id, rank, score_micros, n_terms).
     """
@@ -598,10 +585,12 @@ def bm25_topk(
         F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " "
     )
     if dense:
-        return _bm25_topk_dense(
+        out = _bm25_topk_dense(
             docs, queries, text_col, id_col, q_text_col, qid_col,
-            k, k1, b, max_df_frac, persist, prefilter_mod, tok, method,
+            k, k1, b, max_df_frac, tok,
         )
+        if out is not None:
+            return out
     base = docs.select(F.col(id_col).alias("doc_id"), tok(F.col(text_col)).alias("t"))
     tf = (
         base.select(
@@ -612,8 +601,6 @@ def bm25_topk(
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"), F.min("dl").alias("dl"))
     )
-    if persist:
-        tf = tf.persist()
     stats = base.select(F.size("t").cast("long").alias("dl")).agg(
         F.count("*").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
@@ -657,15 +644,11 @@ def bm25_topk(
     w = Window.partitionBy("query_id").orderBy(
         F.col("score_micros").desc(), F.col("doc_id")
     )
-    out = (
+    return (
         agg.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "rank", "score_micros", "n_terms")
     )
-    if persist:
-        out = materialize(out)
-        tf.unpersist()
-    return out
 
 
 def _bm25_topk_dense(
@@ -679,23 +662,24 @@ def _bm25_topk_dense(
     k1: float,
     b: float,
     max_df_frac: float,
-    persist: bool,
-    prefilter_mod: int,
     tok,
-    method: str = "expr",
-) -> DataFrame:
+) -> DataFrame | None:
     """Dense-corpus BM25 scoring shape (see :func:`bm25_topk`,
-    ``dense=True``). Bit-identical to the inverted-index path: corpus
-    stats, df cap and the per-(term, doc) contribution keep the
-    sparse path's exact arithmetic (for ``method="arrow"`` the
-    contribution is evaluated in float64 with the identical IEEE
-    operation order, idf/avgdl are COLLECTED from the JVM-computed
-    term table so no libm difference can leak in, and the HALF_UP
-    micros rounding is floor(x+0.5) — exactly BigDecimal HALF_UP for
-    0 ≤ x < 2^52); only the per-(query, doc) aggregation moves — from
-    a post-join groupBy over the Θ(pairs × terms) row stream into an
-    in-row / in-batch sum (integer micros are order-independent, so
-    the sum is the same BIGINT either way)."""
+    ``dense=True``); None when the query side exceeds
+    ``_DENSE_MAX_QUERIES``. Bit-identical to the inverted-index path:
+    corpus stats, df cap and the per-(term, doc) contribution keep the
+    sparse path's exact arithmetic (the contribution is evaluated in
+    float64 with the identical IEEE operation order, idf/avgdl are
+    COLLECTED from the JVM-computed term table so no libm difference
+    can leak in, and the HALF_UP micros rounding is floor(x+0.5) —
+    exactly BigDecimal HALF_UP for 0 ≤ x < 2^52); only the
+    per-(query, doc) aggregation moves — from a post-join groupBy over
+    the Θ(pairs × terms) row stream into an in-batch sum (integer
+    micros are order-independent, so the sum is the same BIGINT either
+    way)."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
+
     n_parts = docs.sparkSession.sparkContext.defaultParallelism
     # round-robin repartition ahead of the explode: a compact parquet
     # file may plan only 1-2 input splits, which would serialize the
@@ -703,8 +687,6 @@ def _bm25_topk_dense(
     base = docs.select(
         F.col(id_col).alias("doc_id"), tok(F.col(text_col)).alias("t")
     ).repartition(n_parts)
-    if persist and method == "arrow":
-        base = base.persist()
     stats = base.select(F.size("t").cast("long").alias("dl")).agg(
         F.count("*").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
@@ -713,34 +695,22 @@ def _bm25_topk_dense(
         F.col(qid_col).alias("query_id"),
         F.array_distinct(tok(F.col(q_text_col))).alias("qt"),
     )
+    # the query-side collect, bounded BEFORE anything is cached
+    qrows = qdf.limit(_DENSE_MAX_QUERIES + 1).collect()
+    if len(qrows) > _DENSE_MAX_QUERIES:
+        return None
+    base = base.persist()
     qterm_df = qdf.select(F.explode("qt").alias("term")).distinct()
 
-    tf = None
-    if method == "arrow":
-        # document frequency straight from the distinct-terms-per-doc
-        # explode (== the tf table's groupBy(term) count) — the
-        # (doc, term) pre-aggregation exchange disappears entirely;
-        # term counting happens per document in the scorer below
-        dfreq = (
-            base.select(F.explode(F.array_distinct("t")).alias("term"))
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-        )
-    else:
-        # tf table: VERBATIM the sparse path
-        tf = (
-            base.select(
-                "doc_id",
-                F.size("t").cast("long").alias("dl"),
-                F.explode("t").alias("term"),
-            )
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"), F.min("dl").alias("dl"))
-        )
-        if persist:
-            tf = tf.persist()
-        dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-
+    # document frequency straight from the distinct-terms-per-doc
+    # explode (== a (doc, term) table's groupBy(term) count) — the
+    # (doc, term) pre-aggregation exchange disappears entirely; term
+    # counting happens per document in the scorer below
+    dfreq = (
+        base.select(F.explode(F.array_distinct("t")).alias("term"))
+        .groupBy("term")
+        .agg(F.count("*").alias("df"))
+    )
     term_stats = (
         dfreq.join(F.broadcast(qterm_df), "term")
         .crossJoin(F.broadcast(stats))
@@ -762,245 +732,127 @@ def _bm25_topk_dense(
         F.col("score_micros").desc(), F.col("doc_id")
     )
 
-    if method == "arrow":
-        # --- BLAS scoring (guide §4.2): ONE corpus-side exchange — a
-        # groupBy(doc_id) that collects each document's matched term
-        # ids (token explode ⨝ broadcast term ids; capped/non-query
-        # tokens drop here, so documents with no uncapped query term
-        # vanish exactly like the inverted index's candidate set).
-        # Per batch the scorer bincounts tids into the tf matrix and
-        # scores every (doc, query) pair with one C @ M.T matmul
-        # (float64 exact: all values integers < 2^53). Each batch
-        # emits only rows at or above its per-query k-th score (ties
-        # kept conservatively), so the final exact window ranks
-        # ~nq·k rows per batch instead of |Q|·N pairs.
-        import numpy as np
-        from pyspark.sql.types import LongType, StructField, StructType
+    # BLAS scoring (guide §4.2): ONE corpus-side exchange — a
+    # groupBy(doc_id) that collects each document's matched term ids
+    # (token explode ⨝ broadcast term ids; capped/non-query tokens drop
+    # here, so documents with no uncapped query term vanish exactly
+    # like the inverted index's candidate set). Per batch the scorer
+    # bincounts tids into the tf matrix and scores every (doc, query)
+    # pair with one C @ M.T matmul (float64 exact: all values integers
+    # < 2^53). Each batch emits only rows at or above its per-query
+    # k-th score (ties kept conservatively), so the final exact window
+    # ranks ~nq·k rows per batch instead of |Q|·N pairs.
+    trows = term_ids.select(
+        "term", "_tid", idf.alias("_idf"), "avgdl"
+    ).collect()
+    trows.sort(key=lambda r: r["_tid"])
+    nv = len(trows)
+    idf_arr = np.array([r["_idf"] for r in trows], dtype=np.float64)
+    avgdl = float(trows[0]["avgdl"]) if trows else 1.0
+    tid_map_rows = [(r["term"], r["_tid"]) for r in trows]
+    tid_df = docs.sparkSession.createDataFrame(
+        tid_map_rows, "term string, _tid int"
+    ) if tid_map_rows else None
 
-        trows = term_ids.select(
-            "term", "_tid", idf.alias("_idf"), "avgdl"
-        ).collect()
-        trows.sort(key=lambda r: r["_tid"])
-        nv = len(trows)
-        idf_arr = np.array([r["_idf"] for r in trows], dtype=np.float64)
-        avgdl = float(trows[0]["avgdl"]) if trows else 1.0
-        tid_map_rows = [(r["term"], r["_tid"]) for r in trows]
-        tid_df = docs.sparkSession.createDataFrame(
-            tid_map_rows, "term string, _tid int"
-        ) if tid_map_rows else None
+    nq = len(qrows)
+    term_to_tid = dict(tid_map_rows)
+    qid_vals = [r["query_id"] for r in qrows]
+    qt_sets = [
+        sorted(
+            {
+                term_to_tid[t]
+                for t in (r["qt"] or [])
+                if t in term_to_tid
+            }
+        )
+        for r in qrows
+    ]
+    M = np.zeros((nq, nv), dtype=np.float64)
+    for j, ts in enumerate(qt_sets):
+        for t in ts:
+            M[j, t] = 1.0
+    k1_ = float(k1)
+    b_ = float(b)
 
-        qrows = qdf.collect()
-        nq = len(qrows)
-        term_to_tid = dict(tid_map_rows)
-        qid_vals = [r["query_id"] for r in qrows]
-        qt_sets = [
-            sorted(
+    out_schema = StructType(
+        [
+            StructField("query_id", qdf.schema["query_id"].dataType),
+            StructField("doc_id", base.schema["doc_id"].dataType),
+            StructField("score_micros", LongType()),
+            StructField("n_terms", LongType()),
+        ]
+    )
+
+    def score_batches(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            nb = len(pdf)
+            if not nb or not nq or not nv:
+                continue
+            C = np.zeros((nb, nv), dtype=np.float64)
+            for r, tids in enumerate(pdf["tids"]):
+                C[r] = np.bincount(
+                    np.asarray(tids, dtype=np.int64), minlength=nv
+                )
+            dl = pdf["dl"].to_numpy().astype(np.float64)
+            # EXACT sparse-path op order:
+            # tfc = (tf*(k1+1)) / (tf + ((dl/avgdl)*b + (1-b))*k1)
+            dn = ((dl / avgdl) * b_ + (1.0 - b_)) * k1_
+            tfc = (C * (k1_ + 1.0)) / (C + dn[:, None])
+            contrib = np.floor(idf_arr[None, :] * tfc * 1000000.0 + 0.5)
+            P = C > 0
+            contrib = np.where(P, contrib, 0.0)
+            S = contrib @ M.T
+            N = P.astype(np.float64) @ M.T
+            S = np.where(N > 0, S, -1.0)
+            kk = min(k, nb)
+            thr = -np.partition(-S, kk - 1, axis=0)[kk - 1, :]
+            ids = pdf["doc_id"].to_numpy()
+            doc_out, qj_out, s_out, n_out = [], [], [], []
+            for j in range(nq):
+                mask = (N[:, j] > 0) & (S[:, j] >= thr[j])
+                idx = np.nonzero(mask)[0]
+                if not len(idx):
+                    continue
+                doc_out.append(ids[idx])
+                qj_out.append(np.full(len(idx), j))
+                s_out.append(S[idx, j])
+                n_out.append(N[idx, j])
+            if not doc_out:
+                continue
+            qj = np.concatenate(qj_out)
+            yield pd.DataFrame(
                 {
-                    term_to_tid[t]
-                    for t in (r["qt"] or [])
-                    if t in term_to_tid
+                    "query_id": [qid_vals[j] for j in qj],
+                    "doc_id": np.concatenate(doc_out),
+                    "score_micros": np.concatenate(s_out).astype(np.int64),
+                    "n_terms": np.concatenate(n_out).astype(np.int64),
                 }
             )
-            for r in qrows
-        ]
-        M = np.zeros((nq, nv), dtype=np.float64)
-        for j, ts in enumerate(qt_sets):
-            for t in ts:
-                M[j, t] = 1.0
-        k1_ = float(k1)
-        b_ = float(b)
 
-        out_schema = StructType(
-            [
-                StructField("query_id", qdf.schema["query_id"].dataType),
-                StructField("doc_id", base.schema["doc_id"].dataType),
-                StructField("score_micros", LongType()),
-                StructField("n_terms", LongType()),
-            ]
-        )
-
-        def score_batches(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                nb = len(pdf)
-                if not nb or not nq or not nv:
-                    continue
-                C = np.zeros((nb, nv), dtype=np.float64)
-                for r, tids in enumerate(pdf["tids"]):
-                    C[r] = np.bincount(
-                        np.asarray(tids, dtype=np.int64), minlength=nv
-                    )
-                dl = pdf["dl"].to_numpy().astype(np.float64)
-                # EXACT sparse-path op order:
-                # tfc = (tf*(k1+1)) / (tf + ((dl/avgdl)*b + (1-b))*k1)
-                dn = ((dl / avgdl) * b_ + (1.0 - b_)) * k1_
-                tfc = (C * (k1_ + 1.0)) / (C + dn[:, None])
-                contrib = np.floor(idf_arr[None, :] * tfc * 1000000.0 + 0.5)
-                P = C > 0
-                contrib = np.where(P, contrib, 0.0)
-                S = contrib @ M.T
-                N = P.astype(np.float64) @ M.T
-                S = np.where(N > 0, S, -1.0)
-                kk = min(k, nb)
-                thr = -np.partition(-S, kk - 1, axis=0)[kk - 1, :]
-                ids = pdf["doc_id"].to_numpy()
-                doc_out, qj_out, s_out, n_out = [], [], [], []
-                for j in range(nq):
-                    mask = (N[:, j] > 0) & (S[:, j] >= thr[j])
-                    idx = np.nonzero(mask)[0]
-                    if not len(idx):
-                        continue
-                    doc_out.append(ids[idx])
-                    qj_out.append(np.full(len(idx), j))
-                    s_out.append(S[idx, j])
-                    n_out.append(N[idx, j])
-                if not doc_out:
-                    continue
-                qj = np.concatenate(qj_out)
-                yield pd.DataFrame(
-                    {
-                        "query_id": [qid_vals[j] for j in qj],
-                        "doc_id": np.concatenate(doc_out),
-                        "score_micros": np.concatenate(s_out).astype(
-                            np.int64
-                        ),
-                        "n_terms": np.concatenate(n_out).astype(np.int64),
-                    }
-                )
-
-        if tid_df is None:
-            # no uncapped query terms → empty result, correct schema
-            cand = docs.sparkSession.createDataFrame([], out_schema)
-        else:
-            gro = (
-                base.select(
-                    "doc_id",
-                    F.size("t").cast("long").alias("dl"),
-                    F.explode("t").alias("term"),
-                )
-                .join(F.broadcast(tid_df), "term")
-                .groupBy("doc_id")
-                .agg(
-                    F.min("dl").alias("dl"),
-                    F.collect_list("_tid").alias("tids"),
-                )
+    if tid_df is None:
+        # no uncapped query terms → empty result, correct schema
+        cand = docs.sparkSession.createDataFrame([], out_schema)
+    else:
+        gro = (
+            base.select(
+                "doc_id",
+                F.size("t").cast("long").alias("dl"),
+                F.explode("t").alias("term"),
             )
-            cand = gro.mapInPandas(score_batches, out_schema)
-        out = (
-            cand.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "doc_id", "rank", "score_micros", "n_terms")
+            .join(F.broadcast(tid_df), "term")
+            .groupBy("doc_id")
+            .agg(
+                F.min("dl").alias("dl"),
+                F.collect_list("_tid").alias("tids"),
+            )
         )
-        if persist:
-            out = materialize(out)
-            base.unpersist()
-        return out
-
-    # --- expression path: per-(term, doc) contribution (the sparse
-    # path's Project), folded into a positional per-doc array probed
-    # with codegen F.get — O(1) vs the string-keyed map scan
-    tfc = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * ((1 - b) + b * (F.col("dl") / F.col("avgdl")))
-    )
-    contribs = tf.join(F.broadcast(term_ids), "term").select(
-        "doc_id",
-        "_tid",
-        F.round(idf * tfc * 1000000).cast("long").alias("_c"),
-    )
-    nv_row = term_ids.agg(F.count("*").alias("_nv"))
-    carr = F.transform(
-        F.sequence(F.lit(0), F.col("_nv") - 1),
-        lambda i: F.try_element_at(F.col("_m"), i),
-    )
-    cdocs = (
-        contribs.groupBy("doc_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct(F.col("_tid"), F.col("_c")))
-            ).alias("_m")
-        )
-        .crossJoin(F.broadcast(nv_row))
-        .select("doc_id", carr.alias("carr"))
-    )
-    if persist:
-        cdocs = cdocs.persist()
-
-    # --- query terms → dense ids (small side, the interpreted HOF
-    # lookup cost is per QUERY row, not per pair)
-    idmap_row = term_ids.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("term"), F.col("_tid")))
-        ).alias("_idmap")
-    )
-    qids = qdf.crossJoin(F.broadcast(idmap_row)).select(
-        "query_id",
-        F.transform(
-            F.col("qt"), lambda t: F.try_element_at(F.col("_idmap"), t)
-        ).alias("qtid"),
-    )
-
-    # --- pair scores in-row: probe the contrib array with each
-    # query's term ids under a broadcast nested-loop over the small
-    # query side; pairs with no uncapped matching term are dropped.
-    # Probes are expanded to FIXED per-term slots (slot count = the
-    # query side's max distinct term count, read with one tiny action
-    # on the small side): F.get/try_element_at are whole-stage-codegen
-    # while transform/filter/aggregate HOFs are interpreted
-    # CodegenFallback (guide §4.1).
-    max_qt = qdf.agg(F.max(F.size("qt"))).first()[0] or 0
-    slots = max(int(max_qt), 1)
-
-    def _pairs(sd: DataFrame) -> DataFrame:
-        p = sd.crossJoin(F.broadcast(qids))
-        p = p.select(
-            "query_id",
-            "doc_id",
-            *[
-                F.get(
-                    F.col("carr"), F.try_element_at(F.col("qtid"), F.lit(i))
-                ).alias(f"_c{i}")
-                for i in range(1, slots + 1)
-            ],
-        )
-        zero = F.lit(0).cast("long")
-        score = F.coalesce(F.col("_c1"), zero)
-        n_terms = F.col("_c1").isNotNull().cast("int")
-        for i in range(2, slots + 1):
-            score = score + F.coalesce(F.col(f"_c{i}"), zero)
-            n_terms = n_terms + F.col(f"_c{i}").isNotNull().cast("int")
-        return p.select(
-            "query_id",
-            "doc_id",
-            score.alias("score_micros"),
-            n_terms.cast("long").alias("n_terms"),
-        ).filter(F.col("n_terms") > 0)
-
-    pairs = _pairs(cdocs)
-    if prefilter_mod > 1:
-        # exact score floor from a deterministic 1/mod doc subsample:
-        # the k-th best subsample score per query can only UNDERSHOOT
-        # the true k-th best, so `score >= floor` keeps all top-k rows
-        sample = cdocs.filter(
-            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(prefilter_mod)) == 0
-        )
-        thr = (
-            _pairs(sample)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == k)
-            .select("query_id", F.col("score_micros").alias("_floor"))
-        )
-        pairs = pairs.join(F.broadcast(thr), "query_id", "left").filter(
-            F.col("score_micros")
-            >= F.coalesce(F.col("_floor"), F.lit(-(1 << 62)).cast("long"))
-        ).drop("_floor")
-    out = (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        cand = gro.mapInPandas(score_batches, out_schema)
+    out = materialize(
+        cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "rank", "score_micros", "n_terms")
     )
-    if persist:
-        out = materialize(out)
-        cdocs.unpersist()
-        tf.unpersist()
+    base.unpersist()
     return out

@@ -2508,10 +2508,7 @@ def q83_bm25_topk(spark, sf_dir):
         F.col("doc_id").alias("query_id"),
         F.concat_ws(" ", F.slice(toks, 1, 5)).alias("q_text"),
     )
-    out = S.bm25_topk(
-        d, qs, k=10, max_df_frac=0.78, persist=True,
-        dense=True, method="arrow",
-    )
+    out = S.bm25_topk(d, qs, k=10, max_df_frac=0.78, dense=True)
     return out.select(
         "query_id", "doc_id", F.col("rank").alias("rnk"), "score_micros", "n_terms"
     )
