@@ -90,11 +90,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     out_dir, names = (sys.argv[1], sys.argv[2:]) if len(sys.argv) > 1 else (None, [])
 
-    # persist=True gate entries materialize via eager localCheckpoint,
-    # which collapses dumped plans to "Scan ExistingRDD" — flip the
-    # shared switch so EVERY returned-frame materialization (q71, q77,
-    # q83, …) dumps its real join/exchange tree (round-5 ADVICE: the
-    # per-operator monkeypatch missed q71/q77).
+    # operators that cache intermediates return an eager
+    # localCheckpoint, which collapses dumped plans to "Scan
+    # ExistingRDD" — flip the shared switch so EVERY returned-frame
+    # materialization (q71's df-capped Jaccard, q83's dense BM25, …)
+    # dumps its real join/exchange tree.
     import web_scraper_spark.operators._materialize as _M
 
     _M.PLAN_DUMP_MODE = True

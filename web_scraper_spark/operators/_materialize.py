@@ -2,11 +2,11 @@
 
 Operators that persist intermediates materialize their RESULT with an
 eager ``localCheckpoint`` so the caches can be released before
-returning (the duplicate_spans persist contract; see CLAUDE.md's
-measured-choice rule). Eager checkpoints collapse ``.explain()`` to
-``Scan ExistingRDD``, so ``tools/dump_plans.py`` flips
-``PLAN_DUMP_MODE`` to dump the real operator tree — generalized here
-after the round-5 per-operator monkeypatch missed q71/q77 (ADVICE r5).
+returning: the hot-bucket-guarded ``minhash_lsh_candidates``, the
+df-capped ``jaccard_pairs`` and dense ``bm25_topk``. Eager checkpoints
+collapse ``.explain()`` to ``Scan ExistingRDD``, so
+``tools/dump_plans.py`` flips ``PLAN_DUMP_MODE`` to dump the real
+operator tree.
 
 Only *returned-frame* materializations route through this switch; the
 mid-loop lineage cuts inside iterative operators (connected

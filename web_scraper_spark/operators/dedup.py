@@ -145,13 +145,6 @@ def minhash_band_index(
     independent), so appending a curated snapshot's own index keeps
     the artifact current for the next snapshot — no rebuild."""
     with_sig = minhash_signatures_df(df, text_col, id_col, num_hashes, shingle_n)
-    return _band_rows(with_sig, num_hashes, bands)
-
-
-def _band_rows(with_sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, sig) → (id, band, bucket) band-key rows. Shared by
-    minhash_band_index and dedup_against_index's persist_sigs path so
-    both derive identical buckets from one signature definition."""
     rows_per_band = num_hashes // bands
     return with_sig.select(
         "id",
@@ -252,7 +245,6 @@ def dedup_against_index(
     max_bucket_size: int | None = None,
     old_sigs: DataFrame | None = None,
     min_agree: int | None = None,
-    persist_sigs: bool = False,
 ) -> DataFrame:
     """Incremental fuzzy dedup: annotate a NEW snapshot against an
     EXISTING corpus's band index (``minhash_band_index`` output) —
@@ -281,24 +273,11 @@ def dedup_against_index(
     index exactly like minhash_lsh_candidates (eager count + WARNING,
     broadcast anti-join exclusion of both sides).
 
-    ``persist_sigs``: with verification on, the plan has two branches
-    over the new text (band keys + the sig join), so the MinHash —
-    the dominant cost at corpus scale — computes twice. True
-    localCheckpoints the skinny (id, sig) table once and derives both
-    branches from it. A MEASURED lever per the project rule (the
-    materialization round-trip beats recompute only when the text
-    pass dominates): time both on your corpus before flipping it in a
-    long-lived pipeline."""
-    if persist_sigs and old_sigs is not None and min_agree is not None:
-        new_sigs = materialize(
-            minhash_signatures_df(new_df, text_col, id_col, num_hashes, shingle_n)
-        )
-        new_banded = _band_rows(new_sigs, num_hashes, bands)
-    else:
-        new_sigs = None
-        new_banded = minhash_band_index(
-            new_df, text_col, id_col, num_hashes, bands, shingle_n
-        )
+    Nothing is cached: with verification on, the band keys and the
+    sig join each derive their signatures from the new text."""
+    new_banded = minhash_band_index(
+        new_df, text_col, id_col, num_hashes, bands, shingle_n
+    )
     old_banded = index.select("id", "band", "bucket")
     if max_bucket_size is not None:
         hot = (
@@ -328,10 +307,9 @@ def dedup_against_index(
         .distinct()
     )
     if old_sigs is not None and min_agree is not None:
-        if new_sigs is None:
-            new_sigs = minhash_signatures_df(
-                new_df, text_col, id_col, num_hashes, shingle_n
-            )
+        new_sigs = minhash_signatures_df(
+            new_df, text_col, id_col, num_hashes, shingle_n
+        )
         cands = (
             cands.join(new_sigs.select("id", F.col("sig").alias("sig_n")), "id")
             .join(
@@ -504,15 +482,16 @@ def _window_hash_rows(
     also the one that keeps working when single documents are huge
     (the array form materializes all windows of a doc in one row).
 
-    ``digest`` picks the window key: ``"md5"`` (32-hex string, the
-    engine-portable default — bench digest tables are md5 so the
-    decontamination join keys stay comparable across engines) or
-    ``"xx64"`` (xxhash64 BIGINT — optimization guide §2.3 "narrower
-    types": 8-byte shuffle/broadcast keys instead of 56-byte hex
-    strings for the shared-set aggregate and the flagged semi-join;
-    the digests never appear in results, so any injective-in-practice
-    window key yields identical spans — 64-bit collision odds over n
-    windows are ~n²/2⁶⁵)."""
+    ``digest`` picks the window key. ``"md5"`` (32-hex string) keys
+    :func:`duplicate_span_stats` and the decontamination digests
+    (:func:`bench_ngram_digests`, :func:`ngram_contamination`): bench
+    digest tables are md5, so those join keys stay comparable across
+    engines. ``"xx64"`` (xxhash64 BIGINT) keys :func:`duplicate_spans`:
+    8-byte shuffle keys instead of 56-byte hex strings for the
+    shared-set aggregate and the flagged join. Span digests never
+    appear in results, so any injective-in-practice window key yields
+    identical spans (64-bit collision odds over n windows are
+    ~n²/2⁶⁵)."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(normalize_text(F.col(text_col)), " ")).alias("pos", "tok"),
@@ -520,9 +499,7 @@ def _window_hash_rows(
     w = Window.partitionBy("id").orderBy("pos")
     parts = [F.col("tok")] + [F.lead("tok", k).over(w) for k in range(1, window)]
     last = F.lead("tok", window - 1).over(w)
-    hfn = F.md5 if digest == "md5" else F.xxhash64
-    if digest not in ("md5", "xx64"):
-        raise ValueError(f"digest must be 'md5' or 'xx64', got {digest!r}")
+    hfn = F.xxhash64 if digest == "xx64" else F.md5
     return (
         toks.select("id", "pos", F.concat_ws(" ", *parts).alias("_win"), last.alias("_l"))
         .filter(F.col("_l").isNotNull())
@@ -538,44 +515,12 @@ def _n_windows(text: Column, window: int) -> Column:
     )
 
 
-def _sampled_window_rows(
-    df: DataFrame, text_col: str, id_col: str, window: int, sample_mod: int,
-    digest: str = "md5",
-) -> DataFrame:
-    """(id, pos, h) window rows, optionally CONTENT-DEFINED sampled:
-    keep a window iff the first 16 bits of its md5 digest ≡ 0 mod
-    ``sample_mod`` (winnowing/Broder-style mod sampling). Because the
-    predicate depends only on window CONTENT, the same windows are
-    kept in every document that contains them — unlike a positional
-    stride, which misses duplicated regions whose occurrences are not
-    stride-aligned. Shuffle/aggregate volume drops ~``sample_mod``×;
-    a duplicated region with k complete windows is still detected
-    with probability 1 − (1 − 1/sample_mod)^k (≥ 95% at k ≥ 3·mod)."""
-    if sample_mod > 1 and digest != "md5":
-        raise ValueError(
-            "content-defined sampling (sample_mod > 1) is pinned to the "
-            "md5 digest — the kept-window set is part of the operator's "
-            "documented semantics"
-        )
-    rows = _window_hash_rows(df, text_col, id_col, window, digest=digest)
-    if sample_mod > 1:
-        keep = (
-            F.conv(F.substring(F.col("h"), 1, 4), 16, 10).cast("long")
-            % sample_mod
-            == 0
-        )
-        rows = rows.filter(keep)
-    return rows
-
-
 def duplicate_span_stats(
     df: DataFrame,
     text_col: str,
     id_col: str,
     window: int = 8,
     min_docs: int = 2,
-    persist: bool = False,
-    digest: str = "md5",
 ) -> DataFrame:
     """ExactSubstr-style duplicated-span statistics — the signal behind
     suffix-array training-data dedup (Lee et al. 2022, "Deduplicating
@@ -589,16 +534,12 @@ def duplicate_span_stats(
     so a boilerplate window shared by N docs costs N rows in one
     aggregation group, not N². The per-doc denominator is a pure
     column expression (no explode). The window rows feed both the
-    shared-set aggregate and the semi-join; ``persist=True`` caches
-    them between the two consumers and returns a materialized
-    (localCheckpoint'd) result so the cache can be released here —
-    the 100-TB setting, where re-running the token explode is a full
-    second corpus scan. Default off: gate/test scale recomputes
-    cheaply. Returns (id, n_windows, n_dup_windows, dup_fraction).
+    shared-set aggregate and the semi-join and are recomputed for
+    each, never cached: a round-trip through a materialized cache
+    measured 7× slower than recompute on q72. Returns
+    (id, n_windows, n_dup_windows, dup_fraction).
     """
-    exploded = _window_hash_rows(df, text_col, id_col, window, digest=digest)
-    if persist:
-        exploded = exploded.persist()
+    exploded = _window_hash_rows(df, text_col, id_col, window)
     shared = (
         exploded.groupBy("h")
         .agg(F.count_distinct("id").alias("nd"))
@@ -614,7 +555,7 @@ def duplicate_span_stats(
         _n_windows(F.col(text_col), window).cast("long").alias("n_windows"),
     )
     nd = F.coalesce(F.col("n_dup_windows"), F.lit(0))
-    out = totals.join(dup, "id", "left").select(
+    return totals.join(dup, "id", "left").select(
         "id",
         "n_windows",
         nd.alias("n_dup_windows"),
@@ -622,10 +563,6 @@ def duplicate_span_stats(
         .otherwise(F.lit(0.0))
         .alias("dup_fraction"),
     )
-    if persist:
-        out = materialize(out)
-        exploded.unpersist()
-    return out
 
 
 def duplicate_spans(
@@ -634,10 +571,7 @@ def duplicate_spans(
     id_col: str,
     window: int = 8,
     min_docs: int = 2,
-    sample_mod: int = 1,
-    persist: bool = False,
     policy: str = "cut_all",
-    digest: str = "md5",
 ) -> DataFrame:
     """Merged duplicated-token INTERVALS per document — the span-level
     output of ExactSubstr dedup (which tokens to cut, not just how
@@ -645,20 +579,11 @@ def duplicate_spans(
     maximal contiguous token ranges (windows overlapping or touching
     — gap ≤ 0 tokens — coalesce). Same scale shape as
     :func:`duplicate_span_stats` (one digest groupBy, no self-join)
-    plus one per-doc ordering window (exchange on id only).
-
-    ``sample_mod`` > 1 enables content-defined digest sampling (see
-    :func:`_sampled_window_rows`): the shuffled window volume drops
-    ~mod× — the long-document lever at 100 TB. Reported spans are
-    then CONSERVATIVE: every sampled span is contained in some
-    exact-mode span (same windows, same gap rule — proven by test),
-    but short duplicated regions may be missed (detection prob
-    1 − (1 − 1/mod)^k for k complete windows) and long regions may
-    fragment where consecutive sampled windows sit > ``window``
-    apart. ``persist=True`` caches the window rows between the
-    shared-set aggregate and the semi-join (materialized result,
-    cache released before return), as in
-    :func:`duplicate_span_stats`.
+    plus one per-doc ordering window (exchange on id only). The window
+    key is the xxhash64 digest (see :func:`_window_hash_rows`). The
+    window rows feed the shared-set aggregate and the flagged join
+    and are recomputed for each, never cached: with the cache, q77 and
+    q89 ran 1.6-1.8× slower in interleaved suite runs (4-core box).
 
     ``policy`` selects which occurrences are reported for cutting:
 
@@ -680,11 +605,7 @@ def duplicate_spans(
         raise ValueError(
             f"policy must be 'cut_all' or 'keep_first', got {policy!r}"
         )
-    exploded = _sampled_window_rows(
-        df, text_col, id_col, window, sample_mod, digest=digest
-    )
-    if persist:
-        exploded = exploded.persist()
+    exploded = _window_hash_rows(df, text_col, id_col, window, digest="xx64")
     aggs = [F.count_distinct("id").alias("nd")]
     if policy == "keep_first":
         # keeper = min (id, pos) per digest, computed INSIDE the
@@ -720,7 +641,7 @@ def duplicate_spans(
             w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    out = (
+    return (
         grouped.groupBy("id", "_grp")
         .agg(
             F.min("pos").cast("long").alias("span_start"),
@@ -729,10 +650,6 @@ def duplicate_spans(
         )
         .select("id", "span_start", "span_end", "n_windows")
     )
-    if persist:
-        out = materialize(out)
-        exploded.unpersist()
-    return out
 
 
 def bench_ngram_digests(bench_df: DataFrame, text_col: str, n: int = 13) -> DataFrame:
@@ -1288,15 +1205,17 @@ def remove_duplicate_spans(
     Coordinates are the NORMALIZED token positions duplicate_spans
     emits (0-based, span_end inclusive, over normalize_text tokens),
     so the returned ``clean_text`` is normalized tokens re-joined
-    with single spaces. Scale shape — ONE corpus scan and ZERO
-    corpus-side exchanges: the caller's span set is first merged per
-    doc into disjoint intervals (a window over the spans table only —
-    spans ≪ corpus) and folded into one interval-array row per doc;
-    that skinny directory broadcast-joins the corpus, and the cut is
-    a per-row positional ``filter`` over the token array (a token
-    survives iff no interval covers its index) re-joined in place —
-    order is positional by construction, so no sort is ever needed.
-    The r1–r6 shape (token posexplode → range join → groupBy(id) with
+    with single spaces. Scale shape — ONE corpus scan: the caller's
+    span set is first merged per doc into disjoint intervals (a
+    window over the spans table only — spans ≪ corpus) and folded
+    into one interval-array row per doc. That skinny directory
+    left-joins the corpus with no broadcast hint: it grows with the
+    corpus, so AQE picks broadcast (zero corpus-side exchanges) or a
+    shuffle join from its runtime size. The cut is a per-row
+    positional ``filter`` over the token array (a token survives iff
+    no interval covers its index) re-joined in place — order is
+    positional by construction, so no sort is ever needed. The
+    r1–r6 shape (token posexplode → range join → groupBy(id) with
     array_sort(collect_list(...)) reassembly) moved every token
     through an exchange and a per-doc sort; measured 2.6 s → 0.9 s
     for the q80 cut step at sf1.0 (guide §2.4: remove shuffles
@@ -1331,9 +1250,9 @@ def remove_duplicate_spans(
         F.col(id_col).alias("id"),
         F.split(normalize_text(F.col(text_col)), " ").alias("_t"),
     )
-    joined = base.join(
-        F.broadcast(sp), base["id"] == sp["s_id"], "left"
-    ).select("id", "_t", F.coalesce(F.col("_iv"), F.array()).alias("_iv"))
+    joined = base.join(sp, base["id"] == sp["s_id"], "left").select(
+        "id", "_t", F.coalesce(F.col("_iv"), F.array()).alias("_iv")
+    )
     covered = lambda i: F.exists(
         F.col("_iv"), lambda s: (i >= s["s0"]) & (i <= s["s1"])
     )

@@ -1548,10 +1548,7 @@ def q77_duplicate_span_ranges(spark, sf_dir):
     one per-doc ordering window; the oracle re-derives the interval
     merge with the same lag/cumsum sessionize."""
     d = _load(spark, sf_dir, "documents")
-    out = D.duplicate_spans(
-        d, "text", "doc_id", window=8, min_docs=2, persist=True,
-        digest="xx64",
-    )
+    out = D.duplicate_spans(d, "text", "doc_id", window=8, min_docs=2)
     return out.select(
         F.col("id").alias("doc_id"), "span_start", "span_end", "n_windows"
     )
@@ -1612,16 +1609,13 @@ def q77_duplicate_span_ranges(spark, sf_dir):
 )
 def q80_remove_spans(spark, sf_dir):
     """ExactSubstr APPLY: q77 locates the merged duplicated-token
-    intervals; this entry CUTS them — one token posexplode, one
-    LEFT-ANTI range join on the doc id, one groupBy(id) reassembly
-    with array_sort order (never collect_list order). clean_text is
+    intervals; this entry CUTS them — one per-doc interval directory
+    left-joined onto the corpus, then a positional filter over each
+    token array (see remove_duplicate_spans). clean_text is
     md5'd for the hash compare (long strings); the oracle re-derives
     the spans and the cut with a NOT-EXISTS range condition."""
     d = _load(spark, sf_dir, "documents")
-    spans = D.duplicate_spans(
-        d, "text", "doc_id", window=8, min_docs=2, persist=False,
-        digest="xx64",
-    )
+    spans = D.duplicate_spans(d, "text", "doc_id", window=8, min_docs=2)
     out = D.remove_duplicate_spans(d, spans, "text", "doc_id")
     return out.select(
         F.col("id").alias("doc_id"),
@@ -2819,8 +2813,7 @@ def q89_keep_first_spans(spark, sf_dir):
     the oracle's two-level min exactly)."""
     d = _load(spark, sf_dir, "documents")
     out = D.duplicate_spans(
-        d, "text", "doc_id", window=8, min_docs=2, persist=True,
-        policy="keep_first", digest="xx64",
+        d, "text", "doc_id", window=8, min_docs=2, policy="keep_first"
     )
     return out.select(
         F.col("id").alias("doc_id"), "span_start", "span_end", "n_windows"
@@ -2899,8 +2892,7 @@ def q91_keep_first_pipeline(spark, sf_dir):
     merge, and the NOT-EXISTS range cut in SQL."""
     d = _load(spark, sf_dir, "documents")
     spans = D.duplicate_spans(
-        d, "text", "doc_id", window=8, min_docs=2, persist=False,
-        policy="keep_first", digest="xx64",
+        d, "text", "doc_id", window=8, min_docs=2, policy="keep_first"
     )
     out = D.remove_duplicate_spans(d, spans, "text", "doc_id")
     return out.select(
