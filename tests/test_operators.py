@@ -856,38 +856,39 @@ def test_embedding_near_dups_unbucketed_row_guard(spark):
 
 
 def test_ivf_assign_arrow_matches_expr(spark):
-    """The mapInPandas/BLAS assignment twin must reproduce
-    ivf_assign's (vector → centroid) mapping exactly on the gate
-    fixture, including the lowest-cid tie-break."""
+    """The mapInPandas/BLAS assignment must reproduce the broadcast
+    cross-join argmax of ivf_assign_topn(n=1) (vector → centroid)
+    exactly on the gate fixture, including the lowest-cid tie-break."""
     from web_scraper_spark.operators.similarity import (
         ivf_assign,
-        ivf_assign_arrow,
+        ivf_assign_topn,
         label_centroids,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = label_centroids(emb, "embedding", "label").withColumnRenamed(
-        "centroid", "embedding"
-    )
+    cents = label_centroids(emb, "embedding", "label")
     expr = {
         r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign(emb, "embedding", "vec_id", cents).collect()
+        for r in ivf_assign_topn(emb, "embedding", "vec_id", cents, 1).collect()
     }
     arrow = {
         r["vec_id"]: r["centroid_id"]
-        for r in ivf_assign_arrow(emb, "embedding", "vec_id", cents).collect()
+        for r in ivf_assign(
+            emb, "embedding", "vec_id",
+            cents.withColumnRenamed("centroid", "embedding"),
+        ).collect()
     }
     assert expr and arrow == expr
 
 
 def test_kmeans_refine_arrow_matches_expr(spark):
-    """The Lloyd loop with BLAS assignment (method='arrow') must yield
-    the same refined centroids as the expression path to the oracle's
-    round-6 resolution on the gate fixture — the q64 gate entry runs
-    the arrow path against the SQL oracle."""
-    import pytest
-
+    """The Lloyd loop with BLAS assignment must yield the same refined
+    centroids as an expression reference (ivf_assign_topn(n=1) →
+    label_centroids, twice) to the oracle's round-6 resolution on the
+    gate fixture — the q64 gate entry runs kmeans_refine against the
+    SQL oracle."""
     from web_scraper_spark.operators.similarity import (
+        ivf_assign_topn,
         kmeans_refine,
         label_centroids,
     )
@@ -895,42 +896,66 @@ def test_kmeans_refine_arrow_matches_expr(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     seeds = label_centroids(emb, "embedding", "label")
 
-    def rounded(method):
-        out = kmeans_refine(
-            emb, "embedding", "vec_id", seeds, iterations=2, method=method
-        )
+    def rounded(out):
         return {
             r["centroid_id"]: tuple(round(x, 6) for x in r["centroid"])
             for r in out.collect()
         }
 
-    a, b = rounded("expr"), rounded("arrow")
+    ref = seeds
+    for _ in range(2):
+        assigned = ivf_assign_topn(emb, "embedding", "vec_id", ref, 1)
+        ref = label_centroids(assigned, "embedding", "centroid_id")
+    a = rounded(ref)
+    b = rounded(kmeans_refine(emb, "embedding", "vec_id", seeds, iterations=2))
     assert a and a == b
-    with pytest.raises(ValueError, match="unknown method"):
-        kmeans_refine(emb, "embedding", "vec_id", seeds, method="nope")
 
 
 def test_embedding_near_dups_arrow_matches_expr(spark):
-    """The per-bucket BLAS path (method='arrow') must produce the
-    exact same (id_a, id_b, cosine-rounded-6) set as the expression
-    path on the gate fixture — the throughput path may not drift from
-    the oracle-portable one."""
-    from web_scraper_spark.operators.dedup import embedding_near_dups
+    """The per-bucket BLAS path must produce the exact same (id_a,
+    id_b, cosine-rounded-6) set as the expression reference on the
+    gate fixture, bucketed (q28's shape) and all-pairs (the truth of
+    test_lsh_embedding_multi_table_recall) — the throughput path may
+    not drift from the oracle-portable one."""
+    from web_scraper_spark.operators.dedup import (
+        _embedding_near_dups_expr,
+        embedding_near_dups,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    expr = {
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"], r["cosine"]) for r in df.collect()}
+
+    for tau, bucket in ((0.35, "label"), (0.42, None)):
+        expr = pairs(
+            _embedding_near_dups_expr(emb, "embedding", "vec_id", tau, bucket)
+        )
+        arrow = pairs(
+            embedding_near_dups(emb, "embedding", "vec_id", tau, bucket_col=bucket)
+        )
+        assert expr and arrow == expr, (tau, bucket)
+
+
+def test_embedding_near_dups_rounds_half_up(spark):
+    """The cosine of [1,0,0,0,0] and [1,127,15,5,2] is exactly 1/128 =
+    0.0078125 (norm 128, every step exact in binary). Rounded half-up
+    to 6 places, as Spark's round and the DuckDB oracles do, it is
+    0.007813 and passes threshold 0.007813; half-to-even would give
+    0.007812 and drop the pair."""
+    from web_scraper_spark.operators.dedup import embedding_near_dups
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0, 0.0]), (1, [1.0, 127.0, 15.0, 5.0, 2.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = [
         (r["id_a"], r["id_b"], r["cosine"])
         for r in embedding_near_dups(
-            emb, "embedding", "vec_id", 0.35, bucket_col="label"
+            df, "embedding", "vec_id", 0.007813
         ).collect()
-    }
-    arrow = {
-        (r["id_a"], r["id_b"], r["cosine"])
-        for r in embedding_near_dups(
-            emb, "embedding", "vec_id", 0.35, bucket_col="label", method="arrow"
-        ).collect()
-    }
-    assert expr and arrow == expr
+    ]
+    assert got == [(0, 1, 0.007813)]
 
 
 def test_lsh_embedding_multi_table_recall(spark):
@@ -1592,16 +1617,13 @@ def test_semdedup_keeps_farthest_from_centroid(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
         "centroid_id int, embedding array<double>",
     )
-    for method in ("expr", "arrow"):
-        got = {
-            r["vec_id"]: (r["centroid_id"], r["removed"])
-            for r in semdedup(
-                df, "embedding", "vec_id", cents, threshold=0.9, method=method
-            ).collect()
-        }
-        assert got[0] == (0, True)    # closest to centroid → removed
-        assert got[1] == (0, False)   # farthest in the pair → kept
-        assert got[2] == (1, False)   # singleton cluster → kept
+    got = {
+        r["vec_id"]: (r["centroid_id"], r["removed"])
+        for r in semdedup(df, "embedding", "vec_id", cents, threshold=0.9).collect()
+    }
+    assert got[0] == (0, True)    # closest to centroid → removed
+    assert got[1] == (0, False)   # farthest in the pair → kept
+    assert got[2] == (1, False)   # singleton cluster → kept
 
 
 def test_anchor_edges_and_modal_text(spark):

@@ -67,7 +67,7 @@ SHOW = [
     ("q102_incremental_dedup", "incremental dedup: new snapshot's band keys equi-join the stored index; sig verify joins only matched old ids — old corpus text never rescanned"),
     ("q103_incremental_curation", "incremental curation through curate(): quality expressions in the scan, one digest exchange, band-key join vs the stored index"),
     ("q104_trap_urls", "crawler-trap predicate: pure expression in the scan's codegen stage — no exchange, no UDF"),
-    ("q105_semdedup", "SemDedup: broadcast-centroid assignment, per-cluster pair exchange on centroid_id, id-keyed removal joins — never all-pairs"),
+    ("q105_semdedup", "SemDedup: shuffle-free BLAS centroid assignment in mapInPandas, per-cluster pair exchange on centroid_id, id-keyed removal joins — never all-pairs"),
     ("q106_line_dedup", "corpus-frequency line dedup: digest-keyed distinct+groupBy, anti-join back, per-doc reassembly fold — line text never shuffles as a key"),
     ("q107_anchor_text", "anchor-text corpus: pruned Arrow pass ships only the anchors array; (target,text) groupBy + window over the aggregate, modal election"),
     ("q108_winnow_fingerprints", "winnowing fingerprints: pure per-row expression (transform + window folds) — zero exchanges, zero UDFs at any corpus size"),

@@ -1076,9 +1076,9 @@ def embedding_near_dups(
     threshold: float,
     bucket_col: str | None = None,
     max_unbucketed_rows: int = 10_000,
-    method: str = "expr",
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs (cosine ≥ threshold).
+    """Embedding-cosine near-dup pairs (cosine ≥ threshold), as
+    (id_a < id_b, cosine rounded to 6 places).
 
     With ``bucket_col`` (e.g. an IVF/LSH bucket or a label) the
     self-join is restricted per bucket — the scale path. Without, it
@@ -1088,22 +1088,19 @@ def embedding_near_dups(
     shuffle, not a slow query. Raise the bound (or pass a bucket
     column) deliberately.
 
-    ``method``:
-    - ``"expr"`` (default): cosine via zip_with+aggregate — pure
-      JVM expressions, engine-portable summation order (matches the
-      DuckDB oracles term for term). The HOF is evaluated
-      interpreted, so the per-pair constant is high.
-    - ``"arrow"``: per-bucket ``applyInPandas`` computing the whole
-      bucket's cosine matrix as ONE numpy/BLAS matmul — the dense-
-      bucket throughput path (measured ~5-10× on q69's edge
-      generation). Same shuffle shape (one exchange on the bucket
-      key); per-bucket memory is O(bucket²) doubles, so keep buckets
-      ≤ ~10^4 rows (the LSH/IVF bucketing this operator expects
-      already does). BLAS may sum in a different order than the
-      sequential fold; agreement to round-6 output is asserted by
-      test on the gate fixture, but oracle-gated queries keep
-      ``expr``.
-    """
+    One exchange on the bucket key, then a per-bucket
+    ``applyInPandas`` computes the bucket's whole cosine matrix as ONE
+    numpy/BLAS ``M @ M.T`` (measured ~5-10× over the interpreted
+    per-pair HOF fold on q69's edge generation). Per-bucket memory is
+    O(bucket²) doubles, so keep buckets ≤ ~10^4 rows (the LSH/IVF
+    bucketing this operator expects already does). Python returns the
+    raw cosine of every pair within 1e-6 below ``threshold``; the JVM
+    then rounds half-up to 6 places and applies the threshold, exactly
+    as the Spark and DuckDB oracles do. BLAS may sum in a different
+    order than a sequential fold; the round-6 output matches
+    :func:`_embedding_near_dups_expr` on the gate fixture by test."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
     if bucket_col is None:
         n = df.count()
         if n > max_unbucketed_rows:
@@ -1114,10 +1111,58 @@ def embedding_near_dups(
                 "bucket_col (IVF/LSH bucket) or raise max_unbucketed_rows "
                 "explicitly."
             )
-    if method == "arrow":
-        return _embedding_near_dups_arrow(df, vec_col, id_col, threshold, bucket_col)
-    if method != "expr":
-        raise ValueError(f"unknown method {method!r} (expected 'expr' or 'arrow')")
+    id_type = df.schema[id_col].dataType
+    out_schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    # a superset of the pairs whose half-up round-6 cosine reaches threshold
+    floor = threshold - 1e-6
+
+    def bucket_pairs(pdf):
+        import numpy as np
+        import pandas as pd
+
+        if len(pdf) < 2:
+            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
+        ids = pdf["_id"].to_numpy()
+        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+        nrm = np.sqrt((m * m).sum(axis=1))
+        cos = (m @ m.T) / np.outer(nrm, nrm)
+        iu, ju = np.triu_indices(len(pdf), k=1)
+        keep = cos[iu, ju] >= floor
+        ia, jb = ids[iu[keep]], ids[ju[keep]]
+        lo = np.minimum(ia, jb)
+        hi = np.maximum(ia, jb)
+        return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": cos[iu, ju][keep]})
+
+    base = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        *( [F.col(bucket_col).alias("_bkt")] if bucket_col else [F.lit(0).alias("_bkt")] ),
+    )
+    return (
+        base.groupBy("_bkt")
+        .applyInPandas(bucket_pairs, out_schema)
+        .withColumn("cosine", F.round("cosine", 6))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
+def _embedding_near_dups_expr(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    threshold: float,
+    bucket_col: str | None = None,
+) -> DataFrame:
+    """Test reference for :func:`embedding_near_dups`, with no
+    production caller: the bucket-restricted self-join with the cosine
+    as a zip_with+aggregate JVM expression, summed in the same
+    sequential order as the DuckDB oracles. No row guard."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
     base = df.select(
@@ -1141,52 +1186,6 @@ def embedding_near_dups(
         .filter(F.col("cosine") >= threshold)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "cosine")
     )
-
-
-def _embedding_near_dups_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    threshold: float,
-    bucket_col: str | None,
-) -> DataFrame:
-    """Per-bucket BLAS cosine: one exchange on the bucket key, then
-    each bucket's pair matrix in a single ``M @ M.T``. See
-    :func:`embedding_near_dups` (method='arrow')."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    id_type = df.schema[id_col].dataType
-    out_schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("id_b", id_type),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def bucket_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
-        if len(pdf) < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        ids = pdf["_id"].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        nrm = np.sqrt((m * m).sum(axis=1))
-        cos = np.round((m @ m.T) / np.outer(nrm, nrm), 6)
-        iu, ju = np.triu_indices(len(pdf), k=1)
-        keep = cos[iu, ju] >= threshold
-        ia, jb = ids[iu[keep]], ids[ju[keep]]
-        lo = np.minimum(ia, jb)
-        hi = np.maximum(ia, jb)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cosine": cos[iu, ju][keep]})
-
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        *( [F.col(bucket_col).alias("_bkt")] if bucket_col else [F.lit(0).alias("_bkt")] ),
-    )
-    return base.groupBy("_bkt").applyInPandas(bucket_pairs, out_schema)
 
 
 def remove_duplicate_spans(

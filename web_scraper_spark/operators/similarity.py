@@ -2,8 +2,11 @@
 
 Baseline: brute-force cosine top-k (exact). Scale path: IVF-style
 bucketed search — assign vectors to coarse centroids, probe only the
-nearest ``nprobe`` buckets. All distance math is JVM-side
-(``zip_with``/``aggregate`` in double precision); no UDFs.
+nearest ``nprobe`` buckets. Top-k scoring, LSH bucketing and the
+nprobe fan-out are JVM expressions (``zip_with``/``aggregate`` in
+double precision). Nearest-centroid assignment (:func:`ivf_assign`)
+and dense BM25 cross into Python once per Arrow batch for a BLAS
+matmul.
 """
 
 from __future__ import annotations
@@ -59,7 +62,7 @@ def cosine_topk_bruteforce(
     )
 
 
-def ivf_assign_arrow(
+def ivf_assign(
     df: DataFrame,
     vec_col: str,
     id_col: str,
@@ -67,16 +70,18 @@ def ivf_assign_arrow(
     cent_id: str = "centroid_id",
     keep_cos: bool = False,
 ) -> DataFrame:
-    """Arrow/BLAS twin of :func:`ivf_assign`: the centroid matrix
-    (tiny by definition — it is the k of k-means) is collected once
-    and closed over a ``mapInPandas`` pass that scores every batch
-    with ONE ``V @ C.T`` matmul and arg-maxes with the same
-    (max cosine, lowest centroid id) tie-break. No shuffle at all —
-    the corpus is never joined, only mapped — which makes this the
-    assignment inner loop for IVF builds / Lloyd iterations at scale
-    (the expression path's per-(row × centroid) interpreted HOF dot
-    is the q64-profile cost). Row-identical to ivf_assign on the gate
-    fixture by test; oracle-gated queries keep the expression path."""
+    """Assign each vector to its nearest centroid (max cosine, ties to
+    the lowest centroid id). Output: ``df``'s columns plus
+    ``centroid_id``; ``keep_cos`` also keeps the winning cosine as
+    ``centroid_cos`` (the keep/remove ranking key SemDedup needs).
+
+    Eager: the centroid table (tiny by definition — it is the k of
+    k-means) is collected when this is called, one job, and closed
+    over a ``mapInPandas`` pass that scores every Arrow batch with ONE
+    ``V @ C.T`` matmul and arg-maxes it. The corpus is only mapped,
+    never joined or shuffled. This is the build step of an IVF index;
+    persist the result partitioned by centroid (:func:`write_ivf_index`)
+    for repeated queries."""
     import numpy as np
 
     rows = centroids.select(
@@ -117,37 +122,6 @@ def ivf_assign_arrow(
             yield out
 
     return df.mapInPandas(assign, out_schema)
-
-
-def ivf_assign(
-    df: DataFrame, vec_col: str, id_col: str, centroids: DataFrame,
-    cent_id: str = "centroid_id", keep_cos: bool = False,
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine).
-
-    ``centroids`` (small) is broadcast; assignment is a broadcast
-    join + per-row argmax — no shuffle of the corpus. This is the
-    build step of an IVF index; persist the result partitioned by
-    centroid for repeated queries. See :func:`ivf_assign_arrow` for
-    the BLAS twin used at corpus scale. ``keep_cos`` retains the
-    winning cosine as ``centroid_cos`` (the keep/remove ranking key
-    SemDedup needs)."""
-    c = centroids.select(
-        F.col(cent_id).alias("_cid"), _as_double(F.col(vec_col)).alias("_cv")
-    ).withColumn("_cn", _norm(F.col("_cv")))
-    v = df.withColumn("_v", _as_double(F.col(vec_col))).withColumn("_n", _norm(F.col("_v")))
-    cos = _dot(F.col("_v"), F.col("_cv")) / (F.col("_n") * F.col("_cn"))
-    scored = v.crossJoin(F.broadcast(c)).withColumn("_cos", cos)
-    w = Window.partitionBy(id_col).orderBy(F.desc("_cos"), F.asc("_cid"))
-    out = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_v", "_n", "_cv", "_cn")
-        .withColumnRenamed("_cid", "centroid_id")
-    )
-    if keep_cos:
-        return out.withColumnRenamed("_cos", "centroid_cos")
-    return out.drop("_cos")
 
 
 def label_centroids(df: DataFrame, vec_col: str, label_col: str) -> DataFrame:
@@ -374,50 +348,30 @@ def kmeans_refine(
     id_col: str,
     centroids: DataFrame,
     iterations: int = 1,
-    method: str = "expr",
 ) -> DataFrame:
     """Lloyd refinement from seed centroids: assign every vector to
-    its nearest centroid (cosine, ties to the lowest centroid_id via
-    ivf_assign_topn) and recompute each centroid as the per-cluster
-    mean — repeated ``iterations`` times. Each iteration is one
-    broadcast of the SMALL centroid table plus one (cluster, dim)
-    groupBy with map-side partial means; the corpus never shuffles on
-    anything wider than those keys. Seeds that attract no vectors
-    drop out (standard Lloyd behavior).
+    its nearest centroid (:func:`ivf_assign`, ties to the lowest
+    centroid_id) and recompute each centroid as the per-cluster mean
+    (:func:`label_centroids` over the assignment) — repeated
+    ``iterations`` times. Each iteration is one (cluster, dim) groupBy
+    with map-side partial means; the corpus never shuffles on anything
+    wider than those keys. Seeds that attract no vectors drop out
+    (standard Lloyd behavior).
 
-    ``method="arrow"`` routes the assignment through
-    :func:`ivf_assign_arrow` (one ``V @ C.T`` BLAS matmul per Arrow
-    batch, shuffle-free, same lowest-cid tie-break — row-identical by
-    test): the per-iteration cost drops from an interpreted
-    per-(row × centroid) HOF fold to a matmul, which is the Lloyd
-    inner loop at corpus scale. The per-cluster means that follow are
-    identical either way. Returns (centroid_id, centroid)."""
-    if method not in ("expr", "arrow"):
-        raise ValueError(f"unknown method {method!r} (expected 'expr' or 'arrow')")
+    Eager: every iteration collects the current centroid table inside
+    :func:`ivf_assign`, so ``iterations`` jobs run before this returns.
+    Returns (centroid_id, centroid)."""
     cur = centroids
     for _ in range(iterations):
-        if method == "arrow":
-            assigned = ivf_assign_arrow(
-                df,
-                vec_col,
-                id_col,
-                cur.select("centroid_id", F.col("centroid").alias(vec_col)),
-            )
-        else:
-            assigned = ivf_assign_topn(df, vec_col, id_col, cur, 1)
-        dims = assigned.select(
-            "centroid_id",
-            F.posexplode(_as_double(F.col(vec_col))).alias("pos", "val"),
+        assigned = ivf_assign(
+            df,
+            vec_col,
+            id_col,
+            cur.select("centroid_id", F.col("centroid").alias(vec_col)),
         )
-        means = dims.groupBy("centroid_id", "pos").agg(F.avg("val").alias("m"))
-        cur = (
-            means.groupBy("centroid_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "centroid_id", F.transform("pm", lambda s: s["m"]).alias("centroid")
-            )
-        )
+        cur = label_centroids(assigned, vec_col, "centroid_id")
     return cur
+
 
 def semdedup(
     df: DataFrame,
@@ -425,7 +379,6 @@ def semdedup(
     id_col: str,
     centroids: DataFrame,
     threshold: float = 0.95,
-    method: str = "expr",
 ) -> DataFrame:
     """SemDedup — semantic (embedding-space) deduplication via
     cluster-restricted cosine neighborhoods (Abbas et al. 2023,
@@ -439,14 +392,13 @@ def semdedup(
     each neighborhood's local minima survive and every removal is
     justified by a surviving-or-lower neighbor, replayable in SQL.
 
-    Scale shape: assignment broadcasts the centroid matrix — with
-    ``method="arrow"`` it is a shuffle-free mapInPandas BLAS argmax
-    (the expr twin instead pays a per-id window shuffle, fine at
-    gate scale, wrong at 100 TB); the pair search is
+    Scale shape: assignment is :func:`ivf_assign`, a shuffle-free
+    mapInPandas BLAS argmax over the collected centroid matrix (one
+    eager job at call time); the pair search is
     :func:`~web_scraper_spark.operators.
     dedup.embedding_near_dups` restricted per cluster (one exchange on
-    centroid_id — never all-pairs; ``method="arrow"`` computes each
-    cluster's cosine matrix as one BLAS matmul); the removal rule is
+    centroid_id — never all-pairs; each cluster's cosine matrix is one
+    BLAS matmul); the removal rule is
     two id-keyed joins of the SMALL pair table against the per-item
     key. Nothing exchanges on anything wider than (centroid_id) or
     (id). Cosines are rounded to 6 before comparison — engine-portable
@@ -460,15 +412,9 @@ def semdedup(
         centroids = centroids.select(
             "centroid_id", F.col("centroid").alias(vec_col)
         )
-    if method == "arrow":
-        # shuffle-free BLAS argmax — the expr twin's per-id window
-        # would re-shuffle the whole corpus just to pick the max
-        assigned = ivf_assign_arrow(df, vec_col, id_col, centroids, keep_cos=True)
-    else:
-        assigned = ivf_assign(df, vec_col, id_col, centroids, keep_cos=True)
+    assigned = ivf_assign(df, vec_col, id_col, centroids, keep_cos=True)
     pairs = embedding_near_dups(
-        assigned, vec_col, id_col, threshold,
-        bucket_col="centroid_id", method=method,
+        assigned, vec_col, id_col, threshold, bucket_col="centroid_id"
     )
     key = assigned.select(
         F.col(id_col).alias("_kid"), F.round("centroid_cos", 6).alias("_kcos")

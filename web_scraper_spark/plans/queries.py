@@ -740,13 +740,13 @@ def q27_cosine_topk(spark, sf_dir):
     """,
 )
 def q28_embed_near_dup(spark, sf_dir):
-    """Per-bucket BLAS path (method='arrow', as q69): cosine is
-    round(,6)-quantized before the hash gate, which absorbs BLAS-vs-
-    sequential summation order on this fixture (twin-verified)."""
+    """Label-bucketed embedding near-dups on the per-bucket BLAS path
+    (as q69): cosine is rounded half-up to 6 places in the JVM before
+    the threshold, which absorbs BLAS-vs-sequential summation order on
+    this fixture (twin-verified)."""
     emb = _load(spark, sf_dir, "embeddings")
     return D.embedding_near_dups(
-        emb, "embedding", "vec_id", threshold=0.35, bucket_col="label",
-        method="arrow",
+        emb, "embedding", "vec_id", threshold=0.35, bucket_col="label"
     )
 
 
@@ -899,15 +899,13 @@ def q64_kmeans_refine(spark, sf_dir):
     means again. The oracle re-derives both iterations (assignment
     argmax with the same lowest-centroid-id tie-break each round, then
     per-(cluster, dim) means), so the engine's multi-iteration loop —
-    not just one step — is value-checked. Assignment runs the BLAS
-    path (ivf_assign_arrow — row-identical to the expression path by
-    test); the mean aggregation the oracle hashes is pure JVM either
-    way."""
+    not just one step — is value-checked. Assignment is the BLAS
+    argmax of S.ivf_assign (row-identical to the broadcast cross-join
+    argmax of S.ivf_assign_topn by test); the mean aggregation the
+    oracle hashes is pure JVM."""
     emb = _load(spark, sf_dir, "embeddings")
     seeds = S.label_centroids(emb, "embedding", "label")
-    refined = S.kmeans_refine(
-        emb, "embedding", "vec_id", seeds, iterations=2, method="arrow"
-    )
+    refined = S.kmeans_refine(emb, "embedding", "vec_id", seeds, iterations=2)
     return refined.select(
         "centroid_id",
         F.posexplode("centroid").alias("pos", "x"),
@@ -1023,8 +1021,7 @@ def q62_lsh_embed_near_dup(spark, sf_dir):
         "bucket", S.hyperplane_lsh_bucket(F.col("embedding"), _HP_PLANES)
     )
     return D.embedding_near_dups(
-        bucketed, "embedding", "vec_id", threshold=0.35, bucket_col="bucket",
-        method="arrow",
+        bucketed, "embedding", "vec_id", threshold=0.35, bucket_col="bucket"
     )
 
 
@@ -1202,12 +1199,11 @@ def q69_components(spark, sf_dir):
     into connected components via min-label propagation; keep =
     (id == component) is the fuzzy-dedup survivor flag. The oracle
     computes the same components with a recursive reachability CTE.
-    Edge generation runs the per-bucket BLAS path (method='arrow' —
-    identical round-6 pair set to the expression path by test)."""
+    Edge generation is q28's per-bucket BLAS pair search (identical
+    round-6 pair set to the expression reference by test)."""
     emb = _load(spark, sf_dir, "embeddings")
     pairs = D.embedding_near_dups(
-        emb, "embedding", "vec_id", threshold=0.35, bucket_col="label",
-        method="arrow",
+        emb, "embedding", "vec_id", threshold=0.35, bucket_col="label"
     )
     comps = D.connected_components(pairs)
     return comps.select(
@@ -3984,7 +3980,7 @@ def q104_trap_urls(spark, sf_dir):
 )
 def q105_semdedup(spark, sf_dir):
     """SemDedup (operators/similarity.py:semdedup — Abbas et al. 2023):
-    label-mean centroids → broadcast nearest-centroid assignment →
+    label-mean centroids → BLAS nearest-centroid assignment →
     per-cluster BLAS cosine pairs (threshold 0.30) → keep-farthest-
     from-centroid survivor election. The oracle re-derives centroids,
     the assignment argmax (lowest-cid tie-break), the cluster-
@@ -3994,9 +3990,7 @@ def q105_semdedup(spark, sf_dir):
     removal joins — never all-pairs, never wider than the id."""
     emb = _load(spark, sf_dir, "embeddings")
     seeds = S.label_centroids(emb, "embedding", "label")
-    return S.semdedup(
-        emb, "embedding", "vec_id", seeds, threshold=0.30, method="arrow"
-    )
+    return S.semdedup(emb, "embedding", "vec_id", seeds, threshold=0.30)
 
 
 @query(
