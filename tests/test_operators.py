@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from web_scraper_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_candidates,
-    simhash64_agg,
+    simhash64,
     simhash_near_dups,
 )
 from web_scraper_spark.operators.relational import asof_join, topk_per_group
@@ -73,6 +73,60 @@ def test_lsh_recall_against_exact(spark):
     assert via_lsh <= exact  # LSH-verified pairs are always true pairs
 
 
+def test_minhash_signatures_match_python_reference(spark):
+    """minhash_signatures against a pure-Python replay of the hash
+    family: sig[k] = lexicographic min over the DISTINCT shingles of
+    the normalized text of md5(s + '#' + salt + k). Covers word
+    1-grams and 3-grams, the banding (salt '') and verification
+    (salt 'v') families, and the null-component cases: null text and
+    a doc shorter than shingle_n have no shingles (all-null sig);
+    empty text normalizes to the one empty token."""
+    import hashlib
+
+    rows = [
+        (1, "The  quick brown fox jumps over the lazy dog the end"),
+        (2, "alpha beta\tgamma ALPHA beta delta"),
+        (3, None),
+        (4, ""),
+        (5, "solo"),
+        (6, "two words"),
+        (7, "a b c d e f g a b c"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def reference(text, num_hashes, shingle_n, salt):
+        if text is None:
+            return [None] * num_hashes
+        toks = re.sub(r"\s+", " ", text.lower()).strip(" ").split(" ")
+        shingles = {
+            " ".join(toks[i:i + shingle_n])
+            for i in range(len(toks) - shingle_n + 1)
+        }
+        if not shingles:
+            return [None] * num_hashes
+        return [
+            min(hashlib.md5(f"{s}#{salt}{k}".encode()).hexdigest() for s in shingles)
+            for k in range(num_hashes)
+        ]
+
+    from web_scraper_spark.operators.dedup import minhash_signatures
+
+    for shingle_n in (1, 3):
+        for salt in ("", "v"):
+            got = {
+                r["id"]: list(r["sig"])
+                for r in minhash_signatures(
+                    df, "text", "doc_id", 4, shingle_n=shingle_n, salt=salt
+                ).collect()
+            }
+            want = {i: reference(t, 4, shingle_n, salt) for i, t in rows}
+            assert got == want, (shingle_n, salt)
+    # the null-component cases are exercised, not vacuous
+    assert reference(None, 4, 1, "") == [None] * 4
+    assert reference("two words", 4, 3, "") == [None] * 4
+    assert reference("", 4, 1, "")[0] == hashlib.md5(b"#0").hexdigest()
+
+
 def test_incremental_dedup_against_index(spark, tmp_path):
     """dedup_against_index semantics pinned without replaying the hash
     family: exact copies of old docs are flagged with the SMALLEST
@@ -83,7 +137,7 @@ def test_incremental_dedup_against_index(spark, tmp_path):
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
-        minhash_signature,
+        minhash_signatures,
     )
 
     old = spark.createDataFrame(
@@ -102,11 +156,8 @@ def test_incremental_dedup_against_index(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        minhash_signature(F.col("text"), 16).alias("sig"),
-    )
+    sigs = minhash_signatures(old, "text", "doc_id", num_hashes=16)
+    index = minhash_band_index(sigs, num_hashes=16, bands=8)
     expect = {(11, True, 2), (13, True, 6), (15, False, -1)}
 
     def run(ix, sg, **kw):
@@ -137,6 +188,7 @@ def test_incremental_dedup_hot_bucket_guard(spark):
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
+        minhash_signatures,
     )
 
     old = spark.createDataFrame(
@@ -146,7 +198,9 @@ def test_incremental_dedup_hot_bucket_guard(spark):
     new = spark.createDataFrame(
         [(100, "same boilerplate text everywhere")], "doc_id long, text string"
     )
-    index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
+    index = minhash_band_index(
+        minhash_signatures(old, "text", "doc_id", num_hashes=16), 16, bands=8
+    )
     out = dedup_against_index(
         new, index, "text", "doc_id", num_hashes=16, bands=8, max_bucket_size=5
     ).collect()
@@ -361,7 +415,7 @@ def test_ivf_index_persisted_probe_prunes_partitions(spark, tmp_path):
         "centroid_id", "centroid_id"
     )
     assigned = ivf_assign(
-        emb, "embedding", "vec_id", cents.select(
+        emb, "embedding", cents.select(
             F.col("centroid_id"), F.col("centroid").alias("embedding")
         )
     )
@@ -584,7 +638,7 @@ def test_simhash_banding_recall_vs_bruteforce(spark):
     )
     max_h = 8
     fps = {r["id"]: r["fp"] for r in
-           simhash64_agg(docs, "text", "doc_id").collect()}
+           simhash64(docs, "text", "doc_id").collect()}
     ids = sorted(fps)
     brute = {
         (a, b)
@@ -684,6 +738,24 @@ def test_url_classify_matches_reference_rules(spark):
     by_url = {r["url"]: (r["t"], r["id"]) for r in got}
     for u, t, i in cases:
         assert by_url[u] == (t, i), u
+
+
+def test_is_youtube_url_substring_rule(spark):
+    """P2: a URL is a YouTube URL iff it contains 'youtube.com' or
+    'youtu.be' anywhere (a plain substring test, as in the
+    reference); null stays null."""
+    cases = [
+        ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", True),
+        ("https://youtu.be/abcdefghijk", True),
+        ("https://m.youtube.com/@somechannel", True),
+        ("https://example.com/?next=youtube.com", True),
+        ("https://example.com/page", False),
+        ("https://youtube.org/x", False),
+        (None, None),
+    ]
+    df = spark.createDataFrame(cases, "url string, want boolean")
+    got = df.select("want", C.is_youtube_url(F.col("url")).alias("got")).collect()
+    assert [(r["want"], r["got"]) for r in got] == [(w, w) for _, w in cases]
 
 
 def test_filename_from_url_reference_semantics(spark):
@@ -874,8 +946,7 @@ def test_ivf_assign_arrow_matches_expr(spark):
     arrow = {
         r["vec_id"]: r["centroid_id"]
         for r in ivf_assign(
-            emb, "embedding", "vec_id",
-            cents.withColumnRenamed("centroid", "embedding"),
+            emb, "embedding", cents.withColumnRenamed("centroid", "embedding")
         ).collect()
     }
     assert expr and arrow == expr
@@ -907,7 +978,7 @@ def test_kmeans_refine_arrow_matches_expr(spark):
         assigned = ivf_assign_topn(emb, "embedding", "vec_id", ref, 1)
         ref = label_centroids(assigned, "embedding", "centroid_id")
     a = rounded(ref)
-    b = rounded(kmeans_refine(emb, "embedding", "vec_id", seeds, iterations=2))
+    b = rounded(kmeans_refine(emb, "embedding", seeds, iterations=2))
     assert a and a == b
 
 

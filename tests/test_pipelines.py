@@ -87,7 +87,7 @@ def test_curate_incremental_stage(spark):
     stays deterministic under repartition."""
     from web_scraper_spark.operators.dedup import (
         minhash_band_index,
-        minhash_signature,
+        minhash_signatures,
     )
 
     # controlled vocab: sf* synthetic docs share distinct-token SETS
@@ -106,11 +106,8 @@ def test_curate_incremental_stage(spark):
         + [(200001, doc(3), "en")],
         "doc_id long, text string, lang string",
     )
-    index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        minhash_signature(F.col("text"), 16).alias("sig"),
-    )
+    sigs = minhash_signatures(old, "text", "doc_id", num_hashes=16)
+    index = minhash_band_index(sigs, num_hashes=16, bands=8)
     cfg = CurationConfig(
         min_quality=0.0, fuzzy=False,
         prev_index=index, prev_sigs=sigs, index_min_agree=8,

@@ -6,6 +6,7 @@ import os
 from pyspark.sql import functions as F
 
 from web_scraper_spark.sources.sinks import (
+    console_sink,
     derive_filenames,
     image_filenames,
     image_map_join,
@@ -141,6 +142,17 @@ def test_write_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
     assert placed == expected
 
 
+def test_console_sink_prints_source_headers(spark, capsys):
+    """S10: each of the first ``n`` rows prints a 'Content from
+    {source}:' header followed by its content."""
+    df = spark.createDataFrame(
+        [("https://a.example/x", "doc a"), ("https://b.example/y", "doc b")],
+        "url string, doc string",
+    )
+    console_sink(df.orderBy("url"), n=1)
+    assert capsys.readouterr().out == "\nContent from https://a.example/x:\n\ndoc a\n"
+
+
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     """Two tables bucketed on the same key and count must sort-merge
     join with ZERO Exchange in the plan (the write-once-shuffle
@@ -191,6 +203,7 @@ def test_incremental_dedup_bucketed_index_shuffles_new_side_only(spark):
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
+        minhash_signatures,
     )
     from web_scraper_spark.sources.sinks import bucketed_table, write_bucketed
 
@@ -199,13 +212,17 @@ def test_incremental_dedup_bucketed_index_shuffles_new_side_only(spark):
     )
     old = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
-    index = minhash_band_index(old, "text", "doc_id", num_hashes=16, bands=8)
+    index = minhash_band_index(
+        minhash_signatures(old, "text", "doc_id", num_hashes=16), 16, bands=8
+    )
     write_bucketed(index, "bkt_mh_index", ["band", "bucket"], n_buckets=8)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         ix = bucketed_table(spark, "bkt_mh_index")
-        new_banded = minhash_band_index(new, "text", "doc_id", 16, 8)
+        new_banded = minhash_band_index(
+            minhash_signatures(new, "text", "doc_id", 16), 16, 8
+        )
         cand_join = new_banded.join(
             ix.select("band", "bucket", F.col("id").alias("old_id")),
             ["band", "bucket"],

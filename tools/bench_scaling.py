@@ -8,9 +8,9 @@ both plus efficiency = thr(4N) / (4 · thr(N)).
 
 Jobs:
 1. frontier_schedule — a seeded synthetic frontier of >=10^6 URLs
-   through the full scheduling path (validity filters → Bloom-shard
-   probe → two-stage quota trim → JVM politeness window). Metric:
-   URLs scheduled/sec.
+   through ``schedule_round`` (two-stage quota trim → JVM politeness
+   window; no seen table, so nothing is probed). Metric: URLs
+   scheduled/sec.
 2. fetch_extract — schedule ∪ pages equi-join + full extraction UDF
    over N_PAGES pages. Metric: pages fetched+extracted/sec.
 
@@ -108,8 +108,8 @@ def bench_at(cores: int) -> dict:
     # --- job 1: frontier scheduling path ------------------------------
     # quota_per_host bounds the per-host politeness group (a crawl
     # round would never schedule 500k same-host fetches anyway); the
-    # metric is frontier URLs *processed*/sec — the full filter + trim
-    # + schedule path over the whole frontier.
+    # metric is frontier URLs *processed*/sec — the quota trim +
+    # schedule path over the whole frontier.
     frontier = build_frontier(spark, N_FRONTIER)
     schedule_round(  # warm-up: python workers + codegen
         build_frontier(spark, 10_000), None, quota_per_host=QUOTA, default_delay_ms=10

@@ -46,13 +46,19 @@ from .frontier import (
 from .politeness import schedule_round
 
 
+# state tables (all but seen, see CrawlConfig.n_shards) are small
+# relative to results; coalesce their writes to avoid 1-row-per-task
+# file storms
+_STATE_WRITE_PARTITIONS = 8
+
+
 @dataclass
 class CrawlConfig:
     ckpt_dir: str
     # number of files each round writes the exact seen table in — the
     # one state table every round scans in full (the seen anti-join
     # and the discovered-link anti-join), so it gets its own write
-    # width instead of state_write_partitions
+    # width instead of _STATE_WRITE_PARTITIONS
     n_shards: int = 16
     quota_per_host: int = 256
     default_delay_ms: int = 1000
@@ -69,18 +75,8 @@ class CrawlConfig:
     # multiplicatively, healthy hosts recover additively toward the
     # min. Fills in ONLY where robots declares no Crawl-delay. State
     # rides the round checkpoint (round=N/host_delay) — resumable like
-    # every other table.
+    # every other table. Bounds are update_host_delays' defaults.
     adaptive_delay: bool = False
-    adaptive_min_delay_ms: int = 250
-    adaptive_max_delay_ms: int = 60_000
-    # state tables (all but seen, see n_shards) are small relative to
-    # results; coalesce their writes to avoid 1-row-per-task file
-    # storms (None = leave partitioning to AQE — the right setting on
-    # a real cluster with large rounds)
-    state_write_partitions: int | None = 8
-    # count the next frontier for stats (costs one extra job per
-    # round; loop control only needs the scheduled count)
-    collect_frontier_count: bool = True
     # which extraction products the results sink persists per round
     # (links for discovery and the metrics counters are always
     # produced). Markdown is the dominant results write — a crawl that
@@ -99,13 +95,13 @@ class CrawlConfig:
     # instead of a fixed clock.
     seen_compact_ratio: float | None = None
     # host-authority frontier priority (north star's cross-host
-    # priority queue): every K rounds run integer PageRank over the
-    # accumulated discovered-link HOST graph (host-level — orders of
-    # magnitude smaller than the frontier) and order the next rounds'
-    # global schedule cap by the resulting rank. None = off (per-host
-    # quotas only, no cross-host preference).
+    # priority queue): every K rounds run integer PageRank (its
+    # default iterations) over the accumulated discovered-link HOST
+    # graph (host-level — orders of magnitude smaller than the
+    # frontier) and order the next rounds' global schedule cap by the
+    # resulting rank. None = off (per-host quotas only, no cross-host
+    # preference).
     authority_every: int | None = None
-    authority_iterations: int = 2
     # global top-K rows per round across all hosts, selected by
     # (host_rank desc, priority, seq) — the lever that makes authority
     # bite. None = every host schedules up to its quota.
@@ -135,7 +131,7 @@ def _write(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     df.write.mode("overwrite").parquet(path)
 
 
-def _read(spark: SparkSession, path: str, schema=None) -> DataFrame | None:
+def _read(spark: SparkSession, path: str) -> DataFrame | None:
     if not os.path.isdir(path):
         return None
     return spark.read.parquet(path)
@@ -390,7 +386,7 @@ def _run_round(
         "url", "host", "depth", "seq", "priority", "scheduled_offset_ms",
         "fetch_status", F.lit(round_id).alias("round_id"),
     ).observe(obs_sched, F.count(F.lit(1)).alias("n"))
-    _write(fetch_log, os.path.join(rdir, "fetch_log"), cfg.state_write_partitions)
+    _write(fetch_log, os.path.join(rdir, "fetch_log"), _STATE_WRITE_PARTITIONS)
     walls["fetch_log_s"] = time.perf_counter() - t
 
     if cfg.adaptive_delay:
@@ -409,11 +405,9 @@ def _run_round(
             host_stats,
             host_delays,
             default_delay_ms=cfg.default_delay_ms,
-            min_delay_ms=cfg.adaptive_min_delay_ms,
-            max_delay_ms=cfg.adaptive_max_delay_ms,
         )
         _write(
-            new_delays, os.path.join(rdir, "host_delay"), cfg.state_write_partitions
+            new_delays, os.path.join(rdir, "host_delay"), _STATE_WRITE_PARTITIONS
         )
 
     # -- results + metrics ---------------------------------------------
@@ -465,7 +459,7 @@ def _run_round(
 
     write_tasks.append(
         lambda: _write(
-            metrics, os.path.join(rdir, "metrics"), cfg.state_write_partitions
+            metrics, os.path.join(rdir, "metrics"), _STATE_WRITE_PARTITIONS
         )
     )
 
@@ -493,7 +487,7 @@ def _run_round(
     write_tasks.append(
         lambda: _write(
             new_host_state, os.path.join(rdir, "host_state"),
-            cfg.state_write_partitions,
+            _STATE_WRITE_PARTITIONS,
         )
     )
 
@@ -544,15 +538,12 @@ def _run_round(
         .join(deferred.select("url"), "url", "left_anti")
     )
     next_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(discovered)
-    obs_next = Observation("n_next") if cfg.collect_frontier_count else None
-    if obs_next is not None:
-        next_frontier = next_frontier.observe(
-            obs_next, F.count(F.lit(1)).alias("n")
-        )
+    obs_next = Observation("n_next")
+    next_frontier = next_frontier.observe(obs_next, F.count(F.lit(1)).alias("n"))
     write_tasks.append(
         lambda: _write(
             next_frontier, os.path.join(rdir, "frontier"),
-            cfg.state_write_partitions,
+            _STATE_WRITE_PARTITIONS,
         )
     )
 
@@ -582,20 +573,17 @@ def _run_round(
                     if prior is None
                     else prior.unionByName(delta_edges).distinct()
                 )
-                _write(cum, edges_dir, cfg.state_write_partitions)
+                _write(cum, edges_dir, _STATE_WRITE_PARTITIONS)
                 with open(os.path.join(rdir, "_EDGES_COMPACT"), "w") as fh:
                     fh.write("")
-                rank = integer_pagerank(
-                    spark.read.parquet(edges_dir),
-                    iterations=cfg.authority_iterations,
-                )
+                rank = integer_pagerank(spark.read.parquet(edges_dir))
                 _write(
                     rank.select(F.col("node").alias("host"), "rank_micros"),
                     os.path.join(rdir, "host_rank"),
-                    cfg.state_write_partitions,
+                    _STATE_WRITE_PARTITIONS,
                 )
             else:
-                _write(delta_edges, edges_dir, cfg.state_write_partitions)
+                _write(delta_edges, edges_dir, _STATE_WRITE_PARTITIONS)
 
         write_tasks.append(_write_authority)
 
@@ -619,7 +607,7 @@ def _run_round(
         "scheduled": n_sched,
         "fetched": n_ok,
         "failed": n_sched - n_ok,  # left join preserves every scheduled row
-        "next_frontier": int(obs_next.get["n"]) if obs_next is not None else -1,
+        "next_frontier": int(obs_next.get["n"]),
         **walls,
         "wall_s": time.perf_counter() - t0,
     }

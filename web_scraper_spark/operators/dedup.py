@@ -8,12 +8,13 @@ embedding-cosine near-dup.
 
 Scale design:
 - Exact dedup: one hash-exchange on the digest; map-side partial agg.
-- MinHash signatures: computed entirely JVM-side with
-  ``transform``/``array_min`` over the token array — NO explode, NO
-  shuffle for signature building. Only candidate pairing shuffles
-  (on LSH band keys), and each band bucket is tiny by construction.
+- MinHash signatures: one (id, sig) table per corpus, built JVM-side
+  as explode(shingles) → codegen md5 mins → one skinny groupBy(id);
+  LSH band keys are a projection of it. Candidate pairing shuffles
+  only on (band, bucket), and each band bucket is tiny by
+  construction.
 - Jaccard verification runs only on LSH candidates, never all pairs.
-- The hash family is ``md5(token ∥ '#' ∥ seed)`` with *lexicographic*
+- The hash family is ``md5(shingle ∥ '#' ∥ salt ∥ k)`` with *lexicographic*
   min over hex digests — deterministic, engine-portable (identical in
   DuckDB for the oracle), and uniform enough for banding.
 """
@@ -37,9 +38,7 @@ def normalize_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def exact_dedup(
-    df: DataFrame, text_col: str, id_col: str, keep: str = "min_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact dedup on md5 of normalized text (J3 analog,
     contxt/scraper.py:462-474). Keeps the lowest id per digest —
     deterministic at any parallelism."""
@@ -63,33 +62,7 @@ def word_shingles(col: Column, n: int) -> Column:
     )
 
 
-def minhash_signature(
-    col: Column, num_hashes: int, shingle_n: int = 1, salt: str = ""
-) -> Column:
-    """MinHash signature as an array of hex-digest minima.
-
-    sig[k] = min over shingles s of md5(s ∥ '#' ∥ salt ∥ k).
-    Lexicographic min over md5 hex is a valid uniform hash family and
-    is portable to the SQL oracle. Entirely expression-level — no
-    shuffle. ``salt`` selects an INDEPENDENT hash family (e.g. the
-    streaming near-dup verifier uses salt='v' so its estimator is not
-    correlated with the banding family that selected the candidates —
-    conditioning on a band collision biases the banding components
-    toward agreement)."""
-    sh = word_shingles(col, shingle_n)
-
-    def hash_k(k: int):
-        tag = f"#{salt}{k}"
-        # NB: must stay a unary lambda — F.transform treats a binary
-        # lambda as (element, index), silently shadowing a default arg.
-        return lambda s: F.md5(F.concat(s, F.lit(tag)))
-
-    return F.array(
-        *[F.array_min(F.transform(sh, hash_k(k))) for k in range(num_hashes)]
-    )
-
-
-def minhash_signatures_df(
+def minhash_signatures(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -97,18 +70,28 @@ def minhash_signatures_df(
     shingle_n: int = 1,
     salt: str = "",
 ) -> DataFrame:
-    """(id, sig) MinHash signature table — value-identical to
-    ``select(id, minhash_signature(text))`` for unique ids, but
-    computed as explode(shingles) → ``num_hashes`` codegen md5
-    columns → one groupBy(id) of mins. The Column form evaluates its
-    per-k ``transform``/``array_min`` higher-order functions
-    interpreted (CodegenFallback — guide §4.1), which made signature
-    building the dominant LSH cost (measured 2.3× slower than this
-    shape over the sf1.0 corpus). The groupBy's partial aggregation
-    collapses each document's shingles map-side (documents explode
-    within one partition), so the exchange carries one row per
-    (id × partition). Requires unique ``id_col`` values (rows sharing
-    an id would have their shingle sets merged)."""
+    """(id, sig) MinHash signature table: ``sig`` is an array of
+    ``num_hashes`` md5-hex minima,
+
+        sig[k] = min over distinct shingles s of md5(s ∥ '#' ∥ salt ∥ k).
+
+    Lexicographic min over md5 hex is a valid uniform hash family and
+    is portable to the SQL oracle. ``salt`` selects an INDEPENDENT
+    hash family (e.g. the streaming near-dup verifier uses salt='v'
+    so its estimator is not correlated with the banding family that
+    selected the candidates — conditioning on a band collision biases
+    the banding components toward agreement). Null text gives an
+    all-null signature; a doc shorter than ``shingle_n`` tokens has no
+    shingles and gets the same.
+
+    Computed as explode(shingles) → ``num_hashes`` codegen md5
+    columns → one groupBy(id) of mins (per-k ``transform``/
+    ``array_min`` higher-order functions run interpreted and measured
+    2.3× slower over the sf1.0 corpus). The groupBy's partial
+    aggregation collapses each document's shingles map-side
+    (documents explode within one partition), so the exchange carries
+    one row per (id × partition). Requires unique ``id_col`` values
+    (rows sharing an id would have their shingle sets merged)."""
     sh = word_shingles(F.col(text_col), shingle_n)
     ex = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
     aggs = [
@@ -120,33 +103,28 @@ def minhash_signatures_df(
     )
 
 
-def minhash_band_index(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 1,
-) -> DataFrame:
-    """(id, band, bucket) LSH band-key table for a corpus — the
-    persistable index artifact that makes fuzzy dedup INCREMENTAL.
+def minhash_band_index(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, band, bucket) LSH band-key table from an (id, sig)
+    signature table (:func:`minhash_signatures`): the signature splits
+    into ``bands`` runs of ``num_hashes/bands`` components and each
+    run hashes to ``md5(concat_ws('|', run))``. Pure projection — no
+    shuffle beyond the one that built ``sigs``.
 
-    Write this once for the existing corpus — ideally bucketed on
-    BOTH join keys, ``write_bucketed(ix, t, ["band", "bucket"])``, so
-    the per-snapshot candidate join never re-shuffles the index side
-    (plan-tested; a subset-key bucketing reshuffles both sides under
-    Spark's co-partition rules); each new snapshot then dedups
-    against the index with ``dedup_against_index`` without ever
-    rescanning the old corpus's text. Index size is ``bands`` skinny
-    rows per document (two md5-hex strings + a byte), orders of
-    magnitude smaller than the text it summarizes. Signature building
-    is entirely expression-level — the only cost is one pass over the
-    new text. Indexes COMPOSE by unionByName (per-doc rows are
-    independent), so appending a curated snapshot's own index keeps
-    the artifact current for the next snapshot — no rebuild."""
-    with_sig = minhash_signatures_df(df, text_col, id_col, num_hashes, shingle_n)
+    This is the persistable index artifact that makes fuzzy dedup
+    INCREMENTAL. Write it once for the existing corpus — ideally
+    bucketed on BOTH join keys, ``write_bucketed(ix, t, ["band",
+    "bucket"])``, so the per-snapshot candidate join never
+    re-shuffles the index side (plan-tested; a subset-key bucketing
+    reshuffles both sides under Spark's co-partition rules); each new
+    snapshot then dedups against the index with
+    ``dedup_against_index`` without ever rescanning the old corpus's
+    text. Index size is ``bands`` skinny rows per document (two
+    md5-hex strings + a byte), orders of magnitude smaller than the
+    text it summarizes. Indexes COMPOSE by unionByName (per-doc rows
+    are independent), so appending a curated snapshot's own index
+    keeps the artifact current for the next snapshot — no rebuild."""
     rows_per_band = num_hashes // bands
-    return with_sig.select(
+    return sigs.select(
         "id",
         F.explode(
             F.array(
@@ -191,10 +169,11 @@ def minhash_lsh_candidates(
     aggregate. Hot buckets are by construction few, so the exclusion
     join is a broadcast anti-join (no extra shuffle on the big side).
     """
-    banded = minhash_band_index(df, text_col, id_col, num_hashes, bands, shingle_n)
+    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
+    banded = minhash_band_index(sigs, num_hashes, bands)
     if max_bucket_size is not None:
         # persist: the bucket-size scan and the self-join both consume
-        # the banded keys; without this the signature expressions run
+        # the banded keys; without this the signature build runs
         # twice over the source.
         banded = banded.persist()
         hot = (
@@ -266,18 +245,16 @@ def dedup_against_index(
     matched old ids (skinny), never the whole signature table's
     payload per banded row.
 
-    Scale shape: the new snapshot's text is read once (signature
-    expressions, no shuffle); the only wide exchange is the band-key
-    equi-join of ``bands`` skinny rows per new doc against the index.
-    ``max_bucket_size`` guards degenerate boilerplate buckets in the
-    index exactly like minhash_lsh_candidates (eager count + WARNING,
-    broadcast anti-join exclusion of both sides).
-
-    Nothing is cached: with verification on, the band keys and the
-    sig join each derive their signatures from the new text."""
-    new_banded = minhash_band_index(
-        new_df, text_col, id_col, num_hashes, bands, shingle_n
-    )
+    Scale shape: the new snapshot's signature table is built once
+    (:func:`minhash_signatures`, one skinny groupBy(id) exchange) and
+    feeds both the band keys and the verification join; the other
+    wide exchange is the band-key equi-join of ``bands`` skinny rows
+    per new doc against the index. ``max_bucket_size`` guards
+    degenerate boilerplate buckets in the index exactly like
+    minhash_lsh_candidates (eager count + WARNING, broadcast
+    anti-join exclusion of both sides). Nothing is cached."""
+    new_sigs = minhash_signatures(new_df, text_col, id_col, num_hashes, shingle_n)
+    new_banded = minhash_band_index(new_sigs, num_hashes, bands)
     old_banded = index.select("id", "band", "bucket")
     if max_bucket_size is not None:
         hot = (
@@ -307,9 +284,6 @@ def dedup_against_index(
         .distinct()
     )
     if old_sigs is not None and min_agree is not None:
-        new_sigs = minhash_signatures_df(
-            new_df, text_col, id_col, num_hashes, shingle_n
-        )
         cands = (
             cands.join(new_sigs.select("id", F.col("sig").alias("sig_n")), "id")
             .join(
@@ -693,47 +667,20 @@ def ngram_contamination(
     )
 
 
-def simhash64(col: Column, shingle_n: int = 1) -> Column:
-    """64-bit SimHash fingerprint, JVM-side.
-
-    Per shingle, ``xxhash64`` gives 64 bits; each bit votes ±1; the
-    fingerprint sets bits with positive vote sums. Built from
-    ``transform``+``aggregate`` over the shingle array — no shuffle,
-    no Python. (xxhash64 has no DuckDB twin, so correctness checks for
-    this operator are Spark-internal — see tests.)"""
-    sh = word_shingles(col, shingle_n)
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-
-    def vote_fn(bit: int):
-        mask = F.shiftleft(F.lit(1).cast("long"), bit)
-        # binary (acc, h) lambda built per bit via closure — NOT via a
-        # default arg, which would change the lambda's arity for
-        # F.aggregate's merge function.
-        return lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for bit in range(64):
-        votes = F.aggregate(hashes, F.lit(0), vote_fn(bit))
-        out = out.bitwiseOR(
-            F.when(votes > 0, F.shiftleft(F.lit(1).cast("long"), bit)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
-
-
-def simhash64_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """SimHash via explode + one groupBy with 64 small aggregations —
-    the scalable form of :func:`simhash64`. The single-expression
-    variant builds a 64-lambda tree that blows up codegen/compile time
-    (measured 25s on 300 docs); this form is one shuffle on the id and
-    64 codegen-friendly conditional sums.
-
-    Returns (id, fp)."""
+def _simhash(
+    df: DataFrame, text_col: str, id_col: str, h: Column, bits: int
+) -> DataFrame:
+    """SimHash vote fold shared by the 64- and 32-bit families: explode
+    the distinct tokens, hash each with ``h`` (a Column over ``tok``),
+    let every bit vote ±1 in ONE groupBy(id) of ``bits`` conditional
+    sums, and set the bits with positive vote sums. Returns (id, fp).
+    One shuffle on the id; a single-expression fold (``transform`` +
+    ``aggregate`` per bit) builds a lambda tree whose compile time
+    blows up (measured 25 s on 300 docs)."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text_col), 1)).alias("tok"),
-    ).withColumn("h", F.xxhash64("tok"))
+    ).withColumn("h", h)
     votes = toks.groupBy("id").agg(
         *[
             F.sum(
@@ -741,17 +688,24 @@ def simhash64_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                     F.col("h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
                 ).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(64)
+            for b in range(bits)
         ]
     )
     fp = F.lit(0).cast("long")
-    for b in range(64):
+    for b in range(bits):
         fp = fp.bitwiseOR(
             F.when(F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
                 F.lit(0).cast("long")
             )
         )
     return votes.select("id", fp.alias("fp"))
+
+
+def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """64-bit SimHash over ``xxhash64`` per token. xxhash64 has no
+    DuckDB twin, so correctness checks for this family are
+    Spark-internal (see tests). Returns (id, fp)."""
+    return _simhash(df, text_col, id_col, F.xxhash64("tok"), 64)
 
 
 def global_sentence_dedup(
@@ -1049,7 +1003,7 @@ def simhash_near_dups(
     ``n_blocks`` > max_hamming+1 enables the multi-probe banding for
     huge corpora (see :func:`banded_hamming_pairs`)."""
     return banded_hamming_pairs(
-        simhash64_agg(df, text_col, id_col), 64, max_hamming, n_blocks
+        simhash64(df, text_col, id_col), 64, max_hamming, n_blocks
     )
 
 
@@ -1281,30 +1235,10 @@ def remove_duplicate_spans(
 def simhash32_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """32-bit SimHash over the md5 hash family — engine-portable (the
     per-token hash is the first 8 hex chars of md5, so a SQL oracle
-    can reproduce the fingerprint bit-for-bit; see q58). Same
-    explode+groupBy structure as :func:`simhash64_agg`."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), 1)).alias("tok"),
-    ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
-    votes = toks.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.col("h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
-                ).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(32)
-        ]
-    )
-    fp = F.lit(0).cast("long")
-    for b in range(32):
-        fp = fp.bitwiseOR(
-            F.when(F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return votes.select("id", fp.alias("fp"))
+    can reproduce the fingerprint bit-for-bit; see q58). Returns
+    (id, fp)."""
+    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
+    return _simhash(df, text_col, id_col, h, 32)
 
 
 def _large_star(e: DataFrame) -> DataFrame:

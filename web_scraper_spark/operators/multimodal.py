@@ -3,9 +3,9 @@ columns with typed metadata.
 
 The Spark-side machinery (schemas, partition-aware batch iteration,
 Arrow-batched UDF signatures, metadata propagation) is real and
-tested; the codec step is stubbed behind ``DecodeUnavailable`` /
-deterministic fakes because no image/audio libraries exist in this
-environment. Swapping in a real decoder is a one-function change.
+tested; the codec step is a deterministic fake decode
+(:func:`_fake_decode`) because no image/audio libraries are a
+dependency. Swapping in a real decoder is a one-function change.
 
 This generalizes the reference's image handling (download → MD5 →
 dedup → extension-normalized sink, contxt/scraper.py:428-502) to a
@@ -46,15 +46,6 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-class DecodeUnavailable(NotImplementedError):
-    """Raised by the real-decoder seam: codec libraries are not
-    installed in this environment."""
-
-
-def _decode_image_real(payload: bytes) -> tuple[int, int]:  # pragma: no cover
-    raise DecodeUnavailable("image codecs (PIL/opencv) not available; see module docstring")
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """Deterministic fake decode: derives (width, height, n_frames)
     from the content hash — stable across partitionings and engines.
@@ -65,7 +56,7 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return 16 + h[0] % 64, 16 + h[1] % 64, 1 + h[2] % 8
 
 
-def extract_media_features(df: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_media_features(df: DataFrame) -> DataFrame:
     """media table → per-item features via ``mapInPandas``.
 
     Batch shape: one Arrow batch in, one out; payload bytes never land

@@ -65,7 +65,6 @@ def cosine_topk_bruteforce(
 def ivf_assign(
     df: DataFrame,
     vec_col: str,
-    id_col: str,
     centroids: DataFrame,
     cent_id: str = "centroid_id",
     keep_cos: bool = False,
@@ -162,12 +161,27 @@ def cosine_topk_ivf(
     task reads only its bucket — the brute-force cross join never
     materializes."""
     q_assigned = ivf_assign_topn(queries, vec_col, id_col, centroids, nprobe)
+    return _ivf_topk(q_assigned, corpus_assigned, vec_col, id_col, k, round_to)
+
+
+def _ivf_topk(
+    q_assigned: DataFrame,
+    corpus: DataFrame,
+    vec_col: str,
+    id_col: str,
+    k: int,
+    round_to: int,
+) -> DataFrame:
+    """Scoring tail of both IVF probes: broadcast the (query ×
+    probed centroid) rows onto the corpus rows of the same
+    ``centroid_id``, score the rounded cosine, keep each query's top
+    ``k`` (ties to the lowest neighbor id)."""
     q = q_assigned.select(
         F.col(id_col).alias("query_id"),
         F.col("centroid_id"),
         _as_double(F.col(vec_col)).alias("qv"),
     ).withColumn("qn", _norm(F.col("qv")))
-    c = corpus_assigned.select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col("centroid_id"),
         _as_double(F.col(vec_col)).alias("cv"),
@@ -238,23 +252,7 @@ def cosine_topk_ivf_indexed(
         for r in q_assigned.select("centroid_id").distinct().collect()
     ]
     pruned = index.filter(F.col("centroid_id").isin(probed))
-    q = q_assigned.select(
-        F.col(id_col).alias("query_id"),
-        F.col("centroid_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = pruned.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("centroid_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
-    ).withColumn("cn", _norm(F.col("cv")))
-    pairs = c.join(F.broadcast(q), "centroid_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to)
-    scored = pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
+    return _ivf_topk(q_assigned, pruned, vec_col, id_col, k, round_to)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
@@ -345,7 +343,6 @@ def lsh_embedding_near_dups(
 def kmeans_refine(
     df: DataFrame,
     vec_col: str,
-    id_col: str,
     centroids: DataFrame,
     iterations: int = 1,
 ) -> DataFrame:
@@ -364,10 +361,7 @@ def kmeans_refine(
     cur = centroids
     for _ in range(iterations):
         assigned = ivf_assign(
-            df,
-            vec_col,
-            id_col,
-            cur.select("centroid_id", F.col("centroid").alias(vec_col)),
+            df, vec_col, cur.select("centroid_id", F.col("centroid").alias(vec_col))
         )
         cur = label_centroids(assigned, vec_col, "centroid_id")
     return cur
@@ -412,7 +406,7 @@ def semdedup(
         centroids = centroids.select(
             "centroid_id", F.col("centroid").alias(vec_col)
         )
-    assigned = ivf_assign(df, vec_col, id_col, centroids, keep_cos=True)
+    assigned = ivf_assign(df, vec_col, centroids, keep_cos=True)
     pairs = embedding_near_dups(
         assigned, vec_col, id_col, threshold, bucket_col="centroid_id"
     )

@@ -27,11 +27,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 }
 
 
-def _word_count(text: Column, word: str) -> Column:
-    # whole-word occurrences; regexp_count exists in Spark 3.4+ / DuckDB
-    return F.regexp_count(F.lower(text), F.lit(rf"\b{word}\b"))
-
-
 def _word_set_count(text: Column, words: tuple[str, ...]) -> Column:
     """Total whole-word occurrences of any word in ``words`` — ONE
     alternation scan instead of one regex pass per word (the scans
@@ -442,18 +437,6 @@ def fingerprint(text: Column) -> Column:
     content-identity key used by exact dedup and the URL-seen family
     (reference analog: md5 content hash, contxt/scraper.py:464)."""
     return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
-
-
-def positional_fingerprint(text: Column, window: int = 8) -> Column:
-    """Rolling positional fingerprint: md5 of every ``window``-word
-    shingle, folded with xor-ish min — a winnowing-style document
-    sketch that survives local edits. Returns the lexicographic min
-    digest (portable to the SQL oracle)."""
-    toks = F.split(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")), " ")
-    size = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(size - window, F.lit(0)))
-    digests = F.transform(idx, lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))))
-    return F.array_min(digests)
 
 
 #: fixed feature order for the linear quality model — the z-sum is

@@ -496,8 +496,10 @@ def q15_fingerprint(spark, sf_dir):
 )
 def q16_minhash_sig(spark, sf_dir):
     d = _load(spark, sf_dir, "documents")
-    sig = D.minhash_signature(F.col("text"), num_hashes=1)
-    return d.select("doc_id", F.element_at(sig, 1).alias("sig0"))
+    sigs = D.minhash_signatures(d, "text", "doc_id", num_hashes=1)
+    return sigs.select(
+        F.col("id").alias("doc_id"), F.element_at("sig", 1).alias("sig0")
+    )
 
 
 # =====================================================================
@@ -905,7 +907,7 @@ def q64_kmeans_refine(spark, sf_dir):
     oracle hashes is pure JVM."""
     emb = _load(spark, sf_dir, "embeddings")
     seeds = S.label_centroids(emb, "embedding", "label")
-    refined = S.kmeans_refine(emb, "embedding", "vec_id", seeds, iterations=2)
+    refined = S.kmeans_refine(emb, "embedding", seeds, iterations=2)
     return refined.select(
         "centroid_id",
         F.posexplode("centroid").alias("pos", "x"),
@@ -3747,14 +3749,11 @@ def q102_incremental_dedup(spark, sf_dir):
     d = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
     old = d.filter(F.col("doc_id") % 2 == 0)
     new = d.filter(F.col("doc_id") % 2 == 1)
-    index = D.minhash_band_index(old, "text", "doc_id", num_hashes=8, bands=4)
-    old_sigs = old.select(
-        F.col("doc_id").alias("id"),
-        D.minhash_signature(F.col("text"), 8).alias("sig"),
-    )
+    sigs = D.minhash_signatures(old, "text", "doc_id", num_hashes=8)
+    index = D.minhash_band_index(sigs, num_hashes=8, bands=4)
     res = D.dedup_against_index(
         new, index, "text", "doc_id", num_hashes=8, bands=4,
-        old_sigs=old_sigs, min_agree=4,
+        old_sigs=sigs, min_agree=4,
     )
     return res.select(
         F.col("id").alias("doc_id"), "is_dup", "first_match"
@@ -3858,11 +3857,8 @@ def q103_incremental_curation(spark, sf_dir):
             "doc_id", F.col("doc_id") + 100000
         )
     )
-    index = D.minhash_band_index(old, "text", "doc_id", num_hashes=8, bands=4)
-    sigs = old.select(
-        F.col("doc_id").alias("id"),
-        D.minhash_signature(F.col("text"), 8).alias("sig"),
-    )
+    sigs = D.minhash_signatures(old, "text", "doc_id", num_hashes=8)
+    index = D.minhash_band_index(sigs, num_hashes=8, bands=4)
     cfg = CurationConfig(
         min_quality=0.0, fuzzy=False, lsh_num_hashes=8, lsh_bands=4,
         prev_index=index, prev_sigs=sigs, index_min_agree=8,

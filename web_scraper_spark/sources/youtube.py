@@ -171,7 +171,7 @@ def comments_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
     return _table_df(spark, n_videos, seed, "comments", COMMENTS_SCHEMA)
 
 
-def containers_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
+def containers_df(spark, n_videos: int) -> DataFrame:
     """Every video belongs to playlist p{i%3} at position i//3 and to
     channel ch{i%5}; containers exceed typical max_videos caps."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -16,10 +16,12 @@ under ``store_dir``:
   family (salt='v'), stored once per doc rather than duplicated per
   band.
 
-Each batch computes both JVM-side (operators.dedup.minhash_signature
-— no shuffle), joins its banded keys against the store ∪ itself on
-(band, bucket) — the same bounded-by-collision-probability join as
-the batch LSH operator — and VERIFIES candidates with the
+Each batch builds both with the batch LSH operators
+(operators.dedup.minhash_signatures → minhash_band_index; one skinny
+groupBy(id) per hash family, so ids must be unique within a batch),
+joins its banded keys against the store ∪ itself on (band, bucket) —
+the same bounded-by-collision-probability join as the batch LSH
+operator — and VERIFIES candidates with the
 ``verify_hashes``-component estimator: est = agreeing components /
 verify_hashes. This is the standard unbiased MinHash Jaccard
 estimator with KNOWN error (E[est] = J, Var = J(1−J)/K ⇒ std ≤
@@ -50,51 +52,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_signature
+from ..operators.dedup import minhash_band_index, minhash_signatures
 
 _STORE_GLOB = "batch=*"
 _BANDS_SUB = "bands"
 _SIGS_SUB = "sigs"
-
-
-def _band_rows(
-    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band, bucket) candidate keys — banding family (salt='')."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signature(F.col(text_col), num_hashes)
-    with_sig = df.select(F.col(id_col).alias("id"), sig.alias("sig"))
-    return with_sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-
-
-def _sig_rows(
-    df: DataFrame, text_col: str, id_col: str, verify_hashes: int
-) -> DataFrame:
-    """(id, vsig) one row per doc — verification family (salt='v'),
-    independent of the banding family by construction."""
-    vsig = minhash_signature(F.col(text_col), verify_hashes, salt="v")
-    return df.select(F.col(id_col).alias("id"), vsig.alias("vsig"))
 
 
 def make_near_dup_batch_fn(
@@ -118,8 +80,12 @@ def make_near_dup_batch_fn(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         src = batch_df.persist()
-        new_bands = _band_rows(src, text_col, id_col, num_hashes, bands).persist()
-        new_sigs = _sig_rows(src, text_col, id_col, verify_hashes).persist()
+        new_bands = minhash_band_index(
+            minhash_signatures(src, text_col, id_col, num_hashes), num_hashes, bands
+        ).persist()
+        new_sigs = minhash_signatures(
+            src, text_col, id_col, verify_hashes, salt="v"
+        ).withColumnRenamed("sig", "vsig").persist()
         new_bands.count()  # materialize: store join + store write both consume
         new_sigs.count()
 
