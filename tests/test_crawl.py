@@ -1,13 +1,12 @@
-"""Crawl engine tests: Bloom sketch properties, politeness scheduling,
-and full-round parity against the sequential reference-semantics
-simulator (SURVEY.md §5.2-2), plus checkpoint resume (§5.2-5)."""
+"""Crawl engine tests: politeness scheduling, full-round parity
+against the sequential reference-semantics simulator (SURVEY.md
+§5.2-2), plus checkpoint resume (§5.2-5)."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from web_scraper_spark.crawl.bloom import BloomShard, shard_of
 from web_scraper_spark.crawl.rounds import CrawlConfig, last_committed_round, run_crawl
 from web_scraper_spark.crawl.simulator import SimConfig, simulate_crawl
 from web_scraper_spark.html.clean import extract_links
@@ -21,44 +20,6 @@ def corpus_links():
         url_for(rid): extract_links(gen_page_html(rid, universe=N_PAGES), url_for(rid))
         for rid in range(N_PAGES)
     }
-
-
-# ---------------------------------------------------------------------
-# Bloom shard unit properties
-# ---------------------------------------------------------------------
-
-def test_bloom_no_false_negatives():
-    s = BloomShard.sized_for(1000, 1e-3)
-    urls = [f"https://h{i % 7}.x/p{i}" for i in range(1000)]
-    for u in urls:
-        s.add(u)
-    assert all(u in s for u in urls)
-
-
-def test_bloom_fp_rate_reasonable():
-    s = BloomShard.sized_for(1000, 1e-3)
-    for i in range(1000):
-        s.add(f"https://h.x/in{i}")
-    fps = sum(1 for i in range(10000) if f"https://h.x/out{i}" in s)
-    assert fps < 100  # 1e-3 design point, 10x slack
-
-
-def test_bloom_serialization_roundtrip_and_merge_idempotent():
-    a = BloomShard.sized_for(100)
-    b = BloomShard.sized_for(100)
-    for i in range(50):
-        a.add(f"u{i}")
-        b.add(f"v{i}")
-    a2 = BloomShard.from_bytes(a.to_bytes())
-    assert a2.bits == a.bits and a2.n_hashes == a.n_hashes
-    m1 = a.merge(b)
-    m2 = a.merge(b).merge(b)  # re-applying a batch leaves bits unchanged
-    assert m1.bits == m2.bits
-
-
-def test_shard_of_stable():
-    assert shard_of("https://x.y/z", 16) == shard_of("https://x.y/z", 16)
-    assert 0 <= shard_of("https://x.y/z", 16) < 16
 
 
 # ---------------------------------------------------------------------

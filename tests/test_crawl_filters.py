@@ -137,125 +137,6 @@ def test_probe_seen_broadcast_budget(spark):
     assert got == set(all_urls[120:])
 
 
-def test_bloom_vectorized_no_false_negatives_and_scalar_agreement():
-    """The numpy i64 path: everything added must probe positive (no
-    false negatives), and unadded keys are mostly negative."""
-    import numpy as np
-
-    from web_scraper_spark.crawl.bloom import BloomShard
-
-    rng = np.random.RandomState(7)
-    added_h1 = rng.randint(-(2**63), 2**63 - 1, size=5000, dtype=np.int64)
-    added_h2 = rng.randint(-(2**63), 2**63 - 1, size=5000, dtype=np.int64)
-    other_h1 = rng.randint(-(2**63), 2**63 - 1, size=5000, dtype=np.int64)
-    other_h2 = rng.randint(-(2**63), 2**63 - 1, size=5000, dtype=np.int64)
-    s = BloomShard.sized_for(5000, 1e-4)
-    s.add_many_i64(added_h1, added_h2)
-    assert s.n_items == 5000
-    assert s.contains_many_i64(added_h1, added_h2).all()
-    fp = s.contains_many_i64(other_h1, other_h2).sum()
-    assert fp <= 10  # 1e-4 nominal; generous slack
-    # serialization round-trip preserves the vectorized bits
-    s2 = BloomShard.from_bytes(s.to_bytes())
-    assert s2.contains_many_i64(added_h1, added_h2).all()
-
-
-def test_bloom_sketch_version_and_hash_family_tags():
-    """Persisted-sketch safety: the v2 header carries the hash family,
-    so resuming with the wrong family (or a pre-versioned payload)
-    raises instead of silently treating every seen URL as new."""
-    import numpy as np
-    import pytest
-
-    from web_scraper_spark.crawl.bloom import (
-        FAMILY_BLAKE2B,
-        FAMILY_XX64,
-        BloomShard,
-    )
-
-    s = BloomShard.sized_for(1000)
-    h1 = np.arange(64, dtype=np.int64)
-    h2 = np.arange(64, dtype=np.int64) * 7 + 1
-    s.add_many_i64(h1, h2)
-    assert s.family == FAMILY_XX64
-
-    # round-trip preserves the family tag
-    s2 = BloomShard.from_bytes(s.to_bytes())
-    assert s2.family == FAMILY_XX64
-
-    # probing with the other family fails fast
-    with pytest.raises(ValueError, match="hash-family mismatch"):
-        "https://a.example/" in s2
-    with pytest.raises(ValueError, match="hash-family mismatch"):
-        s2.add("https://a.example/")
-
-    # legacy (unversioned) payload fails fast
-    legacy = (
-        s.n_bits.to_bytes(8, "big")
-        + s.n_hashes.to_bytes(2, "big")
-        + s.n_items.to_bytes(8, "big")
-        + bytes(s.bits)
-    )
-    with pytest.raises(ValueError, match="unversioned"):
-        BloomShard.from_bytes(legacy)
-
-    # cross-family merge refused; empty-sketch merge keeps the family
-    t = BloomShard(s.n_bits, s.n_hashes)
-    t.add("https://a.example/")
-    assert t.family == FAMILY_BLAKE2B
-    with pytest.raises(ValueError, match="hash-family mismatch"):
-        s.merge(t)
-    m = s.merge(BloomShard(s.n_bits, s.n_hashes))
-    assert m.family == FAMILY_XX64 and m.contains_many_i64(h1, h2).all()
-
-
-def test_bloom_legacy_payload_migration_via_assume_family():
-    """Pre-v2 payloads are recoverable when the producing hash family
-    is known: from_bytes(raw, assume_family=...) re-tags the legacy
-    bits instead of forcing a recrawl; the default path still refuses,
-    and garbage payloads cannot be laundered through the argument."""
-    import numpy as np
-    import pytest
-
-    from web_scraper_spark.crawl.bloom import (
-        FAMILY_NONE,
-        FAMILY_XX64,
-        BloomShard,
-    )
-
-    s = BloomShard.sized_for(1000)
-    h1 = np.arange(64, dtype=np.int64)
-    h2 = np.arange(64, dtype=np.int64) * 7 + 1
-    s.add_many_i64(h1, h2)
-    legacy = (
-        s.n_bits.to_bytes(8, "big")
-        + s.n_hashes.to_bytes(2, "big")
-        + s.n_items.to_bytes(8, "big")
-        + bytes(s.bits)
-    )
-    # explicit migration: bits, geometry, counts and family all land
-    mig = BloomShard.from_bytes(legacy, assume_family=FAMILY_XX64)
-    assert mig.family == FAMILY_XX64
-    assert mig.n_items == s.n_items
-    assert mig.contains_many_i64(h1, h2).all()
-    # migrated state re-serializes as v2 and round-trips
-    again = BloomShard.from_bytes(mig.to_bytes())
-    assert again.family == FAMILY_XX64
-    assert again.contains_many_i64(h1, h2).all()
-    # default path still fails fast, now with the migration hint
-    with pytest.raises(ValueError, match="assume_family"):
-        BloomShard.from_bytes(legacy)
-    # assume_family must name a concrete family
-    with pytest.raises(ValueError, match="concrete hash family"):
-        BloomShard.from_bytes(legacy, assume_family=FAMILY_NONE)
-    # truncated/garbage payloads are not migratable
-    with pytest.raises(ValueError, match="cannot migrate"):
-        BloomShard.from_bytes(legacy[:-5], assume_family=FAMILY_XX64)
-    # v2 payloads ignore the argument (header wins)
-    v2 = BloomShard.from_bytes(s.to_bytes(), assume_family=FAMILY_XX64)
-    assert v2.family == FAMILY_XX64
-
-
 def test_crawl_with_robots_and_ignore_matches_simulator(spark, tmp_path):
     n = 48
     pages = pages_df(spark, n)

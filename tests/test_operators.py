@@ -1029,45 +1029,6 @@ def test_embedding_near_dups_rounds_half_up(spark):
     assert got == [(0, 1, 0.007813)]
 
 
-def test_lsh_embedding_multi_table_recall(spark):
-    """Multi-table sign-LSH amplification: T=6 tables of 6 planes must
-    recover most high-cosine pairs that a single table misses, and
-    every emitted pair must be a true pair (exact verify)."""
-    from web_scraper_spark.operators.dedup import embedding_near_dups
-    from web_scraper_spark.operators.similarity import (
-        lsh_embedding_near_dups,
-        random_hyperplanes,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # max pairwise cosine in this table is ~0.48; τ=0.42 keeps ~30
-    # true pairs. 12 tables × 3 planes: per-table collision ≈ 0.26 at
-    # θ=arccos(0.42) → amplified recall ≈ 1−(1−0.26)^12 ≈ 0.97.
-    tau = 0.42
-    truth = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dups(emb, "embedding", "vec_id", tau).collect()
-    }
-    assert truth, "vacuous: no true pairs at this threshold"
-    tables = [random_hyperplanes(64, 3, seed=100 + t) for t in range(12)]
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_embedding_near_dups(
-            emb, "embedding", "vec_id", tau, tables
-        ).collect()
-    }
-    assert got <= truth                      # no false pairs survive verify
-    recall = len(got) / len(truth)
-    single = {
-        (r["id_a"], r["id_b"])
-        for r in lsh_embedding_near_dups(
-            emb, "embedding", "vec_id", tau, tables[:1]
-        ).collect()
-    }
-    assert recall >= 0.8, f"multi-table recall too low: {recall:.2f}"
-    assert len(single) <= len(got)
-
-
 def test_global_sentence_dedup_semantics(spark):
     from web_scraper_spark.operators.dedup import global_sentence_dedup
 

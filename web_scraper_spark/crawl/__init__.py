@@ -4,9 +4,6 @@ Realizes the reference's declared-but-unbuilt crawl capability
 (``max_depth`` config + TODO.md sitemap/concurrency notes,
 contxt/config.py:20, TODO.md:1,7) as a Spark-native micro-batch loop:
 
-- :mod:`bloom`      — deterministic partitioned Bloom shards (the
-                      fixed-size state backend of the streaming
-                      first-seen operator, streaming/stateful.py).
 - :mod:`frontier`   — frontier schema, seed ingestion, candidate
                       filtering (validity, ignore patterns, robots,
                       exact anti-join against the seen table — the

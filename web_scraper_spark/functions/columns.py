@@ -83,7 +83,7 @@ def youtube_container_id(url: Column) -> Column:
     )
 
 
-# -- filenames / strings (F3, F4, F6, F16, L3) ----------------------------
+# -- filenames / strings (F3, F16, L3) ------------------------------------
 
 # Python's re \s in str mode: Java default \s plus \x1c-\x1f and the
 # Unicode White_Space set — spelled out so Spark (Java regex) matches
@@ -116,17 +116,6 @@ def filename_from_url(url: Column) -> Column:
     return sanitize_filename(key)
 
 
-def normalize_whitespace(s: Column) -> Column:
-    """F4: collapse runs of whitespace to one space, trim
-    (contxt/scraper.py:317)."""
-    return F.trim(F.regexp_replace(s, r"\s+", " "))
-
-
-def strip_tags(s: Column) -> Column:
-    """F6: drop <...> runs (contxt/scraper.py:421)."""
-    return F.regexp_replace(s, "<[^>]+>", "")
-
-
 def token_estimate(s: Column) -> Column:
     """A4 fallback branch: len(text) // 4 (contxt/scraper.py:423-426)."""
     return (F.length(s) / 4).cast("int")
@@ -139,12 +128,6 @@ def image_ext(url: Column) -> Column:
     return F.when(
         ext.isin(".jpg", ".jpeg", ".png", ".gif", ".webp", ".svg", ".avif"), ext
     ).otherwise(F.lit(".jpg"))
-
-
-def escape_title(title: Column) -> Column:
-    """F17: escape double quotes for frontmatter
-    (contxt/formatters/markdown_formatter.py:42)."""
-    return F.regexp_replace(title, '"', '\\\\"')
 
 
 def matches_ignore_patterns(url: Column, patterns: list[str]) -> Column:
@@ -220,28 +203,6 @@ def is_crawler_trap(
         | repeat_trap
         | (n_params > max_query_params)
         | (F.length(url) > max_url_len)
-    )
-
-
-def markdown_frontmatter(
-    title: Column, url: Column, date: Column, og_description: Column
-) -> Column:
-    """D3 document assembly as a pure Column expression (JVM-side):
-    frontmatter + '# title' + source link; body is appended by caller
-    (contxt/formatters/markdown_formatter.py:36-61)."""
-    desc_line = F.when(
-        og_description.isNotNull() & (og_description != ""),
-        F.concat(F.lit('description: "'), F.regexp_replace(og_description, '"', '\\\\"'), F.lit('"\n')),
-    ).otherwise(F.lit(""))
-    return F.concat(
-        F.lit("---\n"),
-        F.lit('title: "'), escape_title(title), F.lit('"\n'),
-        F.lit('source: "'), url, F.lit('"\n'),
-        F.lit('date: "'), date, F.lit('"\n'),
-        desc_line,
-        F.lit("---\n\n"),
-        F.lit("# "), title, F.lit("\n\n"),
-        F.lit("Source: ["), url, F.lit("]("), url, F.lit(")\n"),
     )
 
 

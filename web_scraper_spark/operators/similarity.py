@@ -287,59 +287,6 @@ def hyperplane_lsh_bucket(vec_col, planes: list[list[float]]):
     return bucket
 
 
-def lsh_embedding_near_dups(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    threshold: float,
-    planes_tables: list[list[list[float]]],
-    round_to: int = 6,
-) -> DataFrame:
-    """Multi-table sign-LSH near-dup: candidate pairs are the union
-    over T independent hyperplane sets of per-(table, bucket)
-    self-joins; exact cosine verifies every candidate. One table of p
-    planes recalls a pair at angle θ with (1−θ/π)^p — OR-ing T tables
-    lifts recall to 1−(1−(1−θ/π)^p)^T, the standard LSH amplification.
-    Shuffles only on the small (table, bucket) keys; never all-pairs.
-    """
-    v = _as_double(F.col(vec_col))
-    base = df.select(
-        F.col(id_col).alias("id"), v.alias("v"), _norm(v).alias("nrm")
-    )
-    tagged = base.select(
-        "id", "v", "nrm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        hyperplane_lsh_bucket(F.col("v"), planes).alias("bucket"),
-                    )
-                    for t, planes in enumerate(planes_tables)
-                ]
-            )
-        ).alias("tb"),
-    ).select("id", "v", "nrm", "tb.tbl", "tb.bucket")
-    a = tagged.alias("a")
-    b = tagged.alias("b")
-    cand = (
-        a.join(b, on=["tbl", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            F.col("a.nrm").alias("na"), F.col("b.nrm").alias("nb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), round_to)
-    return (
-        cand.withColumn("cosine", cos)
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
 def kmeans_refine(
     df: DataFrame,
     vec_col: str,

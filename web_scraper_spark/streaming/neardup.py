@@ -94,8 +94,7 @@ def make_near_dup_batch_fn(
         # pre-bands/sigs layout (batch=* with a `sig` array column
         # directly under store_dir) must not be silently read as an
         # EMPTY store — that would drop the whole dedup history on
-        # resume. Fail fast with a migration hint, mirroring
-        # BloomShard.from_bytes's unversioned-payload error.
+        # resume. Fail fast with a migration hint.
         legacy = (
             os.path.isdir(store_dir)
             and any(e.startswith("batch=") for e in os.listdir(store_dir))
