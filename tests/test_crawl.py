@@ -615,3 +615,22 @@ def test_blocklist_in_round_loop(spark, tmp_path):
                     r["url"] for r in spark.read.parquet(p).collect()
                 }
         assert fetched == want, (blocklist, fetched)
+
+
+def test_round_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job of a crawl round, the pooled state writes included,
+    runs under the job group its caller set."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages = pages_df(spark, 32)
+    cfg = CrawlConfig(
+        ckpt_dir=str(tmp_path), quota_per_host=16, max_depth=2, n_shards=4
+    )
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("crawl-round-test", "one crawl round")
+    try:
+        run_crawl(spark, cfg, pages, None, [url_for(r) for r in range(4)], n_rounds=1)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert tracker.getJobIdsForGroup("crawl-round-test")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -1,15 +1,19 @@
 #!/usr/bin/env python
 """spark-submit entry point: run a resumable multi-round crawl.
 
-Usage (the north-rule deployment shape):
+Usage (the north-rule deployment shape), from the repository root:
 
-    cd /root/repo && zip -qr /tmp/wss.zip web_scraper_spark
+    zip -qr /tmp/wss.zip web_scraper_spark
     spark-submit --master local[8] --py-files /tmp/wss.zip \\
         tools/submit_crawl.py --pages 20000 --seeds 4096 --rounds 3 \\
         --ckpt /tmp/crawl_ckpt
 
 On a real cluster, swap --master for yarn/k8s and point --pages-path
 at the Iceberg/parquet pages table; everything else is unchanged.
+
+The session sets ``spark.sql.codegen.cache.maxEntries`` to
+``web_scraper_spark.session.CODEGEN_CACHE_ENTRIES``, as ``get_spark``
+does, so a round's generated classes stay cached for the next round.
 """
 
 from __future__ import annotations
@@ -39,7 +43,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("web_scraper_spark-crawl").getOrCreate()
+    from web_scraper_spark.session import CODEGEN_CACHE_ENTRIES
+
+    spark = (
+        SparkSession.builder.appName("web_scraper_spark-crawl")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
 
     from web_scraper_spark.crawl.rounds import CrawlConfig, run_crawl

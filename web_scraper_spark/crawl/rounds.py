@@ -589,9 +589,17 @@ def _run_round(
 
     from concurrent.futures import ThreadPoolExecutor, as_completed
 
+    from pyspark.util import inheritable_thread_target
+
     t = time.perf_counter()
     with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [pool.submit(task) for task in write_tasks]
+        # each task runs under the caller's local properties (job
+        # group, scheduler pool); one wrap per task, because the tasks
+        # of one wrap share its copy of them
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(task))
+            for task in write_tasks
+        ]
         try:
             for fut in as_completed(futures):
                 fut.result()
