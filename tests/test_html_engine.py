@@ -5,6 +5,8 @@ the implementation docstrings), including the quirk-ledger behaviors
 (SURVEY.md appendix) that must stay faithful.
 """
 
+import hashlib
+import json
 import random
 
 import pytest
@@ -19,7 +21,7 @@ from web_scraper_spark.html.clean import (
     span_parents,
 )
 from web_scraper_spark.html.dom import parse_html
-from web_scraper_spark.html.markdown import format_markdown_document, html_to_markdown
+from web_scraper_spark.html.markdown import _find_main_content, format_markdown_document, html_to_markdown
 from web_scraper_spark.sources.pages import gen_page_html, url_for
 
 
@@ -209,9 +211,9 @@ _PIECES = (
 )
 
 
-def _fragments(seed, n):
+def _fragments(seed, n, pieces=_PIECES):
     rng = random.Random(seed)
-    return ["".join(rng.choice(_PIECES) for _ in range(rng.randint(1, 30))) for _ in range(n)]
+    return ["".join(rng.choice(pieces) for _ in range(rng.randint(1, 30))) for _ in range(n)]
 
 
 @pytest.mark.parametrize(
@@ -236,6 +238,51 @@ def test_single_parse_markdown_matches_reparse_of_clean_html():
     for html, url in pages:
         rec = extract_page_record(html, url)
         assert rec["markdown"] == html_to_markdown(rec["clean_html"]), html
+
+
+# -- every product of every record, pinned --------------------------------------
+
+# The branches the extraction's single walks decide, on top of _PIECES:
+# each content-root level, repeated og metas with empty and non-empty
+# content, anchors the link filter drops, an empty src, and escaped svg
+# text (the SVG regex runs on text nodes).
+_RECORD_PIECES = _PIECES + (
+    "<article>", "<div id='content'>", "<div class='a content'>", "<div role='main'>",
+    "<meta property='og:title' content='T'>", "<meta property='og:title' content=''>",
+    "<meta property='og:description' content='D'>", "<meta property='og:description'>",
+    "<meta property='og:image' content='/og.png'>", "<meta property='og:image' content=''>",
+    "<a href='#f'>", "<a href='mailto:m@h.example'>", "<a href=''>", "<img src=''>",
+    "&lt;svg&gt;v&lt;/svg&gt; ",
+)
+
+# Recorded from the engine that ran one find/find_all scan per query.
+_RECORDS_SHA256 = "ef6b5567b79d12f1322d4d95d262369b3c333d8618ac2d6ea2150e0db51d527a"
+
+
+def test_extract_page_record_pinned():
+    pages = _corpus_pages() + [(h, "https://h.example/p") for h in _fragments(13, 2000, _RECORD_PIECES)]
+    digest = hashlib.sha256()
+    for html, url in pages:
+        digest.update(json.dumps(extract_page_record(html, url), sort_keys=True).encode())
+        digest.update(b"\n")
+    assert digest.hexdigest() == _RECORDS_SHA256
+
+
+def test_content_root_is_first_hit_of_highest_cascade_level():
+    # Cleaning strips id/class/role, so only an uncleaned tree reaches
+    # the three div levels; the oracle is one find per level.
+    docs = [parse_html(h) for h in _fragments(17, 2000, _RECORD_PIECES)]
+    for doc in docs:
+        want = (
+            doc.find("main")
+            or doc.find("article")
+            or doc.find("div", id="content")
+            or doc.find("div", class_="content")
+            or doc.find("div", role="main")
+            or doc.find("body")
+            or doc
+        )
+        assert _find_main_content(doc) is want
 
 
 # -- DOM queries ---------------------------------------------------------------

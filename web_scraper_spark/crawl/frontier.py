@@ -1,7 +1,7 @@
 """Frontier construction and candidate filtering.
 
-Frontier schema (FIXTURES.md §2):
-    url, host, depth, priority, discovered_ts, round_id, status, seq
+Frontier schema (``FRONTIER_SCHEMA``, FIXTURES.md §2):
+    url, host, depth, priority, seq, round_id, status
 
 The filter chain per round (all JVM-side):
   P1 validity → P5 ignore-patterns → robots disallow (broadcast join,

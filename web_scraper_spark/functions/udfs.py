@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..html.clean import anchors_from_doc, clean_dom, extract_og_metadata, images_from_doc
+from ..html.clean import clean_dom, page_facts
 from ..html.dom import parse_html
 from ..html.markdown import markdown_from_doc
 
@@ -62,13 +62,12 @@ def extract_page_record(html: str, url: str) -> dict:
     """Pure per-row extraction (driver-free, clock-free): D1 clean →
     serialize → D2 markdown, the reference's per-URL dataflow
     (contxt/cli.py:44-118; contract per SURVEY.md caveat 1). One parse
-    serves OG/images/links (read pre-clean, as in the reference), the
-    clean, and the markdown walk over the cleaned tree, whose text
-    nodes are first merged as a parse of ``clean_html`` would split them."""
+    serves OG/images/links (read pre-clean in one walk, as in the
+    reference), the clean, and the markdown walk over the cleaned tree,
+    whose text nodes are first merged as a parse of ``clean_html``
+    would split them."""
     doc = parse_html(html)
-    og = extract_og_metadata(doc)
-    images = images_from_doc(doc, url)
-    anchors = anchors_from_doc(doc, url)
+    og, images, anchors = page_facts(doc, url)
     links = [a["url"] for a in anchors]
     clean_dom(doc)
     cleaned = doc.to_html()

@@ -15,6 +15,18 @@ scratch on top of ``html.parser``:
                     contxt/formatters/markdown_formatter.py:85-283),
                     including its quirks (ledger Q5 in SURVEY.md).
 
+Walks per page. ``functions.udfs.extract_page_record`` parses a page
+once and then walks the tree once per phase:
+
+- facts: :func:`clean.page_facts` reads the first ``og:*`` meta per
+  property, the images and the anchors in one pre-clean walk;
+- clean: :func:`clean.clean_dom` drops ``DROP_TAGS`` subtrees and
+  comments and whitelists attributes in one top-down pass, then runs
+  the li dedup, span concatenation and text normalization walks in
+  that order;
+- markdown: :func:`markdown.markdown_from_doc` finds the content root
+  in one walk of the cleaned tree, then converts it in one more.
+
 Every function here is a deterministic ``str -> str/dict`` transform:
 no I/O, no clock, no randomness — safe to run inside vectorized UDFs
 and to golden-test byte-for-byte.

@@ -13,6 +13,18 @@ reference's extraction semantics:
   (the reference's missing ``_scrape`` contract exposes this as the
   ``content_text`` key; see SURVEY.md caveat 1).
 
+Walks. :func:`page_facts` reads the OpenGraph metas, images and
+anchors of an uncleaned tree in one walk; ``extract_og_metadata``,
+``images_from_doc``, ``anchors_from_doc`` and the functions built on
+them project its result. :func:`clean_dom` runs the element drop,
+comment drop and attribute whitelist as one top-down pass that does
+not enter a dropped subtree. Run as separate stages, the comment drop
+and the whitelist would see exactly the nodes the element drop left,
+and each stage changes one node without reading any other, so the one
+pass leaves the same tree. The li dedup, span concatenation and
+normalization stages read text across subtrees and keep their own
+walks, in that order.
+
 Quirk fidelity (SURVEY.md appendix): Q3 (CSS-ish strings in the drop
 list are inert literal tag names), Q4 (SVG regex on text nodes is a
 no-op), Q7 (span cascade accumulates into the *last* span of a run),
@@ -44,19 +56,69 @@ _SVG_RE = re.compile(r"<svg.*?</svg>\s*", re.DOTALL)
 _WS_RE = re.compile(r"\s+")
 
 
+_OG_KEYS = (
+    ("og_title", "og:title"),
+    ("og_description", "og:description"),
+    ("og_image", "og:image"),
+)
+
+
+def page_facts(doc: Element, base_url: str) -> tuple[dict, list[dict], list[dict]]:
+    """(OpenGraph metadata, image records, anchor records) of an
+    uncleaned document, from one document-order walk.
+
+    The walk keeps the first <meta> per ``property`` value (what
+    ``find("meta", property=...)`` returns), every <img> and every <a>
+    in document order, and builds the three products from those
+    (contxt/scraper.py:237-261, 324-343)."""
+    metas: dict[str, Element] = {}
+    imgs, links = [], []
+    for el in doc.iter_elements():
+        name = el.name
+        if name == "a":
+            links.append(el)
+        elif name == "img":
+            imgs.append(el)
+        elif name == "meta":
+            prop = el.attrs.get("property")
+            if prop is not None and prop not in metas:
+                metas[prop] = el
+
+    og = {}
+    for key, prop in _OG_KEYS:
+        tag = metas.get(prop)
+        if tag is not None and tag.get("content"):
+            og[key] = tag.attrs["content"]
+
+    images = []
+    for img in imgs:
+        src = img.get("src")
+        if src:
+            images.append(
+                {
+                    "url": urljoin(base_url, src),
+                    "alt": img.get("alt", ""),
+                    "width": img.get("width") or None,
+                    "height": img.get("height") or None,
+                }
+            )
+
+    anchors = []
+    for a in links:
+        href = a.get("href")
+        if not href:
+            continue
+        absu = urljoin(base_url, href)
+        absu = absu.split("#", 1)[0]
+        if absu.startswith(("http://", "https://")):
+            anchors.append({"url": absu, "text": a.get_text(strip=True)})
+    return og, images, anchors
+
+
 def extract_og_metadata(doc: Element) -> dict:
     """First og:title / og:description / og:image meta with non-empty
-    content (contxt/scraper.py:324-343)."""
-    metadata = {}
-    for key, prop in (
-        ("og_title", "og:title"),
-        ("og_description", "og:description"),
-        ("og_image", "og:image"),
-    ):
-        tag = doc.find("meta", property=prop)
-        if tag is not None and tag.get("content"):
-            metadata[key] = tag.attrs["content"]
-    return metadata
+    content (contxt/scraper.py:324-343); see :func:`page_facts`."""
+    return page_facts(doc, "")[0]
 
 
 def deduplicate_list_items(doc: Element) -> None:
@@ -115,24 +177,40 @@ def normalize_text_nodes(doc: Element) -> None:
     """Per-text-node cleanup (contxt/scraper.py:305-320): SVG-content
     regex (inert on text nodes — quirk Q4 — but applied for parity)
     then whitespace collapse + strip."""
-    for node in doc.text_nodes(include_comments=False):
-        if node.text:
-            node.text = _WS_RE.sub(" ", _SVG_RE.sub("", node.text)).strip()
+    for node in doc.text_nodes():
+        text = node.text
+        if text:
+            if "<svg" in text:
+                text = _SVG_RE.sub("", text)
+            node.text = _WS_RE.sub(" ", text).strip()
+
+
+_DROP = frozenset(DROP_TAGS)
 
 
 def clean_dom(doc: Element) -> Element:
-    """Destructive D1 cleaning stages, in semantic order (element drop →
+    """Destructive D1 cleaning, in semantic order (element drop →
     comment drop → attr whitelist → li dedup → span concat → text
-    normalize). Mutates ``doc`` in place and returns it."""
-    for el in doc.find_all(DROP_TAGS):
-        el.decompose()
-
-    for node in doc.text_nodes(include_comments=True):
-        if node.is_comment:
-            node.decompose()
-
-    for el in doc.find_all():
-        el.attrs = {k: v for k, v in el.attrs.items() if k in ALLOWED_ATTRS}
+    normalize). Mutates ``doc`` in place and returns it. The first
+    three stages are one pass (see the module docstring for why that
+    leaves the same tree)."""
+    stack = [doc]
+    while stack:
+        el = stack.pop()
+        kept = []
+        for node in el.children:
+            if isinstance(node, Element):
+                if node.name in _DROP:
+                    node.parent = None
+                    continue
+                if node.attrs:
+                    node.attrs = {k: v for k, v in node.attrs.items() if k in ALLOWED_ATTRS}
+                stack.append(node)
+            elif node.is_comment:
+                node.parent = None
+                continue
+            kept.append(node)
+        el.children = kept
 
     deduplicate_list_items(doc)
     concatenate_spans(doc)
@@ -173,19 +251,8 @@ def extract_images(html: str, base_url: str) -> list[dict]:
 
 
 def images_from_doc(doc: Element, base_url: str) -> list[dict]:
-    images = []
-    for img in doc.find_all("img"):
-        src = img.get("src")
-        if src:
-            images.append(
-                {
-                    "url": urljoin(base_url, src),
-                    "alt": img.get("alt", ""),
-                    "width": img.get("width") or None,
-                    "height": img.get("height") or None,
-                }
-            )
-    return images
+    """Image records of :func:`page_facts`."""
+    return page_facts(doc, base_url)[1]
 
 
 def extract_links(html: str, base_url: str) -> list[str]:
@@ -210,22 +277,5 @@ def anchors_from_doc(doc: Element, base_url: str) -> list[dict]:
     can never drift), plus each anchor's stripped inner text. Anchor
     text is the classic off-page relevance/quality signal a web-scale
     corpus aggregates per target (WAT metadata carries it for the
-    same reason)."""
-    out = []
-    for a in doc.find_all("a"):
-        href = a.get("href")
-        if not href:
-            continue
-        absu = urljoin(base_url, href)
-        absu = absu.split("#", 1)[0]
-        if absu.startswith(("http://", "https://")):
-            out.append({"url": absu, "text": a.get_text(strip=True)})
-    return out
-
-
-_TAG_RE = re.compile(r"<[^>]+>")
-
-
-def strip_tags(text: str) -> str:
-    """``re.sub(r'<[^>]+>', '', text)`` (contxt/scraper.py:421)."""
-    return _TAG_RE.sub("", text)
+    same reason). Built by :func:`page_facts`."""
+    return page_facts(doc, base_url)[2]

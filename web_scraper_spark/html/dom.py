@@ -13,7 +13,9 @@ contxt/formatters/markdown_formatter.py:85-283 for the consumed API):
 - ``decompose`` (detach subtree), attribute dict access
 - void elements never take children; stray end tags pop to the nearest
   matching open tag and are otherwise ignored
-- character references resolved at parse time (``convert_charrefs``)
+- character references resolved at parse time (``convert_charrefs``);
+  the parser keeps no line/offset position, since nothing reads it
+- a query with no attribute filter builds no per-element filter test
 
 No bs4 code is used or copied; this is a fresh implementation of the
 documented html.parser tree-building contract.
@@ -37,6 +39,9 @@ _ESC_ATTR = {"&": "&amp;", "<": "&lt;", ">": "&gt;", '"': "&quot;"}
 
 
 def _escape(s: str, table: dict) -> str:
+    # most text holds none of the characters either table escapes
+    if "&" not in s and "<" not in s and ">" not in s and '"' not in s:
+        return s
     for k, v in table.items():
         s = s.replace(k, v)
     return s
@@ -54,11 +59,6 @@ class TextNode:
 
     # Mirror of element API where the traversals need uniformity.
     name = None  # text nodes have no tag name
-
-    def decompose(self) -> None:
-        if self.parent is not None:
-            self.parent.children.remove(self)
-            self.parent = None
 
     def to_html(self) -> str:
         if self.is_comment:
@@ -82,9 +82,7 @@ class Element:
         self.parent: Element | None = None
 
     # -- tree construction -------------------------------------------------
-    def append(self, node: "Element | TextNode | str") -> None:
-        if isinstance(node, str):
-            node = TextNode(node)
+    def append(self, node: "Element | TextNode") -> None:
         node.parent = self
         self.children.append(node)
 
@@ -148,20 +146,21 @@ class Element:
                 continue
             if pred is not None and not pred(el):
                 continue
-            if all(
+            if not attr_filters or all(
                 want in el.classes() if k == "class_" else el.attrs.get(k) == want
                 for k, want in attr_filters.items()
             ):
                 yield el
 
-    def text_nodes(self, include_comments: bool = True) -> list[TextNode]:
+    def text_nodes(self) -> list[TextNode]:
+        """Descendant text nodes in document order, comments excluded."""
         out = []
         stack = self.children[::-1]
         while stack:
             node = stack.pop()
             if isinstance(node, Element):
                 stack.extend(reversed(node.children))
-            elif include_comments or not node.is_comment:
+            elif not node.is_comment:
                 out.append(node)
         return out
 
@@ -197,7 +196,7 @@ class Element:
         are dropped before joining — the joining convention the
         reference's ``get_text(strip=True)`` calls rely on.
         """
-        segs = [n.text for n in self.text_nodes(include_comments=False)]
+        segs = [n.text for n in self.text_nodes()]
         if strip:
             segs = [s.strip() for s in segs]
             segs = [s for s in segs if s]
@@ -254,6 +253,11 @@ class _TreeBuilder(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.root = Element("[document]")
         self.stack: list[Element] = [self.root]
+
+    def updatepos(self, i, j):
+        # The base class counts newlines here for ``getpos()``, which
+        # nothing calls; skip that bookkeeping.
+        return j
 
     def handle_starttag(self, tag, attrs):
         el = Element(tag, {k: (v if v is not None else "") for k, v in attrs})

@@ -41,16 +41,34 @@ _HEADING_GAP_RE = re.compile(r"([^\n])\n(#{1,6} )")
 def _find_main_content(doc: Element) -> Element:
     """Content-root cascade: main, article, div#content, div.content,
     div[role=main], body, else the whole document
-    (contxt/formatters/markdown_formatter.py:103-114)."""
-    return (
-        doc.find("main")
-        or doc.find("article")
-        or doc.find("div", id="content")
-        or doc.find("div", class_="content")
-        or doc.find("div", role="main")
-        or doc.find("body")
-        or doc
-    )
+    (contxt/formatters/markdown_formatter.py:103-114).
+
+    One document-order walk: it returns the first ``main`` at once,
+    and otherwise the first element at the highest-ranked level seen
+    (an element takes the best level it satisfies)."""
+    best, best_rank = doc, 5
+    for el in doc.iter_elements():
+        name = el.name
+        if name == "main":
+            return el
+        if name == "article":
+            rank = 0
+        elif name == "div":
+            if el.attrs.get("id") == "content":
+                rank = 1
+            elif "content" in el.classes():
+                rank = 2
+            elif el.attrs.get("role") == "main":
+                rank = 3
+            else:
+                continue
+        elif name == "body":
+            rank = 4
+        else:
+            continue
+        if rank < best_rank:
+            best, best_rank = el, rank
+    return best
 
 
 def html_to_markdown(html: str) -> str:
