@@ -92,6 +92,26 @@ def test_html_attr_whitelist_wider_than_clean():
     assert "onclick" not in h
 
 
+def test_html_drop_set_nested_and_sibling():
+    # every DROP_TAGS_HTML tag goes with its subtree, nested inside
+    # another dropped tag or not; comments stay in the tree (a
+    # comment-only element still renders) but never print
+    h = format_html_body(
+        '<main><div id="a" onclick="x"><script>var a=1;</script>'
+        '<p class="k" style="c">one<style>p{}</style><b>two</b></p>'
+        '<noscript><iframe src="/f"></iframe><p>ns</p></noscript>'
+        '<!-- keep me --><object data="o"><embed src="e.swf"><p>fallback</p>'
+        '</object></div><embed src="s.swf">'
+        "<section><!-- only a comment --><script>x()</script></section>"
+        '<p title="t">three<iframe></iframe></p><style>x{}</style></main>'
+    )
+    assert h == (
+        '<main>\n  <div id="a">\n    <p class="k">\n      one\n'
+        "      <b>two</b>\n    </p>\n  </div>\n  <section>\n  </section>\n"
+        '  <p title="t">\n    three\n  </p>\n</main>'
+    )
+
+
 def test_html_block_indentation():
     h = format_html_body("<main><div><p>a</p></div><p>b</p></main>")
     lines = h.split("\n")

@@ -209,6 +209,53 @@ def test_incremental_dedup_hot_bucket_guard(spark):
     ]
 
 
+@pytest.mark.parametrize("given", ["old_sigs", "min_agree", "curate_prev_sigs"])
+def test_incremental_dedup_rejects_half_set_verification(spark, given):
+    """Verification needs BOTH the old signature table and the
+    agreement floor: either one alone used to skip verification
+    silently, and so did CurationConfig(prev_sigs=...) without
+    index_min_agree. All three now raise before any job runs."""
+    from web_scraper_spark.operators.dedup import (
+        dedup_against_index,
+        minhash_band_index,
+        minhash_signatures,
+    )
+    from web_scraper_spark.pipelines import CurationConfig, curate
+
+    docs = spark.createDataFrame(
+        [(1, "en", "alpha beta gamma delta")], "doc_id long, lang string, text string"
+    )
+    sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=16)
+    index = minhash_band_index(sigs, num_hashes=16, bands=8)
+    with pytest.raises(ValueError, match="old_sigs and min_agree"):
+        if given == "curate_prev_sigs":
+            cfg = CurationConfig(
+                min_quality=0.0, fuzzy=False, prev_index=index, prev_sigs=sigs
+            )
+            curate(docs, "text", "doc_id", "lang", cfg)
+        else:
+            kw = {"old_sigs": sigs} if given == "old_sigs" else {"min_agree": 8}
+            dedup_against_index(
+                docs, index, "text", "doc_id", num_hashes=16, bands=8, **kw
+            )
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 5), (16, 32), (16, 0)])
+def test_minhash_band_index_rejects_uneven_band_split(spark, num_hashes, bands):
+    """A remainder would drop trailing signature components; more
+    bands than components gives empty runs every document shares
+    (all-pairs candidates). Both raise instead."""
+    from web_scraper_spark.operators.dedup import (
+        minhash_band_index,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    sigs = minhash_signatures(docs, "text", "doc_id", num_hashes=num_hashes)
+    with pytest.raises(ValueError, match="divide"):
+        minhash_band_index(sigs, num_hashes, bands)
+
+
 def test_jaccard_doc_freq_cap_drops_hot_token(spark):
     """max_doc_freq guards the inverted-index quadratic: a stopword
     shared by EVERY document must not join the corpus against itself.

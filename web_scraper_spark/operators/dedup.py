@@ -12,7 +12,10 @@ Scale design:
   as explode(shingles) → codegen md5 mins → one skinny groupBy(id);
   LSH band keys are a projection of it. Candidate pairing shuffles
   only on (band, bucket), and each band bucket is tiny by
-  construction.
+  construction. Batch LSH, incremental index dedup and streaming
+  near-dup (streaming/neardup.py) each run their own (band, bucket)
+  equi-join and share one hot-bucket guard (``_hot_keys``) and one
+  signature-agreement count (``_agree``).
 - Jaccard verification runs only on LSH candidates, never all pairs.
 - The hash family is ``md5(shingle ∥ '#' ∥ salt ∥ k)`` with *lexicographic*
   min over hex digests — deterministic, engine-portable (identical in
@@ -108,7 +111,10 @@ def minhash_band_index(sigs: DataFrame, num_hashes: int, bands: int) -> DataFram
     signature table (:func:`minhash_signatures`): the signature splits
     into ``bands`` runs of ``num_hashes/bands`` components and each
     run hashes to ``md5(concat_ws('|', run))``. Pure projection — no
-    shuffle beyond the one that built ``sigs``.
+    shuffle beyond the one that built ``sigs``. ``bands`` must be
+    >= 1 and divide ``num_hashes``, else ValueError: a remainder would
+    silently drop trailing components, and more bands than components
+    leaves empty runs every document shares (an all-pairs join).
 
     This is the persistable index artifact that makes fuzzy dedup
     INCREMENTAL. Write it once for the existing corpus — ideally
@@ -123,6 +129,11 @@ def minhash_band_index(sigs: DataFrame, num_hashes: int, bands: int) -> DataFram
     text it summarizes. Indexes COMPOSE by unionByName (per-doc rows
     are independent), so appending a curated snapshot's own index
     keeps the artifact current for the next snapshot — no rebuild."""
+    if bands < 1 or num_hashes % bands:
+        raise ValueError(
+            f"minhash_band_index: bands={bands} must be >= 1 and divide "
+            f"num_hashes={num_hashes}"
+        )
     rows_per_band = num_hashes // bands
     return sigs.select(
         "id",
@@ -144,6 +155,48 @@ def minhash_band_index(sigs: DataFrame, num_hashes: int, bands: int) -> DataFram
     ).select("id", "bb.band", "bb.bucket")
 
 
+def _hot_keys(df: DataFrame, keys: list[str], cap: int, label: str) -> DataFrame:
+    """The hot-key guard of every quadratic equi-join in this module:
+    the ``keys`` groups of ``df`` holding more than ``cap`` rows, as a
+    broadcast key table for the caller's ``left_anti`` exclusion (hot
+    groups are few by construction, so the big side never shuffles
+    for it). The drop is not silent: the dropped group and row counts
+    are computed eagerly at call time (one small aggregate job) and
+    logged at WARNING under ``label``."""
+    hot = df.groupBy(*keys).agg(F.count("*").alias("n")).filter(F.col("n") > cap)
+    stats = hot.agg(
+        F.count("*").alias("n_keys"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
+    ).collect()[0]
+    if stats["n_keys"]:
+        _LOG.warning(
+            "%s: %d hot (%s) groups (%d rows) over the cap of %d are "
+            "excluded from the join; results are computed without them",
+            label, stats["n_keys"], ", ".join(keys), stats["n_rows"], cap,
+        )
+    return F.broadcast(hot.select(*keys))
+
+
+def _agree(pairs: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame) -> DataFrame:
+    """The MinHash verification step: (id_a, id_b, agree) for the
+    (id_a, id_b) candidate ``pairs``, where ``agree`` counts the equal
+    components of id_a's signature in ``sigs_a`` and id_b's in
+    ``sigs_b`` (both (id, sig) tables); a null component never agrees.
+    The signatures join AFTER the callers' candidate ``distinct``, so
+    only candidate ids carry them. The count is the HOF fold: unrolled
+    64-term chains measured slower."""
+    fold = F.aggregate(
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        pairs.join(sigs_a.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
+        .join(sigs_b.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
+        .select("id_a", "id_b", fold.alias("agree"))
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -162,42 +215,22 @@ def minhash_lsh_candidates(
     but degenerate corpora (e.g. millions of empty/boilerplate pages
     sharing one signature) create hot buckets whose self-join is
     quadratic. ``max_bucket_size`` is the guard: (band, bucket) groups
-    larger than the cap are excluded from the join. The drop is NOT
-    silent — the dropped bucket/row counts are computed eagerly at
-    call time (one small aggregate job on the banded keys) and logged
-    at WARNING; callers that need the numbers can recompute the same
-    aggregate. Hot buckets are by construction few, so the exclusion
-    join is a broadcast anti-join (no extra shuffle on the big side).
-    """
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    banded = minhash_band_index(sigs, num_hashes, bands)
+    larger than the cap are excluded from the join, with the dropped
+    bucket/row counts logged at WARNING (:func:`_hot_keys`)."""
+    keys = ["band", "bucket"]
+    banded = cached = minhash_band_index(
+        minhash_signatures(df, text_col, id_col, num_hashes, shingle_n), num_hashes, bands
+    )
     if max_bucket_size is not None:
         # persist: the bucket-size scan and the self-join both consume
         # the banded keys; without this the signature build runs
         # twice over the source.
-        banded = banded.persist()
-        hot = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-        )
-        stats = hot.agg(
-            F.count("*").alias("n_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
-        ).collect()[0]
-        if stats["n_buckets"]:
-            _LOG.warning(
-                "minhash_lsh_candidates: dropping %d hot buckets (%d banded rows) "
-                "over max_bucket_size=%d — pairs within them are NOT emitted",
-                stats["n_buckets"], stats["n_rows"], max_bucket_size,
-            )
-        banded = banded.join(
-            F.broadcast(hot.select("band", "bucket")), ["band", "bucket"], "left_anti"
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
+        cached = banded.persist()
+        hot = _hot_keys(cached, keys, max_bucket_size, "minhash_lsh_candidates")
+        banded = cached.join(hot, keys, "left_anti")
     pairs = (
-        a.join(b, on=["band", "bucket"])
+        banded.alias("a")
+        .join(banded.alias("b"), keys)
         .filter(F.col("a.id") < F.col("b.id"))
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
@@ -206,10 +239,10 @@ def minhash_lsh_candidates(
         # materialize the candidate set (lineage-truncating local
         # checkpoint) so the persisted banded keys can be released HERE
         # rather than leaking cached partitions across repeated calls
-        # in one session (round-2 advice). On a real cluster swap for
-        # reliable checkpoint() if fault tolerance matters.
+        # in one session. On a real cluster swap for reliable
+        # checkpoint() if fault tolerance matters.
         pairs = materialize(pairs)
-        banded.unpersist()
+        cached.unpersist()
     return pairs
 
 
@@ -240,10 +273,9 @@ def dedup_against_index(
     (id, sig) — the signature table persisted alongside the index —
     and ``min_agree``; a candidate survives only if at least
     ``min_agree`` of the ``num_hashes`` signature components agree
-    (the unbiased MinHash Jaccard estimate ≥ min_agree/num_hashes).
-    The sig join runs AFTER candidate distinct, so it touches only
-    matched old ids (skinny), never the whole signature table's
-    payload per banded row.
+    (:func:`_agree`; the unbiased MinHash Jaccard estimate ≥
+    min_agree/num_hashes). The two go together: passing only one
+    raises ValueError.
 
     Scale shape: the new snapshot's signature table is built once
     (:func:`minhash_signatures`, one skinny groupBy(id) exchange) and
@@ -251,60 +283,31 @@ def dedup_against_index(
     wide exchange is the band-key equi-join of ``bands`` skinny rows
     per new doc against the index. ``max_bucket_size`` guards
     degenerate boilerplate buckets in the index exactly like
-    minhash_lsh_candidates (eager count + WARNING, broadcast
-    anti-join exclusion of both sides). Nothing is cached."""
+    minhash_lsh_candidates (:func:`_hot_keys`; the hot index buckets
+    are excluded from both sides). Nothing is cached."""
+    if (old_sigs is None) != (min_agree is None):
+        raise ValueError(
+            "dedup_against_index: old_sigs and min_agree enable verification "
+            "together — pass both, or neither for unverified band matches"
+        )
+    keys = ["band", "bucket"]
     new_sigs = minhash_signatures(new_df, text_col, id_col, num_hashes, shingle_n)
     new_banded = minhash_band_index(new_sigs, num_hashes, bands)
     old_banded = index.select("id", "band", "bucket")
     if max_bucket_size is not None:
-        hot = (
-            old_banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-        )
-        stats = hot.agg(
-            F.count("*").alias("n_buckets"),
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
-        ).collect()[0]
-        if stats["n_buckets"]:
-            _LOG.warning(
-                "dedup_against_index: dropping %d hot index buckets (%d rows) "
-                "over max_bucket_size=%d — matches within them are NOT emitted",
-                stats["n_buckets"], stats["n_rows"], max_bucket_size,
-            )
-        hot_keys = F.broadcast(hot.select("band", "bucket"))
-        old_banded = old_banded.join(hot_keys, ["band", "bucket"], "left_anti")
-        new_banded = new_banded.join(hot_keys, ["band", "bucket"], "left_anti")
-    cands = (
-        new_banded.join(
-            old_banded.select("band", "bucket", F.col("id").alias("old_id")),
-            ["band", "bucket"],
-        )
-        .select("id", "old_id")
+        hot = _hot_keys(old_banded, keys, max_bucket_size, "dedup_against_index")
+        old_banded = old_banded.join(hot, keys, "left_anti")
+        new_banded = new_banded.join(hot, keys, "left_anti")
+    pairs = (
+        new_banded.join(old_banded.select(*keys, F.col("id").alias("id_b")), keys)
+        .select(F.col("id").alias("id_a"), "id_b")
         .distinct()
     )
-    if old_sigs is not None and min_agree is not None:
-        cands = (
-            cands.join(new_sigs.select("id", F.col("sig").alias("sig_n")), "id")
-            .join(
-                old_sigs.select(
-                    F.col("id").alias("old_id"), F.col("sig").alias("sig_o")
-                ),
-                "old_id",
-            )
-            .filter(
-                F.aggregate(
-                    F.zip_with(
-                        "sig_n", "sig_o", lambda a, b: (a == b).cast("int")
-                    ),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                )
-                >= min_agree
-            )
-            .select("id", "old_id")
-        )
-    matched = cands.groupBy("id").agg(F.min("old_id").alias("first_match"))
+    if min_agree is not None:
+        pairs = _agree(pairs, new_sigs, old_sigs).filter(F.col("agree") >= min_agree)
+    matched = pairs.groupBy(F.col("id_a").alias("id")).agg(
+        F.min("id_b").alias("first_match")
+    )
     return (
         new_df.select(F.col(id_col).alias("id"))
         .join(matched, "id", "left")
@@ -394,23 +397,8 @@ def jaccard_pairs(
         # df-capped inverted index. persist: the hot-token scan, the
         # size recount, and the pair join all consume the postings.
         inv = sh.select("id", F.explode("sh").alias("tok")).persist()
-        hot = (
-            inv.groupBy("tok")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-        )
-        stats = hot.agg(
-            F.count("*").alias("n_toks"),
-            F.coalesce(F.sum("df"), F.lit(0)).alias("n_postings"),
-        ).collect()[0]
-        if stats["n_toks"]:
-            _LOG.warning(
-                "jaccard_pairs: dropping %d hot tokens (%d postings) with "
-                "document frequency > %d — similarity is over the df-capped "
-                "vocabulary",
-                stats["n_toks"], stats["n_postings"], max_doc_freq,
-            )
-        kept = inv.join(F.broadcast(hot.select("tok")), "tok", "left_anti")
+        hot = _hot_keys(inv, ["tok"], max_doc_freq, "jaccard_pairs")
+        kept = inv.join(hot, "tok", "left_anti")
         sizes = kept.groupBy("id").agg(F.count("*").alias("n_sh"))
         a = kept.alias("a")
         b = kept.alias("b")

@@ -65,8 +65,8 @@ class CurationConfig:
     # with the SAME lsh_num_hashes/lsh_bands) — new-snapshot docs that
     # fuzzily match it are dropped without reading the old text.
     prev_index: DataFrame | None = None
-    prev_sigs: DataFrame | None = None      # enables sig verification
-    index_min_agree: int | None = None      # with prev_sigs: ≥k/num_hashes
+    prev_sigs: DataFrame | None = None      # sig verification: set both
+    index_min_agree: int | None = None      # or neither; ≥k/num_hashes
     bench_df: DataFrame | None = None       # decontamination corpus
     bench_text_col: str = "text"
     contamination_n: int = 13

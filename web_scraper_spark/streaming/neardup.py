@@ -21,8 +21,9 @@ Each batch builds both with the batch LSH operators
 groupBy(id) per hash family, so ids must be unique within a batch),
 joins its banded keys against the store ∪ itself on (band, bucket) —
 the same bounded-by-collision-probability join as the batch LSH
-operator — and VERIFIES candidates with the
-``verify_hashes``-component estimator: est = agreeing components /
+operator — and VERIFIES candidates with the agreement count that
+incremental index dedup also uses (operators.dedup._agree) over the
+``verify_hashes``-component signatures: est = agreeing components /
 verify_hashes. This is the standard unbiased MinHash Jaccard
 estimator with KNOWN error (E[est] = J, Var = J(1−J)/K ⇒ std ≤
 0.5/√K, ≈ 0.0625 at K = 64) — unlike agreement over the 16-component
@@ -52,7 +53,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_band_index, minhash_signatures
+from ..operators.dedup import _agree, minhash_band_index, minhash_signatures
 
 _STORE_GLOB = "batch=*"
 _BANDS_SUB = "bands"
@@ -146,7 +147,9 @@ def make_near_dup_batch_fn(
         # a replayed epoch's docs exist in BOTH the store and `new`;
         # vsig is deterministic per id, so keep one row per doc or the
         # verification joins would fan out duplicate pairs
-        corpus_sigs = corpus_sigs.dropDuplicates(["id"])
+        vsigs = corpus_sigs.dropDuplicates(["id"]).select(
+            "id", F.col("vsig").alias("sig")
+        )
 
         # normalize with least/greatest, NOT a.id < b.id: the new doc's
         # id can sort either side of a stored doc's, and the probe side
@@ -162,26 +165,9 @@ def make_near_dup_batch_fn(
             )
             .distinct()
         )
-        est = (
-            F.aggregate(
-                F.zip_with(
-                    F.col("va"), F.col("vb"),
-                    lambda x, y: F.when(x == y, 1).otherwise(0),
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            )
-            / F.lit(verify_hashes)
-        )
+        est = F.col("agree") / F.lit(verify_hashes)
         pairs = (
-            cands.join(
-                corpus_sigs.select(F.col("id").alias("id_a"), F.col("vsig").alias("va")),
-                "id_a",
-            )
-            .join(
-                corpus_sigs.select(F.col("id").alias("id_b"), F.col("vsig").alias("vb")),
-                "id_b",
-            )
+            _agree(cands, vsigs, vsigs)
             .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold)
         )
