@@ -3,6 +3,7 @@ training-data run composes (quality → lang → exact dedup → fuzzy
 dedup → decontamination → rebalance → split), asserted stage by
 stage on a corpus with injected duplicates and contamination."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_spark.pipelines import CurationConfig, curate
@@ -170,3 +171,16 @@ def test_curate_line_dedup_stage(spark):
     assert set(got) == {1, 2, 4}
     assert got[2] == "same hidden body"
     assert not any("COOKIE" in t for t in got.values())
+
+
+@pytest.mark.parametrize("given", ["prev_sigs", "index_min_agree"])
+def test_curate_rejects_verification_without_index(spark, given):
+    """prev_sigs and index_min_agree only verify matches against
+    prev_index; without it they used to be ignored silently."""
+    docs = spark.createDataFrame(
+        [(1, "en", "alpha beta gamma delta")], "doc_id long, lang string, text string"
+    )
+    kw = {"prev_sigs": docs} if given == "prev_sigs" else {"index_min_agree": 8}
+    cfg = CurationConfig(min_quality=0.0, fuzzy=False, **kw)
+    with pytest.raises(ValueError, match="set prev_index too"):
+        curate(docs, "text", "doc_id", "lang", cfg)

@@ -389,7 +389,9 @@ def test_index_dedup_and_stream_near_dup_share_candidates(spark, tmp_path):
     same documents: with verification off (no signatures on the index
     side, threshold 0.0 on the stream) the new docs flagged is_dup
     against the old corpus's index are exactly the new docs in a
-    cross-batch stream pair (batch 0 = old, batch 1 = new)."""
+    cross-batch stream pair (batch 0 = old, batch 1 = new). Holds for
+    integral and URL ids; a novel doc's first_match is -1 for the
+    first and null for the second."""
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
@@ -400,52 +402,54 @@ def test_index_dedup_and_stream_near_dup_share_candidates(spark, tmp_path):
         read_near_dup_pairs,
     )
 
-    old = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "red orange yellow green blue indigo violet"),
-            (3, "one two three four five six seven"),
-        ],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            (11, "alpha beta gamma delta epsilon zeta"),      # copy of 1
-            (12, "red orange yellow green blue indigo"),      # near 2
-            (13, "cat dog mouse horse cow sheep"),            # novel
-            (14, "cat dog mouse horse cow sheep"),            # dup of 13 only
-            (15, "one two three four five six seven eight"),  # near 3
-        ],
-        "doc_id long, text string",
-    )
-    index = minhash_band_index(
-        minhash_signatures(old, "text", "doc_id", num_hashes=16), 16, bands=8
-    )
-    flagged = {
-        r["id"]
-        for r in dedup_against_index(
+    old_docs = [
+        (1, "alpha beta gamma delta epsilon zeta"),
+        (2, "red orange yellow green blue indigo violet"),
+        (3, "one two three four five six seven"),
+    ]
+    new_docs = [
+        (11, "alpha beta gamma delta epsilon zeta"),      # copy of 1
+        (12, "red orange yellow green blue indigo"),      # near 2
+        (13, "cat dog mouse horse cow sheep"),            # novel
+        (14, "cat dog mouse horse cow sheep"),            # dup of 13 only
+        (15, "one two three four five six seven eight"),  # near 3
+    ]
+    for id_type, key, novel in (
+        ("long", lambda i: i, -1),
+        ("string", lambda i: f"https://h{i % 2}.example/doc/{i}", None),
+    ):
+        def frame(docs):
+            return spark.createDataFrame(
+                [(key(i), t) for i, t in docs], f"doc_id {id_type}, text string"
+            )
+
+        old, new = frame(old_docs), frame(new_docs)
+        index = minhash_band_index(
+            minhash_signatures(old, "text", "doc_id", num_hashes=16), 16, bands=8
+        )
+        ann = dedup_against_index(
             new, index, "text", "doc_id", num_hashes=16, bands=8
         ).collect()
-        if r["is_dup"]
-    }
+        flagged = {r["id"] for r in ann if r["is_dup"]}
+        assert {r["first_match"] for r in ann if not r["is_dup"]} == {novel}
 
-    pairs_dir = str(tmp_path / "pairs")
-    fn = make_near_dup_batch_fn(
-        str(tmp_path / "store"), pairs_dir, id_col="doc_id",
-        num_hashes=16, bands=8, threshold=0.0,
-    )
-    fn(old, 0)
-    fn(new, 1)
-    old_ids = {1, 2, 3}
-    crossed = {
-        i
-        for r in read_near_dup_pairs(spark, pairs_dir).collect()
-        if {r["id_a"], r["id_b"]} & old_ids
-        for i in (r["id_a"], r["id_b"])
-        if i not in old_ids
-    }
-    assert 11 in flagged and 13 not in flagged  # not vacuous
-    assert flagged == crossed
+        pairs_dir = str(tmp_path / id_type / "pairs")
+        fn = make_near_dup_batch_fn(
+            str(tmp_path / id_type / "store"), pairs_dir, id_col="doc_id",
+            num_hashes=16, bands=8, threshold=0.0,
+        )
+        fn(old, 0)
+        fn(new, 1)
+        old_ids = {key(i) for i, _ in old_docs}
+        crossed = {
+            i
+            for r in read_near_dup_pairs(spark, pairs_dir).collect()
+            if {r["id_a"], r["id_b"]} & old_ids
+            for i in (r["id_a"], r["id_b"])
+            if i not in old_ids
+        }
+        assert key(11) in flagged and key(13) not in flagged  # not vacuous
+        assert flagged == crossed
 
 
 def test_warc_segments_stream_exactly_once_per_segment(spark, tmp_path):

@@ -7,8 +7,9 @@ transformations, vectorized Arrow UDFs, and grouped-map operators.
 
 Subpackages
 -----------
-html       pure-Python HTML engine (stdlib ``html.parser`` based DOM,
-           cleaning, markdown/xml/html rendering, image extraction) —
+html       pure-Python HTML engine (a DOM with ``html.parser``'s tree,
+           built by a regex token scanner; cleaning, markdown/xml/html
+           rendering, image extraction) —
            the deterministic per-row extraction core used inside
            pandas UDFs.  Semantics mirror the reference's extraction
            behavior (cited per function) but share no code with it.

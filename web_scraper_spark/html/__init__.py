@@ -1,7 +1,7 @@
 """Pure-Python HTML engine (stdlib-only, no bs4).
 
 This package re-implements the reference's extraction semantics from
-scratch on top of ``html.parser``:
+scratch on the tree of ``html.parser``:
 
 - :mod:`dom`      — a minimal document tree with the bs4-compatible
                     subset of behaviors the reference relies on
@@ -16,7 +16,10 @@ scratch on top of ``html.parser``:
                     including its quirks (ledger Q5 in SURVEY.md).
 
 Walks per page. ``functions.udfs.extract_page_record`` parses a page
-once and then walks the tree once per phase:
+once and then walks the tree once per phase. The parse,
+:func:`dom.parse_html`, steps one compiled token regex along the page
+and builds the tree as it goes; a page that regex does not tile is
+parsed whole by ``html.parser`` instead, to the same tree. The phases:
 
 - facts: :func:`clean.page_facts` reads the first ``og:*`` meta per
   property, the images and the anchors in one pre-clean walk;

@@ -1,4 +1,4 @@
-"""Minimal HTML DOM on stdlib ``html.parser``.
+"""Minimal HTML DOM with the tree of stdlib ``html.parser``.
 
 Implements exactly the subset of tree behaviors the extraction
 semantics depend on (modeled on how the reference uses BeautifulSoup's
@@ -13,9 +13,35 @@ contxt/formatters/markdown_formatter.py:85-283 for the consumed API):
 - ``decompose`` (detach subtree), attribute dict access
 - void elements never take children; stray end tags pop to the nearest
   matching open tag and are otherwise ignored
-- character references resolved at parse time (``convert_charrefs``);
-  the parser keeps no line/offset position, since nothing reads it
+- character references resolved at parse time (``convert_charrefs``)
 - a query with no attribute filter builds no per-element filter test
+
+Parsing. ``parse_html`` steps one compiled regex, ``_TOKEN``, along the
+page with ``match(html, pos)`` and builds the nodes directly. Its
+grammar is a subset of what ``HTMLParser`` reads, on which both build
+the same tree:
+
+- a text run up to the next ``<``, unescaped as one run;
+- a start tag: a name of ``[-.a-zA-Z0-9:_]`` after a letter, then
+  attributes, each after ASCII whitespace, whose values are quoted or
+  bare (no quote, ``=``, ``<``, backtick or whitespace, ending at ASCII
+  whitespace or ``>``), then ``>`` or ``/>``;
+- an end tag ``</name>``, optional ASCII whitespace before the ``>``;
+- a comment ``<!--…-->``, closed at the first ``--`` that optional
+  whitespace and a ``>`` follow;
+- ``<!DOCTYPE…>``, which builds no node;
+- after a ``script`` or ``style`` start tag, raw text up to the first
+  ``</script>`` (or ``</style>``) in any case, whitespace allowed
+  inside the tag.
+
+A page the grammar does not tile end to end (a bare ``<``, ``<?pi>``,
+``<![CDATA[``, an unclosed comment or raw text, a tag name or value
+that runs on past where the grammar stops, ``==``, …) is parsed whole
+by ``_TreeBuilder`` on ``HTMLParser``, which stays the path for tag
+soup and the oracle the scanner is tested against. Parity is with the
+running interpreter's ``HTMLParser``, whose error recovery changes
+across CPython releases. No position is tracked, since nothing reads
+it.
 
 No bs4 code is used or copied; this is a fresh implementation of the
 documented html.parser tree-building contract.
@@ -23,6 +49,8 @@ documented html.parser tree-building contract.
 
 from __future__ import annotations
 
+import re
+from html import unescape
 from html.parser import HTMLParser
 from typing import Callable, Iterator
 
@@ -247,7 +275,9 @@ def _render_node(node, parts: list[str]) -> None:
 
 
 class _TreeBuilder(HTMLParser):
-    """Builds an Element tree; lenient close-tag handling."""
+    """Builds an Element tree on stdlib ``HTMLParser``; lenient close-tag
+    handling. The exact path for pages the scanner does not tile, and
+    the oracle the scanner is tested against."""
 
     def __init__(self):
         super().__init__(convert_charrefs=True)
@@ -284,9 +314,99 @@ class _TreeBuilder(HTMLParser):
         self.stack[-1].append(TextNode(data, is_comment=True))
 
 
-def parse_html(html: str) -> Element:
-    """Parse an HTML string into a document Element (name='[document]')."""
+def _parse_with_htmlparser(html: str) -> Element:
     b = _TreeBuilder()
-    b.feed(html or "")
+    b.feed(html)
     b.close()
     return b.root
+
+
+# One attribute: a name, then optionally ``=`` and a double-quoted,
+# single-quoted or bare value. A bare value takes no quote, ``=``, ``<``,
+# backtick or whitespace, and must end at ASCII whitespace, ``>`` or the
+# end of the tag text, where ``HTMLParser`` ends it too.
+_ATTR_SRC = (
+    r"""([a-zA-Z_:][-.a-zA-Z0-9:_]*)"""
+    r"""(?:[ \t\n\r\f]*=[ \t\n\r\f]*(?:"([^"]*)"|'([^']*)'|([^\s"'=<>`]+)(?![^ \t\n\r\f>])))?"""
+)
+_ATTR = re.compile(_ATTR_SRC)
+
+# One token; ``lastgroup`` names its kind (a start tag ends on ``slash``;
+# a DOCTYPE has no group and builds no node).
+_TOKEN = re.compile(
+    r"(?P<text>[^<]+)"
+    r"|<(?P<tag>[a-zA-Z][-.a-zA-Z0-9:_]*)(?P<attrs>(?:[ \t\n\r\f]+" + _ATTR_SRC + r")*)"
+    r"[ \t\n\r\f]*(?P<slash>/?)>"
+    r"|</(?P<end>[a-zA-Z][-.a-zA-Z0-9:_]*)[ \t\n\r\f]*>"
+    r"|<!--(?P<comment>.*?)--\s*>"
+    r"|<![dD][oO][cC][tT][yY][pP][eE][^>]*>",
+    re.DOTALL,
+)
+
+# The raw-text ends ``HTMLParser`` looks for (its ``set_cdata_mode``).
+_RAW_END = {name: re.compile(r"</\s*%s\s*>" % name, re.I) for name in ("script", "style")}
+
+
+def _attrs(text: str) -> dict:
+    out = {}
+    for name, dq, sq, bare in _ATTR.findall(text):
+        v = dq or sq or bare
+        out[name.lower()] = unescape(v) if "&" in v else v
+    return out
+
+
+def _scan(html: str) -> Element | None:
+    """The tree ``_TreeBuilder`` builds, from one ``_TOKEN.match`` per
+    token; None when the grammar does not tile ``html`` end to end."""
+    root = Element("[document]")
+    stack = [root]
+    top = root
+    match = _TOKEN.match
+    pos, n = 0, len(html)
+    while pos < n:
+        m = match(html, pos)
+        if m is None:
+            return None
+        pos = m.end()
+        kind = m.lastgroup
+        if kind == "text":
+            text = m.group()
+            if "&" in text:
+                text = unescape(text)
+                if not text:
+                    continue
+            top.append(TextNode(text))
+        elif kind == "slash":
+            name = m["tag"].lower()
+            attrs = m["attrs"]
+            el = Element(name, _attrs(attrs) if attrs else None)
+            top.append(el)
+            if m["slash"] or name in VOID_ELEMENTS:
+                continue
+            raw_end = _RAW_END.get(name)
+            if raw_end is None:
+                stack.append(el)
+                top = el
+                continue
+            e = raw_end.search(html, pos)
+            if e is None:
+                return None
+            if e.start() > pos:
+                el.append(TextNode(html[pos:e.start()]))
+            pos = e.end()
+        elif kind == "end":
+            name = m["end"].lower()
+            for i in range(len(stack) - 1, 0, -1):
+                if stack[i].name == name:
+                    del stack[i:]
+                    top = stack[-1]
+                    break
+        elif kind == "comment":
+            top.append(TextNode(m["comment"], is_comment=True))
+    return root
+
+
+def parse_html(html: str) -> Element:
+    """Parse an HTML string into a document Element (name='[document]')."""
+    html = html or ""
+    return _scan(html) or _parse_with_htmlparser(html)

@@ -28,6 +28,7 @@ import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ._materialize import materialize
 from .relational import first_seen_dedup
@@ -267,7 +268,9 @@ def dedup_against_index(
 
     Returns one row per new document: (id, is_dup, first_match) where
     ``first_match`` is the smallest matching old id (deterministic at
-    any parallelism) or -1 when the document is novel.
+    any parallelism). For a novel document it is -1 when ``id_col`` is
+    integral, and null for any other id type (a URL, say), which has
+    no sentinel value.
 
     Verification without rescanning old text: pass ``old_sigs``
     (id, sig) — the signature table persisted alongside the index —
@@ -308,13 +311,16 @@ def dedup_against_index(
     matched = pairs.groupBy(F.col("id_a").alias("id")).agg(
         F.min("id_b").alias("first_match")
     )
+    first_match = F.col("first_match")
+    if isinstance(new_df.schema[id_col].dataType, T.IntegralType):
+        first_match = F.coalesce(first_match, F.lit(-1).cast("long"))
     return (
         new_df.select(F.col(id_col).alias("id"))
         .join(matched, "id", "left")
         .select(
             "id",
             F.col("first_match").isNotNull().alias("is_dup"),
-            F.coalesce("first_match", F.lit(-1).cast("long")).alias("first_match"),
+            first_match.alias("first_match"),
         )
     )
 
@@ -1346,8 +1352,6 @@ def connected_components(
             stats_out["iterations"] = 0
             stats_out["mode"] = "driver-union-find"
         id_type = e.schema["a"].dataType
-        from pyspark.sql import types as T
-
         out_schema = T.StructType(
             [
                 T.StructField("id", id_type, False),

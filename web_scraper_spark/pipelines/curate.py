@@ -89,7 +89,17 @@ def curate(
     row) and, when ``cfg.split_fractions`` is set, a ``fold`` column.
     Stages toggle off naturally: no ``bench_df`` → no decontamination
     scan; empty ``rates_ppm`` with the keep-all default → no
-    rebalance filter; ``fuzzy=False`` → exact dedup only."""
+    rebalance filter; ``fuzzy=False`` → exact dedup only.
+
+    ``prev_sigs`` and ``index_min_agree`` verify matches against
+    ``prev_index``; setting either without it raises ValueError."""
+    if cfg.prev_index is None and (
+        cfg.prev_sigs is not None or cfg.index_min_agree is not None
+    ):
+        raise ValueError(
+            "curate: prev_sigs and index_min_agree verify matches against "
+            "prev_index — set prev_index too, or neither"
+        )
     # 1-2. quality + language gates: pure column predicates — these
     # run inside the scan's WholeStageCodegen and prune early.
     out = df.withColumn("quality", TX.quality_score(F.col(text_col))).filter(
