@@ -8,7 +8,7 @@ line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 The suite covers every operator family: scan+agg (q01), broadcast
 joins (q02), anti/semi (q03/q04), windows/top-k (q05, q21, q22),
-as-of (q07), sessionize (q08), dedup family (q09, q15, q16, q17),
+as-of (q07), sessionization (q08), dedup family (q09, q15, q16, q17),
 text analysis (q12-q14), folds (q23, q25), explode (q26), embeddings
 (q27, q28), extraction UDF (q50), and a full crawl round (crawl_round).
 """

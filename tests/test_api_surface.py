@@ -1,0 +1,128 @@
+"""The package ships no test-only public function.
+
+Every public top-level def or class in ``web_scraper_spark/`` must be
+referenced, as a Name or an Attribute, by code in the package,
+``tools/``, ``perfbench/``, ``bench.py`` or ``__spark_entry__.py``; or
+be registered with ``@query``; or be listed in ``ALLOWED`` with one
+reason. Docstrings and ``__init__`` re-exports are not references (they
+are strings and import aliases), and neither is a def's use of its own
+name inside its body.
+
+The unreferenced set must equal ``ALLOWED`` exactly: a new function
+only tests call fails here, and so does an entry whose function has
+gained a caller or is gone.
+"""
+
+import ast
+import re
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "web_scraper_spark"
+CALLERS = [PKG, ROOT / "tools", ROOT / "perfbench", ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+
+# name -> reason: the COVERAGE.md code of the paper surface it serves,
+# "oracle" for a reference implementation the tests check production
+# code against, or "D9" for the bucketed-history lever (ROADMAP D9)
+# that has no production caller yet.
+ALLOWED = {
+    "crawl/config.py::update_config": "S9",
+    "crawl/config.py::crawl_config_from": "S9",
+    "crawl/robots.py::robots_allowed_wildcard": "J5",
+    "crawl/robots.py::robots_from_pages": "J5",
+    "crawl/simulator.py::simulate_crawl": "oracle",
+    "crawl/sitemaps.py::seed_urls_from_sitemaps": "S1",
+    "crawl/sitemaps.py::sitemap_seeds_from_robots": "S1",
+    "functions/columns.py::is_youtube_url": "P2",
+    "functions/columns.py::youtube_url_type": "P3",
+    "functions/tokenizer.py::token_ids_column": "A4",
+    "html/clean.py::clean_html_str": "D1",
+    "html/clean.py::extract_text": "D1",
+    "html/clean.py::extract_images": "D7",
+    "html/clean.py::extract_links": "P6-P13",
+    "html/htmlfmt.py::format_html_document": "D5",
+    "html/markdown.py::format_markdown_document": "D3",
+    "html/xmlfmt.py::format_xml_document": "D4",
+    "operators/video.py::transcript_line": "oracle",
+    "operators/video.py::strip_timestamps_raw": "oracle",
+    "operators/video.py::render_video_complete": "oracle",
+    "operators/video.py::render_video_raw": "oracle",
+    "operators/video.py::render_video_chapters": "oracle",
+    "operators/video.py::render_container": "oracle",
+    "sources/sinks.py::derive_filenames": "S11",
+    "sources/sinks.py::write_documents_as_files": "S11",
+    "sources/sinks.py::write_jsonl_shards": "S11",
+    "sources/sinks.py::write_bucketed": "D9",
+    "sources/sinks.py::bucketed_table": "D9",
+    "sources/sinks.py::console_sink": "S10",
+    "sources/sinks.py::image_map_join": "J1",
+    "sources/sinks.py::image_filenames": "S13",
+    "sources/warc.py::read_warc_dir": "§2.1",
+    "sources/warc.py::write_wet_dir": "§2.1",
+    "sources/warc.py::write_warc_dir": "§2.1",
+    "streaming/neardup.py::make_near_dup_batch_fn": "§2.10",
+    "streaming/neardup.py::read_near_dup_pairs": "§2.10",
+    "streaming/neardup.py::compact_near_dup_store": "§2.10",
+    "streaming/stateful.py::stream_content_dedup": "§2.10",
+    "streaming/stream.py::windowed_fetch_metrics": "§2.10",
+    "streaming/stream.py::run_foreachbatch_extraction": "§2.10",
+    "streaming/stream.py::warc_segments_stream": "§2.10",
+}
+
+
+def _sources():
+    for src in CALLERS:
+        yield from sorted(src.rglob("*.py")) if src.is_dir() else [src]
+
+
+def _refs(node) -> Counter:
+    return Counter(
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    )
+
+
+def _is_query(d) -> bool:
+    for dec in d.decorator_list:
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        if isinstance(fn, ast.Name) and fn.id == "query":
+            return True
+    return False
+
+
+def _unreferenced() -> set[str]:
+    refs, defs = Counter(), []
+    for path in _sources():
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        refs.update(_refs(tree))
+        if PKG in path.parents:
+            defs += [
+                (f"{path.relative_to(PKG).as_posix()}::{d.name}", d)
+                for d in tree.body
+                if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+                and not d.name.startswith("_")
+                and not _is_query(d)
+            ]
+    return {key for key, d in defs if refs[d.name] == _refs(d)[d.name]}
+
+
+def test_every_public_function_has_a_caller_or_a_reason():
+    unreferenced = _unreferenced()
+    assert not unreferenced - ALLOWED.keys(), (
+        "public functions only tests call — delete them, give them a "
+        f"caller, or list them in ALLOWED: {sorted(unreferenced - ALLOWED.keys())}"
+    )
+    assert not ALLOWED.keys() - unreferenced, (
+        "stale ALLOWED entries (now referenced, or gone): "
+        f"{sorted(ALLOWED.keys() - unreferenced)}"
+    )
+
+
+def test_allowlist_reasons_name_a_coverage_code():
+    coverage = (ROOT / "COVERAGE.md").read_text(encoding="utf-8")
+    for key, reason in ALLOWED.items():
+        assert reason in ("oracle", "D9") or re.search(
+            rf"(?<![\w§.-]){re.escape(reason)}(?![\w.-])", coverage
+        ), (key, reason)

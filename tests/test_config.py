@@ -7,7 +7,6 @@ import yaml
 from web_scraper_spark.crawl.config import (
     DEFAULT_CONFIG,
     crawl_config_from,
-    fetch_mode,
     load_config,
     save_config,
     update_config,
@@ -62,7 +61,7 @@ def test_update_config_round_trip(tmp_path):
     update_config("scraping", "mode", "super", p)
     on_disk = yaml.safe_load(open(p))
     assert on_disk["scraping"]["mode"] == "super"
-    assert fetch_mode(load_config(p)) == "super"
+    assert load_config(p)["scraping"]["mode"] == "super"
 
 
 def test_crawl_config_bridge(tmp_path):

@@ -264,22 +264,19 @@ def test_seen_compaction_preserves_parity(spark, tmp_path):
 
 
 def test_fetch_mode_budget_occupies_host_clock(spark):
-    """S3 mode budgets: advanced/super waits extend the per-host
-    spacing exactly like the reference's blocking Selenium waits."""
-    from pyspark.sql import functions as F
+    """Per-row crawl delays space a host's fetches: each fetch holds
+    the host's clock for its own delay, as the reference's blocking
+    basic/advanced/super waits (1 s politeness + 0/5/15 s) did."""
     from web_scraper_spark.crawl.politeness import schedule_round
-    from web_scraper_spark.functions.columns import fetch_mode_wait_ms
 
-    cand = spark.createDataFrame(
-        [("https://a.x/0", "a.x", 0, 0.0, 0, "basic"),
-         ("https://a.x/1", "a.x", 0, 1.0, 1, "advanced"),
-         ("https://a.x/2", "a.x", 0, 2.0, 2, "super"),
-         ("https://a.x/3", "a.x", 0, 3.0, 3, "basic")],
-        "url string, host string, depth int, priority double, seq long, mode string",
+    with_delay = spark.createDataFrame(
+        [("https://a.x/0", "a.x", 0, 0.0, 0, 1000),
+         ("https://a.x/1", "a.x", 0, 1.0, 1, 6000),
+         ("https://a.x/2", "a.x", 0, 2.0, 2, 16000),
+         ("https://a.x/3", "a.x", 0, 3.0, 3, 1000)],
+        "url string, host string, depth int, priority double, seq long, "
+        "crawl_delay_ms long",
     )
-    with_delay = cand.withColumn(
-        "crawl_delay_ms", F.lit(1000) + fetch_mode_wait_ms(F.col("mode"))
-    ).drop("mode")
     sched, _ = schedule_round(with_delay, None, quota_per_host=10)
     offs = {r["seq"]: r["scheduled_offset_ms"] for r in sched.collect()}
     # basic(1s) → advanced(6s) → super(16s) → basic

@@ -141,8 +141,7 @@ def test_html_main_content_cascade():
 
 # ---------------------------------------------------------------------
 # D3 tail: '## Images' section with image-map-resolved paths
-# (reference markdown_formatter.py:64-83), Python formatter and the
-# pure-Column twin.
+# (reference markdown_formatter.py:64-83).
 # ---------------------------------------------------------------------
 
 def test_markdown_images_section_reference_shape():
@@ -171,42 +170,3 @@ def test_markdown_images_section_reference_shape():
     assert "## Images" not in format_markdown_document(
         "T", "https://h/x", "<p>b</p>", images=images, include_images=False
     )
-
-
-def test_markdown_images_section_column_parity(spark):
-    from pyspark.sql import functions as F
-
-    from web_scraper_spark.functions.columns import markdown_images_section
-    from web_scraper_spark.html.markdown import format_markdown_document
-
-    images = [
-        {"url": "https://h/a.png", "alt": "A pic"},
-        {"url": "https://h/b.png", "alt": ""},
-    ]
-    image_map = {"https://h/a.png": "images/a_local.png"}
-    expected = format_markdown_document(
-        "T", "https://h/x", "<main><p>body</p></main>",
-        date="d", images=images, image_map=image_map,
-    )
-    body = format_markdown_document(
-        "T", "https://h/x", "<main><p>body</p></main>",
-        date="d", include_images=False,
-    )
-    resolved = [
-        (img.get("alt", ""), image_map.get(img["url"], img["url"])) for img in images
-    ]
-    df = spark.createDataFrame(
-        [(body, resolved)],
-        "body string, imgs array<struct<alt string, resolved string>>",
-    )
-    got = df.select(
-        F.concat("body", markdown_images_section(F.col("imgs"))).alias("doc")
-    ).collect()[0]["doc"]
-    assert got == expected
-    # empty array -> section omitted, doc unchanged
-    df0 = spark.createDataFrame(
-        [(body, [])], "body string, imgs array<struct<alt string, resolved string>>"
-    )
-    assert df0.select(
-        F.concat("body", markdown_images_section(F.col("imgs"))).alias("doc")
-    ).collect()[0]["doc"] == body

@@ -306,13 +306,15 @@ def _assert_scanner_agrees(html):
 # Where a scanner can part from HTMLParser: bare values ending in "/",
 # a tag name run on by a character that is whitespace to ``\s`` but not
 # to HTMLParser, repeated "=", a repeated attribute, raw-text ends, the
-# constructs the grammar leaves to HTMLParser, and character references
+# constructs the grammar leaves to HTMLParser (among them marked
+# sections with an unknown keyword or none), and character references
 # (``&#1;`` resolves to nothing).
 _TRAPS = (
     "<a href=x/>", "<img src=i.png/>", "<p\x0bclass='a'>", "<p\xa0class='a'>",
     "<p\x00class='a'>", "<a b==c>", "<a x=1 x=2>", "<SCRIPT>x</script >",
     "<style>x</STYLE>", "<script>", "<!DOCTYPE html>", "<![CDATA[x]]>", "<?pi?>",
-    "&amp", "&#1;", "<!-- x --!>", "<a title='&lt;'>",
+    "&amp", "&#1;", "<!-- x --!>", "<a title='&lt;'>", "<p>a<![foo[x]]>b</p>",
+    "<![ x]]>",
 )
 _PARSE_PIECES = _RECORD_PIECES + _TRAPS
 
@@ -322,6 +324,21 @@ def test_scanner_matches_htmlparser_on_fragments():
     assert sum(_scan(h) is not None for h in frags) >= 200  # not all fallback
     for html in frags:
         _assert_scanner_agrees(html)
+
+
+def test_unknown_marked_section_is_a_bogus_comment():
+    """A ``<![`` with an unknown keyword, or none, is a bogus comment up
+    to the next ``>`` (the HTML5 rule, which ``<!x>`` already follows),
+    not an AssertionError from the stdlib parser that would fail the
+    whole extraction task holding the page."""
+    p = parse_html("<p>a<![foo[x]]>b</p>").children[0]
+    assert [(c.text, c.is_comment) for c in p.children] == [
+        ("a", False), ("[foo[x]]", True), ("b", False)
+    ]
+    doc = parse_html("<![ x]]>")
+    assert [(c.text, c.is_comment) for c in doc.children] == [("[ x]]", True)]
+    rec = extract_page_record("<body><p>a<![foo[x]]>b</p><![ x]]></body>", "https://a.x/")
+    assert rec["clean_html"] == "<body><p>ab</p></body>"
 
 
 # A run of tokens the scanner tiles, with at most one trap put in: a

@@ -12,8 +12,8 @@ from pyspark.sql import functions as F
 from web_scraper_spark.operators.dedup import (
     jaccard_pairs,
     minhash_lsh_candidates,
-    simhash64,
-    simhash_near_dups,
+    simhash32_md5,
+    simhash_near_dups_md5,
 )
 from web_scraper_spark.operators.relational import asof_join, topk_per_group
 from web_scraper_spark.functions import columns as C
@@ -403,33 +403,6 @@ def test_take_token_budget_prefix_semantics(spark):
     assert kept3 == [0, 1, 2, 3, 4]
 
 
-def test_bin_manifest_orders_docs_and_totals(spark):
-    """Per-bin loader manifest: doc ids in stream order, token totals
-    and start offsets per bin, identical at any parallelism."""
-    from web_scraper_spark.operators.relational import (
-        bin_manifest,
-        pack_sequences,
-    )
-
-    rows = [(i, 10) for i in range(10)]  # 10 docs x 10 tokens, capacity 32
-    df = spark.createDataFrame(rows, "id long, n long")
-    packed = pack_sequences(df, "id", "n", capacity=32)
-    man = {r["bin_id"]: r for r in bin_manifest(packed, "id", "n").collect()}
-    # offsets 0..90: bin 0 holds docs 0-3 (offsets 0,10,20,30 < 32? no:
-    # bin = offset//32 → 0,0,0,0 for 0/10/20/30? 30//32=0 → docs 0-3;
-    # 40..60//32=1 → docs 4-6(40,50,60); 70,80,90//32=2 → docs 7-9
-    assert man[0]["doc_ids"] == [0, 1, 2, 3] and man[0]["bin_tokens"] == 40
-    assert man[1]["doc_ids"] == [4, 5, 6] and man[1]["bin_start_offset"] == 40
-    assert man[2]["doc_ids"] == [7, 8, 9] and man[2]["n_docs"] == 3
-    man2 = {
-        r["bin_id"]: r["doc_ids"]
-        for r in bin_manifest(
-            pack_sequences(df.repartition(5), "id", "n", capacity=32), "id", "n"
-        ).collect()
-    }
-    assert man2 == {k: v["doc_ids"] for k, v in man.items()}
-
-
 def test_jaccard_pairs_rejects_candidates_plus_df_cap(spark):
     """candidates and max_doc_freq are mutually exclusive — the
     candidates branch would silently ignore the cap."""
@@ -443,55 +416,6 @@ def test_jaccard_pairs_rejects_candidates_plus_df_cap(spark):
         jaccard_pairs(
             df, "text", "doc_id", threshold=0.5, candidates=cands, max_doc_freq=4
         )
-
-
-def test_ivf_index_persisted_probe_prunes_partitions(spark, tmp_path):
-    """write_ivf_index + cosine_topk_ivf_indexed: results match the
-    in-memory IVF path bit-for-bit, and the stored-index probe scans
-    ONLY the probed centroid partitions (PartitionFilters pruning)."""
-    from web_scraper_spark.operators.similarity import (
-        cosine_topk_ivf,
-        cosine_topk_ivf_indexed,
-        ivf_assign,
-        label_centroids,
-        write_ivf_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = label_centroids(emb, "embedding", "label").withColumnRenamed(
-        "centroid_id", "centroid_id"
-    )
-    assigned = ivf_assign(
-        emb, "embedding", cents.select(
-            F.col("centroid_id"), F.col("centroid").alias("embedding")
-        )
-    )
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(assigned, path)
-    index = spark.read.parquet(path)
-    queries = emb.filter(F.col("vec_id") < 3)  # ≤ 6 probed buckets of 10
-    mem = cosine_topk_ivf(
-        queries, assigned, cents, "embedding", "vec_id", k=5, nprobe=2
-    )
-    idx = cosine_topk_ivf_indexed(
-        queries, index, cents, "embedding", "vec_id", k=5, nprobe=2
-    )
-    key = lambda rows: sorted((r["query_id"], r["rank"], r["neighbor_id"], r["cosine"]) for r in rows)
-    assert key(idx.collect()) == key(mem.collect())
-    # the probed scan carries a planning-time partition filter on the
-    # bucket directories — a 100-TB index probe lists ~nprobe/k of it
-    # (inputFiles() ignores filters, so assert on the physical plan)
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        idx.explain("formatted")
-    plan = buf.getvalue()
-    seg = plan.split("PartitionFilters: [", 1)
-    assert len(seg) == 2, plan
-    filters = seg[1].split("]", 1)[0]
-    assert "centroid_id" in filters and filters.strip(), plan
 
 
 def test_duplicate_span_stats(spark):
@@ -664,38 +588,38 @@ def test_simhash_identical_docs_zero_hamming(spark):
         "id int, text string",
     )
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-             simhash_near_dups(df, "text", "id", max_hamming=63).collect()}
+             simhash_near_dups_md5(df, "text", "id", max_hamming=31).collect()}
     assert pairs[(1, 2)] == 0
 
 
 def test_simhash_max_hamming_validated(spark):
     df = spark.createDataFrame([(1, "a b c")], "id int, text string")
-    for bad in (-1, 64, 100):
+    for bad in (-1, 32, 100):
         with pytest.raises(ValueError):
-            simhash_near_dups(df, "text", "id", max_hamming=bad)
+            simhash_near_dups_md5(df, "text", "id", max_hamming=bad)
 
 
 def test_simhash_banding_recall_vs_bruteforce(spark):
     """Round-1 verdict item 3: the fixed 4-block banding silently
     dropped pairs at Hamming 4–8 that differ in all four blocks.
     (max_hamming+1)-block banding must have PERFECT recall: the banded
-    pair set equals the brute-force pair set at the q51 parameters."""
+    pair set equals the brute-force pair set at max_hamming 8."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").filter(
         F.col("doc_id") < 120
     )
     max_h = 8
     fps = {r["id"]: r["fp"] for r in
-           simhash64(docs, "text", "doc_id").collect()}
+           simhash32_md5(docs, "text", "doc_id").collect()}
     ids = sorted(fps)
     brute = {
         (a, b)
         for i, a in enumerate(ids)
         for b in ids[i + 1:]
-        if bin((fps[a] ^ fps[b]) & (2**64 - 1)).count("1") <= max_h
+        if bin(fps[a] ^ fps[b]).count("1") <= max_h
     }
     banded = {
         (r["id_a"], r["id_b"])
-        for r in simhash_near_dups(docs, "text", "doc_id", max_hamming=max_h).collect()
+        for r in simhash_near_dups_md5(docs, "text", "doc_id", max_hamming=max_h).collect()
     }
     assert brute, "vacuous: no brute-force pairs at this distance"
     assert banded == brute, (
@@ -706,8 +630,8 @@ def test_simhash_banding_recall_vs_bruteforce(spark):
     # SAME exact pair set — wider effective keys, no recall loss
     multi = {
         (r["id_a"], r["id_b"])
-        for r in simhash_near_dups(
-            docs, "text", "doc_id", max_hamming=max_h, n_blocks=12
+        for r in simhash_near_dups_md5(
+            docs, "text", "doc_id", max_hamming=max_h, n_blocks=10
         ).collect()
     }
     assert multi == brute, (
@@ -767,24 +691,24 @@ def test_sanitize_idempotent(spark):
 
 def test_url_classify_matches_reference_rules(spark):
     cases = [
-        ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", "video", "dQw4w9WgXcQ"),
-        ("https://youtu.be/abcdefghijk", "video", "abcdefghijk"),
-        ("https://www.youtube.com/playlist?list=PL123-x", "playlist", "PL123-x"),
+        ("https://www.youtube.com/watch?v=dQw4w9WgXcQ", "video"),
+        ("https://youtu.be/abcdefghijk", "video"),
+        ("https://www.youtube.com/playlist?list=PL123-x", "playlist"),
         # list= wins over watch?v= (rule order is semantic, P3)
-        ("https://www.youtube.com/watch?v=dQw4w9WgXcQ&list=PL9", "playlist", "PL9"),
-        ("https://www.youtube.com/@somechannel", "channel", "@somechannel"),
-        ("https://www.youtube.com/channel/UCabc", "channel", "UCabc"),
-        ("https://example.com/page", "unknown", ""),
+        ("https://www.youtube.com/watch?v=dQw4w9WgXcQ&list=PL9", "playlist"),
+        ("https://www.youtube.com/@somechannel", "channel"),
+        ("https://www.youtube.com/channel/UCabc", "channel"),
+        ("https://example.com/page", "unknown"),
     ]
-    df = spark.createDataFrame([(u,) for u, _, _ in cases], "url string")
+    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = df.select(
         "url",
         C.youtube_url_type(F.col("url")).alias("t"),
-        C.youtube_container_id(F.col("url")).alias("id"),
+        C.youtube_video_id(F.col("url")).alias("vid"),
     ).collect()
-    by_url = {r["url"]: (r["t"], r["id"]) for r in got}
-    for u, t, i in cases:
-        assert by_url[u] == (t, i), u
+    assert {r["url"]: r["t"] for r in got} == dict(cases)
+    # P4: a video URL's id is its 11-char v= / youtu.be/ id
+    assert {r["vid"] for r in got if r["t"] == "video"} == {"dQw4w9WgXcQ", "abcdefghijk"}
 
 
 def test_is_youtube_url_substring_rule(spark):
@@ -848,51 +772,22 @@ def test_canonical_url_semantics_and_idempotence(spark):
     assert all(k == v for k, v in got2.items()), got2
 
 
-def test_gopher_line_para_dup_fractions(spark):
-    """Line/paragraph duplicate fractions (pure expressions): repeated
-    lines count beyond their first occurrence, char fractions weight
-    by unit length, empty units are dropped, and a clean doc scores
-    zero everywhere."""
-    from web_scraper_spark.operators.text import line_dup_fractions
-
-    docs = [
-        # 4 lines, 'dup' twice → dup_line_frac 1/4; para split on the
-        # blank line: ['dup\ndup\nunique', 'tail'] — distinct → 0
-        (1, "dup\ndup\nunique\n\ntail"),
-        (2, "a\nb\nc"),
-        # same paragraph twice → dup_para_frac 1/2; char frac 11/22
-        (3, "para one x\n\npara one x"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(docs, "id int, text string")
-    fr = line_dup_fractions(F.col("text"))
-    out = {r["id"]: r for r in df.select("id", *[v.alias(k) for k, v in fr.items()]).collect()}
-    assert out[1]["dup_line_frac"] == 0.25
-    # chars: dup(3)+dup(3)+unique(6)+tail(4)=16 total; distinct 13 → 3/16
-    assert out[1]["dup_line_char_frac"] == round(3 / 16, 4)
-    assert out[1]["dup_para_frac"] == 0.0
-    assert out[2]["dup_line_frac"] == 0.0 and out[2]["dup_para_char_frac"] == 0.0
-    assert out[3]["dup_para_frac"] == 0.5
-    assert out[3]["dup_para_char_frac"] == 0.5
-    # lines of doc 3: 'para one x', '', 'para one x' → empty dropped,
-    # one dup of two units
-    assert out[3]["dup_line_frac"] == 0.5
-    assert out[4]["dup_line_frac"] == 0.0 and out[4]["dup_line_char_frac"] == 0.0
-
-
 def test_top_ngram_char_share(spark):
-    """Most-frequent-bigram character share: occurrences × gram chars
-    over normalized text chars; short docs emit no row."""
-    from web_scraper_spark.operators.text import top_ngram_char_share
+    """Most-frequent-bigram character share (repetition_signals'
+    top2_char_frac): occurrences × gram chars over normalized text
+    chars; a doc with fewer tokens than the gram scores 0."""
+    from web_scraper_spark.operators.text import repetition_signals
 
     docs = [
         (1, "ab cd ab cd ab"),  # bigram 'ab cd' ×2 (len 5), text len 14
-        (2, "x"),               # 1 token → no row
+        (2, "x"),               # 1 token → no bigram
     ]
     df = spark.createDataFrame(docs, "id int, text string")
-    out = {r["id"]: r["char_share"] for r in top_ngram_char_share(df, "text", "id", 2).collect()}
-    assert out[1] == round(2 * 5 / 14, 6)
-    assert 2 not in out
+    out = {
+        r["id"]: r["top2_char_frac"]
+        for r in repetition_signals(df, "text", "id", top_ns=(2,), dup_ns=(5,)).collect()
+    }
+    assert out == {1: round(2 * 5 / 14, 6), 2: 0.0}
 
 
 def test_script_ratios_dominance_and_ties(spark):

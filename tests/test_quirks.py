@@ -6,8 +6,7 @@ test_formatters, test_video, and q23's oracle.)"""
 from pyspark.sql import functions as F
 
 from web_scraper_spark.html.clean import DROP_TAGS, clean_html, extract_text
-from web_scraper_spark.operators.text import whitespace_token_count
-from web_scraper_spark.functions.columns import token_estimate
+from web_scraper_spark.operators.text import char_token_estimate, whitespace_token_count
 
 
 def test_q3_css_like_drop_entries_are_inert():
@@ -37,7 +36,7 @@ def test_q9_token_unit_inconsistency_is_preserved(spark):
     df = spark.createDataFrame([("four words right here",)], "text string")
     row = df.select(
         whitespace_token_count(F.col("text")).alias("ws"),
-        token_estimate(F.col("text")).alias("est"),
+        char_token_estimate(F.col("text")).alias("est"),
     ).collect()[0]
     assert row["ws"] == 4          # word count
     assert row["est"] == len("four words right here") // 4  # 5 — differs
@@ -69,28 +68,13 @@ def test_q10_duplicate_image_remap_by_hash(spark):
     assert all(r["media_id"] % 3 == 0 or r["copies"] == 1 for r in rows)
 
 
-def test_resize_and_frame_sample_plumbing(spark):
-    """Multimodal resize/frame-sample plumbing: schemas, per-kind
-    behavior, fan-out multiplicity, determinism under repartition
-    (decode is the documented deterministic fake)."""
-    from web_scraper_spark.operators.multimodal import (
-        resize_media,
-        sample_frames,
-        synth_media,
-    )
+def test_frame_sample_plumbing(spark):
+    """Multimodal frame-sample plumbing: fan-out multiplicity and
+    determinism under repartition (decode is the documented
+    deterministic fake)."""
+    from web_scraper_spark.operators.multimodal import sample_frames, synth_media
 
     media = synth_media(spark, 30).repartition(4)
-    rs = resize_media(media, 224, 224).collect()
-    by_kind = {}
-    for r in rs:
-        by_kind.setdefault(r["kind"], []).append(r)
-    assert all(r["width"] == 224 and r["height"] == 224 for r in by_kind["image"])
-    assert all(r["width"] is None for r in by_kind["audio"])
-    # non-image payloads pass through unchanged
-    orig = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert all(bytes(r["payload"]) == orig[r["media_id"]] for r in by_kind["video"])
-    assert all(bytes(r["payload"]) != orig[r["media_id"]] for r in by_kind["image"])
-
     frames = sample_frames(media, every_n=2)
     rows = frames.collect()
     assert rows and all(r["frame_idx"] % 2 == 0 for r in rows)

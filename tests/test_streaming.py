@@ -452,6 +452,45 @@ def test_index_dedup_and_stream_near_dup_share_candidates(spark, tmp_path):
         assert flagged == crossed
 
 
+def test_stream_near_dup_hot_bucket_guard(spark, tmp_path, caplog):
+    """A boilerplate stream (every page alike, so one bucket per band
+    holds the whole store) does not make the band join quadratic:
+    buckets of the store plus the batch over HOT_BUCKET_CAP rows, the
+    cap curate also defaults to, are left out of the join with a
+    WARNING, and the genuine pair in normal buckets still comes out."""
+    import logging
+
+    from web_scraper_spark.operators.dedup import HOT_BUCKET_CAP
+    from web_scraper_spark.pipelines import CurationConfig
+    from web_scraper_spark.streaming.neardup import (
+        make_near_dup_batch_fn,
+        read_near_dup_pairs,
+    )
+
+    assert CurationConfig().max_bucket_size == HOT_BUCKET_CAP
+    boiler = "lorem ipsum boiler plate page footer"
+    base = "alpha beta gamma delta epsilon zeta"
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    pairs_dir = str(tmp_path / "pairs")
+    fn = make_near_dup_batch_fn(
+        str(tmp_path / "store"), pairs_dir, id_col="doc_id",
+        num_hashes=16, bands=8, threshold=0.0,
+    )
+    with caplog.at_level(logging.WARNING, logger="web_scraper_spark.operators.dedup"):
+        fn(frame([(i, boiler) for i in range(HOT_BUCKET_CAP + 1)] + [(10_000, base)]), 0)
+        fn(frame([(HOT_BUCKET_CAP + 1, boiler), (10_001, base)]), 1)
+    warned = [r for r in caplog.records if "make_near_dup_batch_fn" in r.getMessage()]
+    assert len(warned) == 2  # one per batch
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in read_near_dup_pairs(spark, pairs_dir).collect()
+    }
+    assert got == {(10_000, 10_001)}  # not ~2M boilerplate pairs
+
+
 def test_warc_segments_stream_exactly_once_per_segment(spark, tmp_path):
     """Archive segments landing in a directory are parsed exactly once
     across triggers/restarts (file-source checkpoint), and the parsed

@@ -12,8 +12,10 @@ Re-expresses the reference's config lifecycle
 - ``save_config`` / ``update_config`` round-trip YAML.
 - ``crawl_config_from`` bridges the user-facing config dict into the
   engine's :class:`~web_scraper_spark.crawl.rounds.CrawlConfig`
-  (scraping.max_depth / ignore_patterns drive the frontier filters;
-  scraping.mode picks the fetch-mode wait budget, S3).
+  (scraping.max_depth / ignore_patterns drive the frontier filters).
+  ``scraping.mode`` stays in the file for compatibility with the
+  reference's config files; the engine does not read it, since the
+  fetch-mode wait budgets (S3) are not modelled.
 
 The defaults keep the reference's sections and keys verbatim — they
 are the public configuration surface a migrating user already has on
@@ -36,7 +38,7 @@ DEFAULT_CONFIG: dict[str, dict[str, Any]] = {
         "saved_directories": [],
     },
     "scraping": {
-        "mode": "basic",        # basic, advanced, super (S3 wait budgets)
+        "mode": "basic",        # basic, advanced, super (kept, not read)
         "include_images": False,
         "max_depth": 1,
         "ignore_patterns": [],
@@ -127,9 +129,3 @@ def crawl_config_from(config: dict, ckpt_dir: str, **overrides) -> "CrawlConfig"
     }
     kwargs.update(overrides)
     return CrawlConfig(**kwargs)
-
-
-def fetch_mode(config: dict) -> str:
-    """S3: the configured scraping mode (basic/advanced/super) — feeds
-    fetch_mode_wait_ms (functions/columns.py)."""
-    return config.get("scraping", {}).get("mode", "basic")

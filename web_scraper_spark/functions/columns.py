@@ -69,20 +69,6 @@ def youtube_url_type(url: Column) -> Column:
     )
 
 
-def youtube_container_id(url: Column) -> Column:
-    """Companion id extraction for P3: list= id for playlists, last
-    path segment for channels, video id otherwise ('' on miss)."""
-    t = youtube_url_type(url)
-    playlist_id = F.regexp_extract(url, r"list=([\w-]+)", 1)
-    channel_id = F.element_at(F.split(url, "/"), -1)
-    return (
-        F.when(t == "playlist", playlist_id)
-        .when(t == "channel", channel_id)
-        .when(t == "video", F.coalesce(youtube_video_id(url), F.lit("")))
-        .otherwise(F.lit(""))
-    )
-
-
 # -- filenames / strings (F3, F16, L3) ------------------------------------
 
 # Python's re \s in str mode: Java default \s plus \x1c-\x1f and the
@@ -114,11 +100,6 @@ def filename_from_url(url: Column) -> Column:
         F.concat(host, F.lit("_"), flat)
     )
     return sanitize_filename(key)
-
-
-def token_estimate(s: Column) -> Column:
-    """A4 fallback branch: len(text) // 4 (contxt/scraper.py:423-426)."""
-    return (F.length(s) / 4).cast("int")
 
 
 def image_ext(url: Column) -> Column:
@@ -237,43 +218,6 @@ def canonical_url(url: Column) -> Column:
         F.concat(F.lit("?"), F.concat_ws("&", params)),
     ).otherwise(F.lit(""))
     return F.concat(proto, F.lit("://"), auth, path, qpart)
-
-
-def markdown_images_section(imgs: Column) -> Column:
-    """D3 tail as a pure Column expression: the '## Images' block
-    (contxt/formatters/markdown_formatter.py:64-83) over an
-    ``array<struct<alt, resolved>>`` column — ``resolved`` is the
-    image-map-joined local path with remote-URL fallback (J1,
-    sources/sinks.py:image_map_join). Empty/blank alt falls back to
-    'Image'; an empty array yields '' (section omitted), matching the
-    Python formatter byte-for-byte (joined with '\\n' onto the doc)."""
-
-    def line(s):
-        alt = F.when(
-            s["alt"].isNull() | (s["alt"] == ""), F.lit("Image")
-        ).otherwise(s["alt"])
-        return F.concat(F.lit("!["), alt, F.lit("]("), s["resolved"], F.lit(")"))
-
-    return F.when(
-        imgs.isNotNull() & (F.size(imgs) > 0),
-        F.concat(
-            F.lit("\n\n## Images\n\n"),
-            F.concat_ws("\n", F.transform(imgs, line)),
-        ),
-    ).otherwise(F.lit(""))
-
-
-def fetch_mode_wait_ms(mode: Column) -> Column:
-    """S3: per-mode fetch wait budgets — basic 0s, advanced 5s,
-    super 15s (contxt/scraper.py:96-124). Added to the host's
-    politeness delay so a slow-mode fetch occupies the host's
-    virtual clock, as the reference's blocking Selenium waits did."""
-    return (
-        F.when(mode == "advanced", F.lit(5000))
-        .when(mode == "super", F.lit(15000))
-        .otherwise(F.lit(0))
-        .cast("long")
-    )
 
 
 def surt_url(url: Column) -> Column:

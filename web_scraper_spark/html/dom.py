@@ -313,6 +313,15 @@ class _TreeBuilder(HTMLParser):
     def handle_comment(self, data):
         self.stack[-1].append(TextNode(data, is_comment=True))
 
+    def parse_marked_section(self, i, report=1):
+        # The base class raises AssertionError on a ``<![`` with no
+        # keyword or one it does not know; HTML5 reads such markup as a
+        # bogus comment up to the next ``>``, as ``<!x>`` already is.
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            return self.parse_bogus_comment(i, report)
+
 
 def _parse_with_htmlparser(html: str) -> Element:
     b = _TreeBuilder()

@@ -156,6 +156,11 @@ def minhash_band_index(sigs: DataFrame, num_hashes: int, bands: int) -> DataFram
     ).select("id", "bb.band", "bb.bucket")
 
 
+# The hot-bucket cap of the (band, bucket) joins: curate's default
+# max_bucket_size and the streaming near-dup store's fixed cap.
+HOT_BUCKET_CAP = 2000
+
+
 def _hot_keys(df: DataFrame, keys: list[str], cap: int, label: str) -> DataFrame:
     """The hot-key guard of every quadratic equi-join in this module:
     the ``keys`` groups of ``df`` holding more than ``cap`` rows, as a
@@ -661,47 +666,6 @@ def ngram_contamination(
     )
 
 
-def _simhash(
-    df: DataFrame, text_col: str, id_col: str, h: Column, bits: int
-) -> DataFrame:
-    """SimHash vote fold shared by the 64- and 32-bit families: explode
-    the distinct tokens, hash each with ``h`` (a Column over ``tok``),
-    let every bit vote ±1 in ONE groupBy(id) of ``bits`` conditional
-    sums, and set the bits with positive vote sums. Returns (id, fp).
-    One shuffle on the id; a single-expression fold (``transform`` +
-    ``aggregate`` per bit) builds a lambda tree whose compile time
-    blows up (measured 25 s on 300 docs)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), 1)).alias("tok"),
-    ).withColumn("h", h)
-    votes = toks.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.col("h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
-                ).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(bits)
-        ]
-    )
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        fp = fp.bitwiseOR(
-            F.when(F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return votes.select("id", fp.alias("fp"))
-
-
-def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash over ``xxhash64`` per token. xxhash64 has no
-    DuckDB twin, so correctness checks for this family are
-    Spark-internal (see tests). Returns (id, fp)."""
-    return _simhash(df, text_col, id_col, F.xxhash64("tok"), 64)
-
-
 def global_sentence_dedup(
     df: DataFrame,
     text_col: str,
@@ -889,11 +853,15 @@ def boilerplate_line_dedup(
     )
 
 
+_SIMHASH_BITS = 32
+
+
 def banded_hamming_pairs(
-    fps: DataFrame, n_bits: int, max_hamming: int, n_blocks: int | None = None
+    fps: DataFrame, max_hamming: int, n_blocks: int | None = None
 ) -> DataFrame:
-    """Pairs of (id, fp) rows within Hamming distance ``max_hamming``,
-    via block banding with PERFECT recall (Charikar/Manku pigeonhole).
+    """Pairs of (id, fp) rows of 32-bit fingerprints within Hamming
+    distance ``max_hamming``, via block banding with PERFECT recall
+    (Charikar/Manku pigeonhole).
 
     Default (``n_blocks = max_hamming+1``): a pair with ≤
     ``max_hamming`` differing bits spread over ``max_hamming+1``
@@ -910,20 +878,21 @@ def banded_hamming_pairs(
     equal values always collide, so recall is still perfect — hash
     collisions only add candidates, which the exact ``bit_count``
     filter removes) trades C(n_blocks, max_hamming) keys per row for
-    MUCH wider effective keys. E.g. 64 bits, h=3: the default joins
-    on 16-bit keys (buckets of N/2^16 — quadratic pain at 10^9 docs);
-    n_blocks=8 joins 56 keys of ~40 effective bits (buckets of
-    N/2^40). Use the default for small/medium corpora where per-row
-    fan-out dominates; raise n_blocks when bucket sizes do. Keep
-    C(n_blocks, max_hamming) modest (≲ 64): hundreds of key structs
-    overflow the whole-stage-codegen method-size limit and the
-    explode falls back to interpreted evaluation (correct, slower —
-    measured at C(10,6)=210).
+    MUCH wider effective keys. E.g. h=3: the default joins on 8-bit
+    keys (buckets of N/2^8 — quadratic pain at scale); n_blocks=8
+    joins 56 keys of ~20 effective bits (buckets of N/2^20). Use the
+    default for small/medium corpora where per-row fan-out dominates;
+    raise n_blocks when bucket sizes do. Keep C(n_blocks, max_hamming)
+    modest (≲ 64): hundreds of key structs overflow the
+    whole-stage-codegen method-size limit and the explode falls back
+    to interpreted evaluation (correct, slower — measured at
+    C(10,6)=210).
 
     Shuffles only small block keys; the final ``bit_count`` filter
     keeps precision exact. Returns (id_a, id_b, hamming) with
     id_a < id_b.
     """
+    n_bits = _SIMHASH_BITS
     if not 0 <= max_hamming <= n_bits - 1:
         raise ValueError(
             f"max_hamming must be in [0, {n_bits - 1}], got {max_hamming}"
@@ -936,14 +905,11 @@ def banded_hamming_pairs(
         )
     # nearly-equal contiguous bit spans covering all n_bits bits
     bounds = [round(i * n_bits / n_blocks) for i in range(n_blocks + 1)]
-
-    def block_val(start: int, width: int):
-        if width >= 64:  # n_blocks == 1 on a 64-bit fp: whole fingerprint
-            return F.col("fp")
-        return F.shiftrightunsigned("fp", start).bitwiseAND(F.lit((1 << width) - 1))
-
     block_exprs = [
-        block_val(bounds[i], bounds[i + 1] - bounds[i]) for i in range(n_blocks)
+        F.shiftrightunsigned("fp", bounds[i]).bitwiseAND(
+            F.lit((1 << (bounds[i + 1] - bounds[i])) - 1)
+        )
+        for i in range(n_blocks)
     ]
     if n_blocks == max_hamming + 1:
         keys = [
@@ -987,20 +953,6 @@ def banded_hamming_pairs(
     )
 
 
-def simhash_near_dups(
-    df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3,
-    n_blocks: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup pairs within Hamming distance ``max_hamming``
-    over the 64-bit xxhash64 family (the fast path; no SQL twin — see
-    :func:`simhash_near_dups_md5` for the oracle-checkable variant).
-    ``n_blocks`` > max_hamming+1 enables the multi-probe banding for
-    huge corpora (see :func:`banded_hamming_pairs`)."""
-    return banded_hamming_pairs(
-        simhash64(df, text_col, id_col), 64, max_hamming, n_blocks
-    )
-
-
 def simhash_near_dups_md5(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3,
     n_blocks: int | None = None,
@@ -1008,12 +960,11 @@ def simhash_near_dups_md5(
     """SimHash near-dup pairs over the 32-bit md5 family — every stage
     (fingerprint AND pair set) is reproducible bit-for-bit in ANSI SQL
     (q51's oracle brute-forces the pairs; recall equality is exactly
-    what the banding guarantees). Prefer the 64-bit family when
-    ``max_hamming`` is large relative to 32 bits: correctness is
-    unaffected, but 32/(max_hamming+1)-bit blocks collide more, so the
-    candidate join does more (discarded) work."""
+    what the banding guarantees). ``n_blocks`` > max_hamming+1 enables
+    the multi-probe banding for huge corpora (see
+    :func:`banded_hamming_pairs`)."""
     return banded_hamming_pairs(
-        simhash32_md5(df, text_col, id_col), 32, max_hamming, n_blocks
+        simhash32_md5(df, text_col, id_col), max_hamming, n_blocks
     )
 
 
@@ -1229,10 +1180,35 @@ def remove_duplicate_spans(
 def simhash32_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """32-bit SimHash over the md5 hash family — engine-portable (the
     per-token hash is the first 8 hex chars of md5, so a SQL oracle
-    can reproduce the fingerprint bit-for-bit; see q58). Returns
-    (id, fp)."""
-    h = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long")
-    return _simhash(df, text_col, id_col, h, 32)
+    can reproduce the fingerprint bit-for-bit; see q58). Explode the
+    distinct tokens, hash each, let every bit vote ±1 in ONE
+    groupBy(id) of 32 conditional sums, and set the bits with positive
+    vote sums. Returns (id, fp). One shuffle on the id; a
+    single-expression fold (``transform`` + ``aggregate`` per bit)
+    builds a lambda tree whose compile time blows up (measured 25 s on
+    300 docs)."""
+    toks = df.select(
+        F.col(id_col).alias("id"),
+        F.explode(word_shingles(F.col(text_col), 1)).alias("tok"),
+    ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
+    votes = toks.groupBy("id").agg(
+        *[
+            F.sum(
+                F.when(
+                    F.col("h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1
+                ).otherwise(-1)
+            ).alias(f"v{b}")
+            for b in range(_SIMHASH_BITS)
+        ]
+    )
+    fp = F.lit(0).cast("long")
+    for b in range(_SIMHASH_BITS):
+        fp = fp.bitwiseOR(
+            F.when(F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    return votes.select("id", fp.alias("fp"))
 
 
 def _large_star(e: DataFrame) -> DataFrame:

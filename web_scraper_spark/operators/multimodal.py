@@ -159,50 +159,6 @@ def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
     return spark.range(0, n, numPartitions=max(1, n // 512 or 1)).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-    ]
-)
-
-
-def resize_media(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Image-resize plumbing over ``mapInPandas``: schema, batch
-    shape, and column pruning are real; the pixel work is the
-    deterministic fake (resized payload = md5-hex of
-    ``payload:resize:WxH``) because no codec libraries exist here —
-    a real pipeline swaps the one line for PIL/opencv with identical
-    signature. Non-image rows pass through untouched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                bytes(p) if p is not None else b"" for p in pdf["payload"].tolist()
-            ]
-            kinds = pdf["kind"].tolist()
-            out_payloads = [
-                hashlib.md5(p + f":resize:{target_w}x{target_h}".encode()).hexdigest().encode()
-                if k == "image" else p
-                for p, k in zip(payloads, kinds)
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].tolist(),
-                    "kind": kinds,
-                    "payload": out_payloads,
-                    "width": [target_w if k == "image" else None for k in kinds],
-                    "height": [target_h if k == "image" else None for k in kinds],
-                },
-                columns=[f.name for f in RESIZED_SCHEMA.fields],
-            )
-
-    return df.select("media_id", "kind", "payload").mapInPandas(run, RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),

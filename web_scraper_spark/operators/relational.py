@@ -126,28 +126,6 @@ def collision_numbering(
     )
 
 
-def sessionize(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    gap_seconds: int,
-    session_col: str = "session_id",
-) -> DataFrame:
-    """W4 analog (adjacent-run grouping, contxt/scraper.py:365-405,
-    re-expressed relationally): mark run starts with ``lag``, build
-    run ids with a running sum. One shuffle on ``key``."""
-    w_order = Window.partitionBy(key).orderBy(ts_col)
-    secs = F.col(ts_col).cast("timestamp_ltz").cast("long") if dict(df.dtypes)[ts_col].startswith("timestamp") else F.col(ts_col).cast("long")
-    gap = secs - F.lag(secs).over(w_order)
-    is_new = F.when(gap.isNull() | (gap > gap_seconds), 1).otherwise(0)
-    return df.withColumn("_new", is_new).withColumn(
-        session_col,
-        F.sum("_new").over(
-            w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    ).drop("_new")
-
-
 def combined_document(
     df: DataFrame, content_col: str, order_by: list[Column]
 ) -> DataFrame:
@@ -239,32 +217,6 @@ def pack_sequences(
         F.col(tokens_col),
         F.col("running_before").alias("stream_offset"),
         F.expr(f"cast((running_before div {int(capacity)}) as bigint)").alias("bin_id"),
-    )
-
-
-def bin_manifest(
-    packed: DataFrame, id_col: str, tokens_col: str
-) -> DataFrame:
-    """Collapse :func:`pack_sequences` output into the per-bin
-    manifest a data loader consumes: for each training bin, the
-    ordered document ids that start in it, the token total, and the
-    first document's stream offset. One groupBy on bin_id; ordering
-    inside the bin comes from array_sort over (offset, id) structs —
-    never collect_list order. Returns
-    (bin_id, doc_ids, n_docs, bin_tokens, bin_start_offset)."""
-    return (
-        packed.groupBy("bin_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("stream_offset", F.col(id_col)))
-                ),
-                lambda s: s[id_col],
-            ).alias("doc_ids"),
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(tokens_col).cast("long").alias("bin_tokens"),
-            F.min("stream_offset").cast("long").alias("bin_start_offset"),
-        )
     )
 
 

@@ -78,9 +78,7 @@ def ivf_assign(
     k-means) is collected when this is called, one job, and closed
     over a ``mapInPandas`` pass that scores every Arrow batch with ONE
     ``V @ C.T`` matmul and arg-maxes it. The corpus is only mapped,
-    never joined or shuffled. This is the build step of an IVF index;
-    persist the result partitioned by centroid (:func:`write_ivf_index`)
-    for repeated queries."""
+    never joined or shuffled. This is the build step of an IVF index."""
     import numpy as np
 
     rows = centroids.select(
@@ -212,47 +210,6 @@ def ivf_assign_topn(
         .drop("_rn", "_v", "_n", "_cv", "_cn", "_cos")
         .withColumnRenamed("_cid", "centroid_id")
     )
-
-
-def write_ivf_index(
-    corpus_assigned: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    """Persist an IVF-assigned corpus partitioned BY centroid_id
-    (hive-style directories). Repeated ANN queries against the stored
-    index then read ONLY the probed buckets — pruning happens at the
-    file-listing level, so a 100-TB corpus probe touches ~nprobe/k of
-    the data instead of scanning it. This is the bucketing lever the
-    mandate calls for on the storage side; the in-memory path
-    (:func:`cosine_topk_ivf`) stays the one-shot form."""
-    corpus_assigned.write.mode(mode).partitionBy("centroid_id").parquet(path)
-
-
-def cosine_topk_ivf_indexed(
-    queries: DataFrame,
-    index: DataFrame,
-    centroids: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    nprobe: int = 1,
-    round_to: int = 6,
-) -> DataFrame:
-    """ANN top-k against a STORED IVF index (a DataFrame read from
-    :func:`write_ivf_index`'s partitioned layout): the probed
-    centroid ids — nprobe × n_queries values, tiny by the
-    few-queries × huge-corpus contract — are collected and pushed as
-    an explicit ``centroid_id IN (...)`` partition filter, so the
-    scan's PartitionFilters prune unprobed buckets at planning time
-    (deterministic, unlike relying on runtime dynamic partition
-    pruning against an in-memory query frame). Results are identical
-    to :func:`cosine_topk_ivf` over the same assignment."""
-    q_assigned = ivf_assign_topn(queries, vec_col, id_col, centroids, nprobe)
-    probed = [
-        r["centroid_id"]
-        for r in q_assigned.select("centroid_id").distinct().collect()
-    ]
-    pruned = index.filter(F.col("centroid_id").isin(probed))
-    return _ivf_topk(q_assigned, pruned, vec_col, id_col, k, round_to)
 
 
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:

@@ -193,94 +193,6 @@ def duplicate_token_fraction(text: Column) -> Column:
     return F.round((n - nd).cast("double") / n, 4)
 
 
-def line_dup_fractions(text: Column) -> dict[str, Column]:
-    """Gopher line/paragraph repetition rules (Rae et al. 2021,
-    Table A1) as PURE Column expressions — no shuffle, no explode:
-
-    - ``dup_line_frac`` / ``dup_para_frac``: fraction of lines
-      (split on newline) / paragraphs (split on blank line) that are
-      repeats of an earlier identical unit;
-    - ``dup_line_char_frac`` / ``dup_para_char_frac``: fraction of
-      CHARACTERS contained in those repeated occurrences (chars
-      beyond each unit's first occurrence — exact duplicates, so
-      total chars − chars of the distinct units).
-
-    Empty units (consecutive newlines) are dropped before counting,
-    as in the reference rule. Zero-unit docs score 0.0."""
-
-    def fracs(sep_regex: str, prefix: str) -> dict[str, Column]:
-        units = F.filter(
-            F.transform(F.split(text, sep_regex), lambda u: F.trim(u)),
-            lambda u: u != "",
-        )
-        n = F.size(units)
-        dis = F.array_distinct(units)
-        nd = F.size(dis)
-
-        def charlen(arr):
-            return F.aggregate(
-                arr, F.lit(0), lambda acc, x: acc + F.length(x)
-            )
-
-        total_c = charlen(units)
-        first_c = charlen(dis)
-        return {
-            f"dup_{prefix}_frac": F.when(
-                n > 0, F.round((n - nd).cast("double") / n, 4)
-            ).otherwise(F.lit(0.0)),
-            f"dup_{prefix}_char_frac": F.when(
-                total_c > 0,
-                F.round((total_c - first_c).cast("double") / total_c, 4),
-            ).otherwise(F.lit(0.0)),
-        }
-
-    out = {}
-    out.update(fracs(r"\n", "line"))
-    out.update(fracs(r"\n\s*\n", "para"))
-    return out
-
-
-def top_ngram_char_share(df, text_col: str, id_col: str, n: int = 2):
-    """Gopher rule "fraction of characters within the most frequent
-    n-gram": occurrences × n-gram length over total characters of the
-    normalized token stream. Same scalable shape as
-    :func:`top_ngram_share` (explode → one (id, gram) groupBy);
-    the winning gram is picked deterministically (count desc, gram
-    length desc, then lexicographically greatest — a single struct
-    max, no window). Docs with < ``n`` tokens produce no row
-    (callers left-join and coalesce). Returns (id, char_share)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    toks = F.split(norm, " ")
-    size = F.size(toks)
-    idx = F.sequence(F.lit(0), size - n)
-
-    def gram(i):
-        return F.concat_ws(" ", F.slice(toks, i + 1, n))
-
-    grams = F.when(size >= n, F.transform(idx, gram)).otherwise(
-        F.array().cast("array<string>")
-    )
-    ex = df.select(
-        F.col(id_col).alias("id"),
-        F.length(norm).alias("_tc"),
-        F.explode(grams).alias("g"),
-    )
-    cnt = ex.groupBy("id", "_tc", "g").agg(F.count("*").alias("c"))
-    best = F.max(
-        F.struct(F.col("c"), F.length("g").alias("gl"), F.col("g"))
-    )
-    return (
-        cnt.groupBy("id", "_tc")
-        .agg(best.alias("b"))
-        .select(
-            "id",
-            F.round(
-                (F.col("b.c") * F.col("b.gl")).cast("double") / F.col("_tc"), 6
-            ).alias("char_share"),
-        )
-    )
-
-
 def top_ngram_share(df, text_col: str, id_col: str, n: int = 2):
     """Gopher repetition rule: the occupancy share of the most
     frequent n-gram per document (max count / total count over raw,
@@ -642,8 +554,7 @@ def repetition_signals(
     - ``top{n}_char_frac`` (n in ``top_ns``): characters covered by
       the MOST frequent word n-gram over the normalized token stream
       (count × gram length / normalized length), most-frequent chosen
-      by the (count, gram length, gram) struct max —
-      :func:`top_ngram_char_share`'s tie-break, replicated per-row;
+      by the (count, gram length, gram) struct max;
     - ``dup{n}_char_frac`` (n in ``dup_ns``): characters covered by
       ALL n-grams occurring 2+ times (Σ count·len over duplicated
       distinct grams / normalized length, capped at 1.0 — the

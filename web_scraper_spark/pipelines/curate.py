@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators import text as TX
 from ..operators.dedup import (
+    HOT_BUCKET_CAP,
     bench_ngram_digests,
     boilerplate_line_dedup,
     connected_components,
@@ -59,7 +60,7 @@ class CurationConfig:
     jaccard_threshold: float = 0.8
     lsh_num_hashes: int = 16
     lsh_bands: int = 8
-    max_bucket_size: int | None = 2000      # LSH hot-bucket guard
+    max_bucket_size: int | None = HOT_BUCKET_CAP  # LSH hot-bucket guard
     # incremental mode: the EXISTING corpus as its persisted artifacts
     # (minhash_band_index output + (id, sig) signature table, built
     # with the SAME lsh_num_hashes/lsh_bands) — new-snapshot docs that

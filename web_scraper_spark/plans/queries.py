@@ -1544,7 +1544,7 @@ def q77_duplicate_span_ranges(spark, sf_dir):
     merged into maximal contiguous token intervals per document —
     the ranges a dedup pass would actually cut. One digest groupBy +
     one per-doc ordering window; the oracle re-derives the interval
-    merge with the same lag/cumsum sessionize."""
+    merge with the same lag/cumsum sessionization."""
     d = _load(spark, sf_dir, "documents")
     out = D.duplicate_spans(d, "text", "doc_id", window=8, min_docs=2)
     return out.select(

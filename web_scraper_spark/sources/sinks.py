@@ -165,21 +165,6 @@ def bucketed_table(spark, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def read_jsonl(spark, path: str, schema=None, keep_shard: bool = False) -> DataFrame:
-    """Round-trip reader for :func:`write_jsonl_shards` output (schema
-    recommended at scale — inference scans the data). The hive-style
-    ``_shard=N`` partition column is dropped unless ``keep_shard``;
-    filtering on it before dropping prunes whole shard directories at
-    planning time."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    out = reader.json(path)
-    if not keep_shard and "_shard" in out.columns:
-        out = out.drop("_shard")
-    return out
-
-
 def console_sink(df: DataFrame, source_col: str = "url", content_col: str = "doc", n: int = 5) -> None:
     """S10: print content with 'Content from {source}' headers
     (contxt/outputs.py:40-50); debug-scale only."""

@@ -21,8 +21,11 @@ Each batch builds both with the batch LSH operators
 groupBy(id) per hash family, so ids must be unique within a batch),
 joins its banded keys against the store ∪ itself on (band, bucket) —
 the same bounded-by-collision-probability join as the batch LSH
-operator — and VERIFIES candidates with the agreement count that
-incremental index dedup also uses (operators.dedup._agree) over the
+operator, with the same hot-bucket guard (operators.dedup._hot_keys:
+(band, bucket) groups of the store ∪ batch over ``HOT_BUCKET_CAP``
+rows are left out of the join and logged at WARNING) — and VERIFIES
+candidates with the agreement count that incremental index dedup also
+uses (operators.dedup._agree) over the
 ``verify_hashes``-component signatures: est = agreeing components /
 verify_hashes. This is the standard unbiased MinHash Jaccard
 estimator with KNOWN error (E[est] = J, Var = J(1−J)/K ⇒ std ≤
@@ -53,7 +56,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _agree, minhash_band_index, minhash_signatures
+from ..operators.dedup import (
+    HOT_BUCKET_CAP,
+    _agree,
+    _hot_keys,
+    minhash_band_index,
+    minhash_signatures,
+)
 
 _STORE_GLOB = "batch=*"
 _BANDS_SUB = "bands"
@@ -151,13 +160,17 @@ def make_near_dup_batch_fn(
             "id", F.col("vsig").alias("sig")
         )
 
+        # a boilerplate stream piles every page into one bucket per
+        # band; without the cap each batch's join is quadratic in it
+        keys = ["band", "bucket"]
+        hot = _hot_keys(corpus_bands, keys, HOT_BUCKET_CAP, "make_near_dup_batch_fn")
         # normalize with least/greatest, NOT a.id < b.id: the new doc's
         # id can sort either side of a stored doc's, and the probe side
         # is always `new` — an order filter would silently drop pairs
         # where the newcomer has the larger id
         cands = (
-            new_bands.alias("a")
-            .join(corpus_bands.alias("b"), on=["band", "bucket"])
+            new_bands.join(hot, keys, "left_anti").alias("a")
+            .join(corpus_bands.join(hot, keys, "left_anti").alias("b"), on=keys)
             .filter(F.col("a.id") != F.col("b.id"))
             .select(
                 F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),

@@ -13,9 +13,6 @@ state). This module provides the streaming-native complements:
                               ``warc_ts`` (late-data tolerant run
                               stats; the streaming analog of the
                               reference's run-stats table, S14).
-- :func:`stream_extract`    — the extraction UDF applied to a
-                              streaming DataFrame (stateless map —
-                              identical semantics to the batch path).
 - :func:`run_foreachbatch_extraction` — ``foreachBatch`` sink that
                               extracts each micro-batch and appends
                               parquet results + per-batch metrics:
@@ -69,11 +66,6 @@ def windowed_fetch_metrics(
             "host", "n_pages", "html_bytes",
         )
     )
-
-
-def stream_extract(pages: DataFrame) -> DataFrame:
-    """Stateless streaming extraction — same Arrow UDF as batch."""
-    return extract_pages(pages)
 
 
 def run_foreachbatch_extraction(
@@ -137,8 +129,8 @@ def warc_segments_stream(
     source tracks consumed segments in the query checkpoint, so each
     segment is parsed exactly once across restarts; one task per new
     file, same as the batch path. Compose with ``pages_from_warc`` +
-    ``stream_extract`` (stateless maps work unchanged on streams) or
-    a ``foreachBatch`` round sink."""
+    ``functions.udfs.extract_pages`` (stateless maps work unchanged on
+    streams) or a ``foreachBatch`` round sink."""
     from pyspark.sql import types as T
 
     from ..sources.warc import parse_warc_records
