@@ -29,7 +29,6 @@ CALLERS = [PKG, ROOT / "tools", ROOT / "perfbench", ROOT / "bench.py", ROOT / "_
 ALLOWED = {
     "crawl/config.py::update_config": "S9",
     "crawl/config.py::crawl_config_from": "S9",
-    "crawl/robots.py::robots_allowed_wildcard": "J5",
     "crawl/robots.py::robots_from_pages": "J5",
     "crawl/simulator.py::simulate_crawl": "oracle",
     "crawl/sitemaps.py::seed_urls_from_sitemaps": "S1",

@@ -120,6 +120,35 @@ def test_commit_record_matches_round_stats(spark, crawl_result):
         assert all(0 <= rec[k] <= rec["wall_s"] for k in phases)
 
 
+def test_frontier_sources_share_the_frontier_schema(spark, crawl_result):
+    """Seeds, sitemaps, recrawl candidates and a round's committed
+    frontier/ (deferred + discovered rows) all carry FRONTIER_SCHEMA's
+    column names and types, in schema order."""
+    from web_scraper_spark.crawl.frontier import FRONTIER_SCHEMA, seeds_to_frontier
+    from web_scraper_spark.crawl.recrawl import frontier_from_recrawl
+    from web_scraper_spark.crawl.sitemaps import frontier_from_sitemaps, parse_sitemaps
+
+    _, ck, _, _, _ = crawl_result
+    sitemap = spark.createDataFrame(
+        [("https://a.com/sitemap.xml", "<urlset><url><loc>https://a.com/p</loc></url></urlset>")],
+        "sitemap_url string, body string",
+    )
+    stale = spark.createDataFrame(
+        [("https://a.com/p", "20240504120000")], "url string, last_ts14 string"
+    )
+    committed = spark.read.parquet(os.path.join(ck, "round=0", "frontier"))
+    # round 0's discovered links carry the next round's id
+    assert committed.filter(F.col("round_id") == 1).count() > 0
+    want = [(f.name, f.dataType) for f in FRONTIER_SCHEMA.fields]
+    for name, df in {
+        "seeds": seeds_to_frontier(spark, ["https://a.com/p"]),
+        "sitemaps": frontier_from_sitemaps(parse_sitemaps(sitemap)),
+        "recrawl": frontier_from_recrawl(stale),
+        "round": committed,
+    }.items():
+        assert [(f.name, f.dataType) for f in df.schema.fields] == want, name
+
+
 def test_crawl_results_products_configurable(spark, tmp_path):
     """A text-only round writes results without title/markdown, flags
     md_bytes = -1 in metrics, and still discovers links (the crawl

@@ -26,7 +26,7 @@ def test_robots_disallow_prefix_filter(spark):
         ],
     )
     robots = spark.createDataFrame(
-        [("a.x", ["/private"], 1.0)], ROBOTS_SCHEMA
+        [("a.x", ["/private"], None, 1.0)], ROBOTS_SCHEMA
     )
     out = {r["url"] for r in apply_url_filters(f, robots=robots).collect()}
     assert out == {"https://a.x/allowed/p", "https://b.x/private/p"}
@@ -142,7 +142,7 @@ def test_crawl_with_robots_and_ignore_matches_simulator(spark, tmp_path):
     pages = pages_df(spark, n)
     seeds = [url_for(r) for r in range(16)]
     robots = spark.createDataFrame(
-        [("site0.example.com", ["/docs"], 0.5)], ROBOTS_SCHEMA
+        [("site0.example.com", ["/docs"], None, 0.5)], ROBOTS_SCHEMA
     )
     cfg = CrawlConfig(
         ckpt_dir=str(tmp_path / "ck"),
@@ -402,8 +402,7 @@ def test_parse_robots_rfc_subset(spark):
 
 def test_robots_longest_match_allow_precedence(spark):
     """RFC 9309 precedence: longest prefix wins, Allow wins ties, no
-    match allows — wired through apply_url_filters when the rules
-    table carries an allow column."""
+    match allows — also through apply_url_filters."""
     from web_scraper_spark.crawl.robots import robots_allowed
 
     cases = [
@@ -441,10 +440,10 @@ def test_robots_longest_match_allow_precedence(spark):
 
 
 def test_robots_wildcard_matching(spark):
-    """Wildcard variant: '*' any-run, final '$' end anchor, regex
-    metacharacters in patterns stay literal; longest pattern wins,
-    Allow wins ties."""
-    from web_scraper_spark.crawl.robots import robots_allowed_wildcard
+    """RFC 9309 wildcards in robots_allowed: '*' any-run, final '$'
+    end anchor, regex metacharacters in patterns stay literal; longest
+    pattern wins, Allow wins ties — also through apply_url_filters."""
+    from web_scraper_spark.crawl.robots import robots_allowed
 
     cases = [
         ("/fish/salmon.php", ["/fish*.php$"], [], False),   # * + $ match
@@ -462,12 +461,30 @@ def test_robots_wildcard_matching(spark):
     )
     got = df.select(
         "path", "expected",
-        robots_allowed_wildcard(
-            F.col("path"), F.col("disallow"), F.col("allow")
-        ).alias("ok"),
+        robots_allowed(F.col("path"), F.col("disallow"), F.col("allow")).alias("ok"),
     ).collect()
     for r in got:
         assert r["ok"] == r["expected"], r["path"]
+
+    # end-to-end through the frontier filter
+    f = seeds_to_frontier(
+        spark,
+        [
+            "https://a.x/fish/salmon.php",
+            "https://a.x/fish/salmon.php3",
+            "https://a.x/fish.php/open.php",
+            "https://a.x/open",
+        ],
+    )
+    rules = spark.createDataFrame(
+        [("a.x", ["/fish*.php$"], ["/fish.php/open"], None)], ROBOTS_SCHEMA
+    )
+    out = {r["url"] for r in apply_url_filters(f, robots=rules).collect()}
+    assert out == {
+        "https://a.x/fish/salmon.php3",   # '$' anchors the .php end
+        "https://a.x/fish.php/open.php",  # longer Allow wins
+        "https://a.x/open",
+    }
 
 
 def test_parse_robots_crlf_line_endings(spark):

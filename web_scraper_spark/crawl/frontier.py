@@ -3,18 +3,23 @@
 Frontier schema (``FRONTIER_SCHEMA``, FIXTURES.md §2):
     url, host, depth, priority, seq, round_id, status
 
+Every frontier source (seeds, sitemaps, recrawl candidates, a round's
+discovered links) builds its rows with :func:`frontier_rows`.
+
 The filter chain per round (all JVM-side):
-  P1 validity → P5 ignore-patterns → robots disallow (broadcast join,
-  J5) → URL-seen: exact anti-join against the seen table.
+  P1 validity → P5 ignore-patterns → robots rules (broadcast join,
+  J5; crawl/robots.py::robots_allowed) → URL-seen: exact anti-join
+  against the seen table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import columns as C
+from .robots import robots_allowed
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -28,29 +33,46 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
+# crawl/robots.py::parse_robots output: the one rules-table shape
 ROBOTS_SCHEMA = T.StructType(
     [
         T.StructField("host", T.StringType(), False),
         T.StructField("disallow", T.ArrayType(T.StringType()), True),
+        T.StructField("allow", T.ArrayType(T.StringType()), True),
         T.StructField("crawl_delay", T.DoubleType(), True),
     ]
 )
 
 
-def seeds_to_frontier(spark: SparkSession, urls: list[str], round_id: int = 0) -> DataFrame:
+def frontier_rows(
+    df: DataFrame, depth: Column, priority: Column,
+    seq: Column | None = None, round_id: int = 0,
+) -> DataFrame:
+    """``df``'s ``url`` column → pending FRONTIER_SCHEMA rows, in
+    schema order. ``host`` is derived from the url; ``seq`` defaults to
+    ``xxhash64(url)``, the stable unique tie-break every source but an
+    ordered seed list uses."""
+    # literals in their own projection: Catalyst keeps it above the
+    # caller's anti joins (run_round), which then carry five columns
+    return (
+        df.select(
+            "url",
+            C.url_host(F.col("url")).alias("host"),
+            depth.cast("int").alias("depth"),
+            priority.cast("double").alias("priority"),
+            (F.xxhash64("url") if seq is None else seq).alias("seq"),
+        )
+        .withColumn("round_id", F.lit(round_id))
+        .withColumn("status", F.lit("pending"))
+    )
+
+
+def seeds_to_frontier(spark: SparkSession, urls: list[str]) -> DataFrame:
     """S1: ordered seed list → round-0 frontier. ``seq`` preserves seed
     order (the reference's processing order, contxt/cli.py:276)."""
     rows = [(u, i) for i, u in enumerate(urls)]
     df = spark.createDataFrame(rows, "url string, seq long")
-    return df.select(
-        "url",
-        C.url_host(F.col("url")).alias("host"),
-        F.lit(0).alias("depth"),
-        F.col("seq").cast("double").alias("priority"),
-        "seq",
-        F.lit(round_id).alias("round_id"),
-        F.lit("pending").alias("status"),
-    )
+    return frontier_rows(df, F.lit(0), F.col("seq"), seq=F.col("seq"))
 
 
 def apply_url_filters(
@@ -61,35 +83,26 @@ def apply_url_filters(
 ) -> DataFrame:
     """Validity + ignore-patterns + trap + robots filters.
 
-    robots (small) is broadcast (J5). Two rule shapes are accepted:
-    the legacy (host, disallow[], crawl_delay) table applies
-    any-prefix disallow; a table that ALSO carries an ``allow`` column
-    (crawl/robots.py::parse_robots output) applies RFC 9309
-    longest-match precedence with Allow winning ties. Both are pure
-    expressions over the broadcast row. ``trap_filter`` adds the
-    pathological-URL predicate (columns.is_crawler_trap: path depth /
-    segment loops / query explosions / length) in the same codegen
-    stage — frontier hygiene a discovery-driven crawl needs so one
-    calendar page can't flood the frontier."""
+    robots (small, ROBOTS_SCHEMA) is broadcast (J5) and applied with
+    RFC 9309 longest-match precedence, Allow winning ties
+    (crawl/robots.py::robots_allowed) — a pure expression over the
+    broadcast row. ``trap_filter`` adds the pathological-URL predicate
+    (columns.is_crawler_trap: path depth / segment loops / query
+    explosions / length) in the same codegen stage — frontier hygiene
+    a discovery-driven crawl needs so one calendar page can't flood
+    the frontier."""
     out = frontier.filter(C.is_valid_url(F.col("url")))
     if ignore_patterns:
         out = out.filter(~C.matches_ignore_patterns(F.col("url"), ignore_patterns))
     if trap_filter:
         out = out.filter(~C.is_crawler_trap(F.col("url")))
     if robots is not None:
-        path = C.url_path(F.col("url"))
-        joined = out.join(F.broadcast(robots), "host", "left")
-        if "allow" in robots.columns:
-            from .robots import robots_allowed
-
-            keep = robots_allowed(path, F.col("disallow"), F.col("allow"))
-            out = joined.filter(keep).drop("disallow", "allow")
-        else:
-            disallowed = F.exists(
-                F.coalesce(F.col("disallow"), F.array()),
-                lambda p: path.startswith(p),
-            )
-            out = joined.filter(~disallowed).drop("disallow")
+        keep = robots_allowed(C.url_path(F.col("url")), F.col("disallow"), F.col("allow"))
+        out = (
+            out.join(F.broadcast(robots), "host", "left")
+            .filter(keep)
+            .drop("disallow", "allow")
+        )
     return out
 
 

@@ -33,13 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-HOST_DELAY_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType(), False),
-        T.StructField("delay_ms", T.LongType(), False),
-    ]
-)
-
 
 def update_host_delays(
     host_stats: DataFrame,
@@ -101,18 +94,6 @@ def update_host_delays(
         "host", updated.cast("long").alias("delay_ms")
     )
 
-
-SCHEDULE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), True),
-        T.StructField("priority", T.DoubleType(), True),
-        T.StructField("seq", T.LongType(), True),
-        T.StructField("crawl_delay_ms", T.LongType(), True),
-        T.StructField("scheduled_offset_ms", T.LongType(), True),
-    ]
-)
 
 HOST_STATE_SCHEMA = T.StructType(
     [

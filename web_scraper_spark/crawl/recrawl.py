@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import columns as C
+from .frontier import frontier_rows
 
 
 def recrawl_candidates(cdx: DataFrame, cutoff_ts14: str) -> DataFrame:
@@ -44,19 +44,10 @@ def recrawl_candidates(cdx: DataFrame, cutoff_ts14: str) -> DataFrame:
     )
 
 
-def frontier_from_recrawl(cands: DataFrame, round_id: int = 0) -> DataFrame:
+def frontier_from_recrawl(cands: DataFrame) -> DataFrame:
     """(url, last_ts14) candidates → FRONTIER_SCHEMA rows. Priority is
     the numeric last-capture timestamp, so the politeness scheduler's
-    (priority, seq) order serves stalest-first within each host;
-    ``seq = xxhash64(url)`` is the same stable tie-break discovered
-    links get in run_round. Pure Column work — composes with
-    ``init_crawl(seed_frontier=...)``."""
-    return cands.select(
-        "url",
-        C.url_host(F.col("url")).alias("host"),
-        F.lit(0).alias("depth"),
-        F.col("last_ts14").cast("double").alias("priority"),
-        F.xxhash64("url").alias("seq"),
-        F.lit(round_id).alias("round_id"),
-        F.lit("pending").alias("status"),
-    )
+    (priority, seq) order serves stalest-first within each host
+    (``seq`` = frontier_rows' ``xxhash64(url)``). Pure Column work —
+    composes with ``init_crawl(seed_frontier=...)``."""
+    return frontier_rows(cands, F.lit(0), F.col("last_ts14"))

@@ -1,9 +1,10 @@
 """robots.txt parsing → the broadcastable rules table (J5 input).
 
-The engine's politeness filter consumes (host, disallow[], crawl_delay)
-rows (frontier.ROBOTS_SCHEMA). This module produces them from RAW
-robots.txt bodies — the missing step when the input is a Common-Crawl
-style corpus where robots bodies are just fetched pages.
+The engine's politeness filter consumes (host, disallow[], allow[],
+crawl_delay) rows (frontier.ROBOTS_SCHEMA) and matches them with
+:func:`robots_allowed`. This module produces them from RAW robots.txt
+bodies — the missing step when the input is a Common-Crawl style
+corpus where robots bodies are just fetched pages.
 
 Parsing is RELATIONAL, not a per-row state machine: explode lines,
 classify each, mark user-agent BLOCK starts with a lag window, assign
@@ -20,17 +21,28 @@ the whole group), comment stripping at '#', stacked consecutive User-agent
 lines form one group, a User-agent line after rules starts a NEW
 group, rules before any User-agent line are ignored, empty
 Disallow/Allow values are ignored, first Crawl-delay in an applicable
-group wins. Allow lines participate via :func:`robots_allowed`
-(longest prefix match wins, Allow wins ties). Wildcard patterns
-('*' any-run, final '$' anchor) are supported by
-:func:`robots_allowed_wildcard`; the prefix variant stays the
-10^10-URL hot-path default (non-literal regexes are per-pair work).
+group wins. Matching (:func:`robots_allowed`) is complete: longest
+match wins, Allow wins ties, and patterns support the '*' any-run and
+final '$' end anchor that RFC 9309 §2.2.3 requires. Literal patterns
+stay a plain prefix test; only a pattern that holds a wildcard pays
+for a regex.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def _robots_lines(df: DataFrame, host_col: str, body_col: str) -> DataFrame:
+    """Raw bodies → (host, pos, raw, line) rows: split on CRLF or LF,
+    ``line`` stripped of its '#' comment and surrounding blanks."""
+    return df.select(
+        F.col(host_col).alias("host"),
+        F.posexplode(F.split(F.col(body_col), "\r?\n", -1)).alias("pos", "raw"),
+    ).withColumn(
+        "line", F.trim(F.element_at(F.split(F.col("raw"), "#", 2), 1))
+    )
 
 
 def parse_robots(
@@ -44,12 +56,7 @@ def parse_robots(
     Hosts whose body yields no applicable rules are absent from the
     output (the politeness join is a left join, so they simply crawl
     unrestricted)."""
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(body_col), "\r?\n", -1)).alias("pos", "raw"),
-    ).withColumn(
-        "line", F.trim(F.element_at(F.split(F.col("raw"), "#", 2), 1))
-    )
+    lines = _robots_lines(df, host_col, body_col)
     low = F.lower(F.col("line"))
     classified = lines.select(
         "host",
@@ -127,12 +134,7 @@ def robots_sitemaps(
     the 0-based line number (document order); callers dedupe/order as
     needed.
     """
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(body_col), "\r?\n", -1)).alias("pos", "raw"),
-    ).withColumn(
-        "line", F.trim(F.element_at(F.split(F.col("raw"), "#", 2), 1))
-    )
+    lines = _robots_lines(df, host_col, body_col)
     return (
         lines.filter(F.lower(F.col("line")).startswith("sitemap:"))
         .select(
@@ -146,25 +148,6 @@ def robots_sitemaps(
     )
 
 
-def robots_allowed(path, disallow, allow):
-    """RFC 9309 longest-match precedence as a pure Column expression:
-    among all PREFIX-matching rules the longest pattern wins, and an
-    Allow wins length ties; no matching rule → allowed. (Wildcard
-    patterns are a documented non-goal — the engine's filter chain is
-    prefix-based throughout.)"""
-
-    def best(patterns):
-        return F.aggregate(
-            F.coalesce(patterns, F.array().cast("array<string>")),
-            F.lit(-1),
-            lambda acc, p: F.greatest(
-                acc, F.when(path.startswith(p), F.length(p)).otherwise(F.lit(-1))
-            ),
-        )
-
-    return best(allow) >= best(disallow)
-
-
 def _pattern_regex(p):
     """robots pattern → anchored regex, in-expression: '*' matches any
     run, a FINAL '$' anchors the end, everything else is literal."""
@@ -175,24 +158,25 @@ def _pattern_regex(p):
     return F.concat(F.lit("^"), wild, F.when(ends, F.lit("$")).otherwise(F.lit("")))
 
 
-def robots_allowed_wildcard(path, disallow, allow):
-    """RFC 9309 longest-match precedence WITH wildcard patterns
-    ('*' any-run, final '$' end-anchor). Correctness-complete variant
-    of :func:`robots_allowed`; costlier — every (path, pattern) pair
-    evaluates a non-literal regex, so prefer the prefix variant on the
-    10^10-URL hot path and reserve this for hosts whose rules actually
-    contain wildcards (filter on ``array_contains``-style predicates
-    upstream if needed)."""
+def robots_allowed(path, disallow, allow):
+    """RFC 9309 longest-match precedence as a pure Column expression:
+    among all matching rules the longest pattern wins, and an Allow
+    wins length ties; no matching rule → allowed. A pattern matches
+    as a literal path prefix unless it contains '*' (any run) or ends
+    in '$' (end anchor); only those evaluate a regex."""
+
+    def matches(p):
+        wild = p.contains("*") | p.endswith("$")
+        return F.when(wild, F.rlike(path, _pattern_regex(p))).otherwise(
+            path.startswith(p)
+        )
 
     def best(patterns):
         return F.aggregate(
             F.coalesce(patterns, F.array().cast("array<string>")),
             F.lit(-1),
             lambda acc, p: F.greatest(
-                acc,
-                F.when(
-                    F.rlike(path, _pattern_regex(p)), F.length(p)
-                ).otherwise(F.lit(-1)),
+                acc, F.when(matches(p), F.length(p)).otherwise(F.lit(-1))
             ),
         )
 

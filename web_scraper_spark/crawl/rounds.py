@@ -40,6 +40,7 @@ from .frontier import (
     apply_url_blocklist,
     FRONTIER_SCHEMA,
     apply_url_filters,
+    frontier_rows,
     probe_seen,
     seeds_to_frontier,
 )
@@ -147,6 +148,46 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _history_dirs(
+    cfg: CrawlConfig, upto_round: int, table: str, marker: str
+) -> tuple[list[str], str | None]:
+    """An append-and-compact table's dirs, walked back from
+    ``upto_round``: the per-round deltas (newest first) and the dir of
+    the latest round carrying ``marker``, which holds the full set up
+    to that round (None before the first compaction)."""
+    deltas = []
+    for rid in range(upto_round, -1, -1):
+        d = os.path.join(_round_dir(cfg, rid), table)
+        if os.path.exists(os.path.join(_round_dir(cfg, rid), marker)):
+            return deltas, d
+        if os.path.isdir(d):
+            deltas.append(d)
+    return deltas, None
+
+
+def _read_history(
+    spark: SparkSession, cfg: CrawlConfig, upto_round: int, table: str, marker: str
+) -> DataFrame | None:
+    deltas, base = _history_dirs(cfg, upto_round, table, marker)
+    dirs = deltas + ([base] if base is not None else [])
+    return spark.read.parquet(*dirs) if dirs else None
+
+
+def _append_history(
+    delta: DataFrame, prior: DataFrame | None, rdir: str, table: str,
+    marker: str, compact: bool, parts: int,
+) -> None:
+    """Write the round's ``delta`` of a history table or, on a
+    compaction round, the distinct ``prior ∪ delta``, then the
+    ``marker`` that ends :func:`_history_dirs`' walk there."""
+    if compact and prior is not None:
+        delta = prior.unionByName(delta).distinct()
+    _write(delta, os.path.join(rdir, table), parts)
+    if compact:
+        with open(os.path.join(rdir, marker), "w") as fh:
+            fh.write("")
+
+
 def seen_delta_exceeds_ratio(cfg: CrawlConfig, upto_round: int) -> bool:
     """LSM-style compaction trigger: appended seen bytes since the
     last compaction vs the compacted base size (file metadata only —
@@ -154,34 +195,18 @@ def seen_delta_exceeds_ratio(cfg: CrawlConfig, upto_round: int) -> bool:
     policy)."""
     if cfg.seen_compact_ratio is None:
         return False
-    delta, base, rid = 0, 0, upto_round
-    while rid >= 0:
-        d = os.path.join(_round_dir(cfg, rid), "seen")
-        if os.path.exists(os.path.join(_round_dir(cfg, rid), "_SEEN_COMPACT")):
-            base = _dir_bytes(d)
-            break
-        delta += _dir_bytes(d)
-        rid -= 1
-    return base > 0 and delta >= cfg.seen_compact_ratio * base
+    deltas, base = _history_dirs(cfg, upto_round, "seen", "_SEEN_COMPACT")
+    base_bytes = _dir_bytes(base) if base is not None else 0
+    return base_bytes > 0 and (
+        sum(map(_dir_bytes, deltas)) >= cfg.seen_compact_ratio * base_bytes
+    )
 
 
 def read_seen(spark: SparkSession, cfg: CrawlConfig, upto_round: int) -> DataFrame | None:
     """Union of the append-only per-round seen tables up to (and
     including) ``upto_round``. A compacted round's seen dir holds the
     full set, so reading starts at the latest compaction point."""
-    dirs = []
-    start = upto_round
-    while start >= 0:
-        d = os.path.join(_round_dir(cfg, start), "seen")
-        if os.path.exists(os.path.join(_round_dir(cfg, start), "_SEEN_COMPACT")):
-            dirs.append(d)
-            break
-        if os.path.isdir(d):
-            dirs.append(d)
-        start -= 1
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_history(spark, cfg, upto_round, "seen", "_SEEN_COMPACT")
 
 
 def read_host_edges(
@@ -191,33 +216,17 @@ def read_host_edges(
     authority rounds write the cumulative distinct set + an
     ``_EDGES_COMPACT`` marker, so the walk stops there (same LSM shape
     as :func:`read_seen`)."""
-    dirs = []
-    rid = upto_round
-    while rid >= 0:
-        d = os.path.join(_round_dir(cfg, rid), "host_edges")
-        if os.path.exists(os.path.join(_round_dir(cfg, rid), "_EDGES_COMPACT")):
-            dirs.append(d)
-            break
-        if os.path.isdir(d):
-            dirs.append(d)
-        rid -= 1
-    if not dirs:
-        return None
-    return spark.read.parquet(*dirs)
+    return _read_history(spark, cfg, upto_round, "host_edges", "_EDGES_COMPACT")
 
 
 def read_host_rank(
     spark: SparkSession, cfg: CrawlConfig, upto_round: int
 ) -> DataFrame | None:
     """Latest committed (host, rank_micros) authority table at or
-    before ``upto_round``, or None before the first authority round."""
-    rid = upto_round
-    while rid >= 0:
-        d = os.path.join(_round_dir(cfg, rid), "host_rank")
-        if os.path.isdir(d):
-            return spark.read.parquet(d)
-        rid -= 1
-    return None
+    before ``upto_round``, or None before the first authority round.
+    Each authority round writes the whole table, so its dir is its own
+    compaction marker."""
+    return _read_history(spark, cfg, upto_round, "host_rank", "host_rank")
 
 
 def run_round(
@@ -288,7 +297,7 @@ def _run_round(
     # -- politeness scheduling -----------------------------------------
     delay_col = (
         (F.col("crawl_delay") * 1000).cast("long")
-        if robots is not None and "crawl_delay" in candidates.columns
+        if robots is not None
         else F.lit(None).cast("long")
     )
     sched_in = fresh.select(
@@ -332,7 +341,7 @@ def _run_round(
 
     # -- fetch = J6 equi-join against the pages corpus ------------------
     fetched = schedule.join(
-        pages.select("url", "html", F.col("warc_ts")), "url", "left"
+        pages.select("url", "html"), "url", "left"
     ).withColumn(
         "fetch_status", F.when(F.col("html").isNotNull(), "fetched").otherwise("failed")
     ).persist()
@@ -470,19 +479,13 @@ def _run_round(
         and round_id % cfg.seen_compact_every == cfg.seen_compact_every - 1
     ) or seen_delta_exceeds_ratio(cfg, round_id - 1)
 
-    def _write_seen():
-        if compact and seen is not None:
-            full = seen.select("url").unionByName(scheduled_urls).distinct()
-            _write(full, os.path.join(rdir, "seen"), cfg.n_shards)
-            with open(os.path.join(rdir, "_SEEN_COMPACT"), "w") as fh:
-                fh.write("")
-        else:
-            _write(scheduled_urls, os.path.join(rdir, "seen"), cfg.n_shards)
-            if compact:  # round 0 of a compaction cycle with no prior seen
-                with open(os.path.join(rdir, "_SEEN_COMPACT"), "w") as fh:
-                    fh.write("")
-
-    write_tasks.append(_write_seen)
+    write_tasks.append(
+        lambda: _append_history(
+            scheduled_urls,
+            None if seen is None else seen.select("url"),
+            rdir, "seen", "_SEEN_COMPACT", compact, cfg.n_shards,
+        )
+    )
 
     write_tasks.append(
         lambda: _write(
@@ -497,9 +500,8 @@ def _run_round(
     # pass later and must NOT re-enter the frontier (at 10^10 URLs the
     # frontier would otherwise accrete permanent junk); seen rows are
     # gone by definition.
-    scheduled_set = schedule.select("url")
     deferred = fresh.select([f.name for f in FRONTIER_SCHEMA.fields]).join(
-        scheduled_set, "url", "left_anti"
+        scheduled_urls, "url", "left_anti"
     )
     # Discovery ordering must be a pure function of the data, never of
     # partitioning (SURVEY.md §7 hard-part 2): priority = (first
@@ -515,16 +517,12 @@ def _run_round(
         F.min(F.struct("parent_seq", "pos", "parent_depth")).alias("d")
     )
     discovered = (
-        first_discovery.select(
-            "url",
-            C.url_host(F.col("url")).alias("host"),
-            (F.col("d.parent_depth") + 1).cast("int").alias("depth"),
-            (F.col("d.parent_seq").cast("double") * 10000.0 + F.col("d.pos")).alias("priority"),
-            F.xxhash64("url").alias("seq"),
+        frontier_rows(
+            first_discovery,
+            F.col("d.parent_depth") + 1,
+            F.col("d.parent_seq").cast("double") * 10000.0 + F.col("d.pos"),
+            round_id=round_id + 1,
         )
-        .withColumn("round_id", F.lit(round_id + 1))
-        .withColumn("status", F.lit("pending"))
-        .select([f.name for f in FRONTIER_SCHEMA.fields])
         .join(
             scheduled_urls if seen is None else seen.select("url").unionByName(scheduled_urls),
             "url",
@@ -537,9 +535,10 @@ def _run_round(
         # it carries the earlier discovery's priority.
         .join(deferred.select("url"), "url", "left_anti")
     )
-    next_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(discovered)
     obs_next = Observation("n_next")
-    next_frontier = next_frontier.observe(obs_next, F.count(F.lit(1)).alias("n"))
+    next_frontier = deferred.unionByName(discovered).observe(
+        obs_next, F.count(F.lit(1)).alias("n")
+    )
     write_tasks.append(
         lambda: _write(
             next_frontier, os.path.join(rdir, "frontier"),
@@ -563,27 +562,24 @@ def _run_round(
             .filter(F.col("dst").isNotNull() & (F.col("dst") != F.col("src")))
             .distinct()
         )
-        edges_dir = os.path.join(rdir, "host_edges")
 
         def _write_authority():
-            if round_id % cfg.authority_every == cfg.authority_every - 1:
-                prior = read_host_edges(spark, cfg, round_id - 1)
-                cum = (
-                    delta_edges
-                    if prior is None
-                    else prior.unionByName(delta_edges).distinct()
+            compact_edges = round_id % cfg.authority_every == cfg.authority_every - 1
+            _append_history(
+                delta_edges,
+                read_host_edges(spark, cfg, round_id - 1) if compact_edges else None,
+                rdir, "host_edges", "_EDGES_COMPACT", compact_edges,
+                _STATE_WRITE_PARTITIONS,
+            )
+            if compact_edges:
+                rank = integer_pagerank(
+                    spark.read.parquet(os.path.join(rdir, "host_edges"))
                 )
-                _write(cum, edges_dir, _STATE_WRITE_PARTITIONS)
-                with open(os.path.join(rdir, "_EDGES_COMPACT"), "w") as fh:
-                    fh.write("")
-                rank = integer_pagerank(spark.read.parquet(edges_dir))
                 _write(
                     rank.select(F.col("node").alias("host"), "rank_micros"),
                     os.path.join(rdir, "host_rank"),
                     _STATE_WRITE_PARTITIONS,
                 )
-            else:
-                _write(delta_edges, edges_dir, _STATE_WRITE_PARTITIONS)
 
         write_tasks.append(_write_authority)
 
@@ -703,11 +699,6 @@ def run_crawl(
             raise RuntimeError("nothing to resume")
         start = last + 1
     else:
-        if seed_urls is None and seed_sitemaps is None and seed_frontier is None:
-            raise ValueError(
-                "seed_urls, seed_sitemaps and/or seed_frontier required "
-                "for a fresh crawl"
-            )
         init_crawl(
             spark, cfg, seed_urls,
             seed_sitemaps=seed_sitemaps, seed_frontier=seed_frontier,

@@ -119,7 +119,7 @@ def seed_urls_from_sitemaps(parsed: DataFrame) -> DataFrame:
     )
 
 
-def frontier_from_sitemaps(parsed: DataFrame, round_id: int = 0) -> DataFrame:
+def frontier_from_sitemaps(parsed: DataFrame) -> DataFrame:
     """Round-0 frontier rows (FRONTIER_SCHEMA) from
     :func:`parse_sitemaps` output — the sitemap-driven analog of
     ``seeds_to_frontier`` and the executed seeding path of
@@ -131,8 +131,7 @@ def frontier_from_sitemaps(parsed: DataFrame, round_id: int = 0) -> DataFrame:
     - ``priority`` = the minimum ``pos`` across the url's occurrences
       (the sitemap author's stated order; entries early in ANY sitemap
       schedule first, interleaved across sitemaps);
-    - ``seq`` = ``xxhash64(url)`` — the same stable unique tie-break
-      discovered links get in ``run_round``.
+    - ``seq`` = :func:`frontier.frontier_rows`' ``xxhash64(url)``.
 
     Leaf entries only: ``is_index`` locs are MORE sitemaps — fetch
     them and include their bodies in the input table instead (one
@@ -140,23 +139,14 @@ def frontier_from_sitemaps(parsed: DataFrame, round_id: int = 0) -> DataFrame:
     every body it is given, so a table containing both the index and
     its children seeds from the children's entries).
     """
-    from ..functions import columns as C
-    from .frontier import FRONTIER_SCHEMA
+    from .frontier import frontier_rows
 
     first = (
         parsed.filter(~F.col("is_index"))
         .groupBy(F.col("loc").alias("url"))
         .agg(F.min("pos").alias("p"))
     )
-    return first.select(
-        "url",
-        C.url_host(F.col("url")).alias("host"),
-        F.lit(0).cast("int").alias("depth"),
-        F.col("p").cast("double").alias("priority"),
-        F.xxhash64("url").alias("seq"),
-        F.lit(round_id).cast("int").alias("round_id"),
-        F.lit("pending").alias("status"),
-    ).select([f.name for f in FRONTIER_SCHEMA.fields])
+    return frontier_rows(first, F.lit(0), F.col("p"))
 
 
 def sitemap_seeds_from_robots(

@@ -5,6 +5,9 @@ JVM↔Python boundary exactly once and returns every extraction product
 (cleaned html, extracted text, markdown body, OpenGraph map, image
 records, title) in a single struct — downstream consumers select
 fields, so Catalyst prunes unreferenced products at the Arrow writer.
+The two counts, ``token_count`` (len(clean_html) // 4) and
+``n_images``, are computed per row inside the same UDF; no JVM
+post-pass recomputes them.
 
 Per-row semantics delegate to :mod:`web_scraper_spark.html` (the
 deterministic extraction core), one parse per page; nothing else in
@@ -93,18 +96,18 @@ def extract_page_record(html: str, url: str) -> dict:
 ALL_PRODUCTS = tuple(f.name for f in EXTRACTED_STRUCT.fields)
 
 
-# Counts computable inside the UDF from products the extraction
-# already materializes per-row — shipping a 4-byte int instead of the
-# whole carrier column (clean_html for token_count, the image structs
-# for n_images) across Arrow. Semantics are identical to the JVM
-# post-pass: char4 = len(clean_html) // 4, n_images = len(images).
+# Counts the UDF computes from products every record already holds:
+# a 4-byte int crosses Arrow instead of the carrier column (clean_html
+# for token_count, the image structs for n_images). token_count is the
+# reference's tiktoken-absent estimator, len(clean_html) // 4
+# (contxt/scraper.py:423-426).
 _COMPUTED = {
     "token_count": (T.IntegerType(), lambda rec: len(rec["clean_html"]) // 4),
     "n_images": (T.IntegerType(), lambda rec: len(rec["images"])),
 }
 
 
-def make_extract_udf(products: tuple[str, ...] = ALL_PRODUCTS):
+def make_extract_udf(products: tuple[str, ...]):
     """Build a struct-returning extraction UDF restricted to the
     requested products — column pruning *through* the Arrow boundary.
 
@@ -113,18 +116,14 @@ def make_extract_udf(products: tuple[str, ...] = ALL_PRODUCTS):
     carries only those columns (markdown/clean_html dominate the
     return volume; a counts-only consumer ships ~50x fewer bytes).
     Besides the raw EXTRACTED_STRUCT fields, the pseudo-products
-    ``token_count``/``n_images`` are computed per-row INSIDE the UDF —
-    the crawl hot path ships the counts without the carrier columns
-    (the per-row record materializes clean_html/images regardless; only
-    the Arrow transfer is saved).
+    ``token_count``/``n_images`` are computed per-row INSIDE the UDF,
+    so a consumer of the counts never ships the carrier columns (the
+    per-row record materializes clean_html/images regardless; only the
+    Arrow transfer is saved).
     """
     want = set(products)
     fields = [f for f in EXTRACTED_STRUCT.fields if f.name in want]
-    computed = [
-        (n, fn)
-        for n, (dt, fn) in _COMPUTED.items()
-        if n in want and n not in {f.name for f in fields}
-    ]
+    computed = [(n, fn) for n, (dt, fn) in _COMPUTED.items() if n in want]
     schema = T.StructType(
         fields + [T.StructField(n, _COMPUTED[n][0]) for n, _ in computed]
     )
@@ -140,8 +139,8 @@ def make_extract_udf(products: tuple[str, ...] = ALL_PRODUCTS):
                     n: ([] if n in ("images", "links", "anchors") else None)
                     for n in names
                 }
-                # match the JVM post-pass on null html: size([]) = 0
-                # images but a NULL token count (length(NULL) is NULL)
+                # null html: 0 images (no image structs) but a NULL
+                # token count (no clean_html to measure)
                 row.update({n: 0 if n == "n_images" else None for n, _ in computed})
                 rows.append(row)
                 continue
@@ -156,62 +155,31 @@ def make_extract_udf(products: tuple[str, ...] = ALL_PRODUCTS):
     return extract_udf
 
 
-extract_page_udf = make_extract_udf()
-
-
 def extract_pages(
     df: DataFrame,
     html_col: str = "html",
     url_col: str = "url",
     products: tuple[str, ...] | None = None,
 ) -> DataFrame:
-    """pages → extracted: one Arrow round-trip, then JVM-side products.
+    """pages → extracted: one Arrow round-trip.
 
     ``products`` limits which extraction outputs cross the Arrow
-    boundary (None = all). token_count uses the reference's fallback
-    estimator over clean_html (len // 4, contxt/scraper.py:423-426):
-    when clean_html is itself a requested product the count is a pure
-    Column expression over it (JVM, codegen — the tokenizer seam);
-    when it is NOT requested the count is computed inside the UDF and
-    only the int crosses Arrow — the crawl hot path never ships the
-    page-sized carrier column just to derive a count (the
-    extract-full-vs-pruned scaling gap in BENCH/BASELINE.md). Same
-    for n_images vs the images struct array.
+    boundary (None = all). ``token_count`` (len(clean_html) // 4) and
+    ``n_images`` (len(images)) are always computed inside the UDF, so
+    only the ints cross Arrow whether or not their carrier columns
+    are requested; they come after the other products. Null html
+    gives a null token_count and 0 images.
     """
-    want_tokens = products is None or "token_count" in products
-    want_nimages = products is None or "n_images" in products
     if products is None:
-        base = list(ALL_PRODUCTS)
-    else:
-        base = [p for p in products if p in ALL_PRODUCTS]
-    # carrier requested → JVM-side count over it (keeps the tokenizer
-    # seam swappable without touching the UDF); carrier absent →
-    # in-UDF pseudo-product, carrier never crosses Arrow
-    jvm_tokens = want_tokens and "clean_html" in base
-    jvm_nimages = want_nimages and "images" in base
+        products = (*ALL_PRODUCTS, *_COMPUTED)
     udf_prods = tuple(
         dict.fromkeys(
-            base
-            + (["token_count"] if want_tokens and not jvm_tokens else [])
-            + (["n_images"] if want_nimages and not jvm_nimages else [])
+            [p for p in products if p in ALL_PRODUCTS]
+            + [n for n in _COMPUTED if n in products]
         )
     )
-    udf = extract_page_udf if udf_prods == ALL_PRODUCTS else make_extract_udf(udf_prods)
-    ex = udf(F.col(html_col), F.col(url_col))
+    ex = make_extract_udf(udf_prods)(F.col(html_col), F.col(url_col))
     out = df.withColumn("_ex", ex)
     for name in udf_prods:
         out = out.withColumn(name, F.col(f"_ex.{name}"))
-    out = out.drop("_ex", html_col)
-    if jvm_tokens:
-        # A4 via the tokenizer seam: the char4 fallback matches the
-        # reference's tiktoken-absent branch (contxt/scraper.py:423-426)
-        # and compiles to a JVM expression; a real cluster swaps the
-        # encoder without touching this call site.
-        from .tokenizer import Char4Encoder, token_count_column
-
-        out = out.withColumn(
-            "token_count", token_count_column(F.col("clean_html"), Char4Encoder())
-        )
-    if jvm_nimages:
-        out = out.withColumn("n_images", F.size("images"))
-    return out
+    return out.drop("_ex", html_col)

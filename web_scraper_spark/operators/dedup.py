@@ -666,6 +666,39 @@ def ngram_contamination(
     )
 
 
+def _explode_units(
+    df: DataFrame, text_col: str, id_col: str, sep: str, unit: str, key
+) -> DataFrame:
+    """Split each document on the literal ``sep`` into (id, pos,
+    ``unit``) rows, keyed by ``_k = key(unit column)`` — a digest, so
+    the units shuffle as 32-byte keys, never as text."""
+    import re as _re
+
+    return df.select(
+        F.col(id_col).alias("id"),
+        # Spark split takes a REGEX — escape the literal separator
+        F.posexplode(F.split(F.col(text_col), _re.escape(sep), -1)).alias("pos", unit),
+    ).withColumn("_k", key(F.col(unit)))
+
+
+def _rebuild_units(units: DataFrame, kept: DataFrame, unit: str, sep: str) -> DataFrame:
+    """(id, n_total, clean_text, n_kept): each document of ``units``
+    with its ``kept`` units rejoined in original order (one groupBy(id)
+    array_sort fold); NULL clean_text/n_kept if none was kept."""
+    totals = units.groupBy("id").agg(F.count("*").alias("n_total"))
+    rebuilt = (
+        kept.select("id", F.struct("pos", unit).alias("p"))
+        .groupBy("id")
+        .agg(
+            F.concat_ws(
+                sep, F.transform(F.array_sort(F.collect_list("p")), lambda x: x[unit])
+            ).alias("clean_text"),
+            F.count("*").alias("n_kept"),
+        )
+    )
+    return totals.join(rebuilt, "id", "left")
+
+
 def global_sentence_dedup(
     df: DataFrame,
     text_col: str,
@@ -684,28 +717,13 @@ def global_sentence_dedup(
 
     Returns (id, clean_text, n_kept, n_total).
     """
-    import re as _re
-
-    sent = df.select(
-        F.col(id_col).alias("id"),
-        # Spark split takes a REGEX — escape the literal separator
-        F.posexplode(F.split(F.col(text_col), _re.escape(sep), -1)).alias("pos", "s"),
-    ).withColumn("_k", F.md5(normalize_text(F.col("s"))))
-    kept = first_seen_dedup(sent, ["_k"], [F.col("id"), F.col("pos")])
-    totals = sent.groupBy("id").agg(F.count("*").alias("n_total"))
-    rebuilt = (
-        kept.select("id", F.struct("pos", "s").alias("p"))
-        .groupBy("id")
-        .agg(
-            F.concat_ws(
-                sep, F.transform(F.array_sort(F.collect_list("p")), lambda x: x["s"])
-            ).alias("clean_text"),
-            F.count("*").alias("n_kept"),
-        )
+    sent = _explode_units(
+        df, text_col, id_col, sep, "s", lambda s: F.md5(normalize_text(s))
     )
-    # left join from totals: a document whose every sentence was seen
-    # earlier disappears from `rebuilt` → empty clean_text, n_kept 0
-    return totals.join(rebuilt, "id", "left").select(
+    kept = first_seen_dedup(sent, ["_k"], [F.col("id"), F.col("pos")])
+    # a document whose every sentence was seen earlier has no rebuilt
+    # row → empty clean_text, n_kept 0
+    return _rebuild_units(sent, kept, "s", sep).select(
         "id",
         F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
@@ -815,14 +833,7 @@ def boilerplate_line_dedup(
     boilerplate this removes is byte-identical template output.
 
     Returns (id, clean_text, n_removed, n_total)."""
-    import re as _re
-
-    lines = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), _re.escape(sep), -1)).alias(
-            "pos", "line"
-        ),
-    ).withColumn("_k", F.md5(F.col("line")))
+    lines = _explode_units(df, text_col, id_col, sep, "line", F.md5)
     freq = (
         lines.select("_k", "id")
         .distinct()
@@ -831,19 +842,7 @@ def boilerplate_line_dedup(
     )
     hot = freq.filter(F.col("_df") >= min_doc_freq).select("_k")
     kept = lines.join(hot, "_k", "left_anti")
-    totals = lines.groupBy("id").agg(F.count("*").alias("n_total"))
-    rebuilt = (
-        kept.select("id", F.struct("pos", "line").alias("p"))
-        .groupBy("id")
-        .agg(
-            F.concat_ws(
-                sep,
-                F.transform(F.array_sort(F.collect_list("p")), lambda x: x["line"]),
-            ).alias("clean_text"),
-            F.count("*").alias("n_kept"),
-        )
-    )
-    return totals.join(rebuilt, "id", "left").select(
+    return _rebuild_units(lines, kept, "line", sep).select(
         "id",
         F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         (F.col("n_total") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(

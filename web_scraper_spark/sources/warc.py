@@ -332,6 +332,74 @@ def anchor_edges_from_pages(pages: DataFrame) -> DataFrame:
     )
 
 
+def _warc_record(
+    warc_type: bytes, url, ts, body: bytes, content_type: bytes = b""
+) -> bytes:
+    """One uncompressed WARC/1.0 record; a missing capture time (None
+    or NaT) is written as the epoch."""
+    date = "1970-01-01T00:00:00Z" if pd.isna(ts) else ts.strftime("%Y-%m-%dT%H:%M:%SZ")
+    return (
+        b"WARC/1.0\r\n"
+        b"WARC-Type: " + warc_type + b"\r\n"
+        b"WARC-Target-URI: " + str(url).encode("utf-8") + b"\r\n"
+        b"WARC-Date: " + date.encode() + b"\r\n"
+        + content_type
+        + b"Content-Length: " + str(len(body)).encode() + b"\r\n"
+        b"\r\n" + body + b"\r\n\r\n"
+    )
+
+
+def _write_segments(
+    rows: DataFrame, out_dir: str, ext: str, gzip_records: bool, record
+) -> DataFrame:
+    """Stream each partition of ``rows`` into one segment file
+    ``seg-{partition:05d}{ext}`` under ``out_dir``: ``record`` maps a
+    row's column values to its uncompressed WARC record bytes, or None
+    to skip the row; with ``gzip_records`` each record is its own gzip
+    member. Empty partitions write no file. Returns the manifest
+    DataFrame (path, n_records, n_bytes); an action runs the export."""
+    import os
+
+    from pyspark import TaskContext
+
+    os.makedirs(out_dir, exist_ok=True)
+    cols = rows.columns
+
+    def dump(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # write to an ATTEMPT-unique temp name and rename on success:
+        # under speculative execution or a retry racing a zombie
+        # attempt, two attempts would otherwise interleave writes into
+        # the same seg path (r6 ADVICE); os.replace is atomic on a
+        # POSIX filesystem, so the committed segment is always one
+        # attempt's complete output. Re-evaluating the returned
+        # manifest still rewrites segments — collect/checkpoint it
+        # once (docstring contract).
+        ctx = TaskContext.get()
+        path = os.path.join(out_dir, f"seg-{ctx.partitionId():05d}{ext}")
+        tmp = f"{path}.attempt-{ctx.taskAttemptId()}.tmp"
+        n_rec = n_bytes = 0
+        fh = None
+        for pdf in batches:
+            for values in zip(*(pdf[c] for c in cols)):
+                rec = record(*values)
+                if rec is None:
+                    continue
+                if fh is None:
+                    fh = open(tmp, "wb")
+                out = gzip.compress(rec) if gzip_records else rec
+                fh.write(out)
+                n_rec += 1
+                n_bytes += len(out)
+        if fh is not None:
+            fh.close()
+            os.replace(tmp, path)
+            yield pd.DataFrame(
+                {"path": [path], "n_records": [n_rec], "n_bytes": [n_bytes]}
+            )
+
+    return rows.mapInPandas(dump, schema="path string, n_records long, n_bytes long")
+
+
 def write_wet_dir(
     wet: DataFrame,
     out_dir: str,
@@ -341,62 +409,25 @@ def write_wet_dir(
     ``WARC-Type: conversion`` records, one gzip member per record,
     mirroring :func:`write_warc_dir`'s layout so the same
     :func:`read_warc_dir` → filter(warc_type='conversion') path reads
-    them back (round-trip pinned by test). Returns the manifest
-    DataFrame (path, n_records, n_bytes); an action runs the export."""
-    import os as _os
-    from typing import Iterator as _It
+    them back (round-trip pinned by test). Rows with null text write
+    no record; without a ``warc_ts`` column every record carries the
+    epoch date. Returns the manifest DataFrame (path, n_records,
+    n_bytes); an action runs the export."""
 
-    import pandas as _pd
-    from pyspark import TaskContext
+    def record(url, text, ts=None):
+        if text is None:
+            return None
+        return _warc_record(
+            b"conversion", url, ts, str(text).encode("utf-8"),
+            b"Content-Type: text/plain\r\n",
+        )
 
-    _os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.wet.gz" if gzip_records else ".warc.wet"
-    has_ts = "warc_ts" in wet.columns
-    cols = ["url", "text"] + (["warc_ts"] if has_ts else [])
-
-    def dump(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        # attempt-unique temp + atomic rename, as in write_warc_dir
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        path = _os.path.join(out_dir, f"seg-{pid:05d}{ext}")
-        tmp = f"{path}.attempt-{ctx.taskAttemptId()}.tmp"
-        n_rec = n_bytes = 0
-        fh = None
-        for pdf in batches:
-            ts_col = pdf["warc_ts"] if has_ts else [None] * len(pdf)
-            for url, text, ts in zip(pdf["url"], pdf["text"], ts_col):
-                if text is None:
-                    continue
-                if fh is None:
-                    fh = open(tmp, "wb")
-                body = str(text).encode("utf-8")
-                date = (
-                    "1970-01-01T00:00:00Z"
-                    if ts is None or _pd.isna(ts)
-                    else ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-                )
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: conversion\r\n"
-                    b"WARC-Target-URI: " + str(url).encode("utf-8") + b"\r\n"
-                    b"WARC-Date: " + date.encode() + b"\r\n"
-                    b"Content-Type: text/plain\r\n"
-                    b"Content-Length: " + str(len(body)).encode() + b"\r\n"
-                    b"\r\n" + body + b"\r\n\r\n"
-                )
-                out = gzip.compress(rec) if gzip_records else rec
-                fh.write(out)
-                n_rec += 1
-                n_bytes += len(out)
-        if fh is not None:
-            fh.close()
-            _os.replace(tmp, path)
-            yield _pd.DataFrame(
-                {"path": [path], "n_records": [n_rec], "n_bytes": [n_bytes]}
-            )
-
-    return wet.select(*cols).mapInPandas(
-        dump, schema="path string, n_records long, n_bytes long"
+    return _write_segments(
+        wet.select("url", "text", *(["warc_ts"] if "warc_ts" in wet.columns else [])),
+        out_dir,
+        ".warc.wet.gz" if gzip_records else ".warc.wet",
+        gzip_records,
+        record,
     )
 
 
@@ -423,65 +454,17 @@ def write_warc_dir(
     (documented lossy half of the round trip; bodies round-trip
     byte-exactly, pinned by test). Returns the manifest DataFrame —
     an ACTION is still needed to run the export."""
-    import os as _os
-    from typing import Iterator as _It
 
-    import pandas as _pd
-    from pyspark import TaskContext
+    def record(url, ts, html):
+        if html is None:
+            return None
+        http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + bytes(html)
+        return _warc_record(b"response", url, ts, http)
 
-    _os.makedirs(out_dir, exist_ok=True)
-    ext = ".warc.gz" if gzip_records else ".warc"
-
-    def dump(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        # write to an ATTEMPT-unique temp name and rename on success:
-        # under speculative execution or a retry racing a zombie
-        # attempt, two attempts would otherwise interleave writes into
-        # the same seg path (r6 ADVICE); os.replace is atomic on a
-        # POSIX filesystem, so the committed segment is always one
-        # attempt's complete output. Re-evaluating the returned
-        # manifest still rewrites segments — collect/checkpoint it
-        # once (docstring contract).
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        path = _os.path.join(out_dir, f"seg-{pid:05d}{ext}")
-        tmp = f"{path}.attempt-{ctx.taskAttemptId()}.tmp"
-        n_rec = n_bytes = 0
-        fh = None
-        for pdf in batches:
-            for url, ts, html in zip(pdf["url"], pdf["warc_ts"], pdf["html"]):
-                if html is None:
-                    continue
-                if fh is None:  # empty partitions write no file
-                    fh = open(tmp, "wb")
-                body = bytes(html)
-                http = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                    + body
-                )
-                date = (
-                    "1970-01-01T00:00:00Z"
-                    if _pd.isna(ts)  # arrives as NaT, not None
-                    else ts.strftime("%Y-%m-%dT%H:%M:%SZ")
-                )
-                rec = (
-                    b"WARC/1.0\r\n"
-                    b"WARC-Type: response\r\n"
-                    b"WARC-Target-URI: " + str(url).encode("utf-8") + b"\r\n"
-                    b"WARC-Date: " + date.encode() + b"\r\n"
-                    b"Content-Length: " + str(len(http)).encode() + b"\r\n"
-                    b"\r\n" + http + b"\r\n\r\n"
-                )
-                out = gzip.compress(rec) if gzip_records else rec
-                fh.write(out)
-                n_rec += 1
-                n_bytes += len(out)
-        if fh is not None:
-            fh.close()
-            _os.replace(tmp, path)
-            yield _pd.DataFrame(
-                {"path": [path], "n_records": [n_rec], "n_bytes": [n_bytes]}
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(
-        dump, schema="path string, n_records long, n_bytes long"
+    return _write_segments(
+        pages.select("url", "warc_ts", "html"),
+        out_dir,
+        ".warc.gz" if gzip_records else ".warc",
+        gzip_records,
+        record,
     )
