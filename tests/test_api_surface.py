@@ -1,4 +1,5 @@
-"""The package ships no test-only public function.
+"""The package ships no test-only public function and no option that
+nothing sets.
 
 Every public top-level def or class in ``web_scraper_spark/`` must be
 referenced, as a Name or an Attribute, by code in the package,
@@ -11,6 +12,13 @@ name inside its body.
 The unreferenced set must equal ``ALLOWED`` exactly: a new function
 only tests call fails here, and so does an entry whose function has
 gained a caller or is gone.
+
+An option is a defaulted parameter of a public top-level function, or
+a defaulted field of a public dataclass. It is set when a call of the
+function's (or class's) name in those places or in ``tests/`` passes
+it by keyword or by position, or passes a ``*``/``**`` splat; a
+dataclass field is also set by an attribute assignment of its name.
+The unset options must equal ``OPTIONS_ALLOWED`` exactly.
 """
 
 import ast
@@ -21,6 +29,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "web_scraper_spark"
 CALLERS = [PKG, ROOT / "tools", ROOT / "perfbench", ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+OPTION_SETTERS = [*CALLERS, ROOT / "tests"]
 
 # name -> reason: the COVERAGE.md code of the paper surface it serves,
 # "oracle" for a reference implementation the tests check production
@@ -49,6 +58,7 @@ ALLOWED = {
     "operators/video.py::render_video_raw": "oracle",
     "operators/video.py::render_video_chapters": "oracle",
     "operators/video.py::render_container": "oracle",
+    "sources/sinks.py::output_extension": "F19",
     "sources/sinks.py::derive_filenames": "S11",
     "sources/sinks.py::write_documents_as_files": "S11",
     "sources/sinks.py::write_jsonl_shards": "S11",
@@ -70,8 +80,31 @@ ALLOWED = {
 }
 
 
-def _sources():
-    for src in CALLERS:
+# option -> reason: "deployment" for a value that depends on where and
+# how the package runs (input globs, the robots user agent, sink write
+# mode and compression, streaming triggers), "oracle" for a knob of a
+# reference implementation the tests check production code against,
+# or the COVERAGE.md code of the reference option it reproduces.
+OPTIONS_ALLOWED = {
+    "crawl/robots.py::parse_robots(agent)": "deployment",
+    "crawl/simulator.py::SimConfig.default_delay_ms": "oracle",
+    "html/htmlfmt.py::format_html_document(clean)": "D5",
+    "html/markdown.py::format_markdown_document(add_frontmatter)": "D3",
+    "html/markdown.py::format_markdown_document(include_source_link)": "D3",
+    "html/xmlfmt.py::format_xml_document(images)": "D4",
+    "html/xmlfmt.py::format_xml_document(image_map)": "D4",
+    "html/xmlfmt.py::format_xml_document(preserve_attrs)": "D4",
+    "sources/sinks.py::write_jsonl_shards(compression)": "deployment",
+    "sources/sinks.py::write_jsonl_shards(mode)": "deployment",
+    "sources/sinks.py::write_bucketed(mode)": "deployment",
+    "streaming/stream.py::run_foreachbatch_extraction(available_now)": "deployment",
+    "streaming/stream.py::warc_segments_stream(glob)": "deployment",
+    "streaming/stream.py::warc_segments_stream(max_files_per_trigger)": "deployment",
+}
+
+
+def _sources(roots=CALLERS):
+    for src in roots:
         yield from sorted(src.rglob("*.py")) if src.is_dir() else [src]
 
 
@@ -83,10 +116,10 @@ def _refs(node) -> Counter:
     )
 
 
-def _is_query(d) -> bool:
+def _decorated(d, name: str) -> bool:
     for dec in d.decorator_list:
         fn = dec.func if isinstance(dec, ast.Call) else dec
-        if isinstance(fn, ast.Name) and fn.id == "query":
+        if (fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)) == name:
             return True
     return False
 
@@ -102,9 +135,65 @@ def _unreferenced() -> set[str]:
                 for d in tree.body
                 if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
                 and not d.name.startswith("_")
-                and not _is_query(d)
+                and not _decorated(d, "query")
             ]
     return {key for key, d in defs if refs[d.name] == _refs(d)[d.name]}
+
+
+def _options() -> list[tuple[str, str, str, int | None, bool]]:
+    """(key, owner name, option name, position or None, is a field)."""
+    out = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for d in ast.parse(path.read_text(encoding="utf-8")).body:
+            if getattr(d, "name", "_").startswith("_"):
+                continue
+            if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                pos = d.args.posonlyargs + d.args.args
+                first = len(pos) - len(d.args.defaults)
+                out += [
+                    (f"{rel}::{d.name}({p.arg})", d.name, p.arg, i, False)
+                    for i, p in enumerate(pos) if i >= first
+                ]
+                out += [
+                    (f"{rel}::{d.name}({p.arg})", d.name, p.arg, None, False)
+                    for p, v in zip(d.args.kwonlyargs, d.args.kw_defaults) if v is not None
+                ]
+            elif isinstance(d, ast.ClassDef) and _decorated(d, "dataclass"):
+                fields = [
+                    f for f in d.body
+                    if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                ]
+                out += [
+                    (f"{rel}::{d.name}.{f.target.id}", d.name, f.target.id, i, True)
+                    for i, f in enumerate(fields) if f.value is not None
+                ]
+    return out
+
+
+def _unset_options() -> set[str]:
+    keywords, n_positional, splatted, assigned = {}, Counter(), set(), set()
+    for path in _sources(OPTION_SETTERS):
+        for n in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(n, ast.Call):
+                fn = n.func
+                name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+                if name is None:
+                    continue
+                keywords.setdefault(name, set()).update(k.arg for k in n.keywords)
+                n_positional[name] = max(n_positional[name], len(n.args))
+                if None in keywords[name] or any(isinstance(a, ast.Starred) for a in n.args):
+                    splatted.add(name)
+            elif isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Store):
+                assigned.add(n.attr)
+    return {
+        key
+        for key, owner, name, i, is_field in _options()
+        if owner not in splatted
+        and name not in keywords.get(owner, ())
+        and (i is None or n_positional[owner] <= i)
+        and not (is_field and name in assigned)
+    }
 
 
 def test_every_public_function_has_a_caller_or_a_reason():
@@ -119,9 +208,22 @@ def test_every_public_function_has_a_caller_or_a_reason():
     )
 
 
+def test_every_option_is_set_somewhere():
+    unset = _unset_options()
+    assert not unset - OPTIONS_ALLOWED.keys(), (
+        "options nothing sets — make them constants, set them, or list "
+        f"them in OPTIONS_ALLOWED: {sorted(unset - OPTIONS_ALLOWED.keys())}"
+    )
+    assert not OPTIONS_ALLOWED.keys() - unset, (
+        "stale OPTIONS_ALLOWED entries (now set, or gone): "
+        f"{sorted(OPTIONS_ALLOWED.keys() - unset)}"
+    )
+
+
 def test_allowlist_reasons_name_a_coverage_code():
     coverage = (ROOT / "COVERAGE.md").read_text(encoding="utf-8")
-    for key, reason in ALLOWED.items():
-        assert reason in ("oracle", "D9") or re.search(
-            rf"(?<![\w§.-]){re.escape(reason)}(?![\w.-])", coverage
-        ), (key, reason)
+    for allowed, extra in ((ALLOWED, ("oracle", "D9")), (OPTIONS_ALLOWED, ("oracle", "deployment"))):
+        for key, reason in allowed.items():
+            assert reason in extra or re.search(
+                rf"(?<![\w§.-]){re.escape(reason)}(?![\w.-])", coverage
+            ), (key, reason)

@@ -206,31 +206,49 @@ def test_politeness_crawl_delay_spacing(spark):
 def test_round_budget_defers_and_carries_over(spark, tmp_path):
     """round_budget_ms truncates each host's schedule at the virtual
     budget; deferred rows stay pending and get scheduled next round —
-    matching the simulator's budget rule."""
+    matching the simulator's budget rule, for a host spaced by its
+    robots Crawl-delay and for one spaced by the default delay."""
+    import os
     from web_scraper_spark.crawl.rounds import CrawlConfig, run_crawl
 
-    n = 32
+    n = 64
     pages = pages_df(spark, n)
-    seeds = [url_for(r) for r in range(0, 20, 2)]  # 10 hot-host seeds
+    hot = [url_for(r) for r in range(0, 20, 2)]  # 10 site0 seeds
+    cold = [url_for(r) for r in (1, 15, 29, 43, 57)]  # 5 site2 seeds
+    robots = spark.createDataFrame(
+        [("site0.example.com", None, None, 1.5)], ROBOTS_SCHEMA
+    )
     cfg = CrawlConfig(
         ckpt_dir=str(tmp_path / "ck"),
         quota_per_host=100,
         max_depth=0,  # no expansion: only the seeds flow
         default_delay_ms=1000,
-        round_budget_ms=3000,  # 4 fetches per host per round (0,1s,2s,3s)
+        round_budget_ms=3000,
         n_shards=4,
     )
-    stats = run_crawl(spark, cfg, pages, None, seeds, n_rounds=3)
-    # round 0: offsets 0..3000 (4 rows), clock ends at 4000 → carry
-    # 1000ms; rounds 1-2 start at 1000 → 3 rows each
-    assert [s["scheduled"] for s in stats] == [4, 3, 3]
+    stats = run_crawl(spark, cfg, pages, robots, hot + cold, n_rounds=3)
+    # site0 at 1.5 s: offsets 0, 1500, 3000 (3 rows), clock ends at
+    # 4500 → carry 1500, so rounds 1-2 fit 2 rows each. site2 at the
+    # 1 s default: 0..3000 (4 rows), carry 1000, then its last row.
+    assert [s["scheduled"] for s in stats] == [3 + 4, 2 + 1, 2]
     sim = simulate_crawl(
-        seeds,
+        hot + cold,
         {},
-        SimConfig(quota_per_host=100, max_depth=0, round_budget_ms=3000),
+        SimConfig(
+            crawl_delay_ms={"site0.example.com": 1500},
+            quota_per_host=100,
+            max_depth=0,
+            round_budget_ms=3000,
+        ),
         n_rounds=3,
     )
-    assert [len(r) for r in sim["rounds"]] == [4, 3, 3]
+    fetched = [
+        {r["url"] for r in spark.read.parquet(
+            os.path.join(cfg.ckpt_dir, f"round={i}", "fetch_log")
+        ).select("url").collect()}
+        for i in range(3)
+    ]
+    assert fetched == [set(r) for r in sim["rounds"]]
 
 
 def test_seen_compaction_preserves_parity(spark, tmp_path):

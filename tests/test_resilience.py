@@ -5,6 +5,7 @@ is replayed identically from the previous committed state)."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from web_scraper_spark.crawl.rounds import CrawlConfig, last_committed_round, run_crawl
@@ -71,45 +72,69 @@ def _state(spark, ck, rid, sub):
     return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
 
 
-def test_failed_state_write_leaves_no_commit_and_no_caches(spark, tmp_path, monkeypatch):
-    """A state write that raises inside the round's write pool fails the
-    round: no _COMMIT, no cached DataFrame left behind, and an
-    unpatched resume commits the same state as an uninterrupted run."""
-    import pytest
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """A two-round crawl run straight through: its ``pages`` (left
+    cached by run_crawl) and its checkpoint dir."""
+    pages = pages_df(spark, 48)
+    ck = str(tmp_path_factory.mktemp("uninterrupted"))
+    cfg = CrawlConfig(ckpt_dir=ck, quota_per_host=16, max_depth=2, n_shards=4)
+    run_crawl(spark, cfg, pages, None, [url_for(r) for r in range(12)], n_rounds=2)
+    return pages, ck
+
+
+@pytest.mark.parametrize(
+    "target", ["fetch_log", "results", "metrics", "seen", "host_state", "frontier", "_COMMIT"]
+)
+def test_failed_state_write_leaves_no_commit_and_no_caches(
+    spark, tmp_path, monkeypatch, uninterrupted, target
+):
+    """A round that fails at any of its writes — the two ledger writes,
+    each pooled state write, or the _COMMIT marker — leaves no _COMMIT
+    and no cached DataFrame behind, and an unpatched resume commits
+    the same state, and no other files, as an uninterrupted run."""
+    import builtins
 
     from web_scraper_spark.crawl import rounds
 
-    pages = pages_df(spark, 48)
-    seeds = [url_for(r) for r in range(12)]
-    ck_a = str(tmp_path / "a")
-    cfg_a = CrawlConfig(ckpt_dir=ck_a, quota_per_host=16, max_depth=2, n_shards=4)
-    run_crawl(spark, cfg_a, pages, None, seeds, n_rounds=2)
-
+    pages, ck_a = uninterrupted
     ck_b = str(tmp_path / "b")
+    for rid in (-1, 0):  # round 0 committed, as the uninterrupted run left it
+        shutil.copytree(os.path.join(ck_a, f"round={rid}"), os.path.join(ck_b, f"round={rid}"))
     cfg_b = CrawlConfig(ckpt_dir=ck_b, quota_per_host=16, max_depth=2, n_shards=4)
-    run_crawl(spark, cfg_b, pages, None, seeds, n_rounds=1)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent().keys())  # includes run_crawl's pages cache
-
+    injected = f"injected {target} failure"
     write = rounds._write
 
     def failing_write(df, path, coalesce=None):
-        if os.path.basename(path) == "frontier":
-            raise RuntimeError("injected frontier write failure")
+        if os.path.basename(path) == target:
+            raise RuntimeError(injected)
         write(df, path, coalesce)
 
-    monkeypatch.setattr(rounds, "_write", failing_write)
-    with pytest.raises(RuntimeError, match="injected frontier write failure"):
-        run_crawl(spark, cfg_b, pages, None, None, n_rounds=1, resume=True)
-    monkeypatch.setattr(rounds, "_write", write)
+    def failing_open(path, *args, **kwargs):
+        if os.path.basename(path) == target:
+            raise RuntimeError(injected)
+        return builtins.open(path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        if target == "_COMMIT":
+            m.setattr(rounds, "open", failing_open, raising=False)
+        else:
+            m.setattr(rounds, "_write", failing_write)
+        with pytest.raises(RuntimeError, match=injected):
+            run_crawl(spark, cfg_b, pages, None, None, n_rounds=1, resume=True)
     assert not os.path.exists(os.path.join(ck_b, "round=1", "_COMMIT"))
     assert last_committed_round(cfg_b) == 0
     assert set(persistent().keys()) == before
 
     run_crawl(spark, cfg_b, pages, None, None, n_rounds=1, resume=True)
     assert last_committed_round(cfg_b) == 1
-    for sub in ("fetch_log", "results", "seen"):
+    for sub in ("fetch_log", "results", "seen", "frontier", "host_state"):
         assert _state(spark, ck_a, 1, sub) == _state(spark, ck_b, 1, sub), sub
+    assert sorted(os.listdir(os.path.join(ck_b, "round=1"))) == sorted(
+        os.listdir(os.path.join(ck_a, "round=1"))
+    )
 
 
 def test_resume_skips_seen_url_injected_into_frontier(spark, tmp_path):

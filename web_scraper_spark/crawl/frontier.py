@@ -52,8 +52,6 @@ def frontier_rows(
     schema order. ``host`` is derived from the url; ``seq`` defaults to
     ``xxhash64(url)``, the stable unique tie-break every source but an
     ordered seed list uses."""
-    # literals in their own projection: Catalyst keeps it above the
-    # caller's anti joins (run_round), which then carry five columns
     return (
         df.select(
             "url",
@@ -110,7 +108,6 @@ def apply_url_blocklist(
     frontier: DataFrame,
     blocked_domains: DataFrame | None = None,
     keywords: list[str] | None = None,
-    url_col: str = "url",
 ) -> DataFrame:
     """RefinedWeb-style URL filtering (Penedo et al. 2023 §3.1: the
     UT1-blocklist + URL-keyword stage): drop rows whose host — or any
@@ -126,21 +123,21 @@ def apply_url_blocklist(
     elidable by AQE when the match set is small."""
     out = frontier
     if keywords:
-        out = out.filter(~C.matches_ignore_patterns(F.col(url_col), list(keywords)))
+        out = out.filter(~C.matches_ignore_patterns(F.col("url"), list(keywords)))
     if blocked_domains is not None:
         bl = F.broadcast(blocked_domains.select(F.col("domain").alias("_sfx")))
         hit = (
             out.select(
-                F.col(url_col),
+                F.col("url"),
                 F.explode(
-                    C.host_suffixes(C.url_host(F.col(url_col)))
+                    C.host_suffixes(C.url_host(F.col("url")))
                 ).alias("_sfx"),
             )
             .join(bl, "_sfx", "left_semi")
-            .select(url_col)
+            .select("url")
             .distinct()
         )
-        out = out.join(hit, url_col, "left_anti")
+        out = out.join(hit, "url", "left_anti")
     return out
 
 

@@ -11,7 +11,7 @@ Structure (SURVEY.md §4.2):
    millions of frontier rows into one ``applyInPandas`` group. Before
    grouping, trim per (host, salt) with ``row_number() <= quota`` and
    then per host — two cheap window passes whose first stage spreads
-   the hot host over ``n_salts`` partitions. After this, every
+   the hot host over ``_N_SALTS`` partitions. After this, every
    politeness group holds ≤ quota rows regardless of skew.
 2. **Stateful windowed scheduler** — a pure JVM cumulative-sum window
    over the host partitions: orders by (priority, seq), enforces
@@ -38,11 +38,6 @@ def update_host_delays(
     host_stats: DataFrame,
     prev_delays: DataFrame | None,
     default_delay_ms: int = 1000,
-    min_delay_ms: int = 250,
-    max_delay_ms: int = 60_000,
-    err_rate_backoff: float = 0.1,
-    backoff_mult: int = 2,
-    recover_step_ms: int = 250,
 ) -> DataFrame:
     """AIMD adaptive per-host crawl delay — what a production crawler
     does for the (majority of) hosts whose robots.txt declares no
@@ -58,8 +53,8 @@ def update_host_delays(
     Per-host update, all pure integer Column arithmetic (deterministic
     at any parallelism):
 
-        err_rate > err_rate_backoff → delay · backoff_mult, ≤ max
-        otherwise                   → delay − recover_step, ≥ min
+        err_rate > 10% → delay · 2, ≤ 60,000 ms
+        otherwise      → delay − 250 ms, ≥ 250 ms
 
     Hosts in ``prev_delays`` but absent from this round's stats KEEP
     their delay (full outer join) — an unfetched host's budget must
@@ -80,20 +75,23 @@ def update_host_delays(
         )
     cur = F.coalesce(F.col("delay_ms"), F.lit(default_delay_ms))
     total = F.coalesce(F.col("n_ok"), F.lit(0)) + F.coalesce(F.col("n_err"), F.lit(0))
-    # integer-exact error-rate test: n_err/total > rate ⇔ n_err·10^6 >
-    # rate_ppm·total (no float division — engine-portable and immune
+    # integer-exact error-rate test: n_err/total > 10% ⇔ n_err·10^6 >
+    # 100,000·total (no float division — engine-portable and immune
     # to fp rounding at any host volume)
-    rate_ppm = int(err_rate_backoff * 1_000_000)
-    backoff = F.coalesce(F.col("n_err"), F.lit(0)) * 1_000_000 > F.lit(rate_ppm) * total
+    backoff = F.coalesce(F.col("n_err"), F.lit(0)) * 1_000_000 > F.lit(100_000) * total
     updated = (
         F.when(total == 0, cur)  # unfetched host: keep
-        .when(backoff, F.least(cur * backoff_mult, F.lit(max_delay_ms)))
-        .otherwise(F.greatest(cur - recover_step_ms, F.lit(min_delay_ms)))
+        .when(backoff, F.least(cur * 2, F.lit(60_000)))
+        .otherwise(F.greatest(cur - 250, F.lit(250)))
     )
     return joined.select(
         "host", updated.cast("long").alias("delay_ms")
     )
 
+
+#: salt count of the two-stage top-K trims: stage 1 spreads a hot
+#: host (or the global cap) over this many window partitions
+_N_SALTS = 16
 
 HOST_STATE_SCHEMA = T.StructType(
     [
@@ -106,13 +104,12 @@ HOST_STATE_SCHEMA = T.StructType(
 def quota_trim(
     candidates: DataFrame,
     quota_per_host: int,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-stage per-host top-``quota`` by (priority, seq); the first
-    stage shards the hot host across ``n_salts`` window partitions so
+    stage shards the hot host across ``_N_SALTS`` window partitions so
     no single task sorts the whole hot host."""
     order = [F.asc("priority"), F.asc("seq")]
-    salt = F.pmod(F.xxhash64("url"), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64("url"), F.lit(_N_SALTS))
     stage1 = (
         candidates.withColumn("_salt", salt)
         .withColumn("_rn1", F.row_number().over(Window.partitionBy("host", "_salt").orderBy(*order)))
@@ -135,7 +132,6 @@ def schedule_round(
     round_budget_ms: int | None = None,
     host_rank: DataFrame | None = None,
     max_scheduled_per_round: int | None = None,
-    n_salts: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
     """Politeness scheduling for one crawl round.
 
@@ -155,7 +151,7 @@ def schedule_round(
     ``host_rank`` is the integer-PageRank table ``run_round``
     maintains from discovered-link host edges (operators/graph.py).
     The trim is the same two-stage salted top-K as :func:`quota_trim`
-    (stage 2's single window sees at most ``n_salts × K`` rows, never
+    (stage 2's single window sees at most ``_N_SALTS × K`` rows, never
     the frontier). Unranked hosts sort as rank 0. WITHIN a host the
     order stays ``(priority, seq)`` — the cap changes which hosts'
     rows enter the round, never the per-host fetch order, so the
@@ -185,7 +181,7 @@ def schedule_round(
             F.asc_nulls_last("seq"),
             F.asc("url"),  # seq is unique per space; url guards the seam
         ]
-        salt = F.pmod(F.xxhash64("url", F.lit("cap")), F.lit(n_salts))
+        salt = F.pmod(F.xxhash64("url", F.lit("cap")), F.lit(_N_SALTS))
         stage1 = (
             trimmed.withColumn("_s", salt)
             .withColumn(

@@ -34,29 +34,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _robots_lines(df: DataFrame, host_col: str, body_col: str) -> DataFrame:
-    """Raw bodies → (host, pos, raw, line) rows: split on CRLF or LF,
-    ``line`` stripped of its '#' comment and surrounding blanks."""
+def _robots_lines(df: DataFrame) -> DataFrame:
+    """(host, robots_txt) bodies → (host, pos, raw, line) rows: split
+    on CRLF or LF, ``line`` stripped of its '#' comment and
+    surrounding blanks."""
     return df.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(body_col), "\r?\n", -1)).alias("pos", "raw"),
+        "host",
+        F.posexplode(F.split(F.col("robots_txt"), "\r?\n", -1)).alias("pos", "raw"),
     ).withColumn(
         "line", F.trim(F.element_at(F.split(F.col("raw"), "#", 2), 1))
     )
 
 
-def parse_robots(
-    df: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-    agent: str = "*",
-) -> DataFrame:
+def parse_robots(df: DataFrame, agent: str = "*") -> DataFrame:
     """(host, robots_txt) → (host, disallow array<string>, allow
     array<string>, crawl_delay double) for the given user agent.
     Hosts whose body yields no applicable rules are absent from the
     output (the politeness join is a left join, so they simply crawl
     unrestricted)."""
-    lines = _robots_lines(df, host_col, body_col)
+    lines = _robots_lines(df)
     low = F.lower(F.col("line"))
     classified = lines.select(
         "host",
@@ -112,12 +108,8 @@ def parse_robots(
     )
 
 
-def robots_sitemaps(
-    df: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-) -> DataFrame:
-    """``Sitemap:`` directives from raw robots.txt bodies →
+def robots_sitemaps(df: DataFrame) -> DataFrame:
+    """``Sitemap:`` directives from raw (host, robots_txt) bodies →
     (host, sitemap_url, pos) — the discovery half of a sitemap-driven
     crawl (robots tells you WHERE the sitemaps are; crawl/sitemaps.py
     parses what you fetch from there).
@@ -134,7 +126,7 @@ def robots_sitemaps(
     the 0-based line number (document order); callers dedupe/order as
     needed.
     """
-    lines = _robots_lines(df, host_col, body_col)
+    lines = _robots_lines(df)
     return (
         lines.filter(F.lower(F.col("line")).startswith("sitemap:"))
         .select(

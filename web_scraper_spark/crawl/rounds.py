@@ -76,7 +76,8 @@ class CrawlConfig:
     # multiplicatively, healthy hosts recover additively toward the
     # min. Fills in ONLY where robots declares no Crawl-delay. State
     # rides the round checkpoint (round=N/host_delay) — resumable like
-    # every other table. Bounds are update_host_delays' defaults.
+    # every other table. The bounds (×2 on >10% errors, −250 ms
+    # otherwise, within 250 ms–60 s) are constants of update_host_delays.
     adaptive_delay: bool = False
     # which extraction products the results sink persists per round
     # (links for discovery and the metrics counters are always
@@ -516,14 +517,10 @@ def _run_round(
     first_discovery = discovered_raw.groupBy("url").agg(
         F.min(F.struct("parent_seq", "pos", "parent_depth")).alias("d")
     )
-    discovered = (
-        frontier_rows(
-            first_discovery,
-            F.col("d.parent_depth") + 1,
-            F.col("d.parent_seq").cast("double") * 10000.0 + F.col("d.pos"),
-            round_id=round_id + 1,
-        )
-        .join(
+    # known links drop on the bare url before frontier_rows derives
+    # host and seq, so only new links pay for parse_url and xxhash64
+    new_links = (
+        first_discovery.join(
             scheduled_urls if seen is None else seen.select("url").unionByName(scheduled_urls),
             "url",
             "left_anti",
@@ -534,6 +531,12 @@ def _run_round(
         # priority/seq) and be fetched twice. The deferred row wins —
         # it carries the earlier discovery's priority.
         .join(deferred.select("url"), "url", "left_anti")
+    )
+    discovered = frontier_rows(
+        new_links,
+        F.col("d.parent_depth") + 1,
+        F.col("d.parent_seq").cast("double") * 10000.0 + F.col("d.pos"),
+        round_id=round_id + 1,
     )
     obs_next = Observation("n_next")
     next_frontier = deferred.unionByName(discovered).observe(

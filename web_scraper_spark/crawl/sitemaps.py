@@ -69,10 +69,8 @@ def xml_unescape(col: Column) -> Column:
     return F.replace(out, F.lit("&amp;"), F.lit("&"))
 
 
-def parse_sitemaps(
-    df: DataFrame, url_col: str = "sitemap_url", body_col: str = "body"
-) -> DataFrame:
-    """Parse fetched sitemap bodies into one row per entry.
+def parse_sitemaps(df: DataFrame) -> DataFrame:
+    """Parse fetched (sitemap_url, body) rows into one row per entry.
 
     Returns (sitemap_url, pos, loc, lastmod, is_index):
 
@@ -89,10 +87,10 @@ def parse_sitemaps(
     shuffle, no UDF; a predicate on ``is_index`` or host pushes into
     the scan.
     """
-    blocks = F.regexp_extract_all(F.col(body_col), F.lit(_BLOCK_RE), 0)
+    blocks = F.regexp_extract_all(F.col("body"), F.lit(_BLOCK_RE), 0)
     rows = df.select(
-        F.col(url_col).alias("sitemap_url"),
-        F.col(body_col).contains("<sitemapindex").alias("is_index"),
+        "sitemap_url",
+        F.col("body").contains("<sitemapindex").alias("is_index"),
         F.posexplode(blocks).alias("pos", "b"),
     )
     loc = xml_unescape(F.trim(F.regexp_extract("b", _LOC_RE, 1)))
@@ -152,10 +150,8 @@ def frontier_from_sitemaps(parsed: DataFrame) -> DataFrame:
 def sitemap_seeds_from_robots(
     robots_raw: DataFrame,
     pages: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
 ) -> DataFrame:
-    """End-to-end sitemap DISCOVERY: raw robots.txt bodies →
+    """End-to-end sitemap DISCOVERY: raw (host, robots_txt) bodies →
     ``Sitemap:`` directive URLs → fetch-join against the pages corpus
     → the (sitemap_url, body) table ``run_crawl(seed_sitemaps=...)``
     expects. Closes the north star's loop (robots names the sitemaps,
@@ -173,7 +169,7 @@ def sitemap_seeds_from_robots(
     from .robots import robots_sitemaps
 
     urls = (
-        robots_sitemaps(robots_raw, host_col, body_col)
+        robots_sitemaps(robots_raw)
         .select("sitemap_url")
         .distinct()
     )

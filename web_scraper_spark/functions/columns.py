@@ -138,13 +138,7 @@ def host_suffixes(host: Column) -> Column:
     )
 
 
-def is_crawler_trap(
-    url: Column,
-    max_path_depth: int = 12,
-    max_segment_repeat: int = 3,
-    max_query_params: int = 8,
-    max_url_len: int = 2048,
-) -> Column:
+def is_crawler_trap(url: Column) -> Column:
     """Pathological-URL (crawler-trap) predicate — the frontier-hygiene
     rule every production crawler runs before enqueueing a discovered
     link (Heritrix's PathologicalPath/TooManyPathSegments/TooManyHops
@@ -152,28 +146,28 @@ def is_crawler_trap(
     — this guards the rebuild's own discovery path). A trap URL is one
     that matches ANY of four deterministic shape rules:
 
-    - path depth: more than ``max_path_depth`` non-empty ``/`` segments
+    - path depth: more than 12 non-empty ``/`` segments
       (infinitely-nesting directory mirrors);
-    - segment repetition: any single path segment occurring
-      ``max_segment_repeat``+ times (``/a/b/a/b/a`` self-link loops —
-      count-based, not consecutive-only, so alternating loops trip it);
-    - query-param count: more than ``max_query_params`` non-empty
-      ``&``-separated params (faceted-search / session-id explosions);
-    - raw length over ``max_url_len`` chars.
+    - segment repetition: any single path segment occurring 3+ times
+      (``/a/b/a/b/a`` self-link loops — count-based, not
+      consecutive-only, so alternating loops trip it);
+    - query-param count: more than 8 non-empty ``&``-separated params
+      (faceted-search / session-id explosions);
+    - raw length over 2,048 chars.
 
     Pure Column expression (parse_url + array HOFs, whole-stage
     codegen) — at 10^10-URL scale this runs once per discovered link
     inside the same stage as the validity/ignore filters, no extra
-    exchange. At the defaults a normal site never trips it; the bounds
-    are config surface (CrawlConfig.trap_filter)."""
+    exchange. A normal site never trips these bounds; the rule is
+    switched on by CrawlConfig.trap_filter."""
     segs = F.filter(
         F.split(F.coalesce(url_path(url), F.lit("")), "/"),
         lambda s: s != "",
     )
-    depth_trap = F.size(segs) > max_path_depth
+    depth_trap = F.size(segs) > 12
     repeat_trap = F.exists(
         segs,
-        lambda s: F.size(F.filter(segs, lambda x: x == s)) >= max_segment_repeat,
+        lambda s: F.size(F.filter(segs, lambda x: x == s)) >= 3,
     )
     query = F.parse_url(url, F.lit("QUERY"))
     n_params = F.when(query.isNull() | (query == ""), F.lit(0)).otherwise(
@@ -182,8 +176,8 @@ def is_crawler_trap(
     return (
         depth_trap
         | repeat_trap
-        | (n_params > max_query_params)
-        | (F.length(url) > max_url_len)
+        | (n_params > 8)
+        | (F.length(url) > 2048)
     )
 
 

@@ -209,7 +209,6 @@ def minhash_lsh_candidates(
     id_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 1,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: split the signature into ``bands`` rows of
@@ -225,7 +224,7 @@ def minhash_lsh_candidates(
     bucket/row counts logged at WARNING (:func:`_hot_keys`)."""
     keys = ["band", "bucket"]
     banded = cached = minhash_band_index(
-        minhash_signatures(df, text_col, id_col, num_hashes, shingle_n), num_hashes, bands
+        minhash_signatures(df, text_col, id_col, num_hashes), num_hashes, bands
     )
     if max_bucket_size is not None:
         # persist: the bucket-size scan and the self-join both consume
@@ -703,9 +702,8 @@ def global_sentence_dedup(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    sep: str = ". ",
 ) -> DataFrame:
-    """C4-style GLOBAL span dedup: every sentence (``sep``-delimited
+    """C4-style GLOBAL span dedup: every sentence (``". "``-delimited
     span) is kept only at its first occurrence across the WHOLE
     corpus; later occurrences are dropped and each document is
     reassembled from its surviving sentences in original order.
@@ -718,12 +716,12 @@ def global_sentence_dedup(
     Returns (id, clean_text, n_kept, n_total).
     """
     sent = _explode_units(
-        df, text_col, id_col, sep, "s", lambda s: F.md5(normalize_text(s))
+        df, text_col, id_col, ". ", "s", lambda s: F.md5(normalize_text(s))
     )
     kept = first_seen_dedup(sent, ["_k"], [F.col("id"), F.col("pos")])
     # a document whose every sentence was seen earlier has no rebuilt
     # row → empty clean_text, n_kept 0
-    return _rebuild_units(sent, kept, "s", sep).select(
+    return _rebuild_units(sent, kept, "s", ". ").select(
         "id",
         F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
@@ -1243,15 +1241,14 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
     max_iterations: int = 20,
     stats_out: dict | None = None,
     driver_threshold: int = 100_000,
 ) -> DataFrame:
-    """Near-dup pair edges → clusters: (id, component) where component
-    is the MIN id in the connected component — the fuzzy-dedup
-    capstone (keep the row with id == component, drop the rest).
+    """Near-dup (id_a, id_b) pair edges → clusters: (id, component)
+    where component is the MIN id in the connected component — the
+    fuzzy-dedup capstone (keep the row with id == component, drop the
+    rest).
 
     Alternating large-star/small-star (the two-phase MapReduce
     connected-components scheme of Kiveris et al., "Connected
@@ -1285,8 +1282,8 @@ def connected_components(
     """
     e = (
         edges.select(
-            F.greatest(F.col(a_col), F.col(b_col)).alias("a"),
-            F.least(F.col(a_col), F.col(b_col)).alias("b"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("a"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()

@@ -31,8 +31,6 @@ _CHECKPOINT_EVERY = 4
 
 def integer_pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 2,
     damping_pct: int = 85,
 ) -> DataFrame:
@@ -80,7 +78,7 @@ def integer_pagerank(
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     base = (100 - damping_pct) * 10_000
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

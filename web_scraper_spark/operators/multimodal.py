@@ -125,9 +125,9 @@ def media_dedup(features: DataFrame) -> DataFrame:
     )
 
 
-def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (binary payloads from md5 chains),
-    generated executor-side."""
+def synth_media(spark, n: int) -> DataFrame:
+    """Deterministic fake media table (binary payloads from md5 chains
+    seeded with 42), generated executor-side."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kinds = ("image", "audio", "video")
@@ -141,7 +141,7 @@ def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
                 # oracle can recompute md5(payload) — DuckDB 1.0's md5
                 # is VARCHAR-only (see q54's oracle).
                 payload = (
-                    hashlib.md5(f"{seed}:{rid // 3}".encode()).hexdigest()
+                    hashlib.md5(f"42:{rid // 3}".encode()).hexdigest()
                     * (1 + (rid // 3) % 5)
                 ).encode("ascii")
                 kind = kinds[rid % 3]
@@ -151,7 +151,7 @@ def synth_media(spark, n: int, seed: int = 42) -> DataFrame:
                         "kind": kind,
                         "mime": {"image": "image/png", "audio": "audio/wav", "video": "video/mp4"}[kind],
                         "payload": payload,
-                        "meta": {"seed": str(seed)},
+                        "meta": {"seed": "42"},
                     }
                 )
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])

@@ -19,7 +19,6 @@ def asof_join(
     probe_ts: str,
     boundary_ts: str,
     value_cols: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """As-of join (J2 analog: assign each transcript line the last
     chapter whose start_time <= t, contxt/youtube_handler.py:72-113).
@@ -28,15 +27,13 @@ def asof_join(
     range join: one shuffle on ``key``, no O(n·m) interval explosion,
     and AQE can still split skewed keys. Rows of ``probe`` get, for
     each value column ``v``, ``asof_v`` = value from the most recent
-    boundary at-or-before the probe timestamp (backward direction).
+    boundary at-or-before the probe timestamp (a backward as-of join;
+    forward and nearest are not implemented).
 
     Boundary-vs-probe ordering at equal timestamps: boundaries sort
     first, so a boundary exactly at the probe time wins (the
     reference's ``>=`` cursor advance).
     """
-    if direction != "backward":
-        raise ValueError("only backward as-of is implemented")
-
     b = boundaries.select(
         F.col(key).alias(key),
         F.col(boundary_ts).alias("_ts"),
@@ -78,12 +75,12 @@ def topk_per_group(
     group_cols: list[str],
     order_by: list[Column],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """W1/L1/L2: deterministic per-group top-k via ``row_number``
     (contxt/youtube_handler.py:151-156 top-30 comments;
     :167-171 playlistend cap). Callers must include a unique
-    tie-breaker in ``order_by`` for determinism.
+    tie-breaker in ``order_by`` for determinism. The 1-based position
+    lands in a ``rank`` column.
 
     One shuffle on the group key. At 100 TB, prefer this over
     ``orderBy().limit()`` per group — Spark plans a single hash
@@ -91,8 +88,8 @@ def topk_per_group(
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_col) <= k)
+        df.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -256,14 +253,14 @@ def stratified_hash_sample(
     strata_col: str,
     rates_ppm: dict,
     default_ppm: int = 0,
-    salt: str = "sample",
 ) -> DataFrame:
     """Per-stratum deterministic hash sampling — corpus rebalancing
     (downsample the dominant language, keep low-resource strata
     whole): a row is kept iff its md5 bucket (out of 10^6) falls below
     its stratum's ppm rate. The rate lookup is a pure CASE expression
     (no join, no shuffle), and the bucket is shared with
-    :func:`deterministic_sample`, so samples at different rates nest.
+    :func:`deterministic_sample` at its default salt, so samples at
+    different rates nest.
     Same reproducibility contract: identical rows at any parallelism,
     on any engine, across reruns."""
     rate = None
@@ -271,15 +268,13 @@ def stratified_hash_sample(
         cond = F.col(strata_col) == k
         rate = F.when(cond, F.lit(v)) if rate is None else rate.when(cond, F.lit(v))
     rate = F.lit(default_ppm) if rate is None else rate.otherwise(F.lit(default_ppm))
-    return df.filter(_ppm_bucket(key_col, salt) < rate)
+    return df.filter(_ppm_bucket(key_col, "sample") < rate)
 
 
 def hash_split(
     df: DataFrame,
     key_col: str,
     fractions: dict,
-    salt: str = "split",
-    fold_col: str = "fold",
 ) -> DataFrame:
     """Deterministic train/val/test fold assignment: each row's fold
     is decided by which DISJOINT ppm range its md5 bucket falls into
@@ -290,12 +285,12 @@ def hash_split(
     the failure mode of per-fold independent sampling). Fractions
     must sum to ≤ 1.0; any remainder gets fold NULL (drop or treat as
     holdout). Uses the same bucket function as
-    :func:`deterministic_sample` (different default salt, so splits
-    are independent of sampling decisions)."""
+    :func:`deterministic_sample` (under its own salt ``"split"``, so
+    splits are independent of sampling decisions)."""
     total = sum(fractions.values())
     if total > 1.0 + 1e-9:
         raise ValueError(f"fractions sum to {total} > 1.0")
-    bucket = _ppm_bucket(key_col, salt)
+    bucket = _ppm_bucket(key_col, "split")
     lo = 0
     expr = None
     for name, frac in sorted(fractions.items()):
@@ -304,7 +299,7 @@ def hash_split(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
         lo = hi
     expr = expr.otherwise(F.lit(None).cast("string"))
-    return df.withColumn(fold_col, expr)
+    return df.withColumn("fold", expr)
 
 
 def take_token_budget(
@@ -334,15 +329,14 @@ def domain_cap_sample(
     key_col: str,
     domain_col: str,
     cap_share_ppm: int,
-    salt: str = "domcap",
 ) -> DataFrame:
     """Domain balancing (the RefinedWeb/C4 curation step): no single
     domain may exceed ``cap_share_ppm``/10^6 of the corpus — hot
     domains are deterministically downsampled to the cap, everything
     else passes whole. Per-domain keep rate = min(10^6,
     cap_share_ppm * N DIV n_domain) applied through the shared ppm
-    bucket, so the kept set is reproducible at any parallelism and
-    nests with deterministic_sample's other salts. Targets are
+    bucket under the salt ``"domcap"``, so the kept set is
+    reproducible at any parallelism. Targets are
     computed against the pre-cap total N (no fixpoint iteration —
     the documented, replayable rule). Scale shape: one partial-agg
     shuffle on domain for counts (tiny output), a 1-row total
@@ -362,6 +356,6 @@ def domain_cap_sample(
     )
     return (
         df.join(rates, domain_col)
-        .filter(_ppm_bucket(key_col, salt) < F.col("_rate_ppm"))
+        .filter(_ppm_bucket(key_col, "domcap") < F.col("_rate_ppm"))
         .drop("_rate_ppm")
     )

@@ -35,9 +35,9 @@ def cosine_topk_bruteforce(
     vec_col: str,
     id_col: str,
     k: int,
-    round_to: int = 6,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector, cosine
+    rounded to 6 decimals.
 
     ``queries`` is broadcast (the expected shape: few queries × huge
     corpus), so the corpus never shuffles for the join — one exchange
@@ -53,7 +53,7 @@ def cosine_topk_bruteforce(
     ).withColumn("cn", _norm(F.col("cv")))
 
     pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to)
+    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
     scored = pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -66,10 +66,10 @@ def ivf_assign(
     df: DataFrame,
     vec_col: str,
     centroids: DataFrame,
-    cent_id: str = "centroid_id",
     keep_cos: bool = False,
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine, ties to
+    """Assign each vector to its nearest row of ``centroids``
+    (``centroid_id`` plus the vector in ``vec_col``; max cosine, ties to
     the lowest centroid id). Output: ``df``'s columns plus
     ``centroid_id``; ``keep_cos`` also keeps the winning cosine as
     ``centroid_cos`` (the keep/remove ranking key SemDedup needs).
@@ -82,13 +82,13 @@ def ivf_assign(
     import numpy as np
 
     rows = centroids.select(
-        F.col(cent_id).alias("_cid"), _as_double(F.col(vec_col)).alias("_cv")
+        F.col("centroid_id").alias("_cid"), _as_double(F.col(vec_col)).alias("_cv")
     ).collect()
     rows.sort(key=lambda r: r["_cid"])  # ascending cid → argmax tie → lowest
     cids = np.array([r["_cid"] for r in rows])
     cmat = np.stack([np.asarray(r["_cv"], dtype=np.float64) for r in rows])
     cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-    cid_field = centroids.schema[cent_id].dataType
+    cid_field = centroids.schema["centroid_id"].dataType
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -149,7 +149,6 @@ def cosine_topk_ivf(
     id_col: str,
     k: int,
     nprobe: int = 1,
-    round_to: int = 6,
 ) -> DataFrame:
     """ANN top-k: probe only the ``nprobe`` nearest centroids' buckets.
 
@@ -159,7 +158,7 @@ def cosine_topk_ivf(
     task reads only its bucket — the brute-force cross join never
     materializes."""
     q_assigned = ivf_assign_topn(queries, vec_col, id_col, centroids, nprobe)
-    return _ivf_topk(q_assigned, corpus_assigned, vec_col, id_col, k, round_to)
+    return _ivf_topk(q_assigned, corpus_assigned, vec_col, id_col, k)
 
 
 def _ivf_topk(
@@ -168,12 +167,11 @@ def _ivf_topk(
     vec_col: str,
     id_col: str,
     k: int,
-    round_to: int,
 ) -> DataFrame:
     """Scoring tail of both IVF probes: broadcast the (query ×
     probed centroid) rows onto the corpus rows of the same
-    ``centroid_id``, score the rounded cosine, keep each query's top
-    ``k`` (ties to the lowest neighbor id)."""
+    ``centroid_id``, score the cosine rounded to 6 decimals, keep
+    each query's top ``k`` (ties to the lowest neighbor id)."""
     q = q_assigned.select(
         F.col(id_col).alias("query_id"),
         F.col("centroid_id"),
@@ -187,7 +185,7 @@ def _ivf_topk(
     pairs = c.join(F.broadcast(q), "centroid_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), round_to)
+    cos = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
     scored = pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(F.col("rank") <= k)
@@ -212,16 +210,17 @@ def ivf_assign_topn(
     )
 
 
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
+def random_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes from md5 arithmetic —
-    component k,i = (md5-hex8 % 2001 − 1000) / 1000 ∈ [−1, 1]. Both
+    component k,i = (md5-hex8("7:hp:k:i") % 2001 − 1000) / 1000 ∈
+    [−1, 1]. Both
     engines consume the SAME decimal literals (embedded in the plan
     and in the SQL oracle), so bucket bits match bit-for-bit."""
     import hashlib
 
     return [
         [
-            (int(hashlib.md5(f"{seed}:hp:{k}:{i}".encode()).hexdigest()[:8], 16)
+            (int(hashlib.md5(f"7:hp:{k}:{i}".encode()).hexdigest()[:8], 16)
              % 2001 - 1000) / 1000.0
             for i in range(dim)
         ]
@@ -352,17 +351,15 @@ def semdedup(
 #: 128 MiB each at this ceiling; larger query sets take the sparse path
 _DENSE_MAX_QUERIES = 4096
 
+#: BM25 term-frequency saturation and length normalization
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
 
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    q_text_col: str = "q_text",
-    qid_col: str = "query_id",
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     max_df_frac: float = 0.5,
     dense: bool = False,
 ) -> DataFrame:
@@ -372,7 +369,8 @@ def bm25_topk(
     training-data-pipeline addition, e.g. dedup-aware retrieval or
     decontamination lookup by keyword).
 
-    Scoring is Robertson/Spärck-Jones BM25:
+    ``docs`` carries (doc_id, text), ``queries`` (query_id, q_text).
+    Scoring is Robertson/Spärck-Jones BM25 with k1 = 1.2, b = 0.75:
     ``idf(t) = ln((N − df + 0.5)/(df + 0.5) + 1)`` and
     ``tf_c = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))``, summed over
     the query's DISTINCT terms. Engine portability: each term's
@@ -429,13 +427,10 @@ def bm25_topk(
         F.trim(F.regexp_replace(F.lower(c), r"\s+", " ")), " "
     )
     if dense:
-        out = _bm25_topk_dense(
-            docs, queries, text_col, id_col, q_text_col, qid_col,
-            k, k1, b, max_df_frac, tok,
-        )
+        out = _bm25_topk_dense(docs, queries, k, max_df_frac, tok)
         if out is not None:
             return out
-    base = docs.select(F.col(id_col).alias("doc_id"), tok(F.col(text_col)).alias("t"))
+    base = docs.select("doc_id", tok(F.col("text")).alias("t"))
     tf = (
         base.select(
             "doc_id",
@@ -450,10 +445,7 @@ def bm25_topk(
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    qterms = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.explode(tok(F.col(q_text_col))).alias("term"),
-    ).distinct()
+    qterms = queries.select("query_id", F.explode(tok(F.col("q_text"))).alias("term")).distinct()
     # per-term stats restricted to query terms (tiny), df cap applied
     # here — non-query terms never score, so the cap's reach is
     # unchanged — then broadcast onto the index
@@ -468,8 +460,9 @@ def bm25_topk(
     idf = F.log(
         (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1
     )
-    tfc = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * ((1 - b) + b * (F.col("dl") / F.col("avgdl")))
+    tfc = (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf")
+        + _BM25_K1 * ((1 - _BM25_B) + _BM25_B * (F.col("dl") / F.col("avgdl")))
     )
     scored = (
         F.broadcast(qterms)
@@ -498,13 +491,7 @@ def bm25_topk(
 def _bm25_topk_dense(
     docs: DataFrame,
     queries: DataFrame,
-    text_col: str,
-    id_col: str,
-    q_text_col: str,
-    qid_col: str,
     k: int,
-    k1: float,
-    b: float,
     max_df_frac: float,
     tok,
 ) -> DataFrame | None:
@@ -528,17 +515,12 @@ def _bm25_topk_dense(
     # round-robin repartition ahead of the explode: a compact parquet
     # file may plan only 1-2 input splits, which would serialize the
     # tokenize+aggregate work; scale-adaptive count, rows-only shuffle
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), tok(F.col(text_col)).alias("t")
-    ).repartition(n_parts)
+    base = docs.select("doc_id", tok(F.col("text")).alias("t")).repartition(n_parts)
     stats = base.select(F.size("t").cast("long").alias("dl")).agg(
         F.count("*").alias("n"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
     )
-    qdf = queries.select(
-        F.col(qid_col).alias("query_id"),
-        F.array_distinct(tok(F.col(q_text_col))).alias("qt"),
-    )
+    qdf = queries.select("query_id", F.array_distinct(tok(F.col("q_text"))).alias("qt"))
     # the query-side collect, bounded BEFORE anything is cached
     qrows = qdf.limit(_DENSE_MAX_QUERIES + 1).collect()
     if len(qrows) > _DENSE_MAX_QUERIES:
@@ -615,8 +597,6 @@ def _bm25_topk_dense(
     for j, ts in enumerate(qt_sets):
         for t in ts:
             M[j, t] = 1.0
-    k1_ = float(k1)
-    b_ = float(b)
 
     out_schema = StructType(
         [
@@ -642,8 +622,8 @@ def _bm25_topk_dense(
             dl = pdf["dl"].to_numpy().astype(np.float64)
             # EXACT sparse-path op order:
             # tfc = (tf*(k1+1)) / (tf + ((dl/avgdl)*b + (1-b))*k1)
-            dn = ((dl / avgdl) * b_ + (1.0 - b_)) * k1_
-            tfc = (C * (k1_ + 1.0)) / (C + dn[:, None])
+            dn = ((dl / avgdl) * _BM25_B + (1.0 - _BM25_B)) * _BM25_K1
+            tfc = (C * (_BM25_K1 + 1.0)) / (C + dn[:, None])
             contrib = np.floor(idf_arr[None, :] * tfc * 1000000.0 + 0.5)
             P = C > 0
             contrib = np.where(P, contrib, 0.0)

@@ -44,9 +44,9 @@ def lang_scores(text: Column) -> dict[str, Column]:
     }
 
 
-def detect_lang(text: Column, default: str = "und") -> Column:
+def detect_lang(text: Column) -> Column:
     """Argmax of stopword-profile scores; ties broken by language code
-    order (deterministic); all-zero → ``default``."""
+    order (deterministic); all-zero → ``"und"``."""
     scores = lang_scores(text)
     pairs = F.array(
         *[
@@ -55,7 +55,7 @@ def detect_lang(text: Column, default: str = "und") -> Column:
         ]
     )
     best = F.array_min(pairs)  # struct compare: lowest neg = highest score
-    return F.when(-best["neg"] > 0, best["lang"]).otherwise(F.lit(default))
+    return F.when(-best["neg"] > 0, best["lang"]).otherwise(F.lit("und"))
 
 
 def whitespace_token_count(text: Column) -> Column:
@@ -375,11 +375,10 @@ DEFAULT_QUALITY_WEIGHTS: dict[str, float] = {
 def linear_quality_score(
     text: Column,
     weights: dict[str, float] | None = None,
-    bias: float = 0.5,
 ) -> Column:
     """Model-based quality filter inference (the DCLM/fineweb-edu
     pattern: a lightweight classifier scores every document and a
-    threshold gates the corpus): sigmoid(bias + w·f) over the
+    threshold gates the corpus): sigmoid(0.5 + w·f) over the
     :func:`quality_features` ratio vector, as a pure Column
     expression — classifier inference at 100 TB is exactly a scan.
 
@@ -392,7 +391,7 @@ def linear_quality_score(
     if unknown:
         raise ValueError(f"unknown quality features: {sorted(unknown)}")
     f = quality_features(text)
-    z = F.lit(float(bias))
+    z = F.lit(0.5)
     for name in QUALITY_MODEL_FEATURES:
         if name in w:
             z = z + F.lit(float(w[name])) * f[name]

@@ -33,16 +33,15 @@ def output_extension(fmt: Column) -> Column:
 
 def derive_filenames(
     df: DataFrame,
-    url_col: str = "url",
     title_col: str | None = None,
     custom_name: str | None = None,
-    fmt: str = "markdown",
 ) -> DataFrame:
     """S11 filename derivation precedence (contxt/outputs.py:91-135):
-    custom_name+domain > title > domain+path (empty→index), sanitized,
-    extension appended, collisions numbered ``_1, _2, …`` by a window
-    (the reference's filesystem-existence loop as a pure function)."""
-    url = F.col(url_col)
+    custom_name+domain > title > domain+path of ``url`` (empty→index),
+    sanitized, the markdown extension ``.md`` appended, collisions
+    numbered ``_1, _2, …`` by a window (the reference's
+    filesystem-existence loop as a pure function)."""
+    url = F.col("url")
     if custom_name is not None:
         base = F.concat(F.lit(custom_name + "_"), C.url_host(url))
     elif title_col is not None:
@@ -52,9 +51,8 @@ def derive_filenames(
         ).otherwise(C.filename_from_url(url))
     else:
         base = C.filename_from_url(url)
-    ext = output_extension(F.lit(fmt))
-    keyed = df.withColumn("_fname_base", F.concat(base, F.lit("."), ext))
-    numbered = collision_numbering(keyed, "_fname_base", [F.col(url_col)], out_col="_fname_tmp")
+    keyed = df.withColumn("_fname_base", F.concat(base, F.lit(".md")))
+    numbered = collision_numbering(keyed, "_fname_base", [url], out_col="_fname_tmp")
     # suffix goes before the extension: name_1.md, not name.md_1
     fixed = numbered.withColumn(
         "filename",
@@ -69,16 +67,14 @@ def derive_filenames(
     return fixed.drop("_fname_base", "_fname_tmp")
 
 
-def write_documents_as_files(
-    df: DataFrame, out_dir: str, content_col: str = "doc", filename_col: str = "filename"
-) -> int:
-    """S11 materialization: one UTF-8 file per row, named by the
-    precomputed collision-free filename column. Executor-side
+def write_documents_as_files(df: DataFrame, out_dir: str) -> int:
+    """S11 materialization: one UTF-8 file per row holding its ``doc``,
+    named by the precomputed collision-free ``filename`` column. Executor-side
     ``foreachPartition`` — suitable for bounded exports (the
     reference's operating mode); at corpus scale prefer the parquet
     results tables."""
     os.makedirs(out_dir, exist_ok=True)
-    rows = df.select(filename_col, content_col)
+    rows = df.select("filename", "doc")
 
     def write_part(it):
         for row in it:
@@ -165,10 +161,10 @@ def bucketed_table(spark, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def console_sink(df: DataFrame, source_col: str = "url", content_col: str = "doc", n: int = 5) -> None:
-    """S10: print content with 'Content from {source}' headers
-    (contxt/outputs.py:40-50); debug-scale only."""
-    for row in df.select(source_col, content_col).limit(n).collect():
+def console_sink(df: DataFrame, n: int = 5) -> None:
+    """S10: print each row's ``doc`` under a 'Content from {url}'
+    header (contxt/outputs.py:40-50); debug-scale only."""
+    for row in df.select("url", "doc").limit(n).collect():
         print(f"\nContent from {row[0]}:\n")
         print(row[1])
 
@@ -182,9 +178,9 @@ def image_map_join(images: DataFrame, image_map: DataFrame) -> DataFrame:
     ).withColumn("resolved", F.coalesce(F.col("path"), F.col("url")))
 
 
-def image_filenames(images: DataFrame, hash_col: str = "content_hash") -> DataFrame:
-    """S13 naming: '{md5}{ext}' with the extension whitelist fallback
-    to .jpg (contxt/scraper.py:476-485)."""
+def image_filenames(images: DataFrame) -> DataFrame:
+    """S13 naming: '{content_hash}{ext}' with the extension whitelist
+    fallback to .jpg (contxt/scraper.py:476-485)."""
     return images.withColumn(
-        "image_filename", F.concat(F.col(hash_col), C.image_ext(F.col("url")))
+        "image_filename", F.concat(F.col("content_hash"), C.image_ext(F.col("url")))
     )

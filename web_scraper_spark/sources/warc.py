@@ -349,14 +349,11 @@ def _warc_record(
     )
 
 
-def _write_segments(
-    rows: DataFrame, out_dir: str, ext: str, gzip_records: bool, record
-) -> DataFrame:
+def _write_segments(rows: DataFrame, out_dir: str, ext: str, record) -> DataFrame:
     """Stream each partition of ``rows`` into one segment file
     ``seg-{partition:05d}{ext}`` under ``out_dir``: ``record`` maps a
     row's column values to its uncompressed WARC record bytes, or None
-    to skip the row; with ``gzip_records`` each record is its own gzip
-    member. Empty partitions write no file. Returns the manifest
+    to skip the row; each record is written as its own gzip member. Empty partitions write no file. Returns the manifest
     DataFrame (path, n_records, n_bytes); an action runs the export."""
     import os
 
@@ -386,7 +383,7 @@ def _write_segments(
                     continue
                 if fh is None:
                     fh = open(tmp, "wb")
-                out = gzip.compress(rec) if gzip_records else rec
+                out = gzip.compress(rec)
                 fh.write(out)
                 n_rec += 1
                 n_bytes += len(out)
@@ -400,11 +397,7 @@ def _write_segments(
     return rows.mapInPandas(dump, schema="path string, n_records long, n_bytes long")
 
 
-def write_wet_dir(
-    wet: DataFrame,
-    out_dir: str,
-    gzip_records: bool = True,
-) -> DataFrame:
+def write_wet_dir(wet: DataFrame, out_dir: str) -> DataFrame:
     """Serialize :func:`wet_from_pages` rows as WET segment files —
     ``WARC-Type: conversion`` records, one gzip member per record,
     mirroring :func:`write_warc_dir`'s layout so the same
@@ -425,17 +418,12 @@ def write_wet_dir(
     return _write_segments(
         wet.select("url", "text", *(["warc_ts"] if "warc_ts" in wet.columns else [])),
         out_dir,
-        ".warc.wet.gz" if gzip_records else ".warc.wet",
-        gzip_records,
+        ".warc.wet.gz",
         record,
     )
 
 
-def write_warc_dir(
-    pages: DataFrame,
-    out_dir: str,
-    gzip_records: bool = True,
-) -> DataFrame:
+def write_warc_dir(pages: DataFrame, out_dir: str) -> DataFrame:
     """The write side of the archive seam: a pages table (url,
     warc_ts, html) exports as WARC segment files — one segment per
     partition, one gzip member per record (the Common-Crawl layout
@@ -444,7 +432,7 @@ def write_warc_dir(
     operators, then re-shard to archive files.
 
     Each executor task streams its partition into
-    ``seg-{partition:05d}.warc[.gz]`` under ``out_dir`` (at cluster
+    ``seg-{partition:05d}.warc.gz`` under ``out_dir`` (at cluster
     scale ``out_dir`` is a mounted object store — the task-local write
     is the standard pattern) and emits one manifest row (path,
     n_records, n_bytes). Repartition deterministically upstream (e.g.
@@ -464,7 +452,6 @@ def write_warc_dir(
     return _write_segments(
         pages.select("url", "warc_ts", "html"),
         out_dir,
-        ".warc.gz" if gzip_records else ".warc",
-        gzip_records,
+        ".warc.gz",
         record,
     )

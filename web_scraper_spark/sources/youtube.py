@@ -88,7 +88,8 @@ def _words(seed: int, i: int, tag: str, n: int) -> str:
     return " ".join(word_at(seed, i, tag, j) for j in range(n))
 
 
-def gen_video_rows(i: int, seed: int = 42) -> dict:
+def gen_video_rows(i: int) -> dict:
+    seed = 42  # the q55/q56 oracles recompute every field from it
     vid = video_id_of(i)
     title = _words(seed, i, "t", 4).title()
     return {
@@ -139,12 +140,12 @@ def gen_video_rows(i: int, seed: int = 42) -> dict:
     }
 
 
-def _table_df(spark: SparkSession, n_videos: int, seed: int, part: str, schema) -> DataFrame:
+def _table_df(spark: SparkSession, n_videos: int, part: str, schema) -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for i in pdf["id"].tolist():
-                data = gen_video_rows(int(i), seed)[part]
+                data = gen_video_rows(int(i))[part]
                 if isinstance(data, dict):
                     rows.append(data)
                 else:
@@ -155,20 +156,20 @@ def _table_df(spark: SparkSession, n_videos: int, seed: int, part: str, schema) 
     return spark.range(0, n_videos, numPartitions=parts).mapInPandas(gen, schema)
 
 
-def videos_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
-    return _table_df(spark, n_videos, seed, "video", VIDEOS_SCHEMA)
+def videos_df(spark, n_videos: int) -> DataFrame:
+    return _table_df(spark, n_videos, "video", VIDEOS_SCHEMA)
 
 
-def transcripts_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
-    return _table_df(spark, n_videos, seed, "transcript", TRANSCRIPTS_SCHEMA)
+def transcripts_df(spark, n_videos: int) -> DataFrame:
+    return _table_df(spark, n_videos, "transcript", TRANSCRIPTS_SCHEMA)
 
 
-def chapters_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
-    return _table_df(spark, n_videos, seed, "chapters", CHAPTERS_SCHEMA)
+def chapters_df(spark, n_videos: int) -> DataFrame:
+    return _table_df(spark, n_videos, "chapters", CHAPTERS_SCHEMA)
 
 
-def comments_df(spark, n_videos: int, seed: int = 42) -> DataFrame:
-    return _table_df(spark, n_videos, seed, "comments", COMMENTS_SCHEMA)
+def comments_df(spark, n_videos: int) -> DataFrame:
+    return _table_df(spark, n_videos, "comments", COMMENTS_SCHEMA)
 
 
 def containers_df(spark, n_videos: int) -> DataFrame:

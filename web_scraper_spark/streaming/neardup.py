@@ -72,16 +72,16 @@ _SIGS_SUB = "sigs"
 def make_near_dup_batch_fn(
     store_dir: str,
     pairs_dir: str,
-    text_col: str = "text",
     id_col: str = "url",
     num_hashes: int = 16,
     bands: int = 8,
     threshold: float = 0.5,
     verify_hashes: int = 64,
 ):
-    """Build the ``foreachBatch`` function: each micro-batch emits
-    (id_a, id_b, est_jaccard) pairs — candidates via banded-key join
-    against the store AND within the batch, verified by the
+    """Build the ``foreachBatch`` function: each micro-batch of
+    (``id_col``, text) rows emits (id_a, id_b, est_jaccard) pairs —
+    candidates via banded-key join against the store AND within the
+    batch, verified by the
     independent ``verify_hashes``-component MinHash estimator (std ≤
     0.5/√K; see module docstring) — then adds its own banded keys and
     verification signatures to the store. Wire with
@@ -91,10 +91,10 @@ def make_near_dup_batch_fn(
         spark = batch_df.sparkSession
         src = batch_df.persist()
         new_bands = minhash_band_index(
-            minhash_signatures(src, text_col, id_col, num_hashes), num_hashes, bands
+            minhash_signatures(src, "text", id_col, num_hashes), num_hashes, bands
         ).persist()
         new_sigs = minhash_signatures(
-            src, text_col, id_col, verify_hashes, salt="v"
+            src, "text", id_col, verify_hashes, salt="v"
         ).withColumnRenamed("sig", "vsig").persist()
         new_bands.count()  # materialize: store join + store write both consume
         new_sigs.count()
@@ -207,11 +207,9 @@ def read_near_dup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(pairs_dir, _STORE_GLOB))
 
 
-def compact_near_dup_store(
-    spark: SparkSession, store_dir: str, out_partitions: int = 8
-) -> dict:
+def compact_near_dup_store(spark: SparkSession, store_dir: str) -> dict:
     """Fold the per-epoch batch dirs of both store tables into one
-    ``batch=compacted`` dir each — the small-files lever after many
+    ``batch=compacted`` dir of 8 files each — the small-files lever after many
     micro-batches (same role as the crawl's seen-table compaction).
 
     Crash-safe ordering: the compacted data is fully written to a
@@ -243,7 +241,7 @@ def compact_near_dup_store(
         (
             spark.read.parquet(os.path.join(d, _STORE_GLOB))
             .dropDuplicates(keys)
-            .coalesce(out_partitions)
+            .coalesce(8)
             .write.mode("overwrite")
             .parquet(tmp)
         )

@@ -33,14 +33,14 @@ def stream_first_seen(pages: DataFrame, url_col: str = "url") -> DataFrame:
     return pages.dropDuplicates([url_col])
 
 
-def stream_content_dedup(pages: DataFrame, text_col: str = "text") -> DataFrame:
+def stream_content_dedup(pages: DataFrame) -> DataFrame:
     """Streaming exact-CONTENT dedup: the first document with a given
-    normalized-text fingerprint passes; every later copy (re-crawl,
+    normalized ``text`` fingerprint passes; every later copy (re-crawl,
     mirror, syndicated page) is dropped — across micro-batches AND
     restarts. The streaming twin of the batch engine's md5 content
     dedup (operators/dedup.py::exact_dedup, q15 semantics): the
     fingerprint keys :func:`stream_first_seen`."""
     from ..operators.dedup import normalize_text
 
-    keyed = pages.withColumn("_fp", F.md5(normalize_text(F.col(text_col))))
+    keyed = pages.withColumn("_fp", F.md5(normalize_text(F.col("text"))))
     return stream_first_seen(keyed, url_col="_fp").drop("_fp")
