@@ -2,6 +2,8 @@
 defaults merge, and the CrawlConfig bridge (reference
 contxt/config.py:48-95 semantics)."""
 
+from dataclasses import fields
+
 import yaml
 
 from web_scraper_spark.crawl.config import (
@@ -11,6 +13,7 @@ from web_scraper_spark.crawl.config import (
     save_config,
     update_config,
 )
+from web_scraper_spark.crawl.rounds import CrawlConfig
 
 
 def test_missing_file_created_with_defaults(tmp_path):
@@ -69,9 +72,19 @@ def test_crawl_config_bridge(tmp_path):
     save_config(
         {"scraping": {"max_depth": 3, "ignore_patterns": ["/tags/", "/cat/"]}}, p
     )
-    cc = crawl_config_from(load_config(p), ckpt_dir=str(tmp_path / "ck"),
-                           quota_per_host=7)
+    cc = crawl_config_from(load_config(p), ckpt_dir=str(tmp_path / "ck"))
     assert cc.max_depth == 3
     assert cc.ignore_patterns == ["/tags/", "/cat/"]
-    assert cc.quota_per_host == 7  # override wins
     assert cc.ckpt_dir.endswith("ck")
+    # every field the bridge does not map keeps the engine default
+    engine = CrawlConfig(ckpt_dir=cc.ckpt_dir)
+    for f in fields(CrawlConfig):
+        if f.name not in ("ckpt_dir", "max_depth", "ignore_patterns"):
+            assert getattr(cc, f.name) == getattr(engine, f.name), f.name
+
+    # empty keys parse to None and take the file defaults
+    with open(p, "w") as fh:
+        fh.write("scraping:\n  ignore_patterns:\n  max_depth:\n")
+    cc = crawl_config_from(load_config(p), ckpt_dir=str(tmp_path / "ck"))
+    assert cc.max_depth == DEFAULT_CONFIG["scraping"]["max_depth"] == 1
+    assert cc.ignore_patterns == []

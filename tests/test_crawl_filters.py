@@ -222,7 +222,6 @@ def test_round_budget_defers_and_carries_over(spark, tmp_path):
         ckpt_dir=str(tmp_path / "ck"),
         quota_per_host=100,
         max_depth=0,  # no expansion: only the seeds flow
-        default_delay_ms=1000,
         round_budget_ms=3000,
         n_shards=4,
     )

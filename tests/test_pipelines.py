@@ -38,7 +38,6 @@ def test_curate_full_chain(spark):
     cfg = CurationConfig(
         min_quality=0.0,          # keep the gate permissive: dedup focus
         fuzzy=True,
-        jaccard_threshold=0.8,
         bench_df=bench,
         split_fractions={"train": 0.9, "val": 0.1},
     )
@@ -92,7 +91,7 @@ def test_curate_incremental_stage(spark):
     )
 
     # controlled vocab: sf* synthetic docs share distinct-token SETS
-    # across ids (set-based MinHash at shingle_n=1 collides them fully,
+    # across ids (set-based MinHash over word 1-shingles collides them fully,
     # by design), so build disjoint-vocab docs for exact assertions.
     def doc(i):
         return " ".join(f"w{i}x{j}" for j in range(12))

@@ -108,8 +108,8 @@ def test_write_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
         "doc_id", "lang", "text"
     )
     p1, p2 = str(tmp_path / "j1"), str(tmp_path / "j2")
-    write_jsonl_shards(d, p1, "doc_id", n_shards=8)
-    write_jsonl_shards(d.repartition(13), p2, "doc_id", n_shards=8)
+    write_jsonl_shards(d, p1, "doc_id")
+    write_jsonl_shards(d.repartition(13), p2, "doc_id")
 
     back = spark.read.schema(d.schema).json(p1).drop("_shard")
     a = sorted(map(tuple, d.collect()))
@@ -135,7 +135,7 @@ def test_write_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
     expected = {
         r["doc_id"]: r["sid"]
         for r in d.select(
-            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(8)).alias("sid")
+            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(64)).alias("sid")
         ).collect()
     }
     placed = {i: sid for sid, ids in s1.items() for i in ids}
@@ -143,14 +143,16 @@ def test_write_jsonl_shards_roundtrip_and_determinism(spark, tmp_path):
 
 
 def test_console_sink_prints_source_headers(spark, capsys):
-    """S10: each of the first ``n`` rows prints a 'Content from
+    """S10: each of the first 5 rows prints a 'Content from
     {source}:' header followed by its content."""
     df = spark.createDataFrame(
-        [("https://a.example/x", "doc a"), ("https://b.example/y", "doc b")],
+        [(f"https://{c}.example/x", f"doc {c}") for c in "abcdef"],
         "url string, doc string",
     )
-    console_sink(df.orderBy("url"), n=1)
-    assert capsys.readouterr().out == "\nContent from https://a.example/x:\n\ndoc a\n"
+    console_sink(df.orderBy("url"))
+    assert capsys.readouterr().out == "".join(
+        f"\nContent from https://{c}.example/x:\n\ndoc {c}\n" for c in "abcde"
+    )
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
@@ -165,8 +167,8 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     left = d.select("doc_id", "lang")
     right = d.select("doc_id", "source")
-    write_bucketed(left, "bkt_left", "doc_id", n_buckets=8)
-    write_bucketed(right, "bkt_right", "doc_id", n_buckets=8)
+    write_bucketed(left, "bkt_left", "doc_id")
+    write_bucketed(right, "bkt_right", "doc_id")
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # at test scale the planner would broadcast the tiny side and
@@ -215,7 +217,7 @@ def test_incremental_dedup_bucketed_index_shuffles_new_side_only(spark):
     index = minhash_band_index(
         minhash_signatures(old, "text", "doc_id", num_hashes=16), 16, bands=8
     )
-    write_bucketed(index, "bkt_mh_index", ["band", "bucket"], n_buckets=8)
+    write_bucketed(index, "bkt_mh_index", ["band", "bucket"])
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

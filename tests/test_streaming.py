@@ -243,7 +243,7 @@ def test_stream_near_dup_pairs_across_batches(spark, tmp_path):
             "overwrite"
         ).parquet(str(pdir / name))
 
-    fn = make_near_dup_batch_fn(store, pairs_dir, threshold=0.5)
+    fn = make_near_dup_batch_fn(store, pairs_dir)
 
     def run():
         stream = pages_stream(spark, str(pdir) + "/*", max_files_per_trigger=1)
@@ -304,8 +304,9 @@ def test_near_dup_store_guards_and_crash_safe_compaction(spark, tmp_path):
     """Three resilience guards on the incremental near-dup store:
     (1) a legacy single-table batch=* layout under store_dir raises
     with a migration hint instead of being read as an empty store;
-    (2) changing verify_hashes against an existing store raises
-    instead of silently deflating est_jaccard via zip_with null-pads;
+    (2) a store holding verification signatures of another length
+    raises instead of silently deflating est_jaccard via zip_with
+    null-pads;
     (3) a compaction crash leftover (batch=compacted_prev holding dir)
     stays glob-visible — prior pairs are still caught — and the next
     compaction heals it."""
@@ -345,12 +346,20 @@ def test_near_dup_store_guards_and_crash_safe_compaction(spark, tmp_path):
     # build a real store with one batch
     store = str(tmp_path / "store")
     pairs = str(tmp_path / "pairs")
-    fn = make_near_dup_batch_fn(store, pairs, threshold=0.5)
+    fn = make_near_dup_batch_fn(store, pairs)
     fn(batch_df([("https://a.x/base", base)]), 0)
 
-    # (2) K drift against the existing store raises
-    drifted = make_near_dup_batch_fn(store, pairs, threshold=0.5, verify_hashes=32)
-    with pytest.raises(ValueError, match="verify_hashes"):
+    # (2) a store written with 32-component verification signatures
+    # (the stream's K is 64) raises
+    drift_store = tmp_path / "drift_store"
+    spark.createDataFrame(
+        [("https://a.x/base", 0, 1)], "id string, band int, bucket long"
+    ).write.parquet(str(drift_store / "bands" / "batch=0"))
+    spark.createDataFrame(
+        [("https://a.x/base", list(range(32)))], "id string, vsig array<long>"
+    ).write.parquet(str(drift_store / "sigs" / "batch=0"))
+    drifted = make_near_dup_batch_fn(str(drift_store), str(tmp_path / "p1"))
+    with pytest.raises(ValueError, match="32-component verification signatures"):
         drifted(batch_df([("https://b.x/near", near)]), 1)
 
     # (3) simulate the worst crash window: compacted dir parked under
@@ -386,12 +395,14 @@ def test_near_dup_store_guards_and_crash_safe_compaction(spark, tmp_path):
 
 def test_index_dedup_and_stream_near_dup_share_candidates(spark, tmp_path):
     """Batch index dedup and the streaming near-dup store pair the
-    same documents: with verification off (no signatures on the index
-    side, threshold 0.0 on the stream) the new docs flagged is_dup
-    against the old corpus's index are exactly the new docs in a
-    cross-batch stream pair (batch 0 = old, batch 1 = new). Holds for
-    integral and URL ids; a novel doc's first_match is -1 for the
-    first and null for the second."""
+    same documents: the new docs flagged is_dup against the old
+    corpus's index (no verification on the index side) are exactly
+    the new docs in a cross-batch stream pair (batch 0 = old, batch 1
+    = new). Every document here is a near copy (Jaccard >= 6/7) of one
+    other or shares no word with it, so the stream's 0.5 verification
+    threshold keeps every band pair. Holds for integral and URL ids; a
+    novel doc's first_match is -1 for the first and null for the
+    second."""
     from web_scraper_spark.operators.dedup import (
         dedup_against_index,
         minhash_band_index,
@@ -434,12 +445,9 @@ def test_index_dedup_and_stream_near_dup_share_candidates(spark, tmp_path):
         assert {r["first_match"] for r in ann if not r["is_dup"]} == {novel}
 
         pairs_dir = str(tmp_path / id_type / "pairs")
-        fn = make_near_dup_batch_fn(
-            str(tmp_path / id_type / "store"), pairs_dir, id_col="doc_id",
-            num_hashes=16, bands=8, threshold=0.0,
-        )
-        fn(old, 0)
-        fn(new, 1)
+        fn = make_near_dup_batch_fn(str(tmp_path / id_type / "store"), pairs_dir)
+        fn(old.withColumnRenamed("doc_id", "url"), 0)
+        fn(new.withColumnRenamed("doc_id", "url"), 1)
         old_ids = {key(i) for i, _ in old_docs}
         crossed = {
             i
@@ -456,29 +464,24 @@ def test_stream_near_dup_hot_bucket_guard(spark, tmp_path, caplog):
     """A boilerplate stream (every page alike, so one bucket per band
     holds the whole store) does not make the band join quadratic:
     buckets of the store plus the batch over HOT_BUCKET_CAP rows, the
-    cap curate also defaults to, are left out of the join with a
+    cap curate's LSH stages also use, are left out of the join with a
     WARNING, and the genuine pair in normal buckets still comes out."""
     import logging
 
     from web_scraper_spark.operators.dedup import HOT_BUCKET_CAP
-    from web_scraper_spark.pipelines import CurationConfig
     from web_scraper_spark.streaming.neardup import (
         make_near_dup_batch_fn,
         read_near_dup_pairs,
     )
 
-    assert CurationConfig().max_bucket_size == HOT_BUCKET_CAP
     boiler = "lorem ipsum boiler plate page footer"
     base = "alpha beta gamma delta epsilon zeta"
 
     def frame(rows):
-        return spark.createDataFrame(rows, "doc_id long, text string")
+        return spark.createDataFrame(rows, "url long, text string")
 
     pairs_dir = str(tmp_path / "pairs")
-    fn = make_near_dup_batch_fn(
-        str(tmp_path / "store"), pairs_dir, id_col="doc_id",
-        num_hashes=16, bands=8, threshold=0.0,
-    )
+    fn = make_near_dup_batch_fn(str(tmp_path / "store"), pairs_dir)
     with caplog.at_level(logging.WARNING, logger="web_scraper_spark.operators.dedup"):
         fn(frame([(i, boiler) for i in range(HOT_BUCKET_CAP + 1)] + [(10_000, base)]), 0)
         fn(frame([(HOT_BUCKET_CAP + 1, boiler), (10_001, base)]), 1)

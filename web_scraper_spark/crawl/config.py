@@ -114,18 +114,18 @@ def update_config(section: str, key: str, value: Any, path: str) -> dict:
     return config
 
 
-def crawl_config_from(config: dict, ckpt_dir: str, **overrides) -> "CrawlConfig":
+def crawl_config_from(config: dict, ckpt_dir: str) -> "CrawlConfig":
     """Bridge the user-facing config dict into the engine's
     CrawlConfig: scraping.max_depth and scraping.ignore_patterns feed
     the frontier filter chain (P5), everything else keeps engine
-    defaults unless overridden."""
+    defaults. A missing or empty (null) key takes the file default
+    (depth 1, no patterns)."""
     from .rounds import CrawlConfig
 
-    scraping = config.get("scraping", {})
-    kwargs: dict[str, Any] = {
-        "ckpt_dir": ckpt_dir,
-        "max_depth": int(scraping.get("max_depth", 1)),
-        "ignore_patterns": list(scraping.get("ignore_patterns", [])),
-    }
-    kwargs.update(overrides)
-    return CrawlConfig(**kwargs)
+    scraping = config.get("scraping") or {}
+    max_depth = scraping.get("max_depth")
+    return CrawlConfig(
+        ckpt_dir=ckpt_dir,
+        max_depth=1 if max_depth is None else int(max_depth),
+        ignore_patterns=list(scraping.get("ignore_patterns") or []),
+    )

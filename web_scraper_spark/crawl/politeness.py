@@ -34,10 +34,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# a host's delay between fetches when robots.txt declares no Crawl-delay
+_DEFAULT_DELAY_MS = 1000
+
+
 def update_host_delays(
-    host_stats: DataFrame,
-    prev_delays: DataFrame | None,
-    default_delay_ms: int = 1000,
+    host_stats: DataFrame, prev_delays: DataFrame | None
 ) -> DataFrame:
     """AIMD adaptive per-host crawl delay — what a production crawler
     does for the (majority of) hosts whose robots.txt declares no
@@ -48,7 +50,8 @@ def update_host_delays(
     ``host_stats``: (host, n_ok, n_err) — one row per host fetched
     this round (run_round derives it from the fetch ledger's
     ``fetch_status``). ``prev_delays``: (host, delay_ms) carry-over
-    state, or None on round 0.
+    state, or None on round 0. A host with no delay yet starts from
+    ``_DEFAULT_DELAY_MS`` (1,000 ms).
 
     Per-host update, all pure integer Column arithmetic (deterministic
     at any parallelism):
@@ -73,7 +76,7 @@ def update_host_delays(
         joined = stats.join(
             prev_delays.select("host", "delay_ms"), "host", "full_outer"
         )
-    cur = F.coalesce(F.col("delay_ms"), F.lit(default_delay_ms))
+    cur = F.coalesce(F.col("delay_ms"), F.lit(_DEFAULT_DELAY_MS))
     total = F.coalesce(F.col("n_ok"), F.lit(0)) + F.coalesce(F.col("n_err"), F.lit(0))
     # integer-exact error-rate test: n_err/total > 10% ⇔ n_err·10^6 >
     # 100,000·total (no float division — engine-portable and immune
@@ -128,7 +131,7 @@ def schedule_round(
     candidates: DataFrame,
     host_state: DataFrame | None,
     quota_per_host: int = 64,
-    default_delay_ms: int = 1000,
+    default_delay_ms: int = _DEFAULT_DELAY_MS,
     round_budget_ms: int | None = None,
     host_rank: DataFrame | None = None,
     max_scheduled_per_round: int | None = None,

@@ -62,7 +62,6 @@ class CrawlConfig:
     # width instead of _STATE_WRITE_PARTITIONS
     n_shards: int = 16
     quota_per_host: int = 256
-    default_delay_ms: int = 1000
     round_budget_ms: int | None = None
     max_depth: int = 2
     ignore_patterns: list[str] = field(default_factory=list)
@@ -332,7 +331,6 @@ def _run_round(
         sched_in,
         host_state,
         quota_per_host=cfg.quota_per_host,
-        default_delay_ms=cfg.default_delay_ms,
         round_budget_ms=cfg.round_budget_ms,
         host_rank=host_rank,
         max_scheduled_per_round=cfg.max_scheduled_per_round,
@@ -411,11 +409,7 @@ def _run_round(
             F.count(F.when(F.col("fetch_status") == "fetched", 1)).alias("n_ok"),
             F.count(F.when(F.col("fetch_status") != "fetched", 1)).alias("n_err"),
         )
-        new_delays = update_host_delays(
-            host_stats,
-            host_delays,
-            default_delay_ms=cfg.default_delay_ms,
-        )
+        new_delays = update_host_delays(host_stats, host_delays)
         _write(
             new_delays, os.path.join(rdir, "host_delay"), _STATE_WRITE_PARTITIONS
         )
@@ -694,7 +688,14 @@ def run_crawl(
 
     Resume reads the last committed round and continues — a crashed
     round (no _COMMIT) is replayed identically (all inputs are the
-    previous round's immutable committed state)."""
+    previous round's immutable committed state).
+
+    ``pages`` is persisted (the fetch join reads it every round) and
+    left cached on return. A caller that resumes one round per call
+    over the same frame, as the ``crawl_frontier`` benchmark does,
+    reuses that cache; an unpersist here would add a rescan and
+    re-cache of ``pages`` to every such call, a cost not yet measured
+    (ROADMAP D8 owns the cache A/B)."""
     pages = pages.persist()  # reused by the fetch join every round
     if resume:
         last = last_committed_round(cfg)

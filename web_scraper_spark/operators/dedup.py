@@ -51,19 +51,10 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return first_seen_dedup(with_hash, ["content_hash"], [F.col(id_col)])
 
 
-def word_shingles(col: Column, n: int) -> Column:
-    """Word n-gram shingle array (distinct), JVM-side: zip the token
-    array against its shifts. n=1 → distinct tokens."""
-    toks = F.split(normalize_text(col), " ")
-    if n == 1:
-        return F.array_distinct(toks)
-    # shingle i = tokens[i..i+n-1]; build via transform over indices
-    size = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(size - n, F.lit(-1)))
-    return F.array_distinct(
-        F.when(size >= n, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
-        .otherwise(F.array())
-    )
+def word_shingles(col: Column) -> Column:
+    """Word 1-shingle array, JVM-side: the distinct tokens of the
+    normalized text."""
+    return F.array_distinct(F.split(normalize_text(col), " "))
 
 
 def minhash_signatures(
@@ -71,13 +62,12 @@ def minhash_signatures(
     text_col: str,
     id_col: str,
     num_hashes: int,
-    shingle_n: int = 1,
     salt: str = "",
 ) -> DataFrame:
     """(id, sig) MinHash signature table: ``sig`` is an array of
     ``num_hashes`` md5-hex minima,
 
-        sig[k] = min over distinct shingles s of md5(s ∥ '#' ∥ salt ∥ k).
+        sig[k] = min over distinct word 1-shingles s of md5(s ∥ '#' ∥ salt ∥ k).
 
     Lexicographic min over md5 hex is a valid uniform hash family and
     is portable to the SQL oracle. ``salt`` selects an INDEPENDENT
@@ -85,8 +75,7 @@ def minhash_signatures(
     so its estimator is not correlated with the banding family that
     selected the candidates — conditioning on a band collision biases
     the banding components toward agreement). Null text gives an
-    all-null signature; a doc shorter than ``shingle_n`` tokens has no
-    shingles and gets the same.
+    all-null signature.
 
     Computed as explode(shingles) → ``num_hashes`` codegen md5
     columns → one groupBy(id) of mins (per-k ``transform``/
@@ -96,7 +85,7 @@ def minhash_signatures(
     (documents explode within one partition), so the exchange carries
     one row per (id × partition). Requires unique ``id_col`` values
     (rows sharing an id would have their shingle sets merged)."""
-    sh = word_shingles(F.col(text_col), shingle_n)
+    sh = word_shingles(F.col(text_col))
     ex = df.select(F.col(id_col).alias("id"), F.explode_outer(sh).alias("_s"))
     aggs = [
         F.min(F.md5(F.concat(F.col("_s"), F.lit(f"#{salt}{k}")))).alias(f"_m{k}")
@@ -258,7 +247,6 @@ def dedup_against_index(
     id_col: str,
     num_hashes: int = 16,
     bands: int = 4,
-    shingle_n: int = 1,
     max_bucket_size: int | None = None,
     old_sigs: DataFrame | None = None,
     min_agree: int | None = None,
@@ -298,7 +286,7 @@ def dedup_against_index(
             "together — pass both, or neither for unverified band matches"
         )
     keys = ["band", "bucket"]
-    new_sigs = minhash_signatures(new_df, text_col, id_col, num_hashes, shingle_n)
+    new_sigs = minhash_signatures(new_df, text_col, id_col, num_hashes)
     new_banded = minhash_band_index(new_sigs, num_hashes, bands)
     old_banded = index.select("id", "band", "bucket")
     if max_bucket_size is not None:
@@ -334,11 +322,10 @@ def jaccard_pairs(
     text_col: str,
     id_col: str,
     threshold: float,
-    shingle_n: int = 1,
     candidates: DataFrame | None = None,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """n-gram Jaccard similarity pairs ≥ threshold.
+    """Word-set (1-shingle) Jaccard similarity pairs ≥ threshold.
 
     With ``candidates`` (e.g. from LSH) the exact check runs only on
     those pairs (broadcast-friendly). Without, it builds an inverted
@@ -373,7 +360,7 @@ def jaccard_pairs(
         )
     sh = df.select(
         F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("sh"),
+        word_shingles(F.col(text_col)).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
 
     if candidates is not None:
@@ -811,14 +798,14 @@ def boilerplate_line_dedup(
     text_col: str,
     id_col: str,
     min_doc_freq: int = 3,
-    sep: str = "\n",
 ) -> DataFrame:
     """Corpus-frequency line dedup — the RefinedWeb/CCNet 'line-wise
     correction' (Penedo et al. 2023 §dedup; CCNet's hashed-paragraph
-    dedup): a line occurring in ``min_doc_freq``+ DISTINCT documents
-    is boilerplate (nav bars, cookie banners, footers) and is stripped
-    from EVERY document; lines below the threshold survive in original
-    order. Unlike :func:`global_sentence_dedup` (keep-first), this is
+    dedup): a ``\\n``-separated line occurring in ``min_doc_freq``+
+    DISTINCT documents is boilerplate (nav bars, cookie banners,
+    footers) and is stripped from EVERY document; lines below the
+    threshold survive in original order. Unlike
+    :func:`global_sentence_dedup` (keep-first), this is
     frequency-thresholded: a repeated line vanishes from all its
     hosts, including the first.
 
@@ -831,7 +818,7 @@ def boilerplate_line_dedup(
     boilerplate this removes is byte-identical template output.
 
     Returns (id, clean_text, n_removed, n_total)."""
-    lines = _explode_units(df, text_col, id_col, sep, "line", F.md5)
+    lines = _explode_units(df, text_col, id_col, "\n", "line", F.md5)
     freq = (
         lines.select("_k", "id")
         .distinct()
@@ -840,7 +827,7 @@ def boilerplate_line_dedup(
     )
     hot = freq.filter(F.col("_df") >= min_doc_freq).select("_k")
     kept = lines.join(hot, "_k", "left_anti")
-    return _rebuild_units(lines, kept, "line", sep).select(
+    return _rebuild_units(lines, kept, "line", "\n").select(
         "id",
         F.coalesce(F.col("clean_text"), F.lit("")).alias("clean_text"),
         (F.col("n_total") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
@@ -965,13 +952,16 @@ def simhash_near_dups_md5(
     )
 
 
+# row bound of embedding_near_dups' all-pairs (un-bucketed) self-join
+_MAX_UNBUCKETED_ROWS = 10_000
+
+
 def embedding_near_dups(
     df: DataFrame,
     vec_col: str,
     id_col: str,
     threshold: float,
     bucket_col: str | None = None,
-    max_unbucketed_rows: int = 10_000,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs (cosine ≥ threshold), as
     (id_a < id_b, cosine rounded to 6 places).
@@ -979,10 +969,9 @@ def embedding_near_dups(
     With ``bucket_col`` (e.g. an IVF/LSH bucket or a label) the
     self-join is restricted per bucket — the scale path. Without, it
     is ALL-PAIRS, so the call fails fast (ValueError) when the input
-    exceeds ``max_unbucketed_rows`` (one count job) — fail, don't melt:
-    a 10^6 row corpus reaching the quadratic join would be a 10^12-row
-    shuffle, not a slow query. Raise the bound (or pass a bucket
-    column) deliberately.
+    exceeds ``_MAX_UNBUCKETED_ROWS`` (10^4; one count job) — fail,
+    don't melt: a 10^6 row corpus reaching the quadratic join would be
+    a 10^12-row shuffle, not a slow query. Pass a bucket column.
 
     One exchange on the bucket key, then a per-bucket
     ``applyInPandas`` computes the bucket's whole cosine matrix as ONE
@@ -999,13 +988,12 @@ def embedding_near_dups(
 
     if bucket_col is None:
         n = df.count()
-        if n > max_unbucketed_rows:
+        if n > _MAX_UNBUCKETED_ROWS:
             raise ValueError(
                 f"embedding_near_dups without bucket_col is an all-pairs "
-                f"self-join: input has {n} rows > max_unbucketed_rows="
-                f"{max_unbucketed_rows} (~{n * n:,} candidate pairs). Pass "
-                "bucket_col (IVF/LSH bucket) or raise max_unbucketed_rows "
-                "explicitly."
+                f"self-join: input has {n} rows > {_MAX_UNBUCKETED_ROWS} "
+                f"(~{n * n:,} candidate pairs). Pass bucket_col (IVF/LSH "
+                "bucket)."
             )
     id_type = df.schema[id_col].dataType
     out_schema = StructType(
@@ -1186,7 +1174,7 @@ def simhash32_md5(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     300 docs)."""
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), 1)).alias("tok"),
+        F.explode(word_shingles(F.col(text_col))).alias("tok"),
     ).withColumn("h", F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("long"))
     votes = toks.groupBy("id").agg(
         *[
@@ -1239,12 +1227,13 @@ def _small_star(e: DataFrame) -> DataFrame:
     return relinked.unionByName(anchors).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 20,
-    stats_out: dict | None = None,
-    driver_threshold: int = 100_000,
-) -> DataFrame:
+# connected_components: star-loop iteration bound, and the canonical
+# edge count up to which the driver's union-find runs instead
+_CC_MAX_ITERATIONS = 20
+_CC_DRIVER_THRESHOLD = 100_000
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Near-dup (id_a, id_b) pair edges → clusters: (id, component)
     where component is the MIN id in the connected component — the
     fuzzy-dedup capstone (keep the row with id == component, drop the
@@ -1267,18 +1256,17 @@ def connected_components(
     costs an extra iteration rather than a wrong answer.
 
     Vertices are edge-induced; callers union isolated ids as their own
-    components if needed. ``stats_out`` (optional dict) receives
-    {"iterations": n, "mode": ...} for observability/regression
-    tests. Raises if not converged within ``max_iterations``.
+    components if needed. Raises if not converged within
+    ``_CC_MAX_ITERATIONS`` (20) iterations.
 
     Small graphs take a driver-side union-find fast path: the
     canonical edge count comes for free from the first signature
-    aggregate, and below ``driver_threshold`` edges (bounded driver
-    memory — ~tens of MB at the default) the distributed loop is pure
+    aggregate, and up to ``_CC_DRIVER_THRESHOLD`` (10^5) edges
+    (bounded driver memory — ~tens of MB) the distributed loop is pure
     scheduling overhead (measured 9 s for a 391-edge graph at 32
     shuffle partitions vs milliseconds of union-find). Near-dup
     graphs at 100-TB scale blow past the threshold and run the star
-    loop; tests pin the distributed path via ``driver_threshold=0``.
+    loop.
     """
     e = (
         edges.select(
@@ -1299,7 +1287,7 @@ def connected_components(
 
     sig = signature(e)
 
-    if sig[0] <= driver_threshold:
+    if sig[0] <= _CC_DRIVER_THRESHOLD:
         parent: dict = {}
 
         def find(x):
@@ -1320,9 +1308,6 @@ def connected_components(
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        if stats_out is not None:
-            stats_out["iterations"] = 0
-            stats_out["mode"] = "driver-union-find"
         id_type = e.schema["a"].dataType
         out_schema = T.StructType(
             [
@@ -1334,9 +1319,7 @@ def connected_components(
             [(k, find(k)) for k in parent], out_schema
         )
 
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
+    for _ in range(_CC_MAX_ITERATIONS):
         new_e = _small_star(_large_star(e)).localCheckpoint()
         new_sig = signature(new_e)
         if new_sig == sig:
@@ -1348,11 +1331,8 @@ def connected_components(
         e = new_e
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} iterations"
+            f"connected_components did not converge in {_CC_MAX_ITERATIONS} iterations"
         )
-    if stats_out is not None:
-        stats_out["iterations"] = iterations
-        stats_out["mode"] = "star-loop"
     # fixpoint edges are (member, component-min) stars; the minima
     # themselves label their own component
     members = e.select(F.col("a").alias("id"), F.col("b").alias("component"))

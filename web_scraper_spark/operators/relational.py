@@ -234,17 +234,16 @@ def _ppm_bucket(key_col: str, salt: str):
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, rate_ppm: int, salt: str = "sample"
-) -> DataFrame:
+def deterministic_sample(df: DataFrame, key_col: str, rate_ppm: int) -> DataFrame:
     """Deterministic hash sampling: keep rows whose md5-derived bucket
     (out of 10^6) falls below ``rate_ppm``. This — not rand() — is how
     a 100 TB corpus gets subsampled reproducibly: the same rows are
     selected at any parallelism, on any engine, across reruns, and
     non-overlapping bucket ranges give disjoint folds. Pure expression
     (no shuffle, no RNG state); the q67 oracle recomputes the buckets
-    bit-for-bit in SQL. Change ``salt`` for an independent sample."""
-    return df.filter(_ppm_bucket(key_col, salt) < rate_ppm)
+    bit-for-bit in SQL. Its salt, ``"sample"``, is the one
+    :func:`stratified_hash_sample` uses, so the two nest."""
+    return df.filter(_ppm_bucket(key_col, "sample") < rate_ppm)
 
 
 def stratified_hash_sample(
@@ -259,7 +258,7 @@ def stratified_hash_sample(
     whole): a row is kept iff its md5 bucket (out of 10^6) falls below
     its stratum's ppm rate. The rate lookup is a pure CASE expression
     (no join, no shuffle), and the bucket is shared with
-    :func:`deterministic_sample` at its default salt, so samples at
+    :func:`deterministic_sample` (same salt), so samples at
     different rates nest.
     Same reproducibility contract: identical rows at any parallelism,
     on any engine, across reruns."""

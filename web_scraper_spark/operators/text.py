@@ -361,9 +361,9 @@ QUALITY_MODEL_FEATURES: tuple[str, ...] = (
     "upper_ratio",
 )
 
-#: default hand-set model: rewards stopword-bearing prose, penalizes
-#: punctuation soup and shouting (DCLM-style classifier inference
-#: seam — swap in trained weights without touching the plan)
+#: the fixed hand-set model (DCLM-style classifier inference):
+#: rewards stopword-bearing prose, penalizes punctuation soup and
+#: shouting; q86's SQL oracle carries the same weights
 DEFAULT_QUALITY_WEIGHTS: dict[str, float] = {
     "mean_word_len": 0.1,
     "punct_ratio": -3.0,
@@ -372,30 +372,28 @@ DEFAULT_QUALITY_WEIGHTS: dict[str, float] = {
 }
 
 
-def linear_quality_score(
-    text: Column,
-    weights: dict[str, float] | None = None,
-) -> Column:
+def linear_quality_score(text: Column) -> Column:
     """Model-based quality filter inference (the DCLM/fineweb-edu
     pattern: a lightweight classifier scores every document and a
     threshold gates the corpus): sigmoid(0.5 + w·f) over the
-    :func:`quality_features` ratio vector, as a pure Column
-    expression — classifier inference at 100 TB is exactly a scan.
+    :func:`quality_features` ratio vector with ``DEFAULT_QUALITY_WEIGHTS`` as
+    w, as a pure Column expression — classifier inference at 100 TB is
+    exactly a scan.
 
     Engine portability: the features are the ROUNDED ratios (4 dp,
     identical on both engines), the weighted sum is accumulated in
     the fixed ``QUALITY_MODEL_FEATURES`` order, and the sigmoid
     output is rounded to 6 dp. Returns a DOUBLE in [0, 1]."""
-    w = dict(DEFAULT_QUALITY_WEIGHTS) if weights is None else weights
-    unknown = set(w) - set(QUALITY_MODEL_FEATURES)
-    if unknown:
-        raise ValueError(f"unknown quality features: {sorted(unknown)}")
     f = quality_features(text)
     z = F.lit(0.5)
     for name in QUALITY_MODEL_FEATURES:
-        if name in w:
-            z = z + F.lit(float(w[name])) * f[name]
+        z = z + F.lit(float(DEFAULT_QUALITY_WEIGHTS[name])) * f[name]
     return F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+
+
+# perplexity_buckets' bound on its deterministic sample (the rows of
+# one single-partition rank window)
+_MAX_SAMPLE_ROWS = 2_000_000
 
 
 def perplexity_buckets(
@@ -405,7 +403,6 @@ def perplexity_buckets(
     n_buckets: int = 3,
     sample_ppm: int = 100_000,
     salt: str = "ppl",
-    max_sample_rows: int = 2_000_000,
 ):
     """CCNet-style perplexity partitioning: split the corpus into
     head/middle/tail (or ``n_buckets`` generally) by LM surprisal —
@@ -425,10 +422,10 @@ def perplexity_buckets(
     (the oracle replays sample, ranks, and comparisons in SQL).
 
     The sample bound is ENFORCED, not trusted: the cuts aggregation
-    carries an ``assert_true(m <= max_sample_rows)`` guard (zero extra
-    jobs — ``m`` is already computed there), so a misconfigured
-    ``sample_ppm`` on a huge corpus fails fast instead of silently
-    feeding an unbounded single-partition rank window.
+    carries an ``assert_true(m <= _MAX_SAMPLE_ROWS)`` guard (2·10^6
+    rows; zero extra jobs — ``m`` is already computed there), so a
+    misconfigured ``sample_ppm`` on a huge corpus fails fast instead of
+    silently feeding an unbounded single-partition rank window.
 
     Returns (id, n_tokens, mean_deciban, bucket) with bucket in
     [1, n_buckets]; bucket 1 is the LOW-surprisal head."""
@@ -448,16 +445,13 @@ def perplexity_buckets(
     )
     cut_aggs = [
         F.assert_true(
-            F.max("m") <= F.lit(max_sample_rows),
+            F.max("m") <= F.lit(_MAX_SAMPLE_ROWS),
             F.concat(
                 F.lit(
                     "perplexity_buckets: deterministic sample has "
                 ),
                 F.max("m").cast("string"),
-                F.lit(
-                    f" rows > max_sample_rows={max_sample_rows}; lower"
-                    " sample_ppm or raise max_sample_rows explicitly"
-                ),
+                F.lit(f" rows > {_MAX_SAMPLE_ROWS}; lower sample_ppm"),
             ),
         ).alias("_guard")
     ]
@@ -534,13 +528,13 @@ def chunk_tokens(
     )
 
 
-def repetition_signals(
-    df,
-    text_col: str,
-    id_col: str,
-    top_ns: tuple = (2, 3, 4),
-    dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-):
+# repetition_signals' gram lengths: Gopher's top-n-gram rules and
+# duplicated-n-gram rules
+_TOP_NS = (2, 3, 4)
+_DUP_NS = (5, 6, 7, 8, 9, 10)
+
+
+def repetition_signals(df, text_col: str, id_col: str):
     """The full Gopher repetition-filter signal suite (Rae et al. 2021
     §A1.1, the rules Dolma/FineWeb/datatrove re-implement): per
     document —
@@ -550,11 +544,11 @@ def repetition_signals(
       times within the document;
     - ``dup_para_frac`` / ``dup_para_char_frac``: same over
       ``\\n\\n``-paragraphs;
-    - ``top{n}_char_frac`` (n in ``top_ns``): characters covered by
+    - ``top{n}_char_frac`` (n in 2, 3, 4): characters covered by
       the MOST frequent word n-gram over the normalized token stream
       (count × gram length / normalized length), most-frequent chosen
       by the (count, gram length, gram) struct max;
-    - ``dup{n}_char_frac`` (n in ``dup_ns``): characters covered by
+    - ``dup{n}_char_frac`` (n in 5..10): characters covered by
       ALL n-grams occurring 2+ times (Σ count·len over duplicated
       distinct grams / normalized length, capped at 1.0 — the
       overlap-unaware upper bound; documented rule, oracled exactly).
@@ -635,21 +629,21 @@ def repetition_signals(
         F.expr(para_f).alias("dup_para_frac"),
         F.expr(para_cf).alias("dup_para_char_frac"),
     ]
-    for n in sorted(set(top_ns) | set(dup_ns)):
+    for n in sorted(set(_TOP_NS) | set(_DUP_NS)):
         inter.append(F.expr(fold_sql(n)).alias(f"_f{n}"))
     mid = df.select(*inter)
     out = [
         "id", "dup_line_frac", "dup_line_char_frac",
         "dup_para_frac", "dup_para_char_frac",
     ]
-    for n in top_ns:
+    for n in _TOP_NS:
         out.append(
             F.expr(
                 f"round(if(_nc > 0 and _f{n}.b.c > 0, "
                 f"cast(_f{n}.b.c * _f{n}.b.l as double) / _nc, 0.0), 6)"
             ).alias(f"top{n}_char_frac")
         )
-    for n in dup_ns:
+    for n in _DUP_NS:
         out.append(
             F.expr(
                 f"round(if(_nc > 0, "

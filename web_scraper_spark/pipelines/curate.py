@@ -46,21 +46,26 @@ from ..operators.relational import (
     stratified_hash_sample,
 )
 
+# fuzzy dedup keeps a candidate pair at exact shingle Jaccard >= 0.8
+_JACCARD_THRESHOLD = 0.8
+# decontamination flags a document sharing any 13-token window with
+# the benchmark (the GPT-3/PaLM rule)
+_CONTAMINATION_N = 13
+
 
 @dataclass
 class CurationConfig:
     min_quality: float = 0.5
     langs: list[str] | None = None          # None = keep all languages
     # corpus-frequency boilerplate line removal (RefinedWeb line-wise
-    # correction): lines in >= this many distinct docs are stripped
-    # before any dedup stage sees the text. None = off.
+    # correction): ``\n``-lines in >= this many distinct docs are
+    # stripped before any dedup stage sees the text. None = off.
     line_dedup_min_df: int | None = None
-    line_sep: str = "\n"
-    fuzzy: bool = True                      # LSH → Jaccard → components
-    jaccard_threshold: float = 0.8
+    # LSH → Jaccard → components; LSH buckets over HOT_BUCKET_CAP rows
+    # are left out (here and in the incremental stage)
+    fuzzy: bool = True
     lsh_num_hashes: int = 16
     lsh_bands: int = 8
-    max_bucket_size: int | None = HOT_BUCKET_CAP  # LSH hot-bucket guard
     # incremental mode: the EXISTING corpus as its persisted artifacts
     # (minhash_band_index output + (id, sig) signature table, built
     # with the SAME lsh_num_hashes/lsh_bands) — new-snapshot docs that
@@ -68,9 +73,7 @@ class CurationConfig:
     prev_index: DataFrame | None = None
     prev_sigs: DataFrame | None = None      # sig verification: set both
     index_min_agree: int | None = None      # or neither; ≥k/num_hashes
-    bench_df: DataFrame | None = None       # decontamination corpus
-    bench_text_col: str = "text"
-    contamination_n: int = 13
+    bench_df: DataFrame | None = None       # decontamination corpus; text in "text"
     rates_ppm: dict = field(default_factory=dict)   # per-lang rebalance
     domain_col: str | None = None           # set both to cap hot domains
     domain_cap_ppm: int | None = None       # max per-domain corpus share
@@ -116,8 +119,7 @@ def curate(
     # cheap pure-expression prunes ahead of this shuffling stage.
     if cfg.line_dedup_min_df is not None:
         cleaned = boilerplate_line_dedup(
-            out, text_col, id_col,
-            min_doc_freq=cfg.line_dedup_min_df, sep=cfg.line_sep,
+            out, text_col, id_col, min_doc_freq=cfg.line_dedup_min_df
         ).select(F.col("id").alias(id_col), F.col("clean_text"))
         out = out.drop(text_col).join(cleaned, id_col).withColumnRenamed(
             "clean_text", text_col
@@ -136,10 +138,10 @@ def curate(
             id_col,
             num_hashes=cfg.lsh_num_hashes,
             bands=cfg.lsh_bands,
-            max_bucket_size=cfg.max_bucket_size,
+            max_bucket_size=HOT_BUCKET_CAP,
         )
         pairs = jaccard_pairs(
-            out, text_col, id_col, cfg.jaccard_threshold, candidates=cands
+            out, text_col, id_col, _JACCARD_THRESHOLD, candidates=cands
         )
         comps = connected_components(pairs)
         losers = comps.filter(F.col("id") != F.col("component")).select(
@@ -160,7 +162,7 @@ def curate(
             id_col,
             num_hashes=cfg.lsh_num_hashes,
             bands=cfg.lsh_bands,
-            max_bucket_size=cfg.max_bucket_size,
+            max_bucket_size=HOT_BUCKET_CAP,
             old_sigs=cfg.prev_sigs,
             min_agree=cfg.index_min_agree,
         )
@@ -170,11 +172,9 @@ def curate(
     # 5. decontamination: benchmark digests broadcast; corpus never
     # shuffles for this check.
     if cfg.bench_df is not None:
-        bench = bench_ngram_digests(
-            cfg.bench_df, cfg.bench_text_col, n=cfg.contamination_n
-        )
+        bench = bench_ngram_digests(cfg.bench_df, "text", n=_CONTAMINATION_N)
         flags = ngram_contamination(
-            out, text_col, id_col, bench, n=cfg.contamination_n
+            out, text_col, id_col, bench, n=_CONTAMINATION_N
         )
         dirty = flags.filter(F.col("contaminated")).select(
             F.col("id").alias(id_col)

@@ -525,7 +525,7 @@ def q16_minhash_sig(spark, sf_dir):
 )
 def q17_jaccard_pairs(spark, sf_dir):
     d = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return D.jaccard_pairs(d, "text", "doc_id", threshold=0.5, shingle_n=1)
+    return D.jaccard_pairs(d, "text", "doc_id", threshold=0.5)
 
 
 # =====================================================================
@@ -1461,7 +1461,7 @@ def q71_jaccard_df_capped(spark, sf_dir):
     Jaccard."""
     d = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return D.jaccard_pairs(
-        d, "text", "doc_id", threshold=0.5, shingle_n=1, max_doc_freq=150
+        d, "text", "doc_id", threshold=0.5, max_doc_freq=150
     )
 
 

@@ -86,17 +86,21 @@ def write_documents_as_files(df: DataFrame, out_dir: str) -> int:
     return len(os.listdir(out_dir))
 
 
+# shard count of write_jsonl_shards and bucket count of write_bucketed
+_JSONL_SHARDS = 64
+_N_BUCKETS = 64
+
+
 def write_jsonl_shards(
     df: DataFrame,
     path: str,
     key_col: str,
-    n_shards: int = 64,
     compression: str | None = "gzip",
     mode: str = "overwrite",
 ) -> None:
     """Training-data export: sharded JSON-Lines, the interchange
     format LM data loaders consume. DETERMINISTIC layout: rows route
-    to ``pmod(xxhash64(key), n_shards)`` shards and are sorted by the
+    to ``pmod(xxhash64(key), 64)`` shards and are sorted by the
     key within each shard, so two runs over the same data produce the
     same record→shard assignment and the same in-shard order —
     resumable downstream tokenization can trust shard identity.
@@ -110,8 +114,10 @@ def write_jsonl_shards(
     id; the JSON encode and gzip happen executor-side via Spark's
     native JSON writer (no Python)."""
     sharded = (
-        df.withColumn("_shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)))
-        .repartition(n_shards, F.col("_shard"))
+        df.withColumn(
+            "_shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(_JSONL_SHARDS))
+        )
+        .repartition(_JSONL_SHARDS, F.col("_shard"))
         .sortWithinPartitions("_shard", key_col)
     )
     # After the repartition every row of a given _shard sits in ONE
@@ -128,16 +134,15 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     key: str | list[str],
-    n_buckets: int = 64,
     mode: str = "overwrite",
 ) -> None:
-    """Persist a table hash-BUCKETED (and sorted) by ``key`` — the
-    co-located-join lever: two tables bucketed on the same key with
-    the same bucket count join WITHOUT any Exchange (each task zips
-    bucket i with bucket i), so a repeatedly-joined 100-TB fact table
-    pays its shuffle once at write time instead of per query. Pair
-    with :func:`bucketed_table` and see the plan test asserting the
-    exchange-free join.
+    """Persist a table hash-BUCKETED into 64 buckets (and sorted) by
+    ``key`` — the co-located-join lever: two tables written here on the
+    same key share the bucket count and join WITHOUT any Exchange (each
+    task zips bucket i with bucket i), so a repeatedly-joined 100-TB
+    fact table pays its shuffle once at write time instead of per
+    query. Pair with :func:`bucketed_table` and see the plan test
+    asserting the exchange-free join.
 
     Multi-column keys must list EVERY join key: Spark (with the
     default requireAllClusterKeysForCoPartition) will not co-partition
@@ -148,7 +153,7 @@ def write_bucketed(
     (
         df.write.mode(mode)
         .format("parquet")
-        .bucketBy(n_buckets, *keys)
+        .bucketBy(_N_BUCKETS, *keys)
         .sortBy(*keys)
         .saveAsTable(table)
     )
@@ -161,10 +166,10 @@ def bucketed_table(spark, table: str) -> DataFrame:
     return spark.table(table)
 
 
-def console_sink(df: DataFrame, n: int = 5) -> None:
-    """S10: print each row's ``doc`` under a 'Content from {url}'
-    header (contxt/outputs.py:40-50); debug-scale only."""
-    for row in df.select("url", "doc").limit(n).collect():
+def console_sink(df: DataFrame) -> None:
+    """S10: print the first 5 rows' ``doc``, each under a 'Content
+    from {url}' header (contxt/outputs.py:40-50); debug-scale only."""
+    for row in df.select("url", "doc").limit(5).collect():
         print(f"\nContent from {row[0]}:\n")
         print(row[1])
 

@@ -16,6 +16,11 @@ under ``store_dir``:
   family (salt='v'), stored once per doc rather than duplicated per
   band.
 
+The stream has one fixed parameterization, the module constants
+below: rows keyed by their ``url`` column, 16-component banding
+signatures in 8 bands, 64-component verification signatures, and
+pairs kept at ``est_jaccard`` ≥ 0.5.
+
 Each batch builds both with the batch LSH operators
 (operators.dedup.minhash_signatures → minhash_band_index; one skinny
 groupBy(id) per hash family, so ids must be unique within a batch),
@@ -26,8 +31,8 @@ operator, with the same hot-bucket guard (operators.dedup._hot_keys:
 rows are left out of the join and logged at WARNING) — and VERIFIES
 candidates with the agreement count that incremental index dedup also
 uses (operators.dedup._agree) over the
-``verify_hashes``-component signatures: est = agreeing components /
-verify_hashes. This is the standard unbiased MinHash Jaccard
+K = 64-component verification signatures: est = agreeing components /
+K. This is the standard unbiased MinHash Jaccard
 estimator with KNOWN error (E[est] = J, Var = J(1−J)/K ⇒ std ≤
 0.5/√K, ≈ 0.0625 at K = 64) — unlike agreement over the 16-component
 BANDING signature, which is both coarse (1/16 granularity) and
@@ -67,34 +72,32 @@ from ..operators.dedup import (
 _STORE_GLOB = "batch=*"
 _BANDS_SUB = "bands"
 _SIGS_SUB = "sigs"
+_ID_COL = "url"
+_NUM_HASHES = 16
+_BANDS = 8
+_VERIFY_HASHES = 64
+_THRESHOLD = 0.5
 
 
-def make_near_dup_batch_fn(
-    store_dir: str,
-    pairs_dir: str,
-    id_col: str = "url",
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
-    verify_hashes: int = 64,
-):
+def make_near_dup_batch_fn(store_dir: str, pairs_dir: str):
     """Build the ``foreachBatch`` function: each micro-batch of
-    (``id_col``, text) rows emits (id_a, id_b, est_jaccard) pairs —
+    (url, text) rows emits (id_a, id_b, est_jaccard) pairs —
     candidates via banded-key join against the store AND within the
-    batch, verified by the
-    independent ``verify_hashes``-component MinHash estimator (std ≤
-    0.5/√K; see module docstring) — then adds its own banded keys and
-    verification signatures to the store. Wire with
-    ``writeStream.foreachBatch(fn)``."""
+    batch, verified by the independent 64-component MinHash estimator
+    (std ≤ 0.5/√K; see module docstring) and kept at est_jaccard ≥
+    0.5 — then adds its own banded keys and verification signatures to
+    the store. Wire with ``writeStream.foreachBatch(fn)``."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         src = batch_df.persist()
         new_bands = minhash_band_index(
-            minhash_signatures(src, "text", id_col, num_hashes), num_hashes, bands
+            minhash_signatures(src, "text", _ID_COL, _NUM_HASHES),
+            _NUM_HASHES,
+            _BANDS,
         ).persist()
         new_sigs = minhash_signatures(
-            src, "text", id_col, verify_hashes, salt="v"
+            src, "text", _ID_COL, _VERIFY_HASHES, salt="v"
         ).withColumnRenamed("sig", "vsig").persist()
         new_bands.count()  # materialize: store join + store write both consume
         new_sigs.count()
@@ -123,24 +126,24 @@ def make_near_dup_batch_fn(
             for e in (os.listdir(bands_dir) if os.path.isdir(bands_dir) else [])
         )
         if have_store:
-            # config-drift guard: est_jaccard divides component
-            # agreement by `verify_hashes`, and zip_with null-pads
-            # length mismatches into fake disagreements — a changed K
-            # would silently deflate every new-vs-stored estimate, so
-            # probe one stored row's signature length and refuse.
+            # drift guard: est_jaccard divides component agreement
+            # by _VERIFY_HASHES, and zip_with null-pads length
+            # mismatches into fake disagreements — a store written
+            # with another K would silently deflate every
+            # new-vs-stored estimate, so probe one stored row's
+            # signature length and refuse.
             probe = (
                 spark.read.parquet(os.path.join(sigs_dir, _STORE_GLOB))
                 .select(F.size("vsig").alias("k"))
                 .limit(1)
                 .collect()
             )
-            if probe and probe[0]["k"] != verify_hashes:
+            if probe and probe[0]["k"] != _VERIFY_HASHES:
                 raise ValueError(
-                    f"verify_hashes={verify_hashes} but the store at "
-                    f"{store_dir} holds {probe[0]['k']}-component "
-                    "verification signatures — changing K between runs "
-                    "silently deflates est_jaccard for new-vs-stored "
-                    "pairs; rebuild the store or restore the original K"
+                    f"the store at {store_dir} holds {probe[0]['k']}-"
+                    f"component verification signatures, not "
+                    f"{_VERIFY_HASHES} — a different K silently deflates "
+                    "est_jaccard for new-vs-stored pairs; rebuild the store"
                 )
             # replay safety: a restarted batch must not see its own
             # previous (overwritten-in-flight) rows as "prior" docs
@@ -178,11 +181,11 @@ def make_near_dup_batch_fn(
             )
             .distinct()
         )
-        est = F.col("agree") / F.lit(verify_hashes)
+        est = F.col("agree") / F.lit(_VERIFY_HASHES)
         pairs = (
             _agree(cands, vsigs, vsigs)
             .select("id_a", "id_b", F.round(est, 6).alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold)
+            .filter(F.col("est_jaccard") >= _THRESHOLD)
         )
         # batch=<epoch> targets make replays idempotent: a retried
         # epoch overwrites its own directories, never appends twice
